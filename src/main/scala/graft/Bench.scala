@@ -12,6 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Prints ONE JSON line {"metric","value","unit","queries",...}.
   */
 object Bench {
+
+  /** Where a run writes its full per-query map: `artifact` (the
+    * committed per-cpu file, or SPARK_GRAFT_BENCH_OUT when `overridden`)
+    * — except a focused run (`only` set) without an override, which
+    * writes a scratch copy under `java.io.tmpdir` so its partial map
+    * never replaces the committed one. */
+  def fullOutPath(artifact: String, only: Option[Seq[String]],
+      overridden: Boolean): String =
+    if (only.isEmpty || overridden) artifact
+    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "focus_" + java.nio.file.Paths.get(artifact).getFileName).toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -184,8 +196,16 @@ object Bench {
     // low-core run clobbered the 32-core per-query map and the driver
     // could not score rounds per-query (PERF_r11 per_query: {}). The
     // legacy name is still written as a copy for old readers.
-    val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+    val artifactOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"/root/repo/BENCH_full_c$cpus.json")
+    val overridden = sys.env.contains("SPARK_GRAFT_BENCH_OUT")
+    // comma-separated substring filter for focused iteration, e.g.
+    // SPARK_GRAFT_BENCH_ONLY=q9,q10 — unset runs everything
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    val fullOut = fullOutPath(artifactOut, only, overridden)
+    if (fullOut != artifactOut)
+      System.err.println(s"[bench] focused run: full map goes to $fullOut")
     val legacyOut = "/root/repo/BENCH_full.json"
     def parseMins(path: String): Map[String, Double] =
       try {
@@ -211,7 +231,8 @@ object Bench {
     // refreshed at each round close — a query is adjudicated if it's >2x
     // the BETTER of the two references.
     val prevMins: Map[String, Double] = {
-      val cur0 = parseMins(sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", fullOut))
+      val cur0 = parseMins(sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
+        artifactOut))
       // first run at this cpu count: fall back to the legacy
       // single-file artifact so adjudication isn't blind
       val cur = if (cur0.nonEmpty) cur0 else parseMins(legacyOut)
@@ -265,10 +286,6 @@ object Bench {
       }
     }
     def time(name: String, run: () => Unit): Double = timeAdj(name, run, reps)
-    // comma-separated substring filter for focused iteration, e.g.
-    // SPARK_GRAFT_BENCH_ONLY=q9,q10 — unset runs everything
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
     // untimed warmup: whichever workload runs FIRST otherwise absorbs
@@ -462,7 +479,7 @@ object Bench {
     // on a full, non-overridden run: a focused SPARK_GRAFT_BENCH_ONLY /
     // custom-out iteration must not overwrite the committed artifact
     // with a partial map.
-    val writeLegacy = only.isEmpty && !sys.env.contains("SPARK_GRAFT_BENCH_OUT")
+    val writeLegacy = only.isEmpty && !overridden
     for (out <- (if (writeLegacy) Seq(fullOut, legacyOut) else Seq(fullOut))
         .distinct)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), full + "\n")

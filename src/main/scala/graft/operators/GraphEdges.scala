@@ -1,17 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Shared undirected-edge normalization for the graph operators
-  * ([[KCore]], [[GraphStats]]) — one definition of "the same graph":
-  * canonical (a < b) deduplicated loop-free pairs, and the symmetrized
-  * two-orientation view that degree aggregates run on. NOTE
-  * `least`/`greatest` skip NULLs, so an edge with one NULL endpoint
-  * degenerates to a self-loop (a = b) and is dropped — the desired
-  * semantics for dirty edge lists, encoded here exactly once.
+/** Shared edge normalization and the one-task compact graph for the
+  * graph operators — one definition of "the same graph":
+  *  - [[directed]]: the distinct (src, dst) long edge set;
+  *  - [[canonical]]: (a < b) deduplicated loop-free undirected pairs,
+  *    and [[symmetrize]], the two-orientation view that degree
+  *    aggregates run on. NOTE `least`/`greatest` skip NULLs, so an edge
+  *    with one NULL endpoint degenerates to a self-loop (a = b) and is
+  *    dropped — the desired semantics for dirty edge lists, encoded
+  *    here exactly once;
+  *  - [[local]]: the fused small-graph layout every operator's
+  *    single-task path runs on ([[LocalGraph]]).
   */
 object GraphEdges {
+
+  /** (src, dst) as longs, duplicates collapsed. */
+  def directed(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).distinct()
 
   /** (a, b) with a < b, duplicates and self-loops dropped. */
   def canonical(edges: DataFrame, srcCol: String,
@@ -32,4 +43,103 @@ object GraphEdges {
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
+
+  /** Small-graph path shared by every graph operator: the whole edge
+    * set is read into ONE task, compacted into a [[LocalGraph]], and
+    * `kernel` runs its iteration over it — zero further shuffles, none
+    * of the per-round job latency that dominates small graphs.
+    *
+    * @param e already-distinct edges; by position, long endpoints
+    *   (src, dst) and optionally a long weight as a third column.
+    * @param seeds optional one-column table of extra node ids (`id`):
+    *   they ride in-band with the edges (flagged rows, so the one task
+    *   sees both inputs without a join) and join the node table even
+    *   when no edge touches them.
+    * @return `kernel`'s rows; no rows when the graph has no node. */
+  def local(e: DataFrame, schema: StructType,
+      seeds: Option[DataFrame] = None)(
+      kernel: LocalGraph => Iterator[Row]): DataFrame = {
+    val weighted = e.columns.length == 3
+    val seeded = seeds.isDefined
+    val flag = e.columns.length // position of the seed flag, if any
+    val rows = seeds.fold(e) { s =>
+      val pad = Seq.fill(flag - 1)(lit(0L)) // dst[, w] of a seed row
+      e.select(e.columns.toSeq.map(col) :+ lit(false): _*)
+        .unionAll(s.select(col("id") +: pad :+ lit(true): _*))
+    }
+    rows.coalesce(1).mapPartitions { it =>
+      // primitive columns only — at a 5M-edge threshold a boxed
+      // tuple/map representation would cost hundreds of bytes per edge
+      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
+      val db = new scala.collection.mutable.ArrayBuilder.ofLong
+      val wb = new scala.collection.mutable.ArrayBuilder.ofLong
+      val seedB = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { r =>
+        if (seeded && r.getBoolean(flag)) seedB += r.getLong(0)
+        else {
+          sb += r.getLong(0); db += r.getLong(1)
+          if (weighted) wb += r.getLong(2)
+        }
+      }
+      val srcId = sb.result(); val dstId = db.result()
+      val seedId = seedB.result()
+      val m = srcId.length
+      // node table = edge endpoints ∪ seeds: sort + in-place dedup;
+      // id → index by binary search, never a boxed map
+      val all = new Array[Long](2 * m + seedId.length)
+      System.arraycopy(srcId, 0, all, 0, m)
+      System.arraycopy(dstId, 0, all, m, m)
+      System.arraycopy(seedId, 0, all, 2 * m, seedId.length)
+      java.util.Arrays.sort(all)
+      var n = 0
+      var i = 0
+      while (i < all.length) {
+        if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
+        i += 1
+      }
+      if (n == 0) Iterator.empty
+      else {
+        val ids = java.util.Arrays.copyOf(all, n)
+        def index(xs: Array[Long]): Array[Int] = {
+          val ix = new Array[Int](xs.length)
+          var j = 0
+          while (j < xs.length) {
+            ix(j) = java.util.Arrays.binarySearch(ids, xs(j)); j += 1
+          }
+          ix
+        }
+        kernel(new LocalGraph(ids, index(srcId), index(dstId), wb.result(),
+          index(seedId)))
+      }
+    }(Encoders.row(schema))
+  }
+}
+
+/** A graph compacted inside one task: node `ids` sorted and distinct,
+  * edge `i` = `src(i)` → `dst(i)` as indices into `ids`, `w(i)` its
+  * weight (empty for an unweighted edge set), `seeds` the indices of
+  * the extra node ids handed to [[GraphEdges.local]]. */
+final class LocalGraph(val ids: Array[Long], val src: Array[Int],
+    val dst: Array[Int], val w: Array[Long], val seeds: Array[Int]) {
+
+  def n: Int = ids.length
+  def m: Int = src.length
+
+  /** CSR adjacency grouped by `from` (a counting sort of the edges):
+    * node v's edges occupy `off(v) until off(v + 1)` of `adj`, which
+    * holds their `to` endpoints in edge order. */
+  def csr(from: Array[Int], to: Array[Int]): (Array[Int], Array[Int]) = {
+    val off = new Array[Int](n + 1)
+    var i = 0
+    while (i < m) { off(from(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < n) { off(i + 1) += off(i); i += 1 }
+    val adj = new Array[Int](m)
+    val cursor = off.clone()
+    i = 0
+    while (i < m) {
+      adj(cursor(from(i))) = to(i); cursor(from(i)) += 1; i += 1
+    }
+    (off, adj)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * broadcast cross join of a scalar aggregate — no driver action
   * inside the loop; `localCheckpoint` per round cuts lineage exactly
   * like the CC/PageRank loops. Below `localThreshold` edges the whole
-  * iteration runs fused in ONE task over primitive arrays
-  * ([[PageRank.runFused]]'s layout) — small graphs skip the ~10
+  * iteration runs fused in ONE task over the [[GraphEdges.local]]
+  * compact graph — small graphs skip the ~10
   * per-round jobs entirely.
   */
 object Hits {
@@ -44,8 +44,7 @@ object Hits {
       rounds: Int, scale: Int = 8,
       localThreshold: Long = 5_000_000L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
+    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
     val nEdges = e.count()
     val raw = if (nEdges <= localThreshold) runFused(e, rounds)
       else runDistributed(e, rounds)
@@ -54,54 +53,26 @@ object Hits {
   }
 
   private def runFused(e: DataFrame, rounds: Int): DataFrame =
-    e.coalesce(1).mapPartitions { it =>
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
-      val srcId = sb.result(); val dstId = db.result()
-      val m = srcId.length
-      if (m == 0) Iterator.empty
-      else {
-        val all = new Array[Long](2 * m)
-        System.arraycopy(srcId, 0, all, 0, m)
-        System.arraycopy(dstId, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
+    GraphEdges.local(e, outSchema) { g =>
+      val n = g.n; val m = g.m; val src = g.src; val dst = g.dst
+      var h = Array.fill(n)(1.0)
+      var a = new Array[Double](n)
+      for (_ <- 1 to rounds) {
+        a = new Array[Double](n)
         var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val src = new Array[Int](m)
-        val dst = new Array[Int](m)
+        while (i < m) { a(dst(i)) += h(src(i)); i += 1 }
+        val sa = a.sum
         i = 0
-        while (i < m) {
-          src(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dst(i) = java.util.Arrays.binarySearch(ids, dstId(i))
-          i += 1
-        }
-        var h = Array.fill(n)(1.0)
-        var a = new Array[Double](n)
-        for (_ <- 1 to rounds) {
-          a = new Array[Double](n)
-          i = 0
-          while (i < m) { a(dst(i)) += h(src(i)); i += 1 }
-          val sa = a.sum
-          i = 0
-          while (i < n) { a(i) /= sa; i += 1 }
-          h = new Array[Double](n)
-          i = 0
-          while (i < m) { h(src(i)) += a(dst(i)); i += 1 }
-          val sh = h.sum
-          i = 0
-          while (i < n) { h(i) /= sh; i += 1 }
-        }
-        ids.iterator.zipWithIndex.map { case (id, j) =>
-          Row(id, h(j), a(j))
-        }
+        while (i < n) { a(i) /= sa; i += 1 }
+        h = new Array[Double](n)
+        i = 0
+        while (i < m) { h(src(i)) += a(dst(i)); i += 1 }
+        val sh = h.sum
+        i = 0
+        while (i < n) { h(i) /= sh; i += 1 }
       }
-    }(Encoders.row(outSchema))
+      g.ids.iterator.zipWithIndex.map { case (id, j) => Row(id, h(j), a(j)) }
+    }
 
   private def runDistributed(e: DataFrame, rounds: Int): DataFrame = {
     val nodes = e.select(col("src").as("id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Distributed shape per round: one degree aggregate over the live
   * edge set + two semi-joins (src alive, dst alive), `localCheckpoint`
   * cutting lineage — shuffle volume shrinks with the surviving edges.
-  * Small graphs collapse to one task over a CSR (size-probed on the
-  * same cached canonical edge set, [[TriangleCount]] pattern); integer
+  * Small graphs collapse to one task over the [[GraphEdges.local]]
+  * compact graph (size-probed on the same cached canonical edge set,
+  * [[TriangleCount]] pattern); integer
   * semantics make the two paths bit-identical (spec-enforced).
   */
 object KCore {
@@ -46,7 +47,7 @@ object KCore {
     val m = canon.count()
     if (m <= localThreshold) {
       // the returned one-task plan reads the cache; blocks release via
-      // ContextCleaner when it's collected (LabelProp.runFused lifecycle)
+      // ContextCleaner when it's collected (PageRank.run lifecycle)
       runFused(canon, k, rounds)
     } else {
       // the first localCheckpoint is eager, so the loop never re-reads
@@ -57,65 +58,41 @@ object KCore {
     }
   }
 
-  /** Small-graph path: CSR peel in one task (ids via sort+binary search,
-    * the [[LabelProp]]/[[TriangleCount]] layout). */
+  /** Small-graph path: the peel in one task over the
+    * [[GraphEdges.local]] compact graph. */
   private def runFused(canon: DataFrame, k: Int, rounds: Int): DataFrame =
-    canon.coalesce(1).mapPartitions { it =>
-      val ab = new scala.collection.mutable.ArrayBuilder.ofLong
-      val bb = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => ab += r.getLong(0); bb += r.getLong(1) }
-      val ea = ab.result(); val eb = bb.result()
-      val m = ea.length
-      if (m == 0) Iterator.empty
-      else {
-        val all = new Array[Long](2 * m)
-        System.arraycopy(ea, 0, all, 0, m)
-        System.arraycopy(eb, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val ua = new Array[Int](m); val ub = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          ua(i) = java.util.Arrays.binarySearch(ids, ea(i))
-          ub(i) = java.util.Arrays.binarySearch(ids, eb(i))
-          i += 1
-        }
-        val alive = new Array[Boolean](n)
-        java.util.Arrays.fill(alive, true)
-        val deg = new Array[Long](n)
-        var r = 0
-        while (r < rounds) {
-          java.util.Arrays.fill(deg, 0L)
-          i = 0
-          while (i < m) {
-            if (alive(ua(i)) && alive(ub(i))) { deg(ua(i)) += 1; deg(ub(i)) += 1 }
-            i += 1
-          }
-          var v = 0
-          while (v < n) { // Jacobi: everyone under k drops simultaneously
-            if (alive(v) && deg(v) < k) alive(v) = false
-            v += 1
-          }
-          r += 1
-        }
-        // final degrees over the surviving subgraph
+    GraphEdges.local(canon, outSchema) { g =>
+      val n = g.n; val m = g.m; val ua = g.src; val ub = g.dst
+      val alive = new Array[Boolean](n)
+      java.util.Arrays.fill(alive, true)
+      val deg = new Array[Long](n)
+      var i = 0
+      var r = 0
+      while (r < rounds) {
         java.util.Arrays.fill(deg, 0L)
         i = 0
         while (i < m) {
           if (alive(ua(i)) && alive(ub(i))) { deg(ua(i)) += 1; deg(ub(i)) += 1 }
           i += 1
         }
-        Iterator.range(0, n)
-          .filter(v => alive(v) && deg(v) > 0)
-          .map(v => Row(ids(v), deg(v)))
+        var v = 0
+        while (v < n) { // Jacobi: everyone under k drops simultaneously
+          if (alive(v) && deg(v) < k) alive(v) = false
+          v += 1
+        }
+        r += 1
       }
-    }(Encoders.row(outSchema))
+      // final degrees over the surviving subgraph
+      java.util.Arrays.fill(deg, 0L)
+      i = 0
+      while (i < m) {
+        if (alive(ua(i)) && alive(ub(i))) { deg(ua(i)) += 1; deg(ub(i)) += 1 }
+        i += 1
+      }
+      Iterator.range(0, n)
+        .filter(v => alive(v) && deg(v) > 0)
+        .map(v => Row(g.ids(v), deg(v)))
+    }
 
   /** Cluster-scale path: degree aggregate + two semi-joins per round. */
   private def runDistributed(canon: DataFrame, k: Int,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -33,8 +33,7 @@ object LabelProp {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, localThreshold: Long = 5_000_000L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
+    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
     val nEdges = e.count()
     if (nEdges <= localThreshold) runFused(e, rounds)
     else runDistributed(e, rounds)
@@ -42,73 +41,37 @@ object LabelProp {
 
   /** Small-graph path: CSR-by-dst + per-node count maps in ONE task. */
   private def runFused(e: DataFrame, rounds: Int): DataFrame =
-    e.coalesce(1).mapPartitions { it =>
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
-      val srcId = sb.result(); val dstId = db.result()
-      val m = srcId.length
-      if (m == 0) Iterator.empty
-      else {
-        val all = new Array[Long](2 * m)
-        System.arraycopy(srcId, 0, all, 0, m)
-        System.arraycopy(dstId, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        // CSR indexed by DST: for each node, its in-neighbor sources
-        val indeg = new Array[Int](n)
-        val srcIx = new Array[Int](m)
-        val dstIx = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          srcIx(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dstIx(i) = java.util.Arrays.binarySearch(ids, dstId(i))
-          indeg(dstIx(i)) += 1
-          i += 1
-        }
-        val off = new Array[Int](n + 1)
-        i = 0
-        while (i < n) { off(i + 1) = off(i) + indeg(i); i += 1 }
-        val inAdj = new Array[Int](m)
-        val cursor = off.clone()
-        i = 0
-        while (i < m) {
-          inAdj(cursor(dstIx(i))) = srcIx(i); cursor(dstIx(i)) += 1; i += 1
-        }
-        var label: Array[Long] = ids.clone()
-        for (_ <- 1 to rounds) {
-          val next = label.clone() // Jacobi: no-in-edge nodes keep theirs
-          val counts = new java.util.HashMap[Long, Int]()
-          var v = 0
-          while (v < n) {
-            if (off(v + 1) > off(v)) {
-              counts.clear()
-              var bestL = Long.MaxValue
-              var bestC = 0
-              var j = off(v)
-              while (j < off(v + 1)) {
-                val l = label(inAdj(j))
-                val c = counts.merge(l, 1, Integer.sum)
-                if (c > bestC || (c == bestC && l < bestL)) {
-                  bestC = c; bestL = l
-                }
-                j += 1
+    GraphEdges.local(e, outSchema) { g =>
+      val n = g.n
+      // CSR indexed by DST: for each node, its in-neighbor sources
+      val (off, inAdj) = g.csr(g.dst, g.src)
+      var label: Array[Long] = g.ids.clone()
+      for (_ <- 1 to rounds) {
+        val next = label.clone() // Jacobi: no-in-edge nodes keep theirs
+        val counts = new java.util.HashMap[Long, Int]()
+        var v = 0
+        while (v < n) {
+          if (off(v + 1) > off(v)) {
+            counts.clear()
+            var bestL = Long.MaxValue
+            var bestC = 0
+            var j = off(v)
+            while (j < off(v + 1)) {
+              val l = label(inAdj(j))
+              val c = counts.merge(l, 1, Integer.sum)
+              if (c > bestC || (c == bestC && l < bestL)) {
+                bestC = c; bestL = l
               }
-              next(v) = bestL
+              j += 1
             }
-            v += 1
+            next(v) = bestL
           }
-          label = next
+          v += 1
         }
-        Iterator.range(0, n).map(v => Row(ids(v), label(v)))
+        label = next
       }
-    }(Encoders.row(outSchema))
+      Iterator.range(0, n).map(v => Row(g.ids(v), label(v)))
+    }
 
   /** Cluster-scale path: join + two aggregates per round, checkpointed. */
   private def runDistributed(e: DataFrame, rounds: Int): DataFrame = {
@@ -157,8 +120,7 @@ object LabelProp {
       seeds: DataFrame, idCol: String, labelCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
+    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst"))).distinct()
     // one row per seed id: disagreeing duplicates would otherwise fan

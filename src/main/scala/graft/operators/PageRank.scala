@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -25,11 +25,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *
   * Like [[Dbscan.run]], a deduplicated edge set at or below
   * `localThreshold` takes a fused single-TASK path instead: the
-  * iteration loop runs inside one `mapPartitions` over the
-  * already-distinct edges — primitive-array adjacency (node ids
-  * resolved by binary search over a sorted id array, never a boxed
-  * map), zero further shuffles, none of the per-round job latency
-  * that dominates small graphs. Both paths implement the same
+  * iteration loop runs over the already-distinct edges compacted by
+  * [[GraphEdges.local]] (primitive arrays, never a boxed map), zero
+  * further shuffles, none of the per-round job latency that
+  * dominates small graphs. Both paths implement the same
   * formula; results agree to float sum-order (spec-enforced), and
   * the threshold bounds the task's transient memory at ~56 B/edge
   * (≈ 280 MB at the 5M default).
@@ -46,75 +45,8 @@ object PageRank {
     * @return (id, rank) for every node incident to an edge. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, damping: Double = 0.85,
-      localThreshold: Long = 5_000_000L): DataFrame = {
-    val (e, nEdges) = prepEdges(edges, srcCol, dstCol, iterations, damping)
-    if (nEdges <= localThreshold) runFused(e, iterations, damping)
-    else runDistributed(e, iterations, damping)
-  }
-
-  /** Shared prolog for [[run]]/[[personalized]]: validate parameters,
-    * normalize to a cached distinct (src, dst) long edge set, and
-    * materialize its count for the fused-vs-distributed dispatch.
-    * Cache lifecycle: released by the ContextCleaner with the plan,
-    * as in Dbscan.run — callers loop over SESSIONS, not operators. */
-  private def prepEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, damping: Double): (DataFrame, Long) = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1): $damping")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
-    (e, e.count())
-  }
-
-  /** Small-graph path: the whole iteration runs in ONE task over the
-    * (already shuffled-distinct, cached) edge list. */
-  private def runFused(e: DataFrame, iterations: Int,
-      damping: Double): DataFrame =
-    e.coalesce(1).mapPartitions { it =>
-      // primitive columns only — at the 5M-edge threshold a boxed
-      // tuple/map representation would cost hundreds of bytes per edge
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
-      val srcId = sb.result(); val dstId = db.result()
-      val m = srcId.length
-      if (m == 0) Iterator.empty
-      else {
-        // node table: sort + in-place dedup; id → index by binary search
-        val all = new Array[Long](2 * m)
-        System.arraycopy(srcId, 0, all, 0, m)
-        System.arraycopy(dstId, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val src = new Array[Int](m)
-        val dst = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          src(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dst(i) = java.util.Arrays.binarySearch(ids, dstId(i))
-          i += 1
-        }
-        val deg = new Array[Double](n)
-        src.foreach(s => deg(s) += 1.0)
-        var rank = Array.fill(n)(1.0 / n)
-        val base = (1.0 - damping) / n
-        for (_ <- 1 to iterations) {
-          val in = new Array[Double](n)
-          i = 0
-          while (i < m) {
-            in(dst(i)) += rank(src(i)) / deg(src(i)); i += 1
-          }
-          rank = Array.tabulate(n)(v => base + damping * in(v))
-        }
-        ids.iterator.zipWithIndex.map { case (id, j) => Row(id, rank(j)) }
-      }
-    }(Encoders.row(outSchema))
+      localThreshold: Long = 5_000_000L): DataFrame =
+    rank(edges, srcCol, dstCol, None, iterations, damping, localThreshold)
 
   /** Personalized PageRank: the teleport vector concentrates on a seed
     * set instead of spreading uniformly — "importance relative to THESE
@@ -136,121 +68,100 @@ object PageRank {
   def personalized(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, iterations: Int,
       damping: Double = 0.85,
-      localThreshold: Long = 5_000_000L): DataFrame = {
-    val (e, nEdges) = prepEdges(edges, srcCol, dstCol, iterations, damping)
-    val sd = seeds.select(col(seedCol).cast("long").as("sid")).distinct()
-    if (nEdges <= localThreshold) personalizedFused(e, sd, iterations,
-      damping)
-    else personalizedDistributed(e, sd, iterations, damping)
+      localThreshold: Long = 5_000_000L): DataFrame =
+    rank(edges, srcCol, dstCol,
+      Some(seeds.select(col(seedCol).cast("long").as("sid")).distinct()),
+      iterations, damping, localThreshold)
+
+  /** [[run]] (`seeds` None: uniform teleport) and [[personalized]]:
+    * one validation, one cached distinct edge set whose count picks
+    * the path, and one loop per path — the two differ only in the
+    * teleport and initial rank vectors. Cache lifecycle: released by
+    * the ContextCleaner with the plan, as in Dbscan.run — callers loop
+    * over SESSIONS, not operators. */
+  private def rank(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[DataFrame], iterations: Int, damping: Double,
+      localThreshold: Long): DataFrame = {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+    require(damping > 0 && damping < 1, s"damping must be in (0,1): $damping")
+    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
+    if (e.count() <= localThreshold) fused(e, seeds, iterations, damping)
+    else distributed(e, seeds, iterations, damping)
   }
 
-  private def personalizedFused(e: DataFrame, sd: DataFrame,
+  /** Small-graph path: the whole iteration runs in ONE task over the
+    * (already shuffled-distinct, cached) edge list. */
+  private def fused(e: DataFrame, seeds: Option[DataFrame],
       iterations: Int, damping: Double): DataFrame = {
     // the graph fits one task, so the seed set (⊆ its nodes that
     // matter) is driver-safe by the same bound — the naive-Bayes /
     // IVF-literal-centroid stance on sub-threshold models
-    val seedIds = sd.collect().map(_.getLong(0))
-    java.util.Arrays.sort(seedIds)
-    e.coalesce(1).mapPartitions { it =>
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
-      val srcId = sb.result(); val dstId = db.result()
-      val m = srcId.length
-      if (m == 0) Iterator.empty
-      else {
-        val all = new Array[Long](2 * m)
-        System.arraycopy(srcId, 0, all, 0, m)
-        System.arraycopy(dstId, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val src = new Array[Int](m)
-        val dst = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          src(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dst(i) = java.util.Arrays.binarySearch(ids, dstId(i))
-          i += 1
-        }
-        val isSeed = ids.map(id =>
-          java.util.Arrays.binarySearch(seedIds, id) >= 0)
-        val nS = isSeed.count(identity)
-        val deg = new Array[Double](n)
-        src.foreach(s => deg(s) += 1.0)
-        // an empty effective seed set has nothing to teleport to: all
-        // ranks are exactly 0 (the distributed path agrees)
-        val seedMass = if (nS == 0) 0.0 else 1.0 / nS
-        val base = Array.tabulate(n)(v =>
-          if (isSeed(v)) (1.0 - damping) * seedMass else 0.0)
-        var rank = Array.tabulate(n)(v => if (isSeed(v)) seedMass else 0.0)
-        for (_ <- 1 to iterations) {
-          val in = new Array[Double](n)
-          i = 0
-          while (i < m) {
-            in(dst(i)) += rank(src(i)) / deg(src(i)); i += 1
-          }
-          rank = Array.tabulate(n)(v => base(v) + damping * in(v))
-        }
-        ids.iterator.zipWithIndex.map { case (id, j) => Row(id, rank(j)) }
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  private def personalizedDistributed(e: DataFrame, sd: DataFrame,
-      iterations: Int, damping: Double): DataFrame = {
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .join(broadcast(sd), col("id") === col("sid"), "left")
-      .select(col("id"), col("sid").isNotNull.as("seed"))
-      .persist()
-    val nS = nodes.filter(col("seed")).count()
-    val seedMass = if (nS == 0) 0.0 else 1.0 / nS
-    val baseCol = when(col("seed"), lit((1.0 - damping) * seedMass))
-      .otherwise(lit(0.0))
-    val eDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .persist()
-    var ranks = nodes.select(col("id"),
-      when(col("seed"), lit(seedMass)).otherwise(lit(0.0)).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = eDeg.join(ranks, col("src") === col("id"))
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("m"))
-      ranks = nodes.join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (baseCol + lit(damping) * coalesce(col("m"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint()
+    val seedIds = seeds.map { sd =>
+      val s = sd.collect().map(_.getLong(0)); java.util.Arrays.sort(s); s
     }
-    nodes.unpersist()
-    eDeg.unpersist()
-    ranks
+    GraphEdges.local(e, outSchema) { g =>
+      val n = g.n
+      val (base, init) = seedIds match {
+        case None =>
+          (Array.fill(n)((1.0 - damping) / n), Array.fill(n)(1.0 / n))
+        case Some(s) =>
+          val isSeed = g.ids.map(id =>
+            java.util.Arrays.binarySearch(s, id) >= 0)
+          val nS = isSeed.count(identity)
+          // an empty effective seed set has nothing to teleport to: all
+          // ranks are exactly 0 (the distributed path agrees)
+          val seedMass = if (nS == 0) 0.0 else 1.0 / nS
+          (Array.tabulate(n)(v =>
+            if (isSeed(v)) (1.0 - damping) * seedMass else 0.0),
+            Array.tabulate(n)(v => if (isSeed(v)) seedMass else 0.0))
+      }
+      val deg = new Array[Double](n)
+      g.src.foreach(s => deg(s) += 1.0)
+      var rank = init
+      for (_ <- 1 to iterations) {
+        val in = new Array[Double](n)
+        var i = 0
+        while (i < g.m) {
+          in(g.dst(i)) += rank(g.src(i)) / deg(g.src(i)); i += 1
+        }
+        rank = Array.tabulate(n)(v => base(v) + damping * in(v))
+      }
+      g.ids.iterator.zipWithIndex.map { case (id, j) => Row(id, rank(j)) }
+    }
   }
 
   /** Cluster-scale path: per-round join + aggregate, checkpointed. */
-  private def runDistributed(e: DataFrame, iterations: Int,
-      damping: Double): DataFrame = {
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist()
-    val n = math.max(nodes.count(), 1L)
+  private def distributed(e: DataFrame, seeds: Option[DataFrame],
+      iterations: Int, damping: Double): DataFrame = {
+    val ids = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()
+    val (nodes, base, init) = seeds match {
+      case None =>
+        val nodes = ids.persist()
+        val n = math.max(nodes.count(), 1L)
+        (nodes, lit((1.0 - damping) / n), lit(1.0 / n))
+      case Some(sd) =>
+        val nodes = ids.join(broadcast(sd), col("id") === col("sid"), "left")
+          .select(col("id"), col("sid").isNotNull.as("seed"))
+          .persist()
+        val nS = nodes.filter(col("seed")).count()
+        val seedMass = if (nS == 0) 0.0 else 1.0 / nS
+        (nodes, when(col("seed"), lit((1.0 - damping) * seedMass))
+          .otherwise(lit(0.0)),
+          when(col("seed"), lit(seedMass)).otherwise(lit(0.0)))
+    }
     // out-degree rides each edge row: groupBy(src) and the join back
     // are co-partitioned (one shuffle), cached for every round
     val eDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .persist()
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+    var ranks = nodes.select(col("id"), init.as("rank"))
     for (_ <- 1 to iterations) {
       val contribs = eDeg.join(ranks, col("src") === col("id"))
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy("dst").agg(sum(col("c")).as("m"))
       ranks = nodes.join(contribs, col("id") === col("dst"), "left")
         .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("m"), lit(0.0))).as("rank"))
+          (base + lit(damping) * coalesce(col("m"), lit(0.0))).as("rank"))
         .localCheckpoint() // cut the per-round lineage, like the CC loop
     }
     nodes.unpersist()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -46,99 +46,47 @@ object ShortestPath {
       seeds: DataFrame, seedCol: String, maxHops: Int = 20,
       localThreshold: Long = 5_000_000L): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
+    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
     val s = seeds.select(col(seedCol).cast("long").as("id")).distinct()
     val nEdges = e.count()
     if (nEdges <= localThreshold) runFused(e, s, maxHops)
     else runDistributed(e, s, maxHops)
   }
 
-  /** Small-graph path: CSR + array-based BFS in ONE task. Seeds are
-    * flagged in-band (edge rows with src = id, dst = MinValue sentinel
-    * never collide with real edges, which were distinct-projected
-    * first), so the single task sees both inputs without a join. */
+  /** Small-graph path: CSR + array-based BFS in ONE task; the seeds
+    * ride in-band ([[GraphEdges.local]]). */
   private def runFused(e: DataFrame, s: DataFrame,
-      maxHops: Int): DataFrame = {
-    val tagged = e.select(col("src"), col("dst"), lit(false).as("seed"))
-      .unionAll(s.select(col("id").as("src"),
-        lit(Long.MinValue).as("dst"), lit(true).as("seed")))
-    tagged.coalesce(1).mapPartitions { it =>
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      val seedB = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r =>
-        if (r.getBoolean(2)) seedB += r.getLong(0)
-        else { sb += r.getLong(0); db += r.getLong(1) }
+      maxHops: Int): DataFrame =
+    GraphEdges.local(e, outSchema, Some(s)) { g =>
+      val n = g.n
+      val (off, adj) = g.csr(g.src, g.dst)
+      val hops = Array.fill(n)(-1)
+      var frontier = new Array[Int](g.seeds.length)
+      var fn = 0
+      g.seeds.foreach { ix =>
+        if (hops(ix) < 0) { hops(ix) = 0; frontier(fn) = ix; fn += 1 }
       }
-      val srcId = sb.result(); val dstId = db.result()
-      val seedId = seedB.result()
-      val m = srcId.length
-      // node table = edge endpoints ∪ seeds: sort + in-place dedup
-      val all = new Array[Long](2 * m + seedId.length)
-      System.arraycopy(srcId, 0, all, 0, m)
-      System.arraycopy(dstId, 0, all, m, m)
-      System.arraycopy(seedId, 0, all, 2 * m, seedId.length)
-      java.util.Arrays.sort(all)
-      var n = 0
-      var i = 0
-      while (i < all.length) {
-        if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-        i += 1
-      }
-      val ids = java.util.Arrays.copyOf(all, n)
-      if (n == 0) Iterator.empty
-      else {
-        // CSR: counting sort of edges by src index
-        val deg = new Array[Int](n)
-        val srcIx = new Array[Int](m)
-        val dstIx = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          srcIx(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dstIx(i) = java.util.Arrays.binarySearch(ids, dstId(i))
-          deg(srcIx(i)) += 1
+      var depth = 0
+      while (fn > 0 && depth < maxHops) {
+        depth += 1
+        val next = new Array[Int](n)
+        var nn = 0
+        var i = 0
+        while (i < fn) {
+          val v = frontier(i)
+          var j = off(v)
+          while (j < off(v + 1)) {
+            val w = adj(j)
+            if (hops(w) < 0) { hops(w) = depth; next(nn) = w; nn += 1 }
+            j += 1
+          }
           i += 1
         }
-        val off = new Array[Int](n + 1)
-        i = 0
-        while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-        val adj = new Array[Int](m)
-        val cursor = off.clone()
-        i = 0
-        while (i < m) {
-          adj(cursor(srcIx(i))) = dstIx(i); cursor(srcIx(i)) += 1; i += 1
-        }
-        val hops = Array.fill(n)(-1)
-        var frontier = new Array[Int](seedId.length)
-        var fn = 0
-        seedId.foreach { sid =>
-          val ix = java.util.Arrays.binarySearch(ids, sid)
-          if (hops(ix) < 0) { hops(ix) = 0; frontier(fn) = ix; fn += 1 }
-        }
-        var depth = 0
-        while (fn > 0 && depth < maxHops) {
-          depth += 1
-          val next = new Array[Int](n)
-          var nn = 0
-          i = 0
-          while (i < fn) {
-            val v = frontier(i)
-            var j = off(v)
-            while (j < off(v + 1)) {
-              val w = adj(j)
-              if (hops(w) < 0) { hops(w) = depth; next(nn) = w; nn += 1 }
-              j += 1
-            }
-            i += 1
-          }
-          frontier = next; fn = nn
-        }
-        Iterator.range(0, n).filter(hops(_) >= 0)
-          .map(v => Row(ids(v), hops(v)))
+        frontier = next; fn = nn
       }
-    }(Encoders.row(outSchema))
-  }
+      Iterator.range(0, n).filter(hops(_) >= 0)
+        .map(v => Row(g.ids(v), hops(v)))
+    }
 
   private val wOutSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -175,70 +123,32 @@ object ShortestPath {
     else weightedDistributed(e, s, rounds)
   }
 
-  /** Small-graph path: Bellman–Ford rounds over CSR arrays in ONE task.
-    * Seeds ride in-band like [[runFused]]. */
+  /** Small-graph path: Bellman–Ford rounds over edge arrays in ONE
+    * task. Seeds ride in-band like [[runFused]]; a distance that
+    * overflows a long fails the query, as the distributed path's ANSI
+    * `bigint + bigint` does. */
   private def weightedFused(e: DataFrame, s: DataFrame,
-      rounds: Int): DataFrame = {
-    val tagged = e.select(col("src"), col("dst"), col("w"),
-      lit(false).as("seed"))
-      .unionAll(s.select(col("id").as("src"),
-        lit(Long.MinValue).as("dst"), lit(0L).as("w"),
-        lit(true).as("seed")))
-    tagged.coalesce(1).mapPartitions { it =>
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      val wb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val seedB = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r =>
-        if (r.getBoolean(3)) seedB += r.getLong(0)
-        else { sb += r.getLong(0); db += r.getLong(1); wb += r.getLong(2) }
-      }
-      val srcId = sb.result(); val dstId = db.result()
-      val w = wb.result(); val seedId = seedB.result()
-      val m = srcId.length
-      val all = new Array[Long](2 * m + seedId.length)
-      System.arraycopy(srcId, 0, all, 0, m)
-      System.arraycopy(dstId, 0, all, m, m)
-      System.arraycopy(seedId, 0, all, 2 * m, seedId.length)
-      java.util.Arrays.sort(all)
-      var n = 0
-      var i = 0
-      while (i < all.length) {
-        if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-        i += 1
-      }
-      val ids = java.util.Arrays.copyOf(all, n)
-      if (n == 0) Iterator.empty
-      else {
-        val srcIx = new Array[Int](m)
-        val dstIx = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          srcIx(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dstIx(i) = java.util.Arrays.binarySearch(ids, dstId(i))
+      rounds: Int): DataFrame =
+    GraphEdges.local(e, wOutSchema, Some(s)) { g =>
+      val NoDist = Long.MaxValue
+      var dist = Array.fill(g.n)(NoDist)
+      g.seeds.foreach(dist(_) = 0L)
+      for (_ <- 1 to rounds) {
+        val next = dist.clone()
+        var i = 0
+        while (i < g.m) {
+          val ds = dist(g.src(i))
+          if (ds != NoDist) {
+            val d = Math.addExact(ds, g.w(i))
+            if (d < next(g.dst(i))) next(g.dst(i)) = d
+          }
           i += 1
         }
-        val NoDist = Long.MaxValue
-        var dist = Array.fill(n)(NoDist)
-        seedId.foreach { sid =>
-          dist(java.util.Arrays.binarySearch(ids, sid)) = 0L
-        }
-        for (_ <- 1 to rounds) {
-          val next = dist.clone()
-          i = 0
-          while (i < m) {
-            val ds = dist(srcIx(i))
-            if (ds != NoDist && ds + w(i) < next(dstIx(i)))
-              next(dstIx(i)) = ds + w(i)
-            i += 1
-          }
-          dist = next
-        }
-        Iterator.range(0, n).filter(dist(_) != NoDist)
-          .map(v => Row(ids(v), dist(v)))
+        dist = next
       }
-    }(Encoders.row(wOutSchema))
-  }
+      Iterator.range(0, g.n).filter(dist(_) != NoDist)
+        .map(v => Row(g.ids(v), dist(v)))
+    }
 
   /** Cluster-scale path: join + min-aggregate per round, checkpointed. */
   private def weightedDistributed(e: DataFrame, s: DataFrame,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -51,102 +51,63 @@ object TriangleCount {
     *   nodes in no triangle report 0. */
   def perNode(edges: DataFrame, srcCol: String, dstCol: String,
       localThreshold: Long = 2_000_000L): DataFrame = {
-    val s = col(srcCol).cast("long")
-    val d = col(dstCol).cast("long")
     // canonical undirected edges u < v (drops self-loops + duplicates);
     // the path probe materializes it either way, so cache it for the
     // downstream branches (released with the plan by the
     // ContextCleaner, as in Dbscan.run)
-    val ce = edges.select(least(s, d).as("u"), greatest(s, d).as("v"))
-      .filter(col("u") < col("v")).distinct().persist()
+    val ce = GraphEdges.canonical(edges, srcCol, dstCol).toDF("u", "v")
+      .persist()
     if (ce.count() <= localThreshold) perNodeFused(ce)
     else perNodeDistributed(ce)
   }
 
   /** Small-graph path: the whole count runs in ONE task over the
-    * (already shuffled-distinct, cached) canonical edge list. */
+    * [[GraphEdges.local]] compact graph of the (already
+    * shuffled-distinct, cached) canonical edge list. */
   private def perNodeFused(ce: DataFrame): DataFrame =
-    ce.coalesce(1).mapPartitions { it =>
-      // primitive columns only (same discipline as PageRank.runFused)
-      val ub = new scala.collection.mutable.ArrayBuilder.ofLong
-      val vb = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => ub += r.getLong(0); vb += r.getLong(1) }
-      val uId = ub.result(); val vId = vb.result()
-      val m = uId.length
-      if (m == 0) Iterator.empty
-      else {
-        // node table: sort + in-place dedup; id → index by binary search
-        val all = new Array[Long](2 * m)
-        System.arraycopy(uId, 0, all, 0, m)
-        System.arraycopy(vId, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val eu = new Array[Int](m)
-        val ev = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          eu(i) = java.util.Arrays.binarySearch(ids, uId(i))
-          ev(i) = java.util.Arrays.binarySearch(ids, vId(i))
-          i += 1
-        }
-        val deg = new Array[Int](n)
-        i = 0; while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
-        // rank(a) < rank(b) by (deg, id); ids is sorted, so the id
-        // tie-break is the index itself
-        @inline def lt(a: Int, b: Int): Boolean =
-          deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
-        // orient lo→hi and build CSR out-adjacency; out-lists end up
-        // sorted by packed (lo, hi) edge order, which two-pointer
-        // intersection needs
-        val lo = new Array[Int](m)
-        val hi = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          if (lt(eu(i), ev(i))) { lo(i) = eu(i); hi(i) = ev(i) }
-          else { lo(i) = ev(i); hi(i) = eu(i) }
-          i += 1
-        }
-        val outDeg = new Array[Int](n)
-        i = 0; while (i < m) { outDeg(lo(i)) += 1; i += 1 }
-        val start = new Array[Int](n + 1)
-        i = 0; while (i < n) { start(i + 1) = start(i) + outDeg(i); i += 1 }
-        val adj = new Array[Int](m)
-        val fill = java.util.Arrays.copyOf(start, n)
-        i = 0
-        while (i < m) {
-          adj(fill(lo(i))) = hi(i); fill(lo(i)) += 1; i += 1
-        }
-        i = 0
-        while (i < n) { // sort each out-list for the merge intersection
-          java.util.Arrays.sort(adj, start(i), start(i + 1)); i += 1
-        }
-        // edge-iterator: for each oriented edge a→b, every
-        // c ∈ out(a) ∩ out(b) closes the triangle {a,b,c} with
-        // rank(a) < rank(b) < rank(c) — found exactly once, at its
-        // lowest-rank edge
-        val tri = new Array[Long](n)
-        i = 0
-        while (i < m) {
-          val a = lo(i); val b = hi(i)
-          var p = start(a); var q = start(b)
-          val pe = start(a + 1); val qe = start(b + 1)
-          while (p < pe && q < qe) {
-            val x = adj(p); val y = adj(q)
-            if (x == y) { tri(a) += 1; tri(b) += 1; tri(x) += 1; p += 1; q += 1 }
-            else if (x < y) p += 1
-            else q += 1
-          }
-          i += 1
-        }
-        ids.iterator.zipWithIndex.map { case (id, j) => Row(id, tri(j)) }
+    GraphEdges.local(ce, outSchema) { g =>
+      val n = g.n; val m = g.m; val eu = g.src; val ev = g.dst
+      val deg = new Array[Int](n)
+      var i = 0
+      while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
+      // rank(a) < rank(b) by (deg, id); ids is sorted, so the id
+      // tie-break is the index itself
+      @inline def lt(a: Int, b: Int): Boolean =
+        deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+      // orient lo→hi and build CSR out-adjacency
+      val lo = new Array[Int](m)
+      val hi = new Array[Int](m)
+      i = 0
+      while (i < m) {
+        if (lt(eu(i), ev(i))) { lo(i) = eu(i); hi(i) = ev(i) }
+        else { lo(i) = ev(i); hi(i) = eu(i) }
+        i += 1
       }
-    }(Encoders.row(outSchema))
+      val (start, adj) = g.csr(lo, hi)
+      i = 0
+      while (i < n) { // sort each out-list for the merge intersection
+        java.util.Arrays.sort(adj, start(i), start(i + 1)); i += 1
+      }
+      // edge-iterator: for each oriented edge a→b, every
+      // c ∈ out(a) ∩ out(b) closes the triangle {a,b,c} with
+      // rank(a) < rank(b) < rank(c) — found exactly once, at its
+      // lowest-rank edge
+      val tri = new Array[Long](n)
+      i = 0
+      while (i < m) {
+        val a = lo(i); val b = hi(i)
+        var p = start(a); var q = start(b)
+        val pe = start(a + 1); val qe = start(b + 1)
+        while (p < pe && q < qe) {
+          val x = adj(p); val y = adj(q)
+          if (x == y) { tri(a) += 1; tri(b) += 1; tri(x) += 1; p += 1; q += 1 }
+          else if (x < y) p += 1
+          else q += 1
+        }
+        i += 1
+      }
+      g.ids.iterator.zipWithIndex.map { case (id, j) => Row(id, tri(j)) }
+    }
 
   /** Cluster-scale path: orientation join + wedge equi-join + closing
     * probe, all shuffled on edge keys. */

@@ -71,6 +71,16 @@ class ShortestPathSpec extends SparkSpec {
     assert(runW(chain, Seq(1L), 2, localThreshold = 0) == got)
   }
 
+  test("weighted: a distance overflowing a long fails on both paths") {
+    val w = Long.MaxValue / 2 + 1 // two hops sum past Long.MaxValue
+    val chain = Seq((1L, 2L, w), (2L, 3L, w))
+    Seq(100L, 0L).foreach { t =>
+      val ex = intercept[Exception](runW(chain, Seq(1L), 2, t))
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"threshold $t: $ex")
+    }
+  }
+
   test("weighted random graph: both paths equal sequential Bellman-Ford") {
     val rnd = new scala.util.Random(23)
     val edges = (1 to 400).map(_ => (rnd.nextInt(80).toLong,
