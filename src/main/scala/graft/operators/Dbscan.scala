@@ -44,12 +44,6 @@ object Dbscan {
   private[graft] def probeCap(localThreshold: Long): Int =
     (math.min(localThreshold, Int.MaxValue.toLong - 1) + 1).toInt
 
-  /** ε-pair stream with automatic physical routing: explicit bucket
-    * dims → the grid equi-join; no dims on >3-dimensional data → the
-    * per-partition kd-tree path (the 3-dim grid cannot even represent
-    * those inputs, and the brute nested-loop scan is quadratic); no
-    * dims on ≤3-d data → the caller chose brute force, honor it.
-    * All three produce the identical ordered pair set. */
   /** Dense cluster ids 1..K ordered by comp, for components of at
     * least `minClusterSize` members: (comp, cluster_id: int).
     *
@@ -74,6 +68,12 @@ object Dbscan {
           org.apache.spark.sql.expressions.Window.orderBy("comp"))
           .cast("int").as("cluster_id"))
 
+  /** ε-pair stream with automatic physical routing: explicit bucket
+    * dims → the grid equi-join; no dims on >3-dimensional data → the
+    * per-partition kd-tree path (the 3-dim grid cannot even represent
+    * those inputs, and the brute nested-loop scan is quadratic); no
+    * dims on ≤3-d data → the caller chose brute force, honor it.
+    * All three produce the identical ordered pair set. */
   private def epsPairs(points: DataFrame, idCol: String, vecCol: String,
       eps: Double, bucketDims: Seq[Int],
       saltTable: Option[DataFrame] = None): DataFrame =
@@ -121,8 +121,8 @@ object Dbscan {
     // Small-input fast path: the distributed pipeline costs ~15 Spark jobs
     // (join + agg + CC loop), each ~0.1-0.3 s of orchestration in local
     // mode — the entire gap to the reference on its 61k-point benchmarks.
-    // Below the threshold, run the whole clustering in ONE task with a
-    // grid-indexed sequential DBSCAN that reproduces the distributed
+    // Below the threshold, run the whole clustering in ONE task with
+    // the grid-indexed LocalDbscan kernel, which reproduces the distributed
     // path's canonical labels exactly (same distance fold, same min-id
     // component labels, same dense-id ordering). Size probe via
     // limit(threshold+1): stops scanning early on big inputs instead of
@@ -235,10 +235,8 @@ object Dbscan {
   }
 
   /** One-task DBSCAN for small inputs: identical labels to the distributed
-    * path (grid-indexed neighbor search, min-id core components, min-comp
-    * border attach, dense ids by component key, noise = 0), computed in a
-    * single mapPartitions over a coalesced partition — no shuffles, no CC
-    * loop, no driver-side point data. */
+    * path, computed in a single mapPartitions over a coalesced partition
+    * — no shuffles, no CC loop, no driver-side point data. */
   private def runLocal(pts: DataFrame, idCol: String, vecCol: String,
       eps: Double, minPts: Int, bucketDims: Seq[Int],
       minClusterSize: Int): DataFrame = {
@@ -251,7 +249,8 @@ object Dbscan {
       .mapPartitions { it =>
         val rows = it.map(r =>
           (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
-        localLabels(rows, eps, minPts, dimsArr, minClusterSize)
+        localLabels(rows.map(_._1), rows.map(_._2), eps, minPts, dimsArr,
+          minClusterSize)
           .map { case (id, cid) => Row(id, cid) }
       }
     spark.createDataFrame(rdd, StructType(Seq(
@@ -259,206 +258,37 @@ object Dbscan {
       StructField("cluster_id", IntegerType, nullable = false))))
   }
 
-  /** Sequential grid-DBSCAN kernel (runs inside one task). Semantics match
-    * the distributed path exactly:
-    *  - distance = double left-to-right fold of (a_i−b_i)², self-inclusive
-    *    `>=` core test (`dbscan.cpp:739`);
-    *  - component label = min core id (the distributed CC's canonical rule);
+  /** Labels from the shared [[LocalDbscan]] kernel (runs inside one
+    * task). On top of the kernel's core test and min-id components it
+    * keeps the distributed path's rules:
     *  - border → min component label among core neighbors;
     *  - dense ids 1..K by ascending component label over components with
     *    ≥ minClusterSize members; everything else 0 (noise). */
-  private[operators] def localLabels(rows: Array[(Long, Array[Float])],
-      eps: Double, minPts: Int, bucketDims: Array[Int],
-      minClusterSize: Int): Iterator[(Long, Int)] = {
-    val n = rows.length
-    if (n == 0) return Iterator.empty
-    val eps2 = eps * eps
-    val k = bucketDims.length
-    val ids = new Array[Long](n)
-    val vecs = new Array[Array[Float]](n)
-    var i = 0
-    while (i < n) { ids(i) = rows(i)._1; vecs(i) = rows(i)._2; i += 1 }
-
-    // Plain full fold, deliberately WITHOUT the reference's early exit
-    // (`kdtree2.cpp:620-630`): measured on the 64-dim embedding workloads,
-    // both per-element and 16-blocked exit variants ran ~2x SLOWER here —
-    // the branchless loop inlines and unrolls better under HotSpot, and
-    // with ε near the nearest-pair distance the exit fires too late to pay
-    // for itself. (The DISTRIBUTED ε-join's codegen'd predicate
-    // `functions.WithinEps` does early-exit — measured mildly positive
-    // there.)
-    def within(a: Array[Float], b: Array[Float]): Boolean = {
-      val m = math.min(a.length, b.length)
-      var acc = 0.0
-      var j = 0
-      while (j < m) {
-        val d = a(j).toDouble - b(j).toDouble
-        acc += d * d
-        j += 1
-      }
-      acc <= eps2
-    }
-
-    // grid over the bucketed dims (same cell function as the distributed
-    // ε-join: floor(coord/ε) per dim); k = 0 → single cell (brute force)
-    def cellOf(v: Array[Float]): Vector[Long] = {
-      val c = new Array[Long](k)
-      var j = 0
-      while (j < k) {
-        c(j) = math.floor(v(bucketDims(j)).toDouble / eps).toLong
-        j += 1
-      }
-      c.toVector
-    }
-    val grid = new scala.collection.mutable.HashMap[Vector[Long],
-      scala.collection.mutable.ArrayBuffer[Int]]()
-    i = 0
-    while (i < n) {
-      grid.getOrElseUpdate(cellOf(vecs(i)),
-        new scala.collection.mutable.ArrayBuffer[Int]) += i
-      i += 1
-    }
-    val offs = EpsilonJoin.offsets(k).map(_.toArray).toArray
-    // visit every point in the 3^k cells around p, calling f on in-ε ones
-    def forEachNeighbor(p: Int)(f: Int => Unit): Unit = {
-      val home = cellOf(vecs(p))
-      var oi = 0
-      while (oi < offs.length) {
-        val off = offs(oi)
-        val cell = Vector.tabulate(k)(j => home(j) + off(j))
-        grid.get(cell) match {
-          case Some(buf) =>
-            var bi = 0
-            while (bi < buf.length) {
-              val q = buf(bi)
-              if (q != p && within(vecs(p), vecs(q))) f(q)
-              bi += 1
-            }
-          case None =>
-        }
-        oi += 1
-      }
-    }
-
-    // The three scan passes are embarrassingly parallel per point — use
-    // the executor's cores inside this single task (a Spark task occupies
-    // one scheduler slot; the thread pool recovers the parallelism the
-    // one-task plan gave up). Deterministic: pass results are pure
-    // per-point, and the concurrent union-find's final partition is the
-    // connectivity closure, independent of interleaving.
-    def parallelFor(total: Int)(body: Int => Unit): Unit = {
-      val threads = math.max(1, math.min(
-        Runtime.getRuntime.availableProcessors(), 16))
-      if (threads == 1 || total < 2048) { var j = 0; while (j < total) { body(j); j += 1 } }
-      else {
-        val next = new java.util.concurrent.atomic.AtomicInteger(0)
-        // a worker that dies silently would leave its chunks unprocessed
-        // and the pass would "succeed" with wrong labels — capture the
-        // first failure and rethrow it on the task thread
-        val firstError =
-          new java.util.concurrent.atomic.AtomicReference[Throwable]()
-        val chunk = 256
-        val pool = (0 until threads).map { _ =>
-          new Thread(() => {
-            try {
-              var start = next.getAndAdd(chunk)
-              while (start < total && firstError.get() == null) {
-                val end = math.min(start + chunk, total)
-                var j = start
-                while (j < end) { body(j); j += 1 }
-                start = next.getAndAdd(chunk)
-              }
-            } catch {
-              case t: Throwable => firstError.compareAndSet(null, t)
-            }
-          })
-        }
-        pool.foreach(_.start())
-        pool.foreach(_.join())
-        if (firstError.get() != null) throw firstError.get()
-      }
-    }
-
-    // pass 1: core test (neighbor count includes the point itself)
-    val isCore = new Array[Boolean](n)
-    parallelFor(n) { p =>
-      var cnt = 1
-      forEachNeighbor(p)(_ => cnt += 1)
-      isCore(p) = cnt >= minPts
-    }
-
-    // pass 2: lock-free union-find over core-core edges (CAS on roots —
-    // Rem's-style concurrent UF, the shared-memory analog of the
-    // reference's REMS loop, `dbscan.cpp:764-788`)
-    val parent = new java.util.concurrent.atomic.AtomicIntegerArray(n)
-    i = 0
-    while (i < n) { parent.set(i, i); i += 1 }
-    def find(x: Int): Int = {
-      var r = x
-      var p = parent.get(r)
-      while (p != r) {
-        val gp = parent.get(p)
-        parent.compareAndSet(r, p, gp) // path halving; failure is benign
-        r = gp
-        p = parent.get(r)
-      }
-      r
-    }
-    def union(x: Int, y: Int): Unit = {
-      var a = x; var b = y
-      while (true) {
-        a = find(a); b = find(b)
-        if (a == b) return
-        // always hang the larger root under the smaller: roots only ever
-        // decrease, so the CAS-on-root linearizes concurrent unions
-        val (lo, hi) = if (a < b) (a, b) else (b, a)
-        if (parent.compareAndSet(hi, hi, lo)) return
-      }
-    }
-    parallelFor(n) { p =>
-      if (isCore(p)) forEachNeighbor(p) { q =>
-        if (isCore(q) && q > p) union(p, q) // each undirected edge once
-      }
-    }
-    // canonical component label = min core ID in the component
-    val compMin = new scala.collection.mutable.LongMap[Long]()
-    i = 0
-    while (i < n) {
-      if (isCore(i)) {
-        val r = find(i).toLong
-        compMin(r) = math.min(compMin.getOrElse(r, Long.MaxValue), ids(i))
-      }
-      i += 1
-    }
-    // pass 3: label cores; borders get the min component label among
-    // core neighbors (the distributed path's deterministic attach rule).
-    // find() is read-mostly here (all roots settled) — safe concurrently.
+  private[operators] def localLabels(ids: Array[Long],
+      vecs: Array[Array[Float]], eps: Double, minPts: Int,
+      bucketDims: Array[Int], minClusterSize: Int): Iterator[(Long, Int)] = {
+    val kern = new LocalDbscan(ids, vecs, eps, minPts, bucketDims)
+    val n = kern.n
     val label = new Array[Long](n)
-    java.util.Arrays.fill(label, -1L)
-    parallelFor(n) { p =>
-      if (isCore(p)) label(p) = compMin(find(p).toLong)
-      else {
-        var best = Long.MaxValue
-        forEachNeighbor(p) { q =>
-          if (isCore(q)) {
-            val l = compMin(find(q).toLong)
-            if (l < best) best = l
-          }
+    val clustered = new Array[Boolean](n)
+    InTask.parallelFor(n) { p =>
+      if (kern.isCore(p)) { label(p) = kern.comp(p); clustered(p) = true }
+      else kern.forEachCoreNeighbor(p) { q =>
+        if (!clustered(p) || kern.comp(q) < label(p)) {
+          label(p) = kern.comp(q); clustered(p) = true
         }
-        if (best != Long.MaxValue) label(p) = best
       }
     }
-    // dense ids over components with >= minClusterSize members
     val sizes = new scala.collection.mutable.LongMap[Int]()
-    i = 0
+    var i = 0
     while (i < n) {
-      if (label(i) >= 0) sizes(label(i)) = sizes.getOrElse(label(i), 0) + 1
+      if (clustered(i)) sizes(label(i)) = sizes.getOrElse(label(i), 0) + 1
       i += 1
     }
     val dense = sizes.iterator.filter(_._2 >= minClusterSize).map(_._1)
       .toArray.sorted.zipWithIndex.map { case (c, j) => c -> (j + 1) }.toMap
     Iterator.tabulate(n)(j =>
-      (ids(j), if (label(j) >= 0) dense.getOrElse(label(j), 0) else 0))
+      (ids(j), if (clustered(j)) dense.getOrElse(label(j), 0) else 0))
   }
 
   /** Cluster statistics — the reference's end-of-run report

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import InTask.parallelFor
 
 /** Fused single-task twins of the graph-ANN operators (the
   * [[Dbscan]] `runLocal` discipline applied to [[AnnSearch]]'s k-NN
@@ -14,8 +15,9 @@ import org.apache.spark.sql.types._
   * small standing indexes that floor, not data volume, is the entire
   * bill (measured round 11: the seven graph-family queries were 7 of
   * the 10 slowest at sf0.1 on 2,000 vectors). Below a size guard the
-  * whole operator runs in ONE task (thread-parallel inside, like
-  * `Dbscan.localLabels`) with NO driver-side row data and NO shuffles.
+  * whole operator runs in ONE task (thread-parallel inside through
+  * [[InTask.parallelFor]], like [[LocalDbscan]]) with NO driver-side
+  * row data and NO shuffles.
   *
   * EXACTNESS CONTRACT: every fused kernel reproduces the distributed
   * dataflow bit-for-bit —
@@ -109,39 +111,6 @@ private[graft] object GraphAnnLocal {
       nb: Double): Double = -(dot(va, vb) / math.sqrt(na * nb))
 
   // ---------- shared small utilities ----------
-
-  /** `Dbscan.localLabels`' thread-parallel loop (one task may use all
-    * executor cores — a task is a scheduler slot, not a core cage). */
-  private def parallelFor(total: Int)(body: Int => Unit): Unit = {
-    val threads = math.max(1, math.min(
-      Runtime.getRuntime.availableProcessors(), 16))
-    if (threads == 1 || total < 512) {
-      var j = 0; while (j < total) { body(j); j += 1 }
-    } else {
-      val next = new java.util.concurrent.atomic.AtomicInteger(0)
-      val firstError =
-        new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val chunk = 64
-      val pool = (0 until threads).map { _ =>
-        new Thread(() => {
-          try {
-            var start = next.getAndAdd(chunk)
-            while (start < total && firstError.get() == null) {
-              val end = math.min(start + chunk, total)
-              var j = start
-              while (j < end) { body(j); j += 1 }
-              start = next.getAndAdd(chunk)
-            }
-          } catch {
-            case t: Throwable => firstError.compareAndSet(null, t)
-          }
-        })
-      }
-      pool.foreach(_.start())
-      pool.foreach(_.join())
-      if (firstError.get() != null) throw firstError.get()
-    }
-  }
 
   /** Sort + dedup the first `len` entries of `buf`, dropping `excl`. */
   private def sortedDistinct(buf: Array[Int], len: Int,

@@ -23,71 +23,33 @@ import org.apache.spark.sql.types._
   * The incremental dataflows maintain exactly these invariants (that is
   * how [[IncrementalDbscan.labels]] stays spec-identical to a
   * from-scratch [[Dbscan.run]]), so a from-scratch one-task rebuild of
-  * the four tables is bit-identical to the distributed fold — every
-  * value is an id, a count, or a min-id (integer-exact; the only float
-  * work is the ≤ eps² predicate, the same left-to-right double fold as
-  * `Dbscan.localLabels.within`). IncrementalDbscanLocalSpec pins fused
-  * == forced-distributed table by table; q164/q231/q235 stay
+  * the four tables is bit-identical to the distributed fold: every
+  * value is an id, a count or a min id from the shared [[LocalDbscan]]
+  * kernel, whose only float work is the same left-to-right double ε
+  * fold. IncrementalDbscanLocalSpec pins fused == forced-distributed
+  * table by table, with and without bucket dims; q164/q231/q235 stay
   * oracle-gated.
   *
   * SCALE HONESTY: probe-guarded (limit-count, stops early on big
   * inputs), threshold parameterised (`graft.incrDbscan.localThreshold`
-  * sys-prop / `SPARK_GRAFT_INCR_LOCAL`, default 20k points, 0 disables
-  * — the brute-force pair scan is n², so the default also caps the
-  * task's work at ~4·10⁸ distance folds). The 500k scale diagnostics
-  * and the parity tools keep exercising the distributed machinery. */
+  * sys-prop, default 20k points, 0 disables). The kernel searches
+  * neighbors on the same `bucketDims` ε-grid as the distributed
+  * `EpsilonJoin` (3^k cells per point); with no bucket dims it is a
+  * brute-force n² scan, so the default also caps the task's work at
+  * ~4·10⁸ distance folds. The 500k scale diagnostics and the parity
+  * tools keep exercising the distributed machinery. */
 private[graft] object IncrDbscanLocal {
 
   def defaultThreshold: Long =
-    sys.props.get("graft.incrDbscan.localThreshold")
-      .orElse(sys.env.get("SPARK_GRAFT_INCR_LOCAL")).map(_.toLong)
+    sys.props.get("graft.incrDbscan.localThreshold").map(_.toLong)
       .getOrElse(20_000L)
-
-  def idVecShape(df: DataFrame): Boolean =
-    df.schema.fields.exists(f => f.name == "id" &&
-      f.dataType == LongType) &&
-    df.schema.fields.exists(f => f.name == "vec" && (f.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }))
-
-  private def parallelFor(total: Int)(body: Int => Unit): Unit = {
-    val threads = math.max(1, math.min(
-      Runtime.getRuntime.availableProcessors(), 16))
-    if (threads == 1 || total < 512) {
-      var j = 0; while (j < total) { body(j); j += 1 }
-    } else {
-      val next = new java.util.concurrent.atomic.AtomicInteger(0)
-      val firstError =
-        new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val chunk = 64
-      val pool = (0 until threads).map { _ =>
-        new Thread(() => {
-          try {
-            var start = next.getAndAdd(chunk)
-            while (start < total && firstError.get() == null) {
-              val end = math.min(start + chunk, total)
-              var j = start
-              while (j < end) { body(j); j += 1 }
-              start = next.getAndAdd(chunk)
-            }
-          } catch {
-            case t: Throwable => firstError.compareAndSet(null, t)
-          }
-        })
-      }
-      pool.foreach(_.start())
-      pool.foreach(_.join())
-      if (firstError.get() != null) throw firstError.get()
-    }
-  }
 
   /** All four state tables from one task over the tagged input
     * (0 = corpus point, 1 = removed id). Emits a tagged union row set:
     * 0 = point (id, vec), 1 = count (id, aux = n), 2 = coreComp
     * (id, aux = comp), 3 = borderPair (id, aux = core_id). */
   private[operators] def stateRows(rows: Iterator[Row], eps: Double,
-      minPts: Int): Iterator[Row] = {
+      minPts: Int, bucketDims: Array[Int]): Iterator[Row] = {
     val idsB = new scala.collection.mutable.ArrayBuffer[Long]
     val vecsB = new scala.collection.mutable.ArrayBuffer[Array[Float]]
     val rm = new java.util.HashSet[java.lang.Long]
@@ -99,125 +61,27 @@ private[graft] object IncrDbscanLocal {
     // apply the removal set (ids not present are ignored — the
     // removePoints contract)
     val keep = (0 until idsB.length).filter(i => !rm.contains(idsB(i)))
-    val n = keep.length
-    val ids = new Array[Long](n)
-    val vecs = new Array[Array[Float]](n)
-    var i = 0
-    while (i < n) { ids(i) = idsB(keep(i)); vecs(i) = vecsB(keep(i)); i += 1 }
-    // unique ids are the documented precondition (the distributed ε
-    // self-join keys on id and EXCLUDES a_id = b_id, so a duplicated id
-    // would silently change counts here instead of matching that path —
-    // fail loudly on the violation)
-    locally {
-      val sorted = ids.clone(); java.util.Arrays.sort(sorted)
-      var j = 1
-      while (j < n) {
-        require(sorted(j) != sorted(j - 1),
-          s"incremental-DBSCAN fused path requires unique point ids, " +
-            s"got duplicate ${sorted(j)}")
-        j += 1
+    val ids = keep.map(idsB(_)).toArray
+    val vecs = keep.map(vecsB(_)).toArray
+    val kern = new LocalDbscan(ids, vecs, eps, minPts, bucketDims)
+    val n = kern.n
+    // border pairs: every (non-core, core) ε-pair
+    val borders = new Array[Array[Long]](n)
+    InTask.parallelFor(n) { p =>
+      if (!kern.isCore(p)) {
+        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+        kern.forEachCoreNeighbor(p)(q => buf += ids(q))
+        borders(p) = buf.result()
       }
-    }
-    val eps2 = eps * eps
-    // exact ε-predicate: the distributed kernel's left-to-right double
-    // fold over float-widened elements (Dbscan.localLabels.within)
-    def within(a: Array[Float], b: Array[Float]): Boolean = {
-      val m = math.min(a.length, b.length)
-      var acc = 0.0
-      var j = 0
-      while (j < m) {
-        val d = a(j).toDouble - b(j).toDouble
-        acc += d * d
-        j += 1
-      }
-      acc <= eps2
-    }
-    // pass A: neighbor counts (excluding self)
-    val counts = new Array[Int](n)
-    parallelFor(n) { a =>
-      var c = 0
-      var b = 0
-      while (b < n) {
-        if (b != a && within(vecs(a), vecs(b))) c += 1
-        b += 1
-      }
-      counts(a) = c
-    }
-    val isCore = new Array[Boolean](n)
-    i = 0
-    while (i < n) {
-      isCore(i) = minPts <= 1 || counts(i) + 1L >= minPts.toLong
-      i += 1
-    }
-    // pass B: core-core union-find (min-id components) + border pairs.
-    // Neighbor relations are symmetric, so scanning a's full row is
-    // enough for both outputs.
-    val parent = new java.util.concurrent.atomic.AtomicIntegerArray(n)
-    i = 0
-    while (i < n) { parent.set(i, i); i += 1 }
-    def find(x0: Int): Int = {
-      var x = x0
-      var p = parent.get(x)
-      while (p != x) {
-        val gp = parent.get(p)
-        parent.compareAndSet(x, p, gp) // path halving
-        x = gp
-        p = parent.get(x)
-      }
-      x
-    }
-    def union(a: Int, b: Int): Unit = {
-      var done = false
-      while (!done) {
-        val ra = find(a); val rb = find(b)
-        if (ra == rb) done = true
-        // canonical direction: larger root points at smaller (ids are
-        // sorted by index order? no — use index of smaller ID)
-        else {
-          val (hi, lo) =
-            if (ids(ra) > ids(rb)) (ra, rb) else (rb, ra)
-          done = parent.compareAndSet(hi, hi, lo)
-        }
-      }
-    }
-    val borderBufs = new Array[scala.collection.mutable.ArrayBuffer[Long]](n)
-    parallelFor(n) { a =>
-      if (!isCore(a)) {
-        val buf = new scala.collection.mutable.ArrayBuffer[Long]
-        var b = 0
-        while (b < n) {
-          if (b != a && isCore(b) && within(vecs(a), vecs(b))) buf += ids(b)
-          b += 1
-        }
-        if (buf.nonEmpty) borderBufs(a) = buf
-      } else {
-        var b = a + 1
-        while (b < n) {
-          if (isCore(b) && within(vecs(a), vecs(b))) union(a, b)
-          b += 1
-        }
-      }
-    }
-    // min id per component root
-    val minId = new scala.collection.mutable.LongMap[Long]()
-    i = 0
-    while (i < n) {
-      if (isCore(i)) {
-        val r = find(i)
-        val cur = minId.getOrElse(r.toLong, Long.MaxValue)
-        if (ids(i) < cur) minId.update(r.toLong, ids(i))
-      }
-      i += 1
     }
     val out = new scala.collection.mutable.ArrayBuffer[Row](4 * n)
-    i = 0
+    var i = 0
     while (i < n) {
       out += Row(0, ids(i), null, vecs(i).toSeq)
-      if (counts(i) >= 1) out += Row(1, ids(i), counts(i).toLong, null)
-      if (isCore(i))
-        out += Row(2, ids(i), minId(find(i).toLong), null)
-      else if (borderBufs(i) != null)
-        borderBufs(i).foreach(c => out += Row(3, ids(i), c, null))
+      if (kern.counts(i) >= 1)
+        out += Row(1, ids(i), kern.counts(i).toLong, null)
+      if (kern.isCore(i)) out += Row(2, ids(i), kern.comp(i), null)
+      else borders(i).foreach(c => out += Row(3, ids(i), c, null))
       i += 1
     }
     out.iterator
@@ -234,7 +98,9 @@ private[graft] object IncrDbscanLocal {
     * views over ONE localCheckpoint'd tagged row set (the task runs
     * once; the views are narrow). */
   def stateFused(pts: DataFrame, removeIds: Option[DataFrame],
-      eps: Double, minPts: Int): IncrementalDbscan.State = {
+      eps: Double, minPts: Int,
+      bucketDims: Seq[Int]): IncrementalDbscan.State = {
+    val dimsArr = bucketDims.toArray
     val spark = pts.sparkSession
     val nullAux = lit(null).cast("long")
     val nullVec = lit(null).cast("array<float>")
@@ -247,7 +113,8 @@ private[graft] object IncrDbscanLocal {
     }
     val rdd = in.coalesce(1).rdd.mapPartitions(it =>
       stateRows(it.map(r => Row(r.getInt(0), r.getLong(1), null,
-        if (r.isNullAt(3)) null else r.getSeq[Float](3))), eps, minPts))
+        if (r.isNullAt(3)) null else r.getSeq[Float](3))), eps, minPts,
+      dimsArr))
     val tagged = spark.createDataFrame(rdd, TaggedSchema).localCheckpoint()
     IncrementalDbscan.State(
       tagged.filter(col("tag") === 0).select(col("id"), col("vec")),

@@ -137,12 +137,13 @@ object IncrementalDbscan {
       eps: Double, minPts: Int, bucketDims: Seq[Int],
       localThreshold: Long = IncrDbscanLocal.defaultThreshold): State = {
     val sel = points.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    if (localThreshold > 0 && IncrDbscanLocal.idVecShape(sel)) {
+    if (localThreshold > 0 && GraphAnnLocal.idVecShape(sel, "id", "vec")) {
       val n = ConnectedComponents.withJobDesc(sel, "incr-dbscan: size probe") {
         sel.limit(Dbscan.probeCap(localThreshold)).count()
       }
       if (n <= localThreshold)
-        return IncrDbscanLocal.stateFused(sel, None, eps, minPts)
+        return IncrDbscanLocal.stateFused(sel, None, eps, minPts,
+          bucketDims)
     }
     val pts = sel.persist()
     val pairs = EpsilonJoin.selfJoin(pts, "id", "vec", eps, bucketDims)
@@ -176,8 +177,8 @@ object IncrementalDbscan {
       bucketDims: Seq[Int],
       localThreshold: Long = IncrDbscanLocal.defaultThreshold): State = {
     val npSel = newPoints.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    if (localThreshold > 0 && IncrDbscanLocal.idVecShape(npSel) &&
-        IncrDbscanLocal.idVecShape(st.points.select("id", "vec"))) {
+    if (localThreshold > 0 && GraphAnnLocal.idVecShape(npSel, "id", "vec") &&
+        GraphAnnLocal.idVecShape(st.points, "id", "vec")) {
       val cap = Dbscan.probeCap(localThreshold)
       val total =
         ConnectedComponents.withJobDesc(npSel, "incr-dbscan: size probe") {
@@ -185,7 +186,8 @@ object IncrementalDbscan {
         }
       if (total <= localThreshold)
         return IncrDbscanLocal.stateFused(
-          st.points.select("id", "vec").unionAll(npSel), None, eps, minPts)
+          st.points.select("id", "vec").unionAll(npSel), None, eps, minPts,
+          bucketDims)
     }
     val np = npSel.persist()
     val oldPts = st.points
@@ -294,7 +296,7 @@ object IncrementalDbscan {
       eps: Double, minPts: Int, bucketDims: Seq[Int],
       localThreshold: Long = IncrDbscanLocal.defaultThreshold): State = {
     if (localThreshold > 0 &&
-        IncrDbscanLocal.idVecShape(st.points.select("id", "vec"))) {
+        GraphAnnLocal.idVecShape(st.points, "id", "vec")) {
       val n = ConnectedComponents.withJobDesc(st.points,
           "decr-dbscan: size probe") {
         st.points.limit(Dbscan.probeCap(localThreshold)).count()
@@ -304,7 +306,8 @@ object IncrementalDbscan {
         // the contract below); the rebuilt state is bit-identical to
         // the incremental fold's — see IncrDbscanLocal
         return IncrDbscanLocal.stateFused(st.points.select("id", "vec"),
-          Some(removeIds.select(col(idCol).as("id"))), eps, minPts)
+          Some(removeIds.select(col(idCol).as("id"))), eps, minPts,
+          bucketDims)
     }
     val rm = removeIds.select(col(idCol).as("id")).distinct().persist()
     val gone = st.points.join(rm, "id").persist() // (id, vec) actually deleted

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.IncrementalDbscan
+import graft.operators.{EpsilonJoin, IncrDbscanLocal, IncrementalDbscan}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,48 +31,76 @@ class IncrementalDbscanLocalSpec extends SparkSpec {
     assert(tbl(a.borderPairs) == tbl(b.borderPairs), "borderPairs differ")
   }
 
+  /** One fused == distributed input: a table, its columns, the
+    * clustering parameters and the ε-grid dims. */
+  private case class Input(name: String, df: DataFrame, idCol: String,
+      vecCol: String, eps: Double, minPts: Int, dims: Seq[Int])
+
+  // the embeddings take the brute-force scan (no bucket dims); the
+  // low-dimensional synthetic blobs take the kernel's ε-grid, the same
+  // cells as the distributed EpsilonJoin
+  private lazy val inputs: Seq[Input] = {
+    val synth = Workloads.synthPoints(spark, 3000, k = 4, dims = 3)
+      .persist()
+    val dims = EpsilonJoin.pickBucketDims(synth, "features", 1.0)
+    assert(dims.nonEmpty, "synth input must exercise the grid branch")
+    Seq(Input("embeddings, no bucket dims", emb, "vec_id", "embedding",
+      Eps, MinPts, Nil),
+      Input(s"synthPoints 3-d, bucket dims $dims", synth, "id", "features",
+        1.0, 5, dims))
+  }
+
   test("init: fused state == distributed state, all four tables") {
-    val fused = IncrementalDbscan.init(emb, "vec_id", "embedding",
-      Eps, MinPts, Nil)
-    val dist = IncrementalDbscan.init(emb, "vec_id", "embedding",
-      Eps, MinPts, Nil, localThreshold = 0L)
-    assertStateEqual(fused, dist)
-    assert(fused.counts.count() > 0, "degenerate fixture: no pairs")
+    inputs.foreach { in =>
+      val fused = IncrementalDbscan.init(in.df, in.idCol, in.vecCol,
+        in.eps, in.minPts, in.dims)
+      val dist = IncrementalDbscan.init(in.df, in.idCol, in.vecCol,
+        in.eps, in.minPts, in.dims, localThreshold = 0L)
+      withClue(in.name) {
+        assertStateEqual(fused, dist)
+        assert(fused.counts.count() > 0, "degenerate fixture: no pairs")
+        assert(fused.borderPairs.count() > 0, "degenerate fixture: no borders")
+      }
+    }
   }
 
   test("addPoints: fused fold == distributed fold") {
-    val old = emb.filter(col("vec_id") % 10 =!= 0)
-    val batch = emb.filter(col("vec_id") % 10 === 0)
-    val f = IncrementalDbscan.addPoints(
-      IncrementalDbscan.pin(IncrementalDbscan.init(old, "vec_id",
-        "embedding", Eps, MinPts, Nil)),
-      batch, "vec_id", "embedding", Eps, MinPts, Nil)
-    val d = IncrementalDbscan.addPoints(
-      IncrementalDbscan.pin(IncrementalDbscan.init(old, "vec_id",
-        "embedding", Eps, MinPts, Nil, localThreshold = 0L)),
-      batch, "vec_id", "embedding", Eps, MinPts, Nil,
-      localThreshold = 0L)
-    assertStateEqual(f, d)
-    // and labels downstream agree too (the user-facing contract)
-    assert(tbl(IncrementalDbscan.labels(f)) ==
-      tbl(IncrementalDbscan.labels(d)))
+    inputs.foreach { in =>
+      val old = in.df.filter(col(in.idCol) % 10 =!= 0)
+      val batch = in.df.filter(col(in.idCol) % 10 === 0)
+      def fold(threshold: Long) = IncrementalDbscan.addPoints(
+        IncrementalDbscan.pin(IncrementalDbscan.init(old, in.idCol,
+          in.vecCol, in.eps, in.minPts, in.dims, localThreshold = threshold)),
+        batch, in.idCol, in.vecCol, in.eps, in.minPts, in.dims,
+        localThreshold = threshold)
+      val f = fold(IncrDbscanLocal.defaultThreshold)
+      val d = fold(0L)
+      withClue(in.name) {
+        assertStateEqual(f, d)
+        // and labels downstream agree too (the user-facing contract)
+        assert(tbl(IncrementalDbscan.labels(f)) ==
+          tbl(IncrementalDbscan.labels(d)))
+      }
+    }
   }
 
   test("removePoints: fused fold == distributed fold (+ unknown ids)") {
-    val rm = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
-      .unionAll(spark.range(900000, 900005).select(
-        col("id").as("vec_id"))) // unknown ids must be ignored
-    val f = IncrementalDbscan.removePoints(
-      IncrementalDbscan.pin(IncrementalDbscan.init(emb, "vec_id",
-        "embedding", Eps, MinPts, Nil)),
-      rm, "vec_id", Eps, MinPts, Nil)
-    val d = IncrementalDbscan.removePoints(
-      IncrementalDbscan.pin(IncrementalDbscan.init(emb, "vec_id",
-        "embedding", Eps, MinPts, Nil, localThreshold = 0L)),
-      rm, "vec_id", Eps, MinPts, Nil, localThreshold = 0L)
-    assertStateEqual(f, d)
-    assert(tbl(IncrementalDbscan.labels(f)) ==
-      tbl(IncrementalDbscan.labels(d)))
+    inputs.foreach { in =>
+      val rm = in.df.filter(col(in.idCol) % 7 === 0).select(in.idCol)
+        .unionAll(spark.range(900000, 900005).select(
+          col("id").as(in.idCol))) // unknown ids must be ignored
+      def fold(threshold: Long) = IncrementalDbscan.removePoints(
+        IncrementalDbscan.pin(IncrementalDbscan.init(in.df, in.idCol,
+          in.vecCol, in.eps, in.minPts, in.dims, localThreshold = threshold)),
+        rm, in.idCol, in.eps, in.minPts, in.dims, localThreshold = threshold)
+      val f = fold(IncrDbscanLocal.defaultThreshold)
+      val d = fold(0L)
+      withClue(in.name) {
+        assertStateEqual(f, d)
+        assert(tbl(IncrementalDbscan.labels(f)) ==
+          tbl(IncrementalDbscan.labels(d)))
+      }
+    }
   }
 
   test("state round-trip through saveState/loadState stays fused-equal") {
