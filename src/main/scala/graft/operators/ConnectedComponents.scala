@@ -55,8 +55,11 @@ object ConnectedComponents extends Serializable {
     * afterwards (not null), so an application's `setJobDescription` isn't
     * wiped by pipeline-internal actions, and nesting is safe. */
   private[operators] def withJobDesc[T](df: DataFrame, desc: String)(
-      f: => T): T = {
-    val sc = df.sparkSession.sparkContext
+      f: => T): T =
+    withJobDesc(df.sparkSession.sparkContext, desc)(f)
+
+  private[operators] def withJobDesc[T](sc: org.apache.spark.SparkContext,
+      desc: String)(f: => T): T = {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try f finally sc.setJobDescription(prev)

@@ -1,17 +1,23 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
+import scala.collection.mutable
+
 /** Distributed DBSCAN over a point table `(id: long, features: array<float>)`
   * — the full capability of the reference engine
-  * (PDSDBSCAN-D, `mpi_main.cpp:47-197`), as a declarative Spark pipeline:
+  * (PDSDBSCAN-D, `mpi_main.cpp:47-197`), in the same shape:
   *
-  *   ε self-join (EpsilonJoin)           ≈ geometric partition + halo + kd-tree
-  *   groupBy(id).count ≥ minPts          ≈ core-point test (dbscan.cpp:720-743)
-  *   connected components on core edges  ≈ union-find merge (dbscan.cpp:744-1038)
-  *   border attach + dense labels        ≈ get_clusters_distributed (dbscan.cpp:125-506)
+  *   tile grid + 2ε ghost halo (DbscanTiles) ≈ geometric partition + halo
+  *   LocalDbscan per tile, one shuffle       ≈ local neighbor search, core test
+  *                                             and union-find (dbscan.cpp:720-788)
+  *   connected components on cross-tile
+  *     links only                            ≈ merge of cross-partition edges
+  *                                             (dbscan.cpp:847-1012)
+  *   border attach + dense labels            ≈ get_clusters_distributed (dbscan.cpp:125-506)
   *
   * Semantics preserved from the reference:
   *  - neighbor count INCLUDES the point itself and the core test is `>=`
@@ -24,18 +30,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *    the minimum component id among core neighbors, making output
   *    deterministic and partition-count invariant.
   *
-  * Everything below is shuffles + hash aggregates + the CC loop: no
-  * driver-side point data, no collect — scales with cluster size.
+  * No ε-pair is ever materialized: the shuffles move points to tiles
+  * and per-point facts to the merge; only overfull tile keys, and the
+  * contracted link graph when it fits CC's driver finish, reach the
+  * driver. Per-task memory is one tile, capped by halving overfull
+  * tiles down to the 4ε floor.
   */
 object Dbscan {
-
-  /** Core-id tables at or below this many rows take the broadcast merge
-    * shape; larger ones take the shared flagged-pair stream (see the
-    * dispatch comment in [[run]]). Specs pass a lower
-    * `run(coreBroadcastCap = …)` to force the non-broadcast branch on
-    * small fixtures — a parameter, not process-global state, so a
-    * failing spec can't leak the forced branch into later runs. */
-  val DefaultCoreBroadcastCap: Long = 1_000_000L
 
   /** Size-probe limit for the local fast path: `localThreshold + 1`,
     * clamped so a huge threshold (e.g. `Long.MaxValue` for "always
@@ -75,11 +76,9 @@ object Dbscan {
     * dims on ≤3-d data → the caller chose brute force, honor it.
     * All three produce the identical ordered pair set. */
   private def epsPairs(points: DataFrame, idCol: String, vecCol: String,
-      eps: Double, bucketDims: Seq[Int],
-      saltTable: Option[DataFrame] = None): DataFrame =
+      eps: Double, bucketDims: Seq[Int]): DataFrame =
     if (bucketDims.nonEmpty)
-      EpsilonJoin.selfJoinSalted(points, idCol, vecCol, eps, bucketDims,
-        saltTable)
+      EpsilonJoin.selfJoin(points, idCol, vecCol, eps, bucketDims)
     else if (EpsilonJoin.kdCompatible(points, idCol, vecCol)) {
       val dim = graft.functions.VectorOps.probeDim(points, vecCol)
         .getOrElse(0)
@@ -103,7 +102,8 @@ object Dbscan {
   }
 
   /** Full DBSCAN labels: (`id`, `cluster_id`), noise = 0, ids dense from 1
-    * ordered by the component's minimum point id.
+    * ordered by the component's minimum point id. Rows whose vector is
+    * null are noise.
     *
     * @param minClusterSize a "cluster" must have at least this many member
     *   points (cores + attached borders); smaller components are relabeled
@@ -112,18 +112,16 @@ object Dbscan {
     *   claimed by other clusters does NOT form a cluster of its own. */
   def run(points: DataFrame, idCol: String, vecCol: String,
       eps: Double, minPts: Int, bucketDims: Seq[Int],
-      minClusterSize: Int = 2, localThreshold: Long = 100_000L,
-      coreBroadcastCap: Long = DefaultCoreBroadcastCap): DataFrame = {
-    // the point table is scanned by both join sides and the final label
+      minClusterSize: Int = 2, localThreshold: Long = 100_000L): DataFrame = {
+    // the point table is scanned by the tile passes and the final label
     // join — cache it once (no-op if the caller already persisted it)
     val pts = points.persist()
 
-    // Small-input fast path: the distributed pipeline costs ~15 Spark jobs
-    // (join + agg + CC loop), each ~0.1-0.3 s of orchestration in local
-    // mode — the entire gap to the reference on its 61k-point benchmarks.
-    // Below the threshold, run the whole clustering in ONE task with
-    // the grid-indexed LocalDbscan kernel, which reproduces the distributed
-    // path's canonical labels exactly (same distance fold, same min-id
+    // Small-input fast path: even the tile pipeline costs ~10 Spark jobs,
+    // each ~0.1-0.3 s of orchestration in local mode. Below the
+    // threshold, run the whole clustering in ONE task with the
+    // grid-indexed LocalDbscan kernel — the same kernel every tile runs,
+    // with the same canonical labels (same distance fold, same min-id
     // component labels, same dense-id ordering). Size probe via
     // limit(threshold+1): stops scanning early on big inputs instead of
     // counting 100 TB to decide. k=0 (no bucket dims) means a brute-force
@@ -138,100 +136,190 @@ object Dbscan {
         return runLocal(pts, idCol, vecCol, eps, minPts, bucketDims,
           minClusterSize)
     }
-    // auto-salt: probe the cell histogram once and shard any ultra-dense
-    // ε-cell across salt shards (an AQE-unsplittable single hash group
-    // otherwise pins one reducer); None — the common case — adds nothing
-    // to the join plan. One linear aggregate job, distributed path only.
-    // epsPairs also routes no-dims high-d inputs to the kd-tree path.
-    val saltTable = EpsilonJoin.denseCellSalts(pts, vecCol, eps, bucketDims)
-    val pairs = epsPairs(pts, idCol, vecCol, eps, bucketDims, saltTable)
-      .select(col("a_id"), col("b_id"))
-      .persist()
+    runTiled(pts, idCol, vecCol, eps, minPts, bucketDims, minClusterSize)
+  }
 
-    // core test: |N_eps(p)| >= minPts, self included (dbscan.cpp:739).
-    // minPts <= 1: EVERY point is core (self-count alone suffices), but
-    // zero-neighbor points emit no pair rows and would be missed by the
-    // pair aggregate — short-circuit instead of paying a points-side
-    // left join on the normal path
-    val cores =
-      if (minPts <= 1) pts.select(col(idCol).as("id")).persist()
-      else pairs.groupBy("a_id").agg(count(lit(1)).as("n"))
-        .filter(col("n") + lit(1L) >= lit(minPts.toLong))
-        .select(col("a_id").as("id"))
-        .persist()
+  /** What a tile reports about one point: `(tag, id, local comp)`. */
+  private type Fact = (Byte, Long, Long)
+  // the first comp of an owned core or border / each further comp of an
+  // owned border / an owned noise point / a core seen by two tiles
+  private final val Member: Byte = 0
+  private final val Candidate: Byte = 1
+  private final val Noise: Byte = 2
+  private final val Link: Byte = 3
+  // row roles in a tile
+  private final val Ghost: Byte = 0
+  private final val Owner: Byte = 1
+  private final val OwnerGhostedElsewhere: Byte = 2
 
-    // Both downstream branches classify pair endpoints against `cores`:
-    // core-core edges need BOTH ends core, borders need b core + a not.
-    // The physical shape that wins depends on whether the core-id table
-    // broadcasts:
-    //  - cores fit a broadcast (≤1M ids ≈ tens of MB serialized): four
-    //    broadcast-hash joins — the pair stream never shuffles and needs
-    //    no second cache. This is every workload up to ~1M points.
-    //  - cores too big: classify each pair ONCE into a shared, persisted
-    //    `flagged` stream (2 shuffle joins) instead of paying 4 shuffle
-    //    joins of the pair stream (46.7M rows at the 5M diagnostic —
-    //    those joins are the merge phase's bill). The b-core inner join
-    //    runs first: pairs whose b is not core feed neither branch, so
-    //    dropping them early also shrinks the cached set.
-    // The size probe stops scanning at the cap (limit, not count) and
-    // warms the pairs/cores caches both branches read anyway.
-    val bcastCoreCap = coreBroadcastCap
-    val coresBroadcastable = ConnectedComponents.withJobDesc(cores,
-      "dbscan: core-table size probe") {
-      cores.limit(probeCap(bcastCoreCap)).count() <= bcastCoreCap
+  /** The distributed path, in PDSDBSCAN-D's shape: tile the space, run
+    * [[LocalDbscan]] once per tile over its owners and 2ε ghosts, and
+    * merge only what crosses a tile boundary.
+    *
+    * Why a 2ε halo is exact: an owner's ε-neighbors and their
+    * ε-neighbors all lie within 2ε of it, so every owner's core flag and
+    * every core flag within ε of the tile are exact. Ghosts further out
+    * can only lose neighbors, so every core the kernel reports is a real
+    * core and every union it makes is a real edge. Each core-core edge is
+    * unioned in its owner's tile, and a ghost core links its local comp
+    * here to its comp in its own tile. Local comps are min core ids, so
+    * connected components over those links alone, min-id again, give the
+    * global comp of every local comp, and the labels equal the fused
+    * path's whatever the tiling.
+    *
+    * @param tileWidth the base tile side; None sizes it from the ranges
+    *   pass that [[EpsilonJoin]]'s kd path runs, at least 4ε
+    * @param maxTileRows owners + ghosts a tile may hold before it is
+    *   halved (down to the 4ε floor) — the per-task memory bound */
+  private[graft] def runTiled(pts: DataFrame, idCol: String,
+      vecCol: String, eps: Double, minPts: Int, bucketDims: Seq[Int],
+      minClusterSize: Int, tileWidth: Option[Double] = None,
+      maxTileRows: Long = EpsilonJoin.DefaultMaxKdCellRows): DataFrame = {
+    val spark = pts.sparkSession
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    val cast = pts.select(col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<float>").as("v"))
+    val grid = EpsilonJoin.kdHeuristic(pts, vecCol, eps, 3, 4,
+        "dbscan: tile", bucketDims)
+      .map { case (dims, cell) => new DbscanTiles(dims.toArray,
+        tileWidth.getOrElse(math.max(4 * eps, cell)), eps) }
+    val labeledRows = grid match {
+      case None => spark.sparkContext.emptyRDD[Row] // no vector to cluster
+      case Some(base) =>
+        val rows = cast.filter(col("id").isNotNull && col("v").isNotNull)
+          .rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        val tiles = DbscanTiles.fit(rows, base, maxTileRows, partitions)
+        val facts = tileFacts(rows, tiles, eps, minPts, partitions).persist()
+
+        val links = facts.filter(_._1 == Link).map(f => Row(f._2, f._3))
+        val global = ConnectedComponents.run(spark.createDataFrame(links,
+            StructType(Seq(StructField("src", LongType, nullable = false),
+              StructField("dst", LongType, nullable = false)))))
+          .rdd.map(r => (r.getLong(0), r.getLong(1)))
+        // per owned point: (clustered, comp, owned copies); a border
+        // takes the min global comp over its candidates
+        val clustered = facts
+          .filter(f => f._1 == Member || f._1 == Candidate)
+          .map(f => (f._3, (f._2, if (f._1 == Member) 1 else 0)))
+          .leftOuterJoin(global, partitions)
+          .map { case (local, ((id, copies), g)) =>
+            (id, (true, g.getOrElse(local), copies)) }
+        val noise = facts.filter(_._1 == Noise)
+          .map(f => (f._2, (false, 0L, 1)))
+        clustered.union(noise)
+          .reduceByKey((a, b) => (a._1 || b._1,
+            if (!a._1) b._2 else if (!b._1) a._2 else math.min(a._2, b._2),
+            a._3 + b._3), partitions)
+          .map { case (id, (isClustered, comp, copies)) =>
+            // copies in one tile already failed in the kernel; this
+            // catches copies that no single tile holds
+            require(copies == 1,
+              s"distributed DBSCAN requires unique point ids, got duplicate $id")
+            Row(id, if (isClustered) comp else null)
+          }
     }
-    val (coreCoreEdges, borderCand) =
-      if (coresBroadcastable) (
-        pairs
-          .join(broadcast(cores.withColumnRenamed("id", "a_id")), "a_id")
-          .join(broadcast(cores.withColumnRenamed("id", "b_id")), "b_id")
-          .select(col("a_id").as("src"), col("b_id").as("dst")),
-        pairs
-          .join(broadcast(cores.withColumnRenamed("id", "b_id")), "b_id")
-          .join(broadcast(cores.withColumnRenamed("id", "a_id")),
-            Seq("a_id"), "left_anti"))
-      else {
-        val flagged = pairs
-          .join(cores.withColumnRenamed("id", "b_id"), "b_id") // b is core
-          .join(cores.withColumnRenamed("id", "a_id")
-            .withColumn("a_core", lit(true)), Seq("a_id"), "left")
-          .persist()
-        (flagged.filter(col("a_core"))
-          .select(col("a_id").as("src"), col("b_id").as("dst")),
-          flagged.filter(col("a_core").isNull))
-      }
 
-    // (+ self loops so isolated cores form singletons)
-    val coreEdges = coreCoreEdges
-      .union(cores.select(col("id").as("src"), col("id").as("dst")))
-
-    val coreComp = ConnectedComponents.run(coreEdges) // (id, comp)
-
-    // border points: non-core, within eps of >=1 core -> min core comp
-    val borderComp = borderCand
-      .join(coreComp.withColumnRenamed("id", "b_id"), "b_id")
-      .groupBy(col("a_id").as("id"))
-      .agg(min("comp").as("comp"))
-
-    // (id, comp) for clustered points — consumed by BOTH the dense-id
-    // distinct agg and the final label join: persist to compute once
-    val labeled = coreComp.union(borderComp).persist()
+    // (id, comp) for every clustered point, comp null for noise — one row
+    // per point, so the labels need no join back to the point table.
+    // Consumed by BOTH the dense-id agg and the label join: persist.
+    val labeled = spark.createDataFrame(labeledRows, StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("comp", LongType, nullable = true))))
+      .persist()
 
     // dense cluster ids 1..K ordered by comp (distinct comps only, then
     // broadcast back); components below minClusterSize are dropped ->
     // their points fall back to noise
-    val compIds = denseCompIds(labeled, minClusterSize)
-    val withIds = labeled.join(broadcast(compIds), "comp")
-      .select(col("id"), col("cluster_id"))
+    val compIds = denseCompIds(labeled.filter(col("comp").isNotNull),
+      minClusterSize)
 
     // Lazy result: the caller's first action executes one unified DAG over
-    // the cached intermediates (pairs/cores/pts stay persisted — Spark's
+    // the cached intermediates (facts/labeled/pts stay persisted — Spark's
     // ContextCleaner unpersists them once the label plan is unreachable).
     // Callers that iterate over the labels repeatedly should persist().
-    pts.select(col(idCol).as("id"))
-      .join(withIds, Seq("id"), "left")
+    // Rows the tiles never saw (null id or vector) are noise too.
+    labeled.join(broadcast(compIds), Seq("comp"), "left")
       .select(col("id"),
         coalesce(col("cluster_id"), lit(0)).as("cluster_id")) // noise = 0
+      .union(cast.filter(col("id").isNull || col("v").isNull)
+        .select(col("id"), lit(0).as("cluster_id")))
+  }
+
+  /** Route every point to its home tile and its ghost tiles, group each
+    * tile's rows with one sorted shuffle (a task holds one tile at a
+    * time) and run the kernel per tile. Each tile with an owner emits:
+    *  - for each owned point its comps: its own for a core, the distinct
+    *    comps of its core neighbors for a border (`Member` for the first,
+    *    `Candidate` for the rest), or `Noise` when there are none;
+    *  - `Link (x, comp)` for each core that is a ghost here or in another
+    *    tile, when `x` is not its own comp. A ghost core links only comps
+    *    an owned fact uses; no other comp can reach a label. */
+  private def tileFacts(rows: RDD[(Long, Array[Float])], tiles: DbscanTiles,
+      eps: Double, minPts: Int, partitions: Int): RDD[Fact] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    implicit val keyOrd: Ordering[Vector[Long]] = seqOrdering[Vector, Long]
+    val dims = tiles.dims
+    rows
+      .flatMap { case (id, v) =>
+        val (home, ghosts) = tiles.route(v)
+        val role = if (ghosts.isEmpty) Owner else OwnerGhostedElsewhere
+        Iterator.single((home, (role, id, v))) ++
+          ghosts.iterator.map(t => (t, (Ghost, id, v)))
+      }
+      .repartitionAndSortWithinPartitions(
+        new org.apache.spark.HashPartitioner(partitions))
+      .mapPartitions { it =>
+        val buf = it.buffered
+        Iterator.unfold(buf) { b =>
+          if (!b.hasNext) None
+          else {
+            val key = b.head._1
+            val tile = mutable.ArrayBuffer.empty[(Byte, Long, Array[Float])]
+            while (b.hasNext && b.head._1 == key) tile += b.next()._2
+            Some((tile, b))
+          }
+        }.flatMap(tileKernel(_, eps, minPts, dims))
+      }
+  }
+
+  /** The facts of one tile (see [[tileFacts]]). */
+  private def tileKernel(rows: mutable.ArrayBuffer[(Byte, Long, Array[Float])],
+      eps: Double, minPts: Int, dims: Array[Int]): Iterator[Fact] = {
+    if (rows.forall(_._1 == Ghost)) return Iterator.empty
+    val ids = rows.map(_._2).toArray
+    val kern = new LocalDbscan(ids, rows.map(_._3).toArray, eps, minPts, dims)
+    val owned = (0 until kern.n).filter(rows(_)._1 != Ghost)
+    val comps = new Array[Array[Long]](kern.n)
+    InTask.parallelFor(owned.length) { i =>
+      val p = owned(i)
+      comps(p) =
+        if (kern.isCore(p)) Array(kern.comp(p))
+        else {
+          val seen = mutable.LongMap.empty[Unit]
+          kern.forEachCoreNeighbor(p)(q => seen(kern.comp(q)) = ())
+          seen.keys.toArray
+        }
+    }
+    val out = mutable.ArrayBuffer.empty[Fact]
+    val used = mutable.LongMap.empty[Unit]
+    owned.foreach { p =>
+      val id = ids(p)
+      if (comps(p).isEmpty) out += ((Noise, id, 0L))
+      comps(p).iterator.zipWithIndex.foreach { case (c, j) =>
+        used(c) = ()
+        out += ((if (j == 0) Member else Candidate, id, c))
+      }
+      if (rows(p)._1 == OwnerGhostedElsewhere && kern.isCore(p) &&
+          id != kern.comp(p)) out += ((Link, id, kern.comp(p)))
+    }
+    var p = 0
+    while (p < kern.n) {
+      val c = kern.comp(p)
+      if (rows(p)._1 == Ghost && kern.isCore(p) && ids(p) != c && used.contains(c))
+        out += ((Link, ids(p), c))
+      p += 1
+    }
+    out.iterator
   }
 
   /** One-task DBSCAN for small inputs: identical labels to the distributed
@@ -247,11 +335,14 @@ object Dbscan {
       .coalesce(1)
       .rdd
       .mapPartitions { it =>
-        val rows = it.map(r =>
-          (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
+        // a null vector has no neighbors: noise, like on the tile path
+        val (rows, nulls) = it.map(r => (r.getLong(0),
+            if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+          .toArray.partition(_._2 != null)
         localLabels(rows.map(_._1), rows.map(_._2), eps, minPts, dimsArr,
           minClusterSize)
-          .map { case (id, cid) => Row(id, cid) }
+          .map { case (id, cid) => Row(id, cid) } ++
+          nulls.iterator.map(r => Row(r._1, 0))
       }
     spark.createDataFrame(rdd, StructType(Seq(
       StructField("id", LongType, nullable = false),

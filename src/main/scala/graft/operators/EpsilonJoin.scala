@@ -32,8 +32,7 @@ import org.apache.spark.sql.functions._
   *  - AQE handles moderately skewed (dense) cells; pathological skew —
   *    one ultra-dense ε-cell that AQE cannot split because it is a single
   *    hash group — is auto-salted per cell: [[denseCellSalts]] probes the
-  *    cell histogram and [[selfJoinSalted]] shards ONLY the dense cells
-  *    (the distributed DBSCAN path does this by default).
+  *    cell histogram and [[selfJoinSalted]] shards ONLY the dense cells.
   */
 object EpsilonJoin {
 
@@ -206,8 +205,7 @@ object EpsilonJoin {
     *   post-shuffle files, not a single giant hash group). Default 1 —
     *   salting costs probe×saltBuckets replication, pay only on skew.
     *   For automatic, dense-cell-only salting use [[selfJoinSalted]]
-    *   with [[denseCellSalts]] (what [[graft.operators.Dbscan.run]]'s
-    *   distributed path does). */
+    *   with [[denseCellSalts]]. */
   def selfJoin(points: DataFrame, idCol: String, vecCol: String,
       eps: Double, bucketDims: Seq[Int], saltBuckets: Int = 1): DataFrame =
     selfJoinImpl(points, idCol, vecCol, eps, bucketDims, saltBuckets, None)
@@ -765,27 +763,32 @@ object EpsilonJoin {
     * the coarse-grid dims (widest spread first, ≤ `maxDims`, zero-range
     * dims dropped) and the cell size (grid yields ≈ `cellsPerCore` ×
     * shuffle-parallelism cells, clamped ≥ ε so the ghost envelope stays
-    * ≤ 2–3 cells per dim). Returns None for an empty/all-null input;
-    * a degenerate input (every point identical along every dim) gets
-    * the one-cell fallback `(Seq(0), eps)`. */
-  private def kdHeuristic(df: DataFrame, vecCol: String, eps: Double,
-      maxDims: Int, cellsPerCore: Int, desc: String)
-      : Option[(Seq[Int], Double)] = {
+    * ≤ 2–3 cells per dim). `fixedDims`, when non-empty, are taken as
+    * the dims instead (the pass then only sizes the cells). Returns None
+    * for an empty/all-null input; a degenerate input (every point
+    * identical along every dim) gets the one-cell fallback
+    * `(Seq(0), eps)`. */
+  private[operators] def kdHeuristic(df: DataFrame, vecCol: String,
+      eps: Double, maxDims: Int, cellsPerCore: Int, desc: String,
+      fixedDims: Seq[Int] = Nil): Option[(Seq[Int], Double)] = {
     val spark = df.sparkSession
-    val dim = graft.functions.VectorOps.probeDim(df, vecCol).getOrElse(0)
-    if (dim == 0) return None
-    val aggs = (0 until dim).flatMap { d =>
+    val scanned =
+      if (fixedDims.nonEmpty) fixedDims
+      else 0 until graft.functions.VectorOps.probeDim(df, vecCol).getOrElse(0)
+    if (scanned.isEmpty) return None
+    val aggs = scanned.flatMap { d =>
       val c = element_at(col(vecCol), d + 1).cast("double")
       Seq(min(c).as(s"mn$d"), max(c).as(s"mx$d"))
     }
     val row = ConnectedComponents.withJobDesc(df, s"$desc: ranges") {
       df.agg(aggs.head, aggs.tail: _*).first()
     }
-    val ranges = (0 until dim)
-      .map(d => d -> (row.getDouble(2 * d + 1) - row.getDouble(2 * d)))
-      .sortBy { case (d, r) => (-r, d) }
-      .take(maxDims)
-      .filter(_._2 > 0)
+    if (row.isNullAt(0)) return None // every vector null
+    val spans = scanned.indices
+      .map(i => scanned(i) -> (row.getDouble(2 * i + 1) - row.getDouble(2 * i)))
+    val ranges =
+      if (fixedDims.nonEmpty) spans
+      else spans.sortBy { case (d, r) => (-r, d) }.take(maxDims).filter(_._2 > 0)
     if (ranges.isEmpty) return Some((Seq(0), eps))
     val dims = ranges.map(_._1)
     val targetCells =

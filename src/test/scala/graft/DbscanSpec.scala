@@ -94,26 +94,22 @@ class DbscanSpec extends SparkSpec {
     assert(st.getLong(3) == oracle.values.max)
   }
 
-  test("non-broadcast merge branch (cores > coreBroadcastCap) == broadcast " +
-      "branch labels") {
-    // The merge phase dispatches on core-table size: broadcast joins when
-    // the core ids fit a broadcast, a shared flagged-pair stream when not.
-    // No fixture has >1M cores, so force the flagged branch by dropping
-    // the cap to 0 and require bit-identical labels — the branch a 5M+
-    // point run takes must not be greened only by the broadcast twin.
-    val (_, _) = loadT4(2000)
+  test("tile pipeline: 4ε-floor tiles == one tile (forced geometries)") {
+    // The distributed path's labels must not depend on how the space is
+    // tiled. Force the two extremes on the same fixture — every point in
+    // one tile (no ghosts, no links) and 4ε-floor tiles (the most ghosts
+    // and cross-tile links) — and require bit-identical labels.
     val df = BinaryPoints.read(spark, T4).limit(2000).persist()
     val dims = EpsilonJoin.pickBucketDims(df, "features", 10.0)
-    val broadcastLabels = Dbscan.run(df, "id", "features", 10.0, 5, dims,
-      localThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val flaggedLabels = Dbscan.run(df, "id", "features", 10.0, 5, dims,
-      localThreshold = 0L, coreBroadcastCap = 0L)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(flaggedLabels == broadcastLabels,
-      "flagged-stream merge branch diverged from broadcast branch")
-    assert(broadcastLabels.values.exists(_ != 0),
-      "degenerate fixture: no clusters formed, branch comparison vacuous")
+    def labels(width: Double) =
+      Dbscan.runTiled(df, "id", "features", 10.0, 5, dims, 2, Some(width))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val oneTile = labels(Double.PositiveInfinity)
+    val floorTiles = labels(4 * 10.0)
+    assert(floorTiles == oneTile,
+      "4ε-floor tiling diverged from the one-tile run")
+    assert(oneTile.values.exists(_ != 0),
+      "degenerate fixture: no clusters formed, geometry comparison vacuous")
     df.unpersist()
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dbscan, EpsilonJoin}
+import graft.operators.{Dbscan, DbscanTiles, EpsilonJoin}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -110,6 +110,24 @@ class EpsilonSaltSpec extends SparkSpec {
         localThreshold = 0L)
       .orderBy("id").collect()
     assert(fused.toSeq == dist.toSeq)
+    pts.unpersist()
+  }
+
+  test("Dbscan tile path: a low row cap splits the skewed table's tiles, " +
+      "labels unchanged") {
+    val eps = 1.0
+    val pts = skewed(1500, 3, eps).persist()
+    val rows = pts.rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val tiles = DbscanTiles.fit(rows,
+      new DbscanTiles(Array(0, 1), 64 * eps, eps), 40L, 4)
+    assert(tiles.split.nonEmpty, "a 40-row cap must split 64ε tiles")
+    val fused = Dbscan.run(pts, "id", "features", eps, 3, Seq(0, 1),
+        localThreshold = 1_000_000L)
+      .orderBy("id").collect()
+    val split = Dbscan.runTiled(pts, "id", "features", eps, 3, Seq(0, 1), 2,
+        Some(64 * eps), 40L)
+      .orderBy("id").collect()
+    assert(fused.exists(_.getInt(1) > 0) && split.toSeq == fused.toSeq)
     pts.unpersist()
   }
 }

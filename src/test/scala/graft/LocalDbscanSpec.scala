@@ -4,10 +4,10 @@ import graft.operators.{Dbscan, InTask, IncrementalDbscan}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The shared in-task loop and the fused DBSCAN kernel's preconditions:
+/** The shared in-task loop and the DBSCAN kernel's preconditions:
   * `InTask.parallelFor` covers every index once and surfaces worker
-  * failures; both fused DBSCAN paths refuse duplicate ids and agree
-  * with the distributed pipeline on negative ids. */
+  * failures; both fused DBSCAN paths and the tile path refuse duplicate
+  * ids, label null vectors noise, and agree on negative ids. */
 class LocalDbscanSpec extends SparkSpec {
 
   private val Totals = Seq(0, 1, InTask.SerialCutoff - 1,
@@ -43,6 +43,11 @@ class LocalDbscanSpec extends SparkSpec {
     val paths: Seq[(String, DataFrame => Any)] = Seq(
       "Dbscan.run" ->
         (df => Dbscan.run(df, "id", "vec", 1.0, 2, Nil).collect()),
+      // the copies of id 2 are ~12ε apart: different tiles, no kernel
+      // sees both, so the merge has to catch them
+      "Dbscan.run, tile path" ->
+        (df => Dbscan.run(df, "id", "vec", 1.0, 2, Nil, localThreshold = 0L)
+          .collect()),
       "IncrementalDbscan.init" ->
         (df => IncrementalDbscan.init(df, "id", "vec", 1.0, 2, Nil)
           .coreComp.collect()))
@@ -50,6 +55,21 @@ class LocalDbscanSpec extends SparkSpec {
       val e = intercept[Exception](path(dup))
       assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
         c.getMessage.contains("unique point ids")), s"$name: $e")
+    }
+  }
+
+  test("a null vector is noise on the fused and the tile path") {
+    import spark.implicits._
+    val pts = Seq(1L -> Some(Seq(0f, 0f)), 2L -> None,
+      3L -> Some(Seq(0.5f, 0f)), 4L -> Some(Seq(0f, 0.5f)), 5L -> None,
+      6L -> Some(Seq(9f, 9f))).toDF("id", "vec")
+    val want = Map(1L -> 1, 2L -> 0, 3L -> 1, 4L -> 1, 5L -> 0, 6L -> 0)
+    Seq("fused" -> 100_000L, "tile path" -> 0L).foreach {
+      case (name, threshold) =>
+        val got = Dbscan.run(pts, "id", "vec", 1.0, 2, Seq(0, 1),
+            localThreshold = threshold)
+          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+        assert(got == want, name)
     }
   }
 
