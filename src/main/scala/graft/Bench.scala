@@ -120,14 +120,13 @@ object Bench {
       "curation_synth250k" -> ((s: SparkSession) =>
         Workloads.curationSynth(s, 250_000L)),
       // DECREMENTAL fold at scale: a LOCALIZED delete (2 whole blobs,
-      // ~8%) folded OUT of the standing 500k clustering — only those
-      // components re-solve. State bootstrap is cached across reps,
-      // so min-of-2 isolates fold + state re-pin + labels (~15 s;
-      // the one corpus-sized stage, the bipartite deleted×remaining
-      // ε-pass, profiles at ~2 s — the rest is the local-mode
-      // state-refresh floor; the from-scratch yardstick beside it is
-      // dbscan_synth500k, whose ε-SELF-join is the part that grows
-      // superlinearly with corpus density at 100 TB)
+      // ~8%) folded OUT of the standing 500k clustering — only the
+      // tiles within 2ε of the deleted blobs, and those of components
+      // that may split, re-run the kernel; every other state row
+      // stands. State bootstrap is cached across reps, so min-of-2
+      // isolates fold + state re-pin + labels; the from-scratch
+      // yardstick beside it is dbscan_synth500k, which re-runs every
+      // tile
       "dbscan_decr_synth500k" -> ((s: SparkSession) =>
         Workloads.dbscanDecrSynth(s, 500_000L, k = 25, dims = 5,
           eps = 1.0, minPts = 5)),

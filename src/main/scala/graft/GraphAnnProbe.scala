@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Graph-ANN serve-knob profiler (dev diagnostic, the DecrProfile
+/** Graph-ANN serve-knob profiler (dev diagnostic, the SubstrProfile
   * pattern): build the IVF-sharded k-NN graph ONCE over the synthetic
   * blob corpus, pin it, then sweep serve configurations — flat walks
   * across (ef, rounds, nEntries) and the layered serve — against the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** One-off phase profiler for the round-12 scale diagnostics — times
   * each internal stage of minhash_synth1m / ann_index_rt_synth1m /
   * kdeps_synth200k with the noop sink and labeled jobs (the
-  * SubstrProfile / DecrProfile pattern, guide §1.4/§1.5) so the
+  * SubstrProfile pattern, guide §1.4/§1.5) so the
   * expensive stage is measured, not guessed. Not part of the bench
   * surface. Mode is args(0): minhash | annrt | kdeps. */
 object ScaleProfile {

@@ -2853,9 +2853,9 @@ object SparkEntry {
     }),
 
     // Incremental DBSCAN: cluster 90% of the corpus, then fold the
-    // remaining batch in through the delta path (new×all ε-pairs,
-    // promotion re-query, contracted-component CC) — labels identical
-    // to the from-scratch q6 run, so it shares q6's oracle
+    // remaining batch in (only the tiles within 2ε of it re-solve) —
+    // labels identical to the from-scratch q6 run, so it shares q6's
+    // oracle
     "q164_incr_dbscan" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       // pin between folds: labels then plans on shallow checkpointed
@@ -3591,9 +3591,8 @@ object SparkEntry {
 
     // Decremental DBSCAN: the standing clustering retracts a 10%
     // delete batch (retention windows / GDPR erasure) — q164's dual.
-    // One bipartite deleted×remaining ε-pass finds the count
-    // decrements; only components that lost a core (deleted or
-    // demoted) re-solve and may split. Oracle: from-scratch DBSCAN
+    // The fold re-solves only the tiles within 2ε of a deleted point
+    // plus those of components that may split. Oracle: from-scratch DBSCAN
     // over the survivor set — label equality IS the contract
     "q231_decr_dbscan" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** One-off profiler for the anchored ExactSubstr diagnostic — times
   * each phase of `duplicatedSpansAnchored` on the substr_synth1m corpus
   * (1M docs / 60M tokens, 95% unique + 5% boilerplate) so the expensive
-  * stage is measured, not guessed (the DecrProfile pattern). Not part
-  * of the bench surface. */
+  * stage is measured, not guessed. Not part of the bench surface. */
 object SubstrProfile {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -66,17 +66,18 @@ object Workloads {
     * over `n` synthetic points, then fold a LOCALIZED delete batch OUT
     * and label — every point of 2 of the k planted blobs (~8% of the
     * corpus at k=25), the retention-window shape where expired data
-    * lives in specific regions, not sprinkled uniformly. Exactly those
-    * blobs' components re-solve; the other k−2 pass through untouched.
+    * lives in specific regions, not sprinkled uniformly. Only the tiles
+    * within 2ε of those blobs (and of components that may split)
+    * re-solve; the state rows of the other k−2 blobs pass through.
     * Interpreting the number: this measures init + fold;
     * `dbscan_synth500k` beside it measures a from-scratch run alone,
     * so (this − that) is the marginal cost of answering a localized
     * delete with the standing state, versus paying a whole second
     * recluster (the reference's only answer). The honest worst case is
-    * documented, not measured: a delete sprinkled across EVERY
-    * component re-solves everything — targeting is a property of the
-    * batch's locality, and from-scratch label equality holds either
-    * way (q231 oracles a uniform 10% delete). */
+    * documented, not measured: a delete sprinkled across EVERY tile
+    * re-solves everything — targeting is a property of the batch's
+    * locality, and from-scratch label equality holds either way (q231
+    * oracles a uniform 10% delete). */
   def dbscanDecrSynth(spark: SparkSession, n: Long, k: Int, dims: Int,
       eps: Double, minPts: Int): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -147,10 +147,6 @@ object Dbscan {
   private final val Candidate: Byte = 1
   private final val Noise: Byte = 2
   private final val Link: Byte = 3
-  // row roles in a tile
-  private final val Ghost: Byte = 0
-  private final val Owner: Byte = 1
-  private final val OwnerGhostedElsewhere: Byte = 2
 
   /** The distributed path, in PDSDBSCAN-D's shape: tile the space, run
     * [[LocalDbscan]] once per tile over its owners and 2ε ghosts, and
@@ -179,15 +175,12 @@ object Dbscan {
     val partitions = spark.sessionState.conf.numShufflePartitions
     val cast = pts.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<float>").as("v"))
-    val grid = EpsilonJoin.kdHeuristic(pts, vecCol, eps, 3, 4,
-        "dbscan: tile", bucketDims)
-      .map { case (dims, cell) => new DbscanTiles(dims.toArray,
-        tileWidth.getOrElse(math.max(4 * eps, cell)), eps) }
+    val grid = DbscanTiles.base(pts, vecCol, eps, bucketDims, tileWidth,
+      "dbscan: tile")
     val labeledRows = grid match {
       case None => spark.sparkContext.emptyRDD[Row] // no vector to cluster
       case Some(base) =>
-        val rows = cast.filter(col("id").isNotNull && col("v").isNotNull)
-          .rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        val rows = DbscanTiles.points(cast, "id", "v")
         val tiles = DbscanTiles.fit(rows, base, maxTileRows, partitions)
         val facts = tileFacts(rows, tiles, eps, minPts, partitions).persist()
 
@@ -245,9 +238,8 @@ object Dbscan {
         .select(col("id"), lit(0).as("cluster_id")))
   }
 
-  /** Route every point to its home tile and its ghost tiles, group each
-    * tile's rows with one sorted shuffle (a task holds one tile at a
-    * time) and run the kernel per tile. Each tile with an owner emits:
+  /** Run the kernel once per tile of [[DbscanTiles.groups]]. Each tile
+    * with an owner emits:
     *  - for each owned point its comps: its own for a core, the distinct
     *    comps of its core neighbors for a border (`Member` for the first,
     *    `Candidate` for the rest), or `Noise` when there are none;
@@ -255,36 +247,14 @@ object Dbscan {
     *    tile, when `x` is not its own comp. A ghost core links only comps
     *    an owned fact uses; no other comp can reach a label. */
   private def tileFacts(rows: RDD[(Long, Array[Float])], tiles: DbscanTiles,
-      eps: Double, minPts: Int, partitions: Int): RDD[Fact] = {
-    import scala.math.Ordering.Implicits.seqOrdering
-    implicit val keyOrd: Ordering[Vector[Long]] = seqOrdering[Vector, Long]
-    val dims = tiles.dims
-    rows
-      .flatMap { case (id, v) =>
-        val (home, ghosts) = tiles.route(v)
-        val role = if (ghosts.isEmpty) Owner else OwnerGhostedElsewhere
-        Iterator.single((home, (role, id, v))) ++
-          ghosts.iterator.map(t => (t, (Ghost, id, v)))
-      }
-      .repartitionAndSortWithinPartitions(
-        new org.apache.spark.HashPartitioner(partitions))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        Iterator.unfold(buf) { b =>
-          if (!b.hasNext) None
-          else {
-            val key = b.head._1
-            val tile = mutable.ArrayBuffer.empty[(Byte, Long, Array[Float])]
-            while (b.hasNext && b.head._1 == key) tile += b.next()._2
-            Some((tile, b))
-          }
-        }.flatMap(tileKernel(_, eps, minPts, dims))
-      }
-  }
+      eps: Double, minPts: Int, partitions: Int): RDD[Fact] =
+    DbscanTiles.groups(rows, tiles, partitions, _ => true)
+      .flatMap(tileKernel(_, eps, minPts, tiles.dims))
 
   /** The facts of one tile (see [[tileFacts]]). */
-  private def tileKernel(rows: mutable.ArrayBuffer[(Byte, Long, Array[Float])],
+  private def tileKernel(rows: mutable.ArrayBuffer[DbscanTiles.TileRow],
       eps: Double, minPts: Int, dims: Array[Int]): Iterator[Fact] = {
+    import DbscanTiles.{Ghost, OwnerGhostedElsewhere}
     if (rows.forall(_._1 == Ghost)) return Iterator.empty
     val ids = rows.map(_._2).toArray
     val kern = new LocalDbscan(ids, rows.map(_._3).toArray, eps, minPts, dims)

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable
 
@@ -46,6 +48,12 @@ private[graft] final class DbscanTiles(val dims: Array[Int],
   def splitting(keys: Iterable[Vector[Long]]): DbscanTiles = {
     val more = keys.filter(canSplit)
     if (more.isEmpty) this else new DbscanTiles(dims, width, eps, split ++ more)
+  }
+
+  /** The leaf that owns a point. */
+  def home(v: Array[Float]): Vector[Long] = {
+    val x = dims.map(d => v(d).toDouble)
+    leaves(x, x).head
   }
 
   /** (home leaf, ghost leaves) of a point. */
@@ -99,6 +107,64 @@ private[graft] final class DbscanTiles(val dims: Array[Int],
 }
 
 private[graft] object DbscanTiles {
+
+  /** A row of one tile: (role, id, vector). */
+  type TileRow = (Byte, Long, Array[Float])
+  // row roles in a tile
+  final val Ghost: Byte = 0
+  final val Owner: Byte = 1
+  final val OwnerGhostedElsewhere: Byte = 2
+
+  /** The `(id, vector)` rows a tiling clusters: ids cast to long,
+    * vectors to float, rows with a null id or vector left out. */
+  def points(df: DataFrame, idCol: String,
+      vecCol: String): RDD[(Long, Array[Float])] =
+    df.select(col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<float>").as("v"))
+      .filter(col("id").isNotNull && col("v").isNotNull)
+      .rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
+  /** The base grid over `df`'s vectors: [[EpsilonJoin.kdHeuristic]]'s
+    * dims (`bucketDims` when given) and cell size for `cellsPerCore`
+    * cells per shuffle partition, with a tile side of at least 4ε.
+    * None when no vector is present. */
+  def base(df: DataFrame, vecCol: String, eps: Double,
+      bucketDims: Seq[Int], tileWidth: Option[Double],
+      desc: String, cellsPerCore: Int = 4): Option[DbscanTiles] =
+    EpsilonJoin.kdHeuristic(df, vecCol, eps, 3, cellsPerCore, desc, bucketDims)
+      .map { case (dims, cell) => new DbscanTiles(dims.toArray,
+        tileWidth.getOrElse(math.max(4 * eps, cell)), eps) }
+
+  /** Route every point to its home tile and its ghost tiles, keep the
+    * tiles `keep` accepts, and group each tile's rows with one sorted
+    * shuffle: a task holds one tile at a time. */
+  def groups(rows: RDD[(Long, Array[Float])], tiles: DbscanTiles,
+      partitions: Int,
+      keep: Vector[Long] => Boolean): RDD[mutable.ArrayBuffer[TileRow]] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    implicit val keyOrd: Ordering[Vector[Long]] = seqOrdering[Vector, Long]
+    rows
+      .flatMap { case (id, v) =>
+        val (home, ghosts) = tiles.route(v)
+        val role = if (ghosts.isEmpty) Owner else OwnerGhostedElsewhere
+        (Iterator.single((home, (role, id, v))) ++
+          ghosts.iterator.map(t => (t, (Ghost, id, v)))).filter(r => keep(r._1))
+      }
+      .repartitionAndSortWithinPartitions(
+        new org.apache.spark.HashPartitioner(partitions))
+      .mapPartitions { it =>
+        val buf = it.buffered
+        Iterator.unfold(buf) { b =>
+          if (!b.hasNext) None
+          else {
+            val key = b.head._1
+            val tile = mutable.ArrayBuffer.empty[TileRow]
+            while (b.hasNext && b.head._1 == key) tile += b.next()._2
+            Some((tile, b))
+          }
+        }
+      }
+  }
 
   /** Halve overfull leaves until every leaf holds at most `maxRows`
     * rows (owners + ghosts) or sits at the 4ε floor. One counting job

@@ -51,9 +51,8 @@ object EpsilonJoin {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], pairSchema)
 
   /** Every coarse cell the per-dim range [lo(j), hi(j)] touches (the
-    * ±ε ghost envelope, home cell included) — shared by the kd self-
-    * and bipartite shuffles. Lazy: nothing materializes beyond the
-    * recursion frame. */
+    * ±ε ghost envelope, home cell included) of the kd self-join
+    * shuffle. Lazy: nothing materializes beyond the recursion frame. */
   private def envelopeCells(lo: Array[Long], hi: Array[Long])
       : Iterator[List[Long]] = {
     val k = lo.length
@@ -581,184 +580,6 @@ object EpsilonJoin {
     * concurrent tasks fit comfortably in an executor heap. */
   val DefaultMaxKdCellRows: Int = 262144
 
-  /** Bipartite sibling of [[selfJoinKd]]: pairs (a ∈ left, b ∈ right)
-    * with ‖a − b‖² ≤ ε², both orientations emitted — the high-d path of
-    * [[join]]. The RIGHT (corpus) side lands in its home cell only and
-    * each cell builds a [[graft.functions.KdTree]] over it; the LEFT
-    * (probe/delta) side replicates to every cell its ±ε envelope
-    * touches and queries. b exists in exactly one cell and a's
-    * envelope covers it whenever the pair is within ε, so each pair
-    * meets exactly once. Id sets must be disjoint (the [[join]]
-    * contract). */
-  def joinKd(left: DataFrame, right: DataFrame, idCol: String,
-      vecCol: String, eps: Double, partitionDims: Seq[Int],
-      cellSize: Double,
-      maxCellRows: Int = DefaultMaxKdCellRows): DataFrame = {
-    require(partitionDims.nonEmpty, "joinKd needs >= 1 partition dim")
-    require(cellSize >= eps,
-      s"cellSize ($cellSize) must be >= eps ($eps)")
-    require(java.lang.Double.isFinite(eps) && eps > 0,
-      s"eps must be positive and finite, got $eps")
-    requireKdCompatible(left, idCol, vecCol, "joinKd")
-    requireKdCompatible(right, idCol, vecCol, "joinKd")
-    val spark = right.sparkSession
-    val k = partitionDims.size
-    val dimsArr = partitionDims.toArray
-    val epsL = eps
-    val csL = cellSize
-    val r2 = eps * eps
-    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-
-    def keyed(df: DataFrame, probe: Boolean) = {
-      val base = df.select(col(idCol).cast("long").as("id"),
-          col(vecCol).as("v"))
-        // null ids/vectors dropped — matches the grid path's predicate
-        // semantics (see selfJoinKd)
-        .filter(col("id").isNotNull && col("v").isNotNull)
-        .rdd
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      // the BUILD side is counted (dense probe) and then shuffled —
-      // pin its row set so both passes agree (see selfJoinKd); the
-      // probe side is evaluated once, no pinning needed
-      val pinned = if (probe) base else base.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      pinned
-        .flatMap { case (id, v) =>
-          if (!probe) {
-            val home = new Array[Long](k)
-            var j = 0
-            while (j < k) {
-              home(j) = math.floor(v(dimsArr(j)).toDouble / csL).toLong
-              j += 1
-            }
-            Iterator((home.toSeq, (id, v)))
-          } else {
-            val lo = new Array[Long](k)
-            val hi = new Array[Long](k)
-            var j = 0
-            while (j < k) {
-              val x = v(dimsArr(j)).toDouble
-              lo(j) = math.floor((x - epsL) / csL).toLong
-              hi(j) = math.floor((x + epsL) / csL).toLong
-              j += 1
-            }
-            envelopeCells(lo, hi).map(c => (c.toSeq: Seq[Long], (id, v)))
-          }
-        }
-    }
-    val part = new org.apache.spark.HashPartitioner(shufflePartitions)
-    val buildKeyed = keyed(right, probe = false)
-    val probeKeyed = keyed(left, probe = true)
-    // selfJoinKd's skew rule, bipartite: a BUILD cell past maxCellRows
-    // is salted into ⌈rows/cap⌉ tree groups and each probe touching the
-    // cell replicates per group (b's tree copy lives in one group, so
-    // each pair still meets exactly once); only overfull cells reach
-    // the driver. Normal inputs skip the salted path entirely — the
-    // cogroup stays, its per-cell build buffer bounded by the probe.
-    val dense: Map[Seq[Long], Int] = buildKeyed
-      .map(kv => (kv._1, 1L)).reduceByKey(_ + _)
-      .filter(_._2 > maxCellRows)
-      .map { case (c, n) =>
-        (c, math.ceil(n.toDouble / maxCellRows).toInt)
-      }
-      .collect().toMap
-    val pairs = if (dense.isEmpty) {
-      buildKeyed.cogroup(probeKeyed, part)
-        .mapPartitions { it =>
-          it.flatMap { case (_, (builds, probes)) =>
-            if (builds.isEmpty || probes.isEmpty) Iterator.empty
-            else {
-              val rows = builds.toArray
-              val tree = new graft.functions.KdTree(rows.map(_._2))
-              probes.iterator.flatMap { case (aId, aV) =>
-                val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-                tree.radiusQuery(aV, r2, (bi, d2) => {
-                  buf += Row(aId, rows(bi)._1, d2)
-                })
-                buf
-              }
-            }
-          }
-        }
-    } else {
-      val denseB = spark.sparkContext.broadcast(dense)
-      val routed = buildKeyed.map { case (cell, rec) =>
-        val g = denseB.value.get(cell).map(s => (java.lang.Long
-          .hashCode(rec._1 * 0x9E3779B97F4A7C15L) & 0x7fffffff) % s)
-          .getOrElse(0)
-        ((cell, g, 0), rec)
-      } ++ probeKeyed.flatMap { case (cell, rec) =>
-        denseB.value.get(cell) match {
-          case None => Iterator(((cell, 0, 1), rec))
-          case Some(s) => (0 until s).iterator.map(g => ((cell, g, 1), rec))
-        }
-      }
-      import scala.math.Ordering.Implicits.seqOrdering
-      implicit val keyOrd: Ordering[(Seq[Long], Int, Int)] =
-        Ordering.Tuple3(seqOrdering[Seq, Long], Ordering.Int, Ordering.Int)
-      val partitioner = new org.apache.spark.Partitioner {
-        override def numPartitions: Int = shufflePartitions
-        override def getPartition(key: Any): Int = {
-          val (cell, g, _) = key.asInstanceOf[(Seq[Long], Int, Int)]
-          (((cell, g).hashCode() % numPartitions) + numPartitions) %
-            numPartitions
-        }
-      }
-      routed.repartitionAndSortWithinPartitions(partitioner)
-        .mapPartitions { it =>
-          val buf = it.buffered
-          new Iterator[Row] {
-            private var out: Iterator[Row] = Iterator.empty
-            private def startGroup(): Unit = {
-              val (cell, g, _) = buf.head._1
-              def sameGroup: Boolean = buf.hasNext && {
-                val (c2, g2, _) = buf.head._1; c2 == cell && g2 == g
-              }
-              val rows =
-                scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-              while (sameGroup && buf.head._1._3 == 0) rows += buf.next()._2
-              // !sameGroup after the build prefix = zero probes touched
-              // this group — skip the O(m log m) tree build, like the
-              // cogroup branch's probes.isEmpty check (most corpus
-              // cells are probe-less when the delta side is small)
-              if (rows.isEmpty || !sameGroup) { while (sameGroup) buf.next() }
-              else {
-                val tree = new graft.functions.KdTree(rows.map(_._2).toArray)
-                out = new Iterator[Row] {
-                  private var cur: Iterator[Row] = Iterator.empty
-                  override def hasNext: Boolean = {
-                    while (!cur.hasNext && sameGroup) {
-                      val (aId, aV) = buf.next()._2
-                      val hits =
-                        scala.collection.mutable.ArrayBuffer.empty[Row]
-                      tree.radiusQuery(aV, r2, (bi, d2) => {
-                        hits += Row(aId, rows(bi)._1, d2)
-                      })
-                      cur = hits.iterator
-                    }
-                    cur.hasNext
-                  }
-                  override def next(): Row = { hasNext; cur.next() }
-                }
-              }
-            }
-            override def hasNext: Boolean = {
-              while (!out.hasNext && buf.hasNext) startGroup()
-              out.hasNext
-            }
-            override def next(): Row = { hasNext; out.next() }
-          }
-        }
-    }
-    val undirected = spark.createDataFrame(pairs, pairSchema)
-    undirected.select(explode(array(
-        struct(col("a_id"), col("b_id"), col("d2")),
-        struct(col("b_id").as("a_id"), col("a_id").as("b_id"), col("d2"))))
-      .as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
-        col("p.d2").as("d2"))
-  }
-
   /** Shared kd partition heuristic: one aggregate pass over `df` picks
     * the coarse-grid dims (widest spread first, ≤ `maxDims`, zero-range
     * dims dropped) and the cell size (grid yields ≈ `cellsPerCore` ×
@@ -798,20 +619,6 @@ object EpsilonJoin {
       math.max(eps, math.pow(volume / targetCells, 1.0 / dims.size))))
   }
 
-  /** [[joinKd]] with the [[kdHeuristic]] dim/cell-size choice (probed
-    * over the RIGHT side — the standing corpus, which also builds the
-    * trees). */
-  def joinKdAuto(left: DataFrame, right: DataFrame, idCol: String,
-      vecCol: String, eps: Double, maxDims: Int = 3,
-      cellsPerCore: Int = 4): DataFrame =
-    kdHeuristic(right, vecCol, eps, maxDims, cellsPerCore, "joinKdAuto")
-      match {
-      case None => // empty/all-null corpus: no pairs, pair-frame schema
-        emptyPairs(right.sparkSession)
-      case Some((dims, cellSize)) =>
-        joinKd(left, right, idCol, vecCol, eps, dims, cellSize)
-    }
-
   /** [[selfJoinKd]] with the automatic [[kdHeuristic]] partition-dim
     * and cell-size choice. */
   def selfJoinKdAuto(points: DataFrame, idCol: String, vecCol: String,
@@ -824,57 +631,4 @@ object EpsilonJoin {
       case Some((dims, cellSize)) =>
         selfJoinKd(points, idCol, vecCol, eps, dims, cellSize, distEvals)
     }
-
-  /** Bipartite ε-join: all pairs (a ∈ left, b ∈ right) with
-    * ‖a − b‖² ≤ ε², BOTH orientations emitted — the delta query of
-    * [[IncrementalDbscan]] (new batch × standing corpus) and the
-    * general "probe a point set against an indexed corpus" shape.
-    * The two tables must have disjoint id sets (an id present in both
-    * would emit its self-pair — callers own that invariant).
-    *
-    * Scale shape: the LEFT (probe/delta) side replicates across the
-    * full 3^k neighbor-cell offsets and equi-joins the right side's
-    * home cells — each unordered pair meets exactly once, no dedup
-    * shuffle. Put the smaller batch on the left: replication cost is
-    * 3^k·|left|, the right side never copies. k = 0 degenerates to a
-    * nested-loop scan (repartitioned so it parallelizes). */
-  def join(left: DataFrame, right: DataFrame, idCol: String,
-      vecCol: String, eps: Double, bucketDims: Seq[Int]): DataFrame = {
-    val k = bucketDims.size
-    // high-d routing, as in the self-join: no grid dims on >3-d data
-    // means the caller couldn't bucket — the kd path replaces the
-    // quadratic nested-loop probe (identical pair set). Only when the
-    // kd physical contract holds (integral ids, float vectors);
-    // otherwise the brute path below is correct for any schema.
-    if (k == 0 && kdCompatible(left, idCol, vecCol) &&
-        kdCompatible(right, idCol, vecCol)) {
-      val dim = graft.functions.VectorOps.probeDim(right, vecCol)
-        .getOrElse(0)
-      if (dim > 3) return joinKdAuto(left, right, idCol, vecCol, eps)
-    }
-    val cell: Column => Column = VectorOps.cellId(_, eps, bucketDims)
-    val build = right.select(
-      col(idCol).as("b_id"), col(vecCol).as("b_v"),
-      cell(col(vecCol)).as("cell"))
-    val probe0 = left.select(
-      col(idCol).as("a_id"), col(vecCol).as("a_v"),
-      cell(col(vecCol)).as("home"))
-    val probe =
-      if (k == 0) probe0.repartition(col("a_id"))
-        .withColumn("cell", col("home"))
-      else probe0
-        .withColumn("off", explode(typedlit(offsets(k))))
-        .withColumn("cell",
-          zip_with(col("home"), col("off"), (h, o) => h + o.cast("long")))
-    val undirected = probe.join(build, Seq("cell"))
-      .filter(VectorExpressions.withinEps(col("a_v"), col("b_v"), eps * eps))
-      .select(col("a_id"), col("b_id"),
-        VectorExpressions.squaredL2(col("a_v"), col("b_v")).as("d2"))
-    undirected.select(explode(array(
-        struct(col("a_id"), col("b_id"), col("d2")),
-        struct(col("b_id").as("a_id"), col("a_id").as("b_id"), col("d2"))))
-      .as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
-        col("p.d2").as("d2"))
-  }
 }

@@ -1,31 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Incremental DBSCAN — fold batches of NEW points into a standing
-  * clustering without ever re-joining the standing corpus against
-  * itself. The reference re-clusters from scratch on every run
+/** Incremental DBSCAN — fold batches of new points in, and batches of
+  * deleted points out, of a standing clustering without re-clustering
+  * the corpus. The reference re-clusters from scratch on every run
   * (`mpi_main.cpp:137-186` — read file, build kd-tree, full ε-graph);
   * this operator maintains the clustering as an updatable state, the
   * shape a 100 TB corpus that grows by daily batches actually needs.
   *
-  * Insertion-only DBSCAN is monotone: ε-neighbor counts only grow, so
-  * core points never demote — the delta work is exactly
-  *   1. the batch's ε-pairs: ONE bipartite pass new × (old ∪ new),
-  *      distinct-collapsed — never old × old;
-  *   2. counts merge; old points crossing minPts are PROMOTED cores,
-  *      and only their neighborhoods re-query the old corpus
-  *      (bipartite join(promoted × old) — a targeted second delta);
-  *   3. connected components over the DELTA core edges plus the
-  *      affected old components CONTRACTED to (id → comp) star edges —
-  *      untouched components pass through unchanged, and contraction
-  *      makes the CC loop O(1)-diameter regardless of cluster shape;
-  *   4. border re-attachment from the standing (border, core) pair
-  *      state plus the delta pairs.
+  * Every fold, [[init]] included, runs in [[Dbscan.run]]'s tile shape
+  * (PDSDBSCAN-D's geometric partition, ε-halo and boundary-only merge)
+  * but re-solves only the tiles the batch touches:
+  *   1. touched tiles: every tile whose box, grown by 2ε, holds an
+  *      added point or a removed point with an ε-neighbor; on a
+  *      removal, also the home tiles of every surviving core of a
+  *      component with a core in those tiles (such a component may
+  *      split);
+  *   2. the new corpus is routed to the touched tiles only, and the
+  *      shared state kernel ([[IncrDbscanLocal.stateFacts]]) reports
+  *      each owner's count, its local component or border pairs, and
+  *      links for ghost cores;
+  *   3. every other row of the standing state carries over: no changed
+  *      point lies within 2ε of its owner, so its count, core flag and
+  *      border pairs are unchanged;
+  *   4. connected components over the links, the touched cores' local
+  *      components and `(core → old component)` stars for components
+  *      that cannot split give the touched cores their components, and
+  *      map the old components of the untouched cores.
+  * No ε-pair is ever materialized.
   *
   * Labels from [[labels]] are IDENTICAL to a from-scratch
-  * [[Dbscan.run]] over the union (spec-enforced): same min-id
+  * [[Dbscan.run]] over the live corpus (spec-enforced): same min-id
   * components, same dense-id ordering, same minClusterSize/noise
   * rules.
   *
@@ -145,26 +153,7 @@ object IncrementalDbscan {
         return IncrDbscanLocal.stateFused(sel, None, eps, minPts,
           bucketDims)
     }
-    val pts = sel.persist()
-    val pairs = EpsilonJoin.selfJoin(pts, "id", "vec", eps, bucketDims)
-      .select(col("a_id"), col("b_id"))
-      .persist()
-    val counts = pairs.groupBy(col("a_id").as("id"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
-    val cores = coreIds(pts, counts, minPts).persist()
-    val coreEdges = pairs
-      .join(cores.withColumnRenamed("id", "a_id"), "a_id")
-      .join(cores.withColumnRenamed("id", "b_id"), "b_id")
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(cores.select(col("id").as("src"), col("id").as("dst")))
-    val comp = ConnectedComponents.run(coreEdges).persist()
-    val borders = pairs
-      .join(cores.withColumnRenamed("id", "b_id"), "b_id")
-      .join(cores.withColumnRenamed("id", "a_id"), Seq("a_id"), "left_anti")
-      .select(col("a_id").as("id"), col("b_id").as("core_id"))
-      .persist()
-    State(pts, counts, comp, borders)
+    fold(empty(sel.sparkSession), Some(sel), None, eps, minPts, bucketDims)
   }
 
   /** Fold one batch of new points in (ids must be fresh).
@@ -189,104 +178,15 @@ object IncrementalDbscan {
           st.points.select("id", "vec").unionAll(npSel), None, eps, minPts,
           bucketDims)
     }
-    val np = npSel.persist()
-    val oldPts = st.points
-    val allPts = st.points.union(np).persist()
-    // 1. delta ε-pairs in ONE bipartite pass: new × (old ∪ new), self
-    //    pairs filtered — the standing corpus never joins itself. The
-    //    join emits both orientations, so new↔old pairs land complete;
-    //    new↔new pairs are found from BOTH probe sides (each new point
-    //    probes) and collapse under distinct() back to the exact
-    //    selfJoin(new) ∪ join(new, old) ordered-pair set. One ε-join
-    //    subtree instead of two halves the fold's exchange count — the
-    //    dominant cost of a small fold is orchestration, not compute.
-    val delta = EpsilonJoin.join(np, allPts, "id", "vec", eps, bucketDims)
-      .filter(col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"))
-      .distinct()
-      .persist()
-    // 2. merged counts: union + one sum (missing = isolated = 0); both
-    //    inputs are strictly positive so the filter survives the merge
-    val counts = st.counts
-      .union(delta.groupBy(col("a_id").as("id"))
-        .agg(count(lit(1)).as("n")))
-      .groupBy("id").agg(sum("n").as("n"))
-      .persist()
-    val wasCore = coreIds(oldPts, st.counts, minPts)
-    val nowCore = coreIds(allPts, counts, minPts).persist()
-    val promoted = nowCore.join(oldPts.select("id"), "id")
-      .join(wasCore, Seq("id"), "left_anti")
-      .persist()
-    // 3. promoted cores re-query the old corpus for the old-old edges
-    //    the delta can't see (their new-side edges are already in delta)
-    // promoted ⊂ old, so the bipartite join sees overlapping id sets:
-    // drop the resulting self-pairs (promoted-promoted pairs ALSO meet
-    // twice — harmless: they land only in the CC edge multiset).
-    // Promotion is the RARE event in a sparse fold: one cheap probe
-    // prunes the whole re-query subtree (several exchanges) when no old
-    // point crossed minPts, instead of scheduling it over empty input.
-    val extra =
-      if (promoted.isEmpty) delta.limit(0)
-      else EpsilonJoin.join(promoted.join(oldPts, "id"), oldPts,
-          "id", "vec", eps, bucketDims)
-        .filter(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"))
-        .persist()
-    val deltaAll = delta.union(extra)
-    val coreA = nowCore.withColumnRenamed("id", "a_id")
-    val coreB = nowCore.withColumnRenamed("id", "b_id")
-    val deltaCoreEdges = deltaAll.join(coreA, "a_id").join(coreB, "b_id")
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .persist()
-    // 4. affected old components re-enter CC as contracted stars; the
-    //    rest pass through untouched. Fresh cores (new points +
-    //    promoted) get self-loops so isolated ones form singletons.
-    val touchedComps = st.coreComp
-      .join(deltaCoreEdges.select(col("src").as("id")).distinct(), "id")
-      .select("comp").distinct()
-      .persist()
-    val contracted = st.coreComp
-      .join(broadcast(touchedComps), "comp")
-      .select(col("id").as("src"), col("comp").as("dst"))
-    val freshCores = np.select("id").join(nowCore, "id")
-      .union(promoted.select("id"))
-    val ccInput = contracted
-      .union(deltaCoreEdges)
-      .union(freshCores.select(col("id").as("src"), col("id").as("dst")))
-    val merged = ConnectedComponents.run(ccInput)
-    val comp = st.coreComp
-      .join(broadcast(touchedComps), Seq("comp"), "left_anti")
-      .select("id", "comp")
-      .union(merged)
-      .persist()
-    // 5. border state: promoted points stop being borders; delta pairs
-    //    (non-core → core) join in. delta/extra pair sets are disjoint
-    //    from the standing pairs (each needs a new or promoted endpoint)
-    val borders = st.borderPairs
-      .join(promoted, Seq("id"), "left_anti")
-      .union(deltaAll
-        .join(coreB, "b_id")
-        .join(coreA, Seq("a_id"), "left_anti")
-        .select(col("a_id").as("id"), col("b_id").as("core_id")))
-      .persist()
-    State(allPts, counts, comp, borders)
+    fold(st, Some(npSel), None, eps, minPts, bucketDims)
   }
 
   /** Fold one batch of DELETED points out of the standing clustering —
     * the decremental dual of [[addPoints]] (retention windows, GDPR
-    * erasure, corpus retractions). Deletion is anti-monotone: counts
-    * only DROP, so no point ever promotes — the delta work is
-    *   1. one bipartite ε-pass deleted × remaining (never
-    *      remaining × remaining) to find every count decrement;
-    *   2. merged counts; old cores falling below minPts are DEMOTED;
-    *   3. components touched by a deleted or demoted core may SPLIT,
-    *      so exactly those components re-solve: their surviving core
-    *      members re-derive their ε-subgraph (core-core edges never
-    *      cross components, so the targeted self-join is complete) and
-    *      re-enter CC; untouched components pass through unchanged;
-    *   4. border retraction (deleted borders, pairs into deleted or
-    *      demoted cores) plus re-attachment of the demoted points
-    *      themselves as borders of their surviving core neighbors.
+    * erasure, corpus retractions). A removal can demote cores and split
+    * components, so besides the tiles within 2ε of a deleted point the
+    * fold re-solves every tile that owns a surviving core of a
+    * component that may split (see the object doc).
     *
     * Labels afterwards are IDENTICAL to a from-scratch [[Dbscan.run]]
     * over the surviving corpus (spec-enforced; q231 folds a 10% delete
@@ -295,6 +195,7 @@ object IncrementalDbscan {
   def removePoints(st: State, removeIds: DataFrame, idCol: String,
       eps: Double, minPts: Int, bucketDims: Seq[Int],
       localThreshold: Long = IncrDbscanLocal.defaultThreshold): State = {
+    val rm = removeIds.select(col(idCol).as("id"))
     if (localThreshold > 0 &&
         GraphAnnLocal.idVecShape(st.points, "id", "vec")) {
       val n = ConnectedComponents.withJobDesc(st.points,
@@ -306,108 +207,165 @@ object IncrementalDbscan {
         // the contract below); the rebuilt state is bit-identical to
         // the incremental fold's — see IncrDbscanLocal
         return IncrDbscanLocal.stateFused(st.points.select("id", "vec"),
-          Some(removeIds.select(col(idCol).as("id"))), eps, minPts,
-          bucketDims)
+          Some(rm), eps, minPts, bucketDims)
     }
-    val rm = removeIds.select(col(idCol).as("id")).distinct().persist()
-    val gone = st.points.join(rm, "id").persist() // (id, vec) actually deleted
-    if (gone.isEmpty) return st
-    val remaining = st.points.join(rm, Seq("id"), "left_anti").persist()
-    // 1. every ε-pair with exactly one deleted endpoint; both
-    //    orientations arrive, so rows with a surviving a_id are the
-    //    complete per-survivor decrement multiset
-    val cut = EpsilonJoin.join(gone, remaining, "id", "vec", eps,
-        bucketDims)
-      .join(rm.withColumnRenamed("id", "a_id"), Seq("a_id"), "left_anti")
-      .select(col("a_id"), col("b_id"))
-      .persist()
-    // 2. merged counts: subtract the decrements, drop deleted rows and
-    //    rows reaching zero (missing = isolated = 0, the state contract)
-    val dec = cut.groupBy(col("a_id").as("id")).agg(count(lit(1)).as("d"))
-    val counts = st.counts
-      .join(rm, Seq("id"), "left_anti")
-      .join(dec, Seq("id"), "left")
-      .select(col("id"), (col("n") - coalesce(col("d"), lit(0L))).as("n"))
-      .filter(col("n") > 0)
-      .persist()
-    val nowCore = coreIds(remaining, counts, minPts).persist()
-    val demoted = coreIds(st.points, st.counts, minPts)
-      .join(rm, Seq("id"), "left_anti")
-      .join(nowCore, Seq("id"), "left_anti")
-      .persist()
-    // 3. a component is touched iff it lost a core (deletion) or a
-    //    member left the core graph (demotion); only those can split.
-    //    Deleted non-cores and pure border churn never reshape comps.
-    val touchedComps = st.coreComp
-      .join(gone.select("id").union(demoted.select("id")).distinct(), "id")
-      .select("comp").distinct()
-      .persist()
-    val (comp, demotedPairs) =
-      if (touchedComps.isEmpty) (st.coreComp, None)
-      else {
-        // ONE ε-self-join over the touched components' surviving
-        // still-core members PLUS their demoted points serves both
-        // rebuild needs: core-core pairs are the split-deciding edges
-        // (they never crossed component boundaries, so the member set
-        // is complete), and demoted×core pairs are the border
-        // re-attachments (a demoted core's still-core neighbors were
-        // connected to it pre-delete, hence live in its — touched —
-        // component). Nothing outside the touched neighborhood is
-        // scanned twice.
-        val members = st.coreComp.join(broadcast(touchedComps), "comp")
-          .join(nowCore, "id")
-          .join(remaining, "id")
-          .select("id", "vec")
-          .persist()
-        val scope = members
-          .unionByName(demoted.join(remaining, "id").select("id", "vec"))
-          .persist()
-        // wholesale-deleted components (every member gone or demoted)
-        // leave an empty scope: skip the ε-join subtree instead of
-        // scheduling its whole shuffle pipeline over empty input (the
-        // probe is one count on the already-needed cached scope)
-        val scopePairs =
-          (if (scope.isEmpty) scope.limit(0).select(col("id").as("a_id"),
-            col("id").as("b_id"))
-          else EpsilonJoin
-            .selfJoin(scope, "id", "vec", eps, bucketDims)
-            .select(col("a_id"), col("b_id")))
-          .persist()
-        val coreA = nowCore.withColumnRenamed("id", "a_id")
-        val coreB = nowCore.withColumnRenamed("id", "b_id")
-        val memberEdges = scopePairs
-          .join(coreA, "a_id").join(coreB, "b_id")
-          .select(col("a_id").as("src"), col("b_id").as("dst"))
-          .union(members.select(col("id").as("src"), col("id").as("dst")))
-        val newComp = st.coreComp
-          .join(broadcast(touchedComps), Seq("comp"), "left_anti")
-          .select("id", "comp")
-          .union(ConnectedComponents.run(memberEdges))
-          .persist()
-        val dp = scopePairs
-          .join(demoted.withColumnRenamed("id", "a_id"), "a_id")
-          .join(coreB, "b_id")
-          .select(col("a_id").as("id"), col("b_id").as("core_id"))
-        (newComp, Some(dp))
-      }
-    // 4. border state: deleted borders go; pairs into deleted or
-    //    demoted cores go; demoted points re-attach as borders of
-    //    their surviving core neighbors (from the same targeted
-    //    self-join — no second corpus-sized pass)
-    val keptPairs = st.borderPairs
-      .join(rm, Seq("id"), "left_anti")
-      .join(rm.withColumnRenamed("id", "core_id"), Seq("core_id"),
-        "left_anti")
-      .join(demoted.withColumnRenamed("id", "core_id"), Seq("core_id"),
-        "left_anti")
-      // using-column joins move the join key first — restore (id,
-      // core_id) or the positional union below swaps the fields
-      .select("id", "core_id")
-    val borders = demotedPairs match {
-      case Some(dp) => keptPairs.union(dp).persist()
-      case None => keptPairs.persist()
+    fold(st, None, Some(rm), eps, minPts, bucketDims)
+  }
+
+  /** The state with no points: [[init]] folds its corpus into it. */
+  private[graft] def empty(spark: SparkSession): State = {
+    def table(fields: (String, DataType)*) =
+      spark.createDataFrame(java.util.Collections.emptyList[Row],
+        StructType(fields.map { case (n, t) => StructField(n, t) }))
+    State(table("id" -> LongType, "vec" -> ArrayType(FloatType)),
+      table("id" -> LongType, "n" -> LongType),
+      table("id" -> LongType, "comp" -> LongType),
+      table("id" -> LongType, "core_id" -> LongType))
+  }
+
+  /** Base tiles per shuffle partition for the fold, 16× [[Dbscan.run]]'s
+    * 4: smaller tiles cost more ghosts but keep a localized batch from
+    * touching the whole corpus. On the 500k localized delete at
+    * local[4] (`dbscan_state_rt_synth500k`), fold + pin + labels took
+    * 21 s at 4, 16 s at 64 and 20 s at 512. */
+  private val FoldCellsPerCore = 64
+
+  /** The distributed fold: the state of the corpus `st.points` −
+    * `removedIds` + `added` (both `id`-keyed, `added` with `vec`),
+    * re-solving only the touched tiles (see the object doc). Distances
+    * fold in float, as in [[Dbscan.run]].
+    *
+    * Why the untouched rows stand: an owner outside the touched tiles
+    * has no changed point within 2ε, so its ε-neighbors and their core
+    * flags are unchanged, and so are its count, core flag and border
+    * pairs. Its component can still change: an add only merges
+    * components, and a component that may split on a removal has every
+    * surviving core in a touched tile. Each old component that cannot
+    * split and owns a core in a touched tile enters the merge as a star
+    * `(core → comp)`, so the cores it keeps outside the touched tiles
+    * take their old component mapped through the merge; one that owns
+    * none is a whole component of the new core graph and keeps its id.
+    *
+    * @param tileWidth the base tile side; None sizes it for
+    *   [[FoldCellsPerCore]] tiles per shuffle partition
+    * @param maxTileRows owners + ghosts a tile may hold before it is
+    *   halved (down to the 4ε floor) */
+  private[graft] def fold(st: State, added: Option[DataFrame],
+      removedIds: Option[DataFrame], eps: Double, minPts: Int,
+      bucketDims: Seq[Int], tileWidth: Option[Double] = None,
+      maxTileRows: Long = EpsilonJoin.DefaultMaxKdCellRows): State = {
+    val spark = st.points.sparkSession
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    added.foreach(requireFreshIds(st, _))
+    val rm = removedIds.map(_.select("id").distinct().persist())
+    val all = added.fold(st.points)(st.points.union(_))
+    val points = rm.fold(all)(all.join(_, Seq("id"), "left_anti")).persist()
+    // a removed point without an ε-neighbor changes no other point's
+    // row; it leaves only its own, a singleton core's when minPts <= 1
+    val unchanged = State(points, st.counts,
+      rm.fold(st.coreComp)(st.coreComp.join(_, Seq("id"), "left_anti")),
+      st.borderPairs)
+    val base = DbscanTiles.base(all, "vec", eps, bucketDims, tileWidth,
+        "incr-dbscan: tile", FoldCellsPerCore) match {
+      case None => return unchanged // no vector to cluster
+      case Some(b) => b
     }
-    State(remaining, counts, comp, borders)
+    val corpus = DbscanTiles.points(points, "id", "vec")
+    val tiles = DbscanTiles.fit(corpus, base, maxTileRows, partitions)
+    // 1. the tiles within 2ε of a changed point (an added point, or a
+    //    removed point with an ε-neighbor) ...
+    val changed = DbscanTiles.points((rm.map(r => st.points
+        .join(r.join(st.counts.select("id"), "id"), "id")) ++ added)
+      .reduce(_.union(_)), "id", "vec")
+    val near = ConnectedComponents.withJobDesc(spark.sparkContext,
+        "incr-dbscan: tile touched set") {
+      changed.flatMap { case (_, v) =>
+        val (home, ghosts) = tiles.route(v)
+        home +: ghosts
+      }.distinct(partitions).collect().toSet
+    }
+    if (near.isEmpty) return unchanged
+    // ... and on a removal the homes of every core of a component with
+    // a core owned near the change: such a component may split
+    val (touched, splitting) = rm match {
+      case None => (near, None)
+      case Some(_) =>
+        val comps = st.coreComp.join(st.points, "id")
+          .select(col("comp").cast("long"), col("vec").cast("array<float>"))
+          .filter(col("vec").isNotNull)
+          .rdd.map(r => (r.getLong(0), tiles.home(r.getSeq[Float](1).toArray)))
+          .aggregateByKey((false, Set.empty[Vector[Long]]), partitions)(
+            (acc, h) => (acc._1 || near(h), acc._2 + h),
+            (a, b) => (a._1 || b._1, a._2 ++ b._2))
+          .filter(_._2._1)
+          .persist()
+        val homes = ConnectedComponents.withJobDesc(spark.sparkContext,
+            "incr-dbscan: tile split candidates") {
+          comps.flatMap(_._2._2).distinct(partitions).collect()
+        }
+        (near ++ homes, Some(spark.createDataFrame(
+          comps.map(c => Row(c._1)),
+          StructType(Seq(StructField("comp", LongType, nullable = false))))))
+    }
+    // 2. re-solve the touched tiles over the new corpus
+    // eager: every consumer below reads the facts, and the merge's
+    // concurrent query stages would otherwise each run the kernels
+    val facts = ConnectedComponents.withJobDesc(spark.sparkContext,
+        "incr-dbscan: tile kernel") { spark.createDataFrame(
+        DbscanTiles.groups(corpus, tiles, partitions, touched).flatMap { t =>
+          val owned = t.map(_._1 != DbscanTiles.Ghost).toArray
+          if (!owned.contains(true)) Iterator.empty
+          else IncrDbscanLocal.stateFacts(t.map(_._2).toArray,
+            t.map(_._3).toArray, owned, eps, minPts, tiles.dims)
+        }.map(f => Row(f._1, f._2, f._3)),
+        StructType(Seq(StructField("tag", ByteType, nullable = false),
+          StructField("id", LongType, nullable = false),
+          StructField("aux", LongType, nullable = false))))
+      .localCheckpoint()
+    }
+    def tagged(tag: Byte, aux: String) =
+      facts.filter(col("tag") === tag).select(col("id"), col("aux").as(aux))
+    val owners = tagged(IncrDbscanLocal.Count, "n")
+    val cores = tagged(IncrDbscanLocal.Core, "comp")
+    // 3. rows of ids neither owned in a touched tile nor removed stand
+    val drop = rm.fold(owners.select("id"))(owners.select("id").union(_))
+    def kept(t: DataFrame) = t.join(drop, Seq("id"), "left_anti")
+    // 4. merge: links, touched cores → local comps, stars of the old
+    //    components that cannot split
+    val stars = splitting.fold(st.coreComp)(
+        st.coreComp.join(_, Seq("comp"), "left_anti"))
+      .join(cores.select("id"), "id")
+      .select(col("id").as("src"), col("comp").as("dst"))
+    val global = ConnectedComponents.run(
+        tagged(IncrDbscanLocal.Link, "dst").select(col("id").as("src"),
+          col("dst"))
+        .union(cores.select(col("id").as("src"), col("comp").as("dst")))
+        .union(stars))
+      .persist()
+    val comp = cores.select("id").join(global, "id")
+      .union(kept(st.coreComp)
+        .join(global.select(col("id").as("comp"), col("comp").as("g")),
+          Seq("comp"), "left")
+        .select(col("id"), coalesce(col("g"), col("comp")).as("comp")))
+    State(points,
+      owners.filter(col("n") > 0).union(kept(st.counts)),
+      comp,
+      tagged(IncrDbscanLocal.Border, "core_id").union(kept(st.borderPairs)))
+  }
+
+  /** The fused path's duplicate-id rule on the distributed fold: an
+    * added id must be new to the batch and to the state. */
+  private def requireFreshIds(st: State, added: DataFrame): Unit = {
+    val ids = added.select("id").filter(col("id").isNotNull)
+    val dup = ConnectedComponents.withJobDesc(added,
+        "incr-dbscan: tile id check") {
+      ids.groupBy("id").count().filter(col("count") > 1).select("id")
+        // the batch is the small side: let it build the semi join
+        .union(st.points.select("id").join(ids, Seq("id"), "left_semi"))
+        .limit(1).collect()
+    }
+    require(dup.isEmpty, "incremental DBSCAN requires unique point ids, " +
+      s"got duplicate ${dup.head.get(0)}")
   }
 
   /** Labels under [[Dbscan.run]]'s exact contract: (`id`,
@@ -430,13 +388,4 @@ object IncrementalDbscan {
       .select(col("id"),
         coalesce(col("cluster_id"), lit(0)).as("cluster_id"))
   }
-
-  /** Core rule shared with [[Dbscan.run]]: |N_ε(p)| + self ≥ minPts.
-    * minPts ≤ 1 ⇒ every point is core, including isolated ones that
-    * the pair-derived count table never saw. */
-  private def coreIds(pts: DataFrame, counts: DataFrame,
-      minPts: Int): DataFrame =
-    if (minPts <= 1) pts.select("id")
-    else counts.filter(col("n") + lit(1L) >= lit(minPts.toLong))
-      .select("id")
 }

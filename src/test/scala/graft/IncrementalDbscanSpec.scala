@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dbscan, IncrementalDbscan}
+import graft.operators.{Dbscan, IncrDbscanLocal, IncrementalDbscan}
 
 class IncrementalDbscanSpec extends SparkSpec {
 
@@ -10,20 +10,25 @@ class IncrementalDbscanSpec extends SparkSpec {
   private def labelsOf(d: org.apache.spark.sql.DataFrame) =
     d.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
+  /** Every scenario runs on the fused path (the default threshold) and
+    * on the distributed tile fold (threshold 0). */
+  private val Thresholds = Seq(IncrDbscanLocal.defaultThreshold, 0L)
+
   /** incremental over the given batches == from-scratch run on the union */
   private def checkEqual(batches: Seq[Seq[(Long, Seq[Float])]],
-      eps: Double, minPts: Int, dims: Seq[Int]): Unit = {
-    var st = IncrementalDbscan.init(df(batches.head), "id", "vec",
-      eps, minPts, dims)
-    batches.tail.foreach { b =>
-      st = IncrementalDbscan.addPoints(st, df(b), "id", "vec",
-        eps, minPts, dims)
+      eps: Double, minPts: Int, dims: Seq[Int]): Unit =
+    Thresholds.foreach { thr =>
+      var st = IncrementalDbscan.init(df(batches.head), "id", "vec",
+        eps, minPts, dims, thr)
+      batches.tail.foreach { b =>
+        st = IncrementalDbscan.addPoints(st, df(b), "id", "vec",
+          eps, minPts, dims, thr)
+      }
+      val got = labelsOf(IncrementalDbscan.labels(st))
+      val want = labelsOf(Dbscan.run(df(batches.flatten), "id", "vec",
+        eps, minPts, dims))
+      assert(got == want, s"localThreshold=$thr")
     }
-    val got = labelsOf(IncrementalDbscan.labels(st))
-    val want = labelsOf(Dbscan.run(df(batches.flatten), "id", "vec",
-      eps, minPts, dims))
-    assert(got == want)
-  }
 
   /** interleaved adds/removes == from-scratch run on the survivors.
     * Pins after init and after every fold — the DOCUMENTED usage
@@ -35,24 +40,68 @@ class IncrementalDbscanSpec extends SparkSpec {
       eps: Double, minPts: Int, dims: Seq[Int]): Unit = {
     val spark2 = spark
     import spark2.implicits._
-    var st = IncrementalDbscan.pin(IncrementalDbscan.init(df(init0),
-      "id", "vec", eps, minPts, dims))
+    Thresholds.foreach { thr =>
+      var st = IncrementalDbscan.pin(IncrementalDbscan.init(df(init0),
+        "id", "vec", eps, minPts, dims, thr))
+      var live = init0.toMap
+      ops.foreach {
+        case Left(batch) =>
+          st = IncrementalDbscan.pin(IncrementalDbscan.addPoints(st,
+            df(batch), "id", "vec", eps, minPts, dims, thr))
+          live ++= batch
+        case Right(ids) =>
+          st = IncrementalDbscan.pin(IncrementalDbscan.removePoints(st,
+            ids.toDF("id"), "id", eps, minPts, dims, thr))
+          live --= ids
+      }
+      val got = labelsOf(IncrementalDbscan.labels(st))
+      val want = labelsOf(Dbscan.run(df(live.toSeq), "id", "vec",
+        eps, minPts, dims))
+      assert(got == want, s"localThreshold=$thr")
+    }
+  }
+
+  private def table(d: org.apache.spark.sql.DataFrame): Seq[String] =
+    d.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** The distributed fold on forced tiles: every fold, the first from
+    * the empty state, runs with `tileWidth` and `maxTileRows`. The end
+    * state must equal the fused build over the live set table by table,
+    * and its labels a from-scratch run's. */
+  private def checkTiled(init0: Seq[(Long, Seq[Float])],
+      ops: Seq[Either[Seq[(Long, Seq[Float])], Seq[Long]]],
+      eps: Double, minPts: Int, dims: Seq[Int], tileWidth: Double,
+      maxTileRows: Long): Unit = {
+    val spark2 = spark
+    import spark2.implicits._
+    def fold(st: IncrementalDbscan.State,
+        added: Option[org.apache.spark.sql.DataFrame],
+        removed: Option[org.apache.spark.sql.DataFrame]) =
+      IncrementalDbscan.pin(IncrementalDbscan.fold(st, added, removed, eps,
+        minPts, dims, Some(tileWidth), maxTileRows))
+    var st = fold(IncrementalDbscan.empty(spark), Some(df(init0)), None)
     var live = init0.toMap
     ops.foreach {
-      case Left(batch) =>
-        st = IncrementalDbscan.pin(IncrementalDbscan.addPoints(st,
-          df(batch), "id", "vec", eps, minPts, dims))
-        live ++= batch
-      case Right(ids) =>
-        st = IncrementalDbscan.pin(IncrementalDbscan.removePoints(st,
-          ids.toDF("id"), "id", eps, minPts, dims))
-        live --= ids
+      case Left(batch) => st = fold(st, Some(df(batch)), None); live ++= batch
+      case Right(ids) => st = fold(st, None, Some(ids.toDF("id"))); live --= ids
     }
-    val got = labelsOf(IncrementalDbscan.labels(st))
-    val want = labelsOf(Dbscan.run(df(live.toSeq), "id", "vec",
-      eps, minPts, dims))
-    assert(got == want)
+    val want = IncrDbscanLocal.stateFused(df(live.toSeq), None, eps, minPts,
+      dims)
+    val clue = s"tileWidth=$tileWidth maxTileRows=$maxTileRows"
+    assert(table(st.points.select("id")) == table(want.points.select("id")),
+      clue)
+    assert(table(st.counts) == table(want.counts), clue)
+    assert(table(st.coreComp) == table(want.coreComp), clue)
+    assert(table(st.borderPairs) == table(want.borderPairs), clue)
+    assert(labelsOf(IncrementalDbscan.labels(st)) ==
+      labelsOf(Dbscan.run(df(live.toSeq), "id", "vec", eps, minPts, dims)),
+      clue)
   }
+
+  /** A chain along x, one point every 0.5, ids ascending with x. */
+  private def chain(from: Double, to: Double, firstId: Long) =
+    Iterator.iterate(from)(_ + 0.5).takeWhile(_ <= to + 1e-9).zipWithIndex
+      .map { case (x, i) => (firstId + i) -> Seq(x.toFloat) }.toSeq
 
   test("removePoints: deleting the bridge core SPLITS the component") {
     // two 4-point blobs joined by one bridge core: one cluster before,
@@ -65,13 +114,16 @@ class IncrementalDbscanSpec extends SparkSpec {
     val all = blobA ++ bridge ++ blobB
     val spark2 = spark
     import spark2.implicits._
-    var st = IncrementalDbscan.init(df(all), "id", "vec", 1.0, 3, Seq(0))
-    assert(labelsOf(IncrementalDbscan.labels(st)).values.toSet == Set(1))
-    st = IncrementalDbscan.removePoints(st, Seq(10L).toDF("id"), "id",
-      1.0, 3, Seq(0))
-    val got = labelsOf(IncrementalDbscan.labels(st))
-    assert(got.values.toSet == Set(1, 2), got)
-    assert(got(1L) != got(5L), "blobs must split apart")
+    Thresholds.foreach { thr =>
+      var st = IncrementalDbscan.init(df(all), "id", "vec", 1.0, 3, Seq(0),
+        thr)
+      assert(labelsOf(IncrementalDbscan.labels(st)).values.toSet == Set(1))
+      st = IncrementalDbscan.removePoints(st, Seq(10L).toDF("id"), "id",
+        1.0, 3, Seq(0), thr)
+      val got = labelsOf(IncrementalDbscan.labels(st))
+      assert(got.values.toSet == Set(1, 2), got)
+      assert(got(1L) != got(5L), "blobs must split apart")
+    }
     checkEqualOps(all, Seq(Right(Seq(10L))), 1.0, 3, Seq(0))
   }
 
@@ -81,14 +133,17 @@ class IncrementalDbscanSpec extends SparkSpec {
       4L -> Seq(1.5f))
     val spark2 = spark
     import spark2.implicits._
-    var st = IncrementalDbscan.init(df(pts), "id", "vec", 0.6, 3, Seq(0))
-    assert(labelsOf(IncrementalDbscan.labels(st)).values.toSet == Set(1))
-    // deleting 4 demotes 3 (neighbors drop to {2}); 3 stays a border
-    // of core 2; from-scratch equality via the shared checker
-    st = IncrementalDbscan.removePoints(st, Seq(4L).toDF("id"), "id",
-      0.6, 3, Seq(0))
-    val got = labelsOf(IncrementalDbscan.labels(st))
-    assert(got == Map(1L -> 1, 2L -> 1, 3L -> 1), got)
+    Thresholds.foreach { thr =>
+      var st = IncrementalDbscan.init(df(pts), "id", "vec", 0.6, 3, Seq(0),
+        thr)
+      assert(labelsOf(IncrementalDbscan.labels(st)).values.toSet == Set(1))
+      // deleting 4 demotes 3 (neighbors drop to {2}); 3 stays a border
+      // of core 2; from-scratch equality via the shared checker
+      st = IncrementalDbscan.removePoints(st, Seq(4L).toDF("id"), "id",
+        0.6, 3, Seq(0), thr)
+      val got = labelsOf(IncrementalDbscan.labels(st))
+      assert(got == Map(1L -> 1, 2L -> 1, 3L -> 1), got)
+    }
     checkEqualOps(pts, Seq(Right(Seq(4L))), 0.6, 3, Seq(0))
     // deleting 1 as well leaves 2,3 with one neighbor each -> all noise
     checkEqualOps(pts, Seq(Right(Seq(4L)), Right(Seq(1L))), 0.6, 3, Seq(0))
@@ -284,13 +339,16 @@ class IncrementalDbscanSpec extends SparkSpec {
     val base = Seq(1L -> Seq(0.0f, 0.0f), 2L -> Seq(0.5f, 0.0f))
     // r is within eps of both -> everyone reaches 2 neighbors + self = 3
     val batch = Seq(3L -> Seq(0.25f, 0.4f))
-    var st = IncrementalDbscan.init(df(base), "id", "vec", 1.0, 3, Seq(0))
-    assert(labelsOf(IncrementalDbscan.labels(st))
-      == Map(1L -> 0, 2L -> 0))
-    st = IncrementalDbscan.addPoints(st, df(batch), "id", "vec",
-      1.0, 3, Seq(0))
-    val got = labelsOf(IncrementalDbscan.labels(st))
-    assert(got == Map(1L -> 1, 2L -> 1, 3L -> 1))
+    Thresholds.foreach { thr =>
+      var st = IncrementalDbscan.init(df(base), "id", "vec", 1.0, 3, Seq(0),
+        thr)
+      assert(labelsOf(IncrementalDbscan.labels(st))
+        == Map(1L -> 0, 2L -> 0))
+      st = IncrementalDbscan.addPoints(st, df(batch), "id", "vec",
+        1.0, 3, Seq(0), thr)
+      val got = labelsOf(IncrementalDbscan.labels(st))
+      assert(got == Map(1L -> 1, 2L -> 1, 3L -> 1))
+    }
     checkEqual(Seq(base, batch), 1.0, 3, Seq(0))
   }
 
@@ -298,12 +356,16 @@ class IncrementalDbscanSpec extends SparkSpec {
     val base = Seq(1L -> Seq(0.0f), 2L -> Seq(0.5f),
       10L -> Seq(3.0f), 11L -> Seq(3.5f))
     val bridge = Seq(20L -> Seq(1.5f), 21L -> Seq(2.4f))
-    var st = IncrementalDbscan.init(df(base), "id", "vec", 1.0, 2, Seq(0))
-    assert(labelsOf(IncrementalDbscan.labels(st)).values.toSet == Set(1, 2))
-    st = IncrementalDbscan.addPoints(st, df(bridge), "id", "vec",
-      1.0, 2, Seq(0))
-    val got = labelsOf(IncrementalDbscan.labels(st))
-    assert(got.values.toSet == Set(1)) // one merged cluster
+    Thresholds.foreach { thr =>
+      var st = IncrementalDbscan.init(df(base), "id", "vec", 1.0, 2, Seq(0),
+        thr)
+      assert(labelsOf(IncrementalDbscan.labels(st)).values.toSet ==
+        Set(1, 2))
+      st = IncrementalDbscan.addPoints(st, df(bridge), "id", "vec",
+        1.0, 2, Seq(0), thr)
+      val got = labelsOf(IncrementalDbscan.labels(st))
+      assert(got.values.toSet == Set(1)) // one merged cluster
+    }
     checkEqual(Seq(base, bridge), 1.0, 2, Seq(0))
   }
 
@@ -499,5 +561,61 @@ class IncrementalDbscanSpec extends SparkSpec {
     checkEqual(Seq(cloud.filter(_._1 < 20), cloud.filter(x =>
       x._1 >= 20 && x._1 < 40), cloud.filter(_._1 >= 40)),
       eps = 0.6, minPts = 3, dims = Seq(0, 1))
+  }
+
+  test("tile fold: 4ε-floor tiles and a row cap that forces splits, adds " +
+      "and removes interleaved") {
+    val rnd = new scala.util.Random(43)
+    val centers = Seq((0.0, 0.0), (10.0, 0.0), (5.0, 8.0))
+    val pts = (0 until 240).map { i =>
+      if (i % 8 == 7)
+        (i.toLong, Seq((rnd.nextDouble() * 30 - 5).toFloat,
+          (rnd.nextDouble() * 30 - 10).toFloat))
+      else {
+        val (cx, cy) = centers(i % 3)
+        (i.toLong, Seq((cx + rnd.nextGaussian() * 0.5).toFloat,
+          (cy + rnd.nextGaussian() * 0.5).toFloat))
+      }
+    }
+    val initB = pts.filter(_._1 % 3 != 2)
+    val ops = Seq(Right(initB.map(_._1).filter(_ % 7 == 0)),
+      Left(pts.filter(_._1 % 3 == 2)),
+      Right(pts.map(_._1).filter(id => id % 11 == 3 && id % 7 != 0)))
+    // 4ε-wide tiles (the floor) with no row cap, then 16ε-wide tiles
+    // whose 12-row cap halves them down to the floor
+    checkTiled(initB, ops, 1.0, 4, Seq(0, 1), tileWidth = 4.0,
+      maxTileRows = Long.MaxValue)
+    checkTiled(initB, ops, 1.0, 4, Seq(0, 1), tileWidth = 16.0,
+      maxTileRows = 12L)
+    checkTiled(initB, ops, 1.0, 1, Seq(0, 1), tileWidth = 4.0,
+      maxTileRows = 12L) // minPts = 1: every point is a core
+  }
+
+  test("tile fold: a removal splits a component spanning 8 tiles; the " +
+      "side no removed point touches re-solves too") {
+    // one chain over x in [0, 30] on 4-wide tiles, ids ascending with x.
+    // Removing x = 25 and 25.5 cuts it at a 1.5 gap: only the tiles
+    // [20, 24) and [24, 28) lie within 2ε of the cut, while the left
+    // side's min id (x = 0) sits five tiles away
+    val pts = chain(0.0, 30.0, 0L)
+    val cut = pts.filter(p => p._2.head == 25.0f || p._2.head == 25.5f)
+      .map(_._1)
+    assert(cut.size == 2)
+    checkTiled(pts, Seq(Right(cut)), 1.0, 3, Seq(0), tileWidth = 4.0,
+      maxTileRows = Long.MaxValue)
+    checkEqualOps(pts, Seq(Right(cut)), 1.0, 3, Seq(0))
+  }
+
+  test("tile fold: an add merges two standing components whose min ids " +
+      "lie outside the touched tiles") {
+    // chains over [0, 10] and [12, 22] on 4-wide tiles; x = 11 bridges
+    // them and touches only the tiles [8, 12) and [12, 16). Both min ids
+    // sit at the far ends: id 0 at x = 0, id 80 at x = 22
+    val left = chain(0.0, 10.0, 0L)
+    val right = chain(12.0, 22.0, 0L).map { case (i, v) => (100L - i, v) }
+    val bridge = Seq(5000L -> Seq(11.0f))
+    checkTiled(left ++ right, Seq(Left(bridge)), 1.0, 3, Seq(0),
+      tileWidth = 4.0, maxTileRows = Long.MaxValue)
+    checkEqual(Seq(left ++ right, bridge), 1.0, 3, Seq(0))
   }
 }

@@ -106,39 +106,7 @@ class KdTreeSpec extends SparkSpec {
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kd == expect)
-    val bip = EpsilonJoin.joinKd(df.filter(col("id") % 2 === 1), // nulls drop
-        df.filter(col("id").isNull || col("id") % 2 === 0),
-        "id", "features", eps, Seq(0), eps)
-      .select("a_id", "b_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(bip == expect.filter { case (a, b) => a % 2 == 1 && b % 2 == 0 }
-      .flatMap { case (a, b) => Seq((a, b), (b, a)) })
     df.unpersist()
-  }
-
-  test("bipartite joinKd == grid bipartite join on 64-d embeddings") {
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).persist()
-    // disjoint id halves: odd = delta/probe, even = standing corpus
-    val probe = emb.filter(col("vec_id") % 2 === 1)
-    val corpus = emb.filter(col("vec_id") % 2 === 0)
-    val eps = 1.2
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    // explicit dims force the GRID bipartite path as the oracle side
-    val grid = toMap(EpsilonJoin.join(probe, corpus, "vec_id", "embedding",
-      eps, bucketDims = Seq(0)))
-    val kd = toMap(EpsilonJoin.joinKdAuto(probe, corpus, "vec_id",
-      "embedding", eps))
-    assert(kd.keySet == grid.keySet)
-    kd.foreach { case (k, d2) => assert(d2 == grid(k), s"d2 differs at $k") }
-    assert(kd.nonEmpty)
-    // and the k=0 public join() now routes >3-d inputs to the kd path
-    val routed = toMap(EpsilonJoin.join(probe, corpus, "vec_id",
-      "embedding", eps, bucketDims = Nil))
-    assert(routed == kd)
-    emb.unpersist()
   }
 
   test("selfJoinKdAuto matches and prunes on clustered high-d data") {
@@ -196,16 +164,6 @@ class KdTreeSpec extends SparkSpec {
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expectDbl.nonEmpty, "degenerate fixture: no pairs at eps")
-    // the bipartite auto-router (join with k = 0 on >3-d data) must not
-    // divert these onto the kd path
-    val odd = dbl.filter(col("id") % 2 === 1)
-    val even = dbl.filter(col("id") % 2 === 0)
-    val bip = EpsilonJoin.join(odd, even, "id", "features", eps, Nil)
-      .select("a_id", "b_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(bip == expectDbl
-      .filter { case (a, b) => a % 2 == 1 && b % 2 == 0 }
-      .flatMap { case (a, b) => Seq((a, b), (b, a)) })
 
     // string ids, float vectors: neighbor counts route through the same
     // dispatcher (Dbscan.epsPairs) and must see every id
@@ -233,7 +191,7 @@ class KdTreeSpec extends SparkSpec {
       EpsilonJoin.selfJoinKd(dbl, "id", "features", eps, Seq(0), eps)
     }
     intercept[IllegalArgumentException] {
-      EpsilonJoin.joinKd(str, str, "id", "features", eps, Seq(0), eps)
+      EpsilonJoin.selfJoinKd(str, "id", "features", eps, Seq(0), eps)
     }
     dbl.unpersist(); str.unpersist()
   }
@@ -273,17 +231,6 @@ class KdTreeSpec extends SparkSpec {
     assert(salted == grid)
     assert(salted.nonEmpty && salted.keys.exists { case (a, b) =>
       a % 5 != 0 && b % 5 != 0 }) // dense-blob pairs actually flowed
-    // the BIPARTITE path salts the same way: odd ids probe even ids,
-    // the dense blob sits on the build side
-    val odd = df.filter(col("id") % 2 === 1)
-    val even = df.filter(col("id") % 2 === 0)
-    val bipUnsalted = toMap(EpsilonJoin.joinKd(odd, even, "id",
-      "features", eps, Seq(0, 1), eps))
-    val bipSalted = toMap(EpsilonJoin.joinKd(odd, even, "id",
-      "features", eps, Seq(0, 1), eps, maxCellRows = 200))
-    assert(bipSalted == bipUnsalted)
-    assert(bipSalted == grid.filter { case ((a, b), _) =>
-      (a % 2 == 1 && b % 2 == 0) || (a % 2 == 0 && b % 2 == 1) })
     df.unpersist()
   }
 }

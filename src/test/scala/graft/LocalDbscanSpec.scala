@@ -50,7 +50,18 @@ class LocalDbscanSpec extends SparkSpec {
           .collect()),
       "IncrementalDbscan.init" ->
         (df => IncrementalDbscan.init(df, "id", "vec", 1.0, 2, Nil)
-          .coreComp.collect()))
+          .coreComp.collect()),
+      // the distributed fold: again no tile holds both copies
+      "IncrementalDbscan.init, tile fold" ->
+        (df => IncrementalDbscan.init(df, "id", "vec", 1.0, 2, Nil,
+          localThreshold = 0L).coreComp.collect()),
+      // the far copy of id 2 arrives in a later batch
+      "IncrementalDbscan.addPoints, tile fold" ->
+        (df => IncrementalDbscan.addPoints(
+          IncrementalDbscan.init(df.filter(col("vec")(0) < 5f), "id", "vec",
+            1.0, 2, Nil, localThreshold = 0L),
+          df.filter(col("vec")(0) >= 5f), "id", "vec", 1.0, 2, Nil,
+          localThreshold = 0L).coreComp.collect()))
     paths.foreach { case (name, path) =>
       val e = intercept[Exception](path(dup))
       assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&

@@ -551,21 +551,6 @@ class PlanQualitySpec extends SparkSpec {
       s"tau filter should sit below the aggregate in the plan tree:\n$p")
   }
 
-  test("q164 incremental fold: delta joins stay equi-joins on cells") {
-    // with bucket dims the bipartite delta join must be an equi-join
-    // exactly like the self-join (q164 itself runs k=0 brute force on
-    // the embedding table — pin the GRID path here)
-    val pts = graft.sources.BinaryPoints.read(spark, "/root/reference/t4.8k.bin")
-    val base = pts.filter(col("id") % 2 === 0)
-    val batch = pts.filter(col("id") % 2 =!= 0)
-    val df = EpsilonJoin.join(batch, base, "id", "features", 10.0, Seq(0, 1))
-    val p = plan(df)
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoop"),
-      s"bipartite ε-join degenerated to a cross join:\n$p")
-    assert(p.contains("squared_l2"), s"missing fused distance kernel:\n$p")
-  }
-
   test("q165 Mann–Kendall: pair enumeration stays an equi-join") {
     val p = plan(SparkEntry.queries("q165_mann_kendall")(spark, sf))
     assert(!p.contains("CartesianProduct") &&

@@ -3,6 +3,9 @@ package graft
 import graft.operators.{Dbscan, EpsilonJoin, KCore, Stats}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 /** Generator-driven property tests (SURVEY §5 plan item 3): the
   * invariants fixed-fixture specs sample once, checked across random
@@ -13,11 +16,16 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   */
 class PropertySpec extends SparkSpec {
 
+  /** Runs `prop` from a random seed; a failure reports the seed, which
+    * `withInitialSeed(Seed.fromBase64(seed).get)` replays, and the shrunk
+    * failing case. */
   private def check(name: String, cases: Int)(prop: Prop): Unit = {
+    val seed = Seed.random()
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(cases)
-        .withWorkers(1), prop)
-    assert(res.passed, s"$name failed: $res")
+        .withWorkers(1).withInitialSeed(seed), prop)
+    assert(res.passed, s"$name failed with seed ${seed.toBase64}:\n" +
+      Pretty.pretty(res, Pretty.Params(2)))
   }
 
   private val pointsGen: Gen[List[(Float, Float)]] = for {
@@ -122,7 +130,12 @@ class PropertySpec extends SparkSpec {
       val u = (for (p <- pos; q <- neg) yield {
         if (p > q) 1.0 else if (p == q) 0.5 else 0.0
       }).sum
-      got == math.rint(u / (pos.size.toDouble * neg.size) * 1e6) / 1e6
+      // round(x, 6) rounds half up, in Spark and in DuckDB: an AUC such
+      // as 1/128 = 0.0078125 sits exactly on a half, where a half-even
+      // rint(x * 1e6) would round down
+      val want = java.math.BigDecimal.valueOf(u / (pos.size.toDouble *
+        neg.size)).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+      (got == want) :| s"auc $got, brute force $want"
     })
   }
 

@@ -329,6 +329,11 @@ class StatsSpec extends SparkSpec {
     // an empty class yields NULL, not a divide-by-zero error
     val onlyPos = run(Seq((1L, true), (2L, true)))
     assert(onlyPos.isNullAt(0) && onlyPos.getLong(2) == 0)
+    // a half-way AUC rounds half up: 8 positives, 16 negatives, one
+    // winning pair (3 > 2) → U = 1, AUC = 1/128 = 0.0078125
+    val half = run(Seq.fill(7)((0L, true)) ++ Seq((3L, true), (2L, false)) ++
+      Seq.fill(15)((5L, false)))
+    assert(half.getDouble(0) == 0.007813)
   }
 
   test("auc: NULL scores are excluded, not ranked lowest") {
