@@ -525,12 +525,14 @@ object SparkEntry {
 
     // Source parity: the reference's binary point format (op S-1). DuckDB
     // cannot read .bin, so the oracle reads a committed parquet TWIN of
-    // the same fixture (fixtures/t4_8k_points.parquet, converted once
-    // from /root/reference/t4.8k.bin by fixture tooling) — the scan
-    // itself is now hash-checked coordinate-for-coordinate: float32 →
-    // double casts are exact in both engines, no arithmetic to diverge.
+    // the same fixture (fixtures/t4_8k_points.parquet; the .bin is the
+    // committed byte-identical copy of the reference's t4.8k.bin,
+    // FIXTURES.md §4c) — the scan is hash-checked coordinate-for-
+    // coordinate: float32 → double casts are exact in both engines.
+    // The path is relative to the project root, the forked run's
+    // working directory.
     "q24_binary_scan" -> ((s, _) =>
-      graft.sources.BinaryPoints.read(s, "/root/reference/t4.8k.bin")
+      graft.sources.BinaryPoints.read(s, "fixtures/t4.8k.bin")
         .select(col("id"),
           element_at(col("features"), 1).cast("double").as("x"),
           element_at(col("features"), 2).cast("double").as("y"))),
@@ -6178,7 +6180,7 @@ object SparkEntry {
          |FROM embeddings a JOIN embeddings b
          |  ON a.vec_id != b.vec_id AND ${d2Sql("a", "b")} <= $Eps*$Eps""".stripMargin,
 
-    // the committed parquet twin of /root/reference/t4.8k.bin (see the
+    // the committed parquet twin of fixtures/t4.8k.bin (see the
     // q24 query comment) — float32→double casts are exact in both engines
     "q24_binary_scan" ->
       """SELECT id, CAST(features[1] AS DOUBLE) AS x,

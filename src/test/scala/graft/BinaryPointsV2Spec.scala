@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 class BinaryPointsV2Spec extends SparkSpec {
 
-  private val T4 = "/root/reference/t4.8k.bin"
+  private val T4 = SparkSpec.T4Bin
 
   test("DSv2 format('binaryPoints') == one-shot loader") {
     val v2 = spark.read.format("binaryPoints").option("path", T4).load()

@@ -6,14 +6,15 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Label-level DBSCAN correctness against the sequential brute-force oracle,
-  * on the reference's own 2-D dataset t4.8k.bin (8000×2, harness params
+  * on the reference's own 2-D dataset t4.8k.bin (8000×2, committed
+  * byte-identical as `fixtures/t4.8k.bin`, FIXTURES.md §4c; harness params
   * eps=10 minPts=20, reference `manyTests.py:29-55`). Because the engine's
   * labels are canonical (min-id components, dense ids by component key),
   * equality is EXACT, not up-to-relabeling.
   */
 class DbscanSpec extends SparkSpec {
 
-  private val T4 = "/root/reference/t4.8k.bin"
+  private val T4 = SparkSpec.T4Bin
 
   private def loadT4(limit: Int): (Array[Long], Array[Array[Float]]) = {
     val rows = BinaryPoints.read(spark, T4).orderBy("id").limit(limit)

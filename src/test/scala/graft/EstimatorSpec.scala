@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class EstimatorSpec extends SparkSpec {
 
   test("DbscanEstimator == Dbscan.run; transform appends cluster_id") {
-    val pts = BinaryPoints.read(spark, "/root/reference/t4.8k.bin").persist()
+    val pts = BinaryPoints.read(spark, SparkSpec.T4Bin).persist()
     val model = new DbscanEstimator()
       .setEps(10.0).setMinPts(20)
       .setIdCol("id").setFeaturesCol("features")
@@ -28,7 +28,7 @@ class EstimatorSpec extends SparkSpec {
   }
 
   test("sampling gate is deterministic and applied") {
-    val pts = BinaryPoints.read(spark, "/root/reference/t4.8k.bin")
+    val pts = BinaryPoints.read(spark, SparkSpec.T4Bin)
     val a = graft.operators.PointSink.sampleGate(pts, 0.5, seed = 7L)
       .select("id").collect().map(_.getLong(0)).toSet
     val b = graft.operators.PointSink.sampleGate(pts, 0.5, seed = 7L)
@@ -38,7 +38,7 @@ class EstimatorSpec extends SparkSpec {
   }
 
   test("spatial repartition preserves rows and co-locates neighbors") {
-    val pts = BinaryPoints.read(spark, "/root/reference/t4.8k.bin")
+    val pts = BinaryPoints.read(spark, SparkSpec.T4Bin)
     val out = SpatialPartition.repartitionSpatially(
       pts, "features", cellWidth = 10.0, dims = Seq(0, 1), numPartitions = 8)
     assert(out.count() == 8000)

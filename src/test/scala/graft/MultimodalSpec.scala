@@ -497,7 +497,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("reference output layout projection") {
-    val pts = graft.sources.BinaryPoints.read(spark, "/root/reference/t4.8k.bin")
+    val pts = graft.sources.BinaryPoints.read(spark, SparkSpec.T4Bin)
       .limit(100)
     val labels = pts.select(col("id"), (col("id") % 3).cast("int").as("cluster_id"))
     val out = graft.operators.PointSink.toReferenceLayout(

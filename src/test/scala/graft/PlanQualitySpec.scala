@@ -38,7 +38,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("epsilon self-join with bucket dims is an equi-join, not cartesian") {
-    val pts = graft.sources.BinaryPoints.read(spark, "/root/reference/t4.8k.bin")
+    val pts = graft.sources.BinaryPoints.read(spark, SparkSpec.T4Bin)
     val df = EpsilonJoin.selfJoin(pts, "id", "features", 10.0, Seq(0, 1))
     val p = plan(df)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),

@@ -11,6 +11,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The reference's 2-D dataset t4.8k (8000×2), committed byte-identical
+    * (FIXTURES.md §4c); relative to the project root, the test JVM's
+    * working directory. */
+  val T4Bin = "fixtures/t4.8k.bin"
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
