@@ -24,143 +24,155 @@ object Bench {
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       "focus_" + java.nio.file.Paths.get(artifact).getFileName).toString
 
+  type Run = SparkSession => DataFrame
+
+  /** Bench's workloads beyond `SparkEntry.queries`, by group in run
+    * order: the one list Bench times and `PlanDump` resolves names in.
+    * Bench times `heavy` only under SPARK_GRAFT_BENCH_HEAVY=1. */
+  final case class Registry(reference: Seq[(String, Run)],
+      diagnostics: Seq[(String, Run)], scale: Seq[(String, Run)],
+      heavy: Seq[(String, Run)]) {
+    def all: Seq[(String, Run)] = reference ++ diagnostics ++ scale ++ heavy
+  }
+
+  /** The registry over the SF tables in `sfDir` (`substr_anchored`
+    * reads its documents). */
+  def registry(sfDir: String): Registry = {
+    def dbscanBin(path: String, eps: Double, minPts: Int,
+        samplePct: Double = 1.0,
+        localThreshold: Long = 100_000L): Run = { s =>
+      Workloads.dbscanBin(s, path, eps, minPts, samplePct, localThreshold)
+    }
+    Registry(
+      reference = Seq(
+        "dbscan_clus50k" -> dbscanBin("/root/reference/clus50k.bin", 25.0, 5),
+        "dbscan_part64" ->
+          dbscanBin("/root/reference/part64.bin", 0.01, 5, 0.96),
+      ),
+      // Alternate-path variants of workloads already counted above — timed
+      // and reported under "diagnostics", NOT added to the headline total
+      // (counting clus50k twice would misstate end-to-end throughput).
+      // dbscan_clus50k_dist runs the same clustering with the fused
+      // single-task path disabled (localThreshold=0): the shuffling ε-join +
+      // partition-local union-find + min-label CC loop that actually runs at
+      // cluster scale. Labels are spec-identical to the fused path.
+      diagnostics = Seq(
+        "dbscan_clus50k_dist" -> dbscanBin("/root/reference/clus50k.bin",
+          25.0, 5, localThreshold = 0L),
+        // the anchored ExactSubstr twin of q191 (stride-4 content anchors
+        // + local extension): the corpus-sized multiplicity shuffle
+        // carries ~1/4 of the stride-1 pass's rows — the shape that
+        // survives corpus_chars > shuffle capacity at 100 TB
+        "substr_anchored" -> (s =>
+          graft.operators.SubstringDedup.duplicatedSpansAnchored(
+            s.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text",
+            l = 40, stride = 4)),
+      ),
+      // scale evidence: the same forced-distributed pipeline at 8x the
+      // reference's largest dataset (500k x 5-d, generated in-engine) —
+      // the regime where the ε-join + CC loop dominate and local-mode
+      // job-count overhead stops mattering. Reps: SPARK_GRAFT_DIAG_REPS
+      // (default 2, min recorded with the rep count in BENCH_full) — this
+      // host's documented 2-4x day-to-day swing kept masking real deltas
+      // between rounds when these ran once; the second rep is warm and
+      // costs well under 2x.
+      scale = Seq(
+        // 5-d keeps the planted clusters connected at a modest ε-degree
+        // (~13): 74 recovered clusters holding ~95% of the mass; 10-d at
+        // the same pair budget fragments (high-d RGG percolation needs
+        // degree beyond what a per-round bench should pay for)
+        "dbscan_synth500k" -> (s =>
+          Workloads.dbscanSynth(s, 500_000L, k = 25, dims = 5,
+            eps = 1.0, minPts = 5)),
+        // scale-evidence twin for the DEDUP family: full MinHash-LSH
+        // (shingle → 64-bit fingerprint → 64-min signature → 16-band
+        // bucket join → exact verify) over 1M in-engine near-dup docs
+        // (60M tokens; ~10 docs per template ⇒ ~2.2M verified pairs).
+        // ~49 s cold at local[32] since the hash-first minhash kernel
+        // (most of the remaining bill is the one-off JIT/codegen warmup:
+        // steady-state is ~30 s — see NOTES_DEV)
+        "minhash_synth1m" -> (s => Workloads.dedupSynth(s, 1_000_000L)),
+        // scale-evidence twin for the GRAPH family: forced-distributed
+        // PageRank (10 BSP rounds of out-degree join + contribution
+        // shuffle) over 10M in-engine edges / 1M nodes with hub skew —
+        // ~100x the sf0.1 relational graphs (~29 s; scales gently from
+        // 2M edges at ~21 s: the round loop, not the edge volume, is
+        // the local-mode floor a real cluster overlaps away)
+        "pagerank_synth10m" -> ((s: SparkSession) =>
+          Workloads.pagerankSynth(s, 10_000_000L, 1_000_000L)),
+        // scale-evidence twin for the SIMILARITY family: IVF build (Lloyd
+        // over 1M in-engine 32-d clustered vectors, 256 cells) + serve
+        // (1000 queries, exact cosine top-10 in 8 probed ~3.9k-vector
+        // cells — ~31M candidate distance folds, linear in queries,
+        // never corpus²)
+        "ann_synth1m" -> ((s: SparkSession) =>
+          Workloads.annSynth(s, 1_000_000L)),
+        // scale-evidence twin for the TEXT family: the quality battery
+        // (native token/shingle kernels) over 1M in-engine docs / 60M
+        // tokens — linear scan throughput, one aggregate
+        "textstats_synth1m" -> ((s: SparkSession) =>
+          Workloads.textStatsSynth(s, 1_000_000L)),
+        // scale-evidence twin for ExactSubstr: the anchored span pass
+        // over the SAME 1M-doc/60M-token corpus as minhash_synth1m —
+        // pins the two-hash-shuffle design (only the 1/stride content
+        // anchors reach an exchange) at corpus scale
+        "substr_synth1m" -> ((s: SparkSession) =>
+          Workloads.substrSynth(s, 1_000_000L)),
+        // END-TO-END curation pipeline at 250k docs: LSH near-dedup →
+        // CC survivors → quality gate → hash split → sequence packing —
+        // the composition number, not a single family
+        "curation_synth250k" -> ((s: SparkSession) =>
+          Workloads.curationSynth(s, 250_000L)),
+        // DECREMENTAL fold at scale: a LOCALIZED delete (2 whole blobs,
+        // ~8%) folded OUT of the standing 500k clustering — only the
+        // tiles within 2ε of the deleted blobs, and those of components
+        // that may split, re-run the kernel; every other state row
+        // stands. State bootstrap is cached across reps, so min-of-2
+        // isolates fold + state re-pin + labels; the from-scratch
+        // yardstick beside it is dbscan_synth500k, which re-runs every
+        // tile
+        "dbscan_decr_synth500k" -> ((s: SparkSession) =>
+          Workloads.dbscanDecrSynth(s, 500_000L, k = 25, dims = 5,
+            eps = 1.0, minPts = 5)),
+        // DURABILITY at scale: the same localized-delete fold, but the
+        // standing state crosses a parquet save -> reload seam first
+        // (the restarted-session path q235 oracles at sf scale) — the
+        // delta vs dbscan_decr_synth500k is the price of persisting and
+        // re-reading the four state tables
+        "dbscan_state_rt_synth500k" -> ((s: SparkSession) =>
+          Workloads.dbscanStateRoundTrip(s, 500_000L, k = 25, dims = 5,
+            eps = 1.0, minPts = 5)),
+        // ANN-index durability at scale (the round-10 IndexStore seam):
+        // build the 1M-vector IVF artifacts, save under the commit
+        // manifest, reload, serve — the delta vs ann_synth1m is the
+        // persist + re-read price of the nightly restart path
+        "ann_index_rt_synth1m" -> ((s: SparkSession) =>
+          Workloads.annIndexRoundTrip(s, 1_000_000L)),
+        // HIGH-DIMENSIONAL Euclidean ε-join at scale: the kd fallback
+        // (coarse cells + ghosts + per-cell kd radius queries) over
+        // 200k 32-d clustered vectors, ~70M true pairs at eps=0.2 —
+        // the regime the 3-dim grid path can't prune
+        "kdeps_synth200k" -> ((s: SparkSession) =>
+          Workloads.kdEpsSynth(s, 200_000L, eps = 0.2)),
+      ),
+      // 100× the reference's largest dataset, same per-cluster density
+      // as the 500k diagnostic (k scales with n, ε-degree stays ~13).
+      // Opt-in and ALWAYS single-rep: ~4–8 min at local[32] on a good
+      // host — a second rep would be a round-budget hazard, and at this
+      // duration warmup is noise. Committed profile in NOTES_DEV.md.
+      heavy = Seq("dbscan_synth5m" -> ((s: SparkSession) =>
+        Workloads.dbscanSynth(s, 5_000_000L, k = 250, dims = 5,
+          eps = 1.0, minPts = 5))))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"local[$cpus]", cpus.toInt)
 
-    def dbscanBin(path: String, eps: Double, minPts: Int,
-        samplePct: Double = 1.0,
-        localThreshold: Long = 100_000L): SparkSession => DataFrame = { s =>
-      Workloads.dbscanBin(s, path, eps, minPts, samplePct, localThreshold)
-    }
-    val referenceBench: Seq[(String, SparkSession => DataFrame)] = Seq(
-      "dbscan_clus50k" -> dbscanBin("/root/reference/clus50k.bin", 25.0, 5),
-      "dbscan_part64" -> dbscanBin("/root/reference/part64.bin", 0.01, 5, 0.96),
-    )
-    // Alternate-path variants of workloads already counted above — timed
-    // and reported under "diagnostics", NOT added to the headline total
-    // (counting clus50k twice would misstate end-to-end throughput).
-    // dbscan_clus50k_dist runs the same clustering with the fused
-    // single-task path disabled (localThreshold=0): the shuffling ε-join +
-    // partition-local union-find + min-label CC loop that actually runs at
-    // cluster scale. Labels are spec-identical to the fused path.
-    val diagnosticsBench: Seq[(String, SparkSession => DataFrame)] = Seq(
-      "dbscan_clus50k_dist" ->
-        dbscanBin("/root/reference/clus50k.bin", 25.0, 5, localThreshold = 0L),
-      // the anchored ExactSubstr twin of q191 (stride-4 content anchors
-      // + local extension): the corpus-sized multiplicity shuffle
-      // carries ~1/4 of the stride-1 pass's rows — the shape that
-      // survives corpus_chars > shuffle capacity at 100 TB
-      "substr_anchored" -> (s =>
-        graft.operators.SubstringDedup.duplicatedSpansAnchored(
-          s.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text",
-          l = 40, stride = 4)),
-    )
-    // scale evidence: the same forced-distributed pipeline at 8x the
-    // reference's largest dataset (500k x 5-d, generated in-engine) —
-    // the regime where the ε-join + CC loop dominate and local-mode
-    // job-count overhead stops mattering. Reps: SPARK_GRAFT_DIAG_REPS
-    // (default 2, min recorded with the rep count in BENCH_full) — this
-    // host's documented 2-4x day-to-day swing kept masking real deltas
-    // between rounds when these ran once; the second rep is warm and
-    // costs well under 2x.
-    val scaleDiagnostics: Seq[(String, SparkSession => DataFrame)] = Seq(
-      // 5-d keeps the planted clusters connected at a modest ε-degree
-      // (~13): 74 recovered clusters holding ~95% of the mass; 10-d at
-      // the same pair budget fragments (high-d RGG percolation needs
-      // degree beyond what a per-round bench should pay for)
-      "dbscan_synth500k" -> (s =>
-        Workloads.dbscanSynth(s, 500_000L, k = 25, dims = 5,
-          eps = 1.0, minPts = 5)),
-      // scale-evidence twin for the DEDUP family: full MinHash-LSH
-      // (shingle → 64-bit fingerprint → 64-min signature → 16-band
-      // bucket join → exact verify) over 1M in-engine near-dup docs
-      // (60M tokens; ~10 docs per template ⇒ ~2.2M verified pairs).
-      // ~49 s cold at local[32] since the hash-first minhash kernel
-      // (most of the remaining bill is the one-off JIT/codegen warmup:
-      // steady-state is ~30 s — see NOTES_DEV)
-      "minhash_synth1m" -> (s => Workloads.dedupSynth(s, 1_000_000L)),
-      // scale-evidence twin for the GRAPH family: forced-distributed
-      // PageRank (10 BSP rounds of out-degree join + contribution
-      // shuffle) over 10M in-engine edges / 1M nodes with hub skew —
-      // ~100x the sf0.1 relational graphs (~29 s; scales gently from
-      // 2M edges at ~21 s: the round loop, not the edge volume, is
-      // the local-mode floor a real cluster overlaps away)
-      "pagerank_synth10m" -> ((s: SparkSession) =>
-        Workloads.pagerankSynth(s, 10_000_000L, 1_000_000L)),
-      // scale-evidence twin for the SIMILARITY family: IVF build (Lloyd
-      // over 1M in-engine 32-d clustered vectors, 256 cells) + serve
-      // (1000 queries, exact cosine top-10 in 8 probed ~3.9k-vector
-      // cells — ~31M candidate distance folds, linear in queries,
-      // never corpus²)
-      "ann_synth1m" -> ((s: SparkSession) =>
-        Workloads.annSynth(s, 1_000_000L)),
-      // scale-evidence twin for the TEXT family: the quality battery
-      // (native token/shingle kernels) over 1M in-engine docs / 60M
-      // tokens — linear scan throughput, one aggregate
-      "textstats_synth1m" -> ((s: SparkSession) =>
-        Workloads.textStatsSynth(s, 1_000_000L)),
-      // scale-evidence twin for ExactSubstr: the anchored span pass
-      // over the SAME 1M-doc/60M-token corpus as minhash_synth1m —
-      // pins the two-hash-shuffle design (only the 1/stride content
-      // anchors reach an exchange) at corpus scale
-      "substr_synth1m" -> ((s: SparkSession) =>
-        Workloads.substrSynth(s, 1_000_000L)),
-      // END-TO-END curation pipeline at 250k docs: LSH near-dedup →
-      // CC survivors → quality gate → hash split → sequence packing —
-      // the composition number, not a single family
-      "curation_synth250k" -> ((s: SparkSession) =>
-        Workloads.curationSynth(s, 250_000L)),
-      // DECREMENTAL fold at scale: a LOCALIZED delete (2 whole blobs,
-      // ~8%) folded OUT of the standing 500k clustering — only the
-      // tiles within 2ε of the deleted blobs, and those of components
-      // that may split, re-run the kernel; every other state row
-      // stands. State bootstrap is cached across reps, so min-of-2
-      // isolates fold + state re-pin + labels; the from-scratch
-      // yardstick beside it is dbscan_synth500k, which re-runs every
-      // tile
-      "dbscan_decr_synth500k" -> ((s: SparkSession) =>
-        Workloads.dbscanDecrSynth(s, 500_000L, k = 25, dims = 5,
-          eps = 1.0, minPts = 5)),
-      // DURABILITY at scale: the same localized-delete fold, but the
-      // standing state crosses a parquet save -> reload seam first
-      // (the restarted-session path q235 oracles at sf scale) — the
-      // delta vs dbscan_decr_synth500k is the price of persisting and
-      // re-reading the four state tables
-      "dbscan_state_rt_synth500k" -> ((s: SparkSession) =>
-        Workloads.dbscanStateRoundTrip(s, 500_000L, k = 25, dims = 5,
-          eps = 1.0, minPts = 5)),
-      // ANN-index durability at scale (the round-10 IndexStore seam):
-      // build the 1M-vector IVF artifacts, save under the commit
-      // manifest, reload, serve — the delta vs ann_synth1m is the
-      // persist + re-read price of the nightly restart path
-      "ann_index_rt_synth1m" -> ((s: SparkSession) =>
-        Workloads.annIndexRoundTrip(s, 1_000_000L)),
-      // HIGH-DIMENSIONAL Euclidean ε-join at scale: the kd fallback
-      // (coarse cells + ghosts + per-cell kd radius queries) over
-      // 200k 32-d clustered vectors, ~70M true pairs at eps=0.2 —
-      // the regime the 3-dim grid path can't prune
-      "kdeps_synth200k" -> ((s: SparkSession) =>
-        Workloads.kdEpsSynth(s, 200_000L, eps = 0.2)),
-    )
-    // 100× the reference's largest dataset, same per-cluster density
-    // as the 500k diagnostic (k scales with n, ε-degree stays ~13).
-    // Opt-in and ALWAYS single-rep: ~4–8 min at local[32] on a good
-    // host — a second rep would be a round-budget hazard, and at this
-    // duration warmup is noise. Committed profile in NOTES_DEV.md.
-    val heavyDiagnostics: Seq[(String, SparkSession => DataFrame)] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_HEAVY").contains("1"))
-        Seq("dbscan_synth5m" -> ((s: SparkSession) =>
-          Workloads.dbscanSynth(s, 5_000_000L, k = 250, dims = 5,
-            eps = 1.0, minPts = 5)))
+    val reg = registry(sfDir)
+    val heavyDiagnostics =
+      if (sys.env.get("SPARK_GRAFT_BENCH_HEAVY").contains("1")) reg.heavy
       else Nil
 
     // min over reps, like the reference harness's repeated runs
@@ -323,7 +335,7 @@ object Bench {
         scrub()
         r
       }
-    def runRef(bench: Seq[(String, SparkSession => DataFrame)],
+    def runRef(bench: Seq[(String, Run)],
         repsOverride: Int = reps) =
       bench.filter(p => selected(p._1)).map { case (name, fn) =>
         val r = name -> timeAdj(name, () => fn(spark).count(), repsOverride)
@@ -334,13 +346,13 @@ object Bench {
         scrub()
         r
       }
-    val refResults = runRef(referenceBench)
+    val refResults = runRef(reg.reference)
     val diagReps = sys.env.getOrElse("SPARK_GRAFT_DIAG_REPS", "2").toInt
-    val diagResults = runRef(diagnosticsBench) ++
-      runRef(scaleDiagnostics, repsOverride = diagReps) ++
+    val diagResults = runRef(reg.diagnostics) ++
+      runRef(reg.scale, repsOverride = diagReps) ++
       runRef(heavyDiagnostics, repsOverride = 1)
-    val diagRepsOf = (diagnosticsBench.map(_._1 -> reps) ++
-      scaleDiagnostics.map(_._1 -> diagReps) ++
+    val diagRepsOf = (reg.diagnostics.map(_._1 -> reps) ++
+      reg.scale.map(_._1 -> diagReps) ++
       heavyDiagnostics.map(_._1 -> 1)).toMap
     // The reference harness's remaining datasets, with its own
     // per-dataset (eps, minPts) matrix (manyTests.py:29-55) — timed
@@ -350,9 +362,11 @@ object Bench {
     // the wall clock. The reference recorded 2-rank cluster-count
     // goldens only for clus50k (51) and part64 (6)
     // (Progress-5-Nov-19.txt:9-53); for these six the checksum
-    // recorded here becomes the standing golden.
+    // recorded here becomes the standing golden. t4.8k reads the
+    // committed byte-identical copy (FIXTURES.md §4c), relative to the
+    // project root like q24_binary_scan; the other five have none.
     val refMatrix: Seq[(String, String, Double, Int)] = Seq(
-      ("ref_t4_8k", "/root/reference/t4.8k.bin", 10.0, 20),
+      ("ref_t4_8k", "fixtures/t4.8k.bin", 10.0, 20),
       ("ref_t5_8k", "/root/reference/t5.8k.bin", 8.0, 21),
       ("ref_t7_10k", "/root/reference/t7.10k.bin", 10.0, 12),
       ("ref_t8_8k", "/root/reference/t8.8k.bin", 10.0, 10),

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{Dbscan, DbscanEstimator, PointSink}
 import graft.sources.BinaryPoints
-import org.apache.spark.sql.SparkSession
 
 /** Drop-in CLI for the reference's `mpi_dbscan` (`mpi_main.cpp:31-44`:
   * `-i file -b -m minPts -e eps [-o out] [-p pct]`), minus MPI: the same
@@ -38,14 +37,8 @@ object DbscanMain {
     require(input != null && eps > 0 && minPts > 0,
       "usage: -i <file.bin> -m <minPts> -e <eps> [-o out] [-p pct] [-b]")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-dbscan")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.start(s"local[$cpus]", cpus)
 
     val t0 = System.nanoTime()
     val dims = BinaryPoints.header(input)._2

@@ -9,10 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * SQL functions, so `spark.sql("SELECT squared_l2(a, b) ...")` works and
   * the kernels are usable from pure-SQL pipelines.
   *
-  * Activate with:
+  * Activate on a session builder with
   * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)                    // in-process
+  *   .withExtensions(new GraftExtensions)                      // in-process
   *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   */

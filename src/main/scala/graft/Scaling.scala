@@ -116,11 +116,6 @@ object Scaling {
         "export SPARK_SCALA_VERSION=2.13 — the executor launcher " +
           "needs it on a packaged Spark dist")
     }
-    // forked executors see only the dist jars — hand them the compiled
-    // graft classes (same filesystem; a real cluster ships spark.jars)
-    lazy val classesDir = new java.io.File(
-      getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath
-
     // (master spec, total cores, reps) — the local curve then the
     // forked curve, one fresh session per level for both
     val sweepLevels: Seq[(String, Int, Int)] =
@@ -133,17 +128,7 @@ object Scaling {
     var baseline = Map.empty[String, String]
     var invariant = true
     for ((master, cpus, levelReps) <- sweepLevels) {
-      val b = SparkSession.builder()
-        .master(master)
-        .appName(s"graft-scaling-$cpus")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-      val spark = (if (master.startsWith("local-cluster"))
-        b.config("spark.executor.memory", "4g")
-          .config("spark.executor.extraClassPath", classesDir)
-      else b).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Sessions.start(master, cpus)
       try workloads.foreach { case (name, fn) =>
         var best = Double.MaxValue
         var fp = ""

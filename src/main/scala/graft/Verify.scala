@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,24 +10,9 @@ object Verify {
     // surface multi-JVM (forked executors, remote shuffle, broadcast
     // transport) — diff the two outDirs for full-surface parity
     // evidence (needs SPARK_HOME + SPARK_SCALA_VERSION, see
-    // ClusterParity)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-      // default; read as long (ns since epoch) and convert in the queries
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = (if (master.startsWith("local-cluster"))
-        builder0.config("spark.executor.memory", "4g")
-          .config("spark.executor.extraClassPath", new java.io.File(
-            getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-            .getPath)
-      else builder0)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Sessions.start)
+    val spark = Sessions.start(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // comma-separated substring filter for focused iteration (mirrors
     // Bench's SPARK_GRAFT_BENCH_ONLY); unset = the driver's full dump

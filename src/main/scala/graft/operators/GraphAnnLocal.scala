@@ -39,7 +39,7 @@ import InTask.parallelFor
   * is parameterised (`SPARK_GRAFT_GRAPH_LOCAL`, default 100k vectors,
   * `0` disables), and the build guard also bounds NN-Descent's
   * per-vertex candidate work n·(2·buildK)². Scale paths
-  * (Scaling/ClusterParity/knnGraphRecall/GraphAnnProbe) pass
+  * (Scaling/ClusterParity/knnGraphRecall) pass
   * `localThreshold = 0` so the scale evidence keeps measuring the
   * distributed machinery. Preconditions (same as the practical
   * distributed contract): unique ids, LongType ids,

@@ -16,12 +16,7 @@ object SparkSpec {
     * working directory. */
   val T4Bin = "fixtures/t4.8k.bin"
 
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  /** Built by `Sessions.start`, so specs run under the same session
+    * configuration as Bench and Verify. */
+  lazy val session: SparkSession = Sessions.start("local[4]", 8)
 }
