@@ -6181,11 +6181,13 @@ object SparkEntry {
          |  ON a.vec_id != b.vec_id AND ${d2Sql("a", "b")} <= $Eps*$Eps""".stripMargin,
 
     // the committed parquet twin of fixtures/t4.8k.bin (see the
-    // q24 query comment) — float32→double casts are exact in both engines
+    // q24 query comment), resolved against the working directory like
+    // the query's own read — float32→double casts are exact in both engines
     "q24_binary_scan" ->
-      """SELECT id, CAST(features[1] AS DOUBLE) AS x,
+      s"""SELECT id, CAST(features[1] AS DOUBLE) AS x,
         |  CAST(features[2] AS DOUBLE) AS y
-        |FROM read_parquet('/root/repo/fixtures/t4_8k_points.parquet')""".stripMargin,
+        |FROM read_parquet('${new java.io.File(
+          "fixtures/t4_8k_points.parquet").getAbsolutePath}')""".stripMargin,
 
     "q7_cluster_stats" ->
       s"""SELECT

@@ -1042,12 +1042,14 @@ object AnnSearch {
     * 2-hops stay on the ring), candidate scoring is the exact cosine
     * kernel, ranks tie by neighbor id.
     *
-    * Scale shape per round: two self-equi-joins of the (id, nbr) edge
-    * list (≈ n·(2k)² candidate rows — NEVER n²), one pair-dedup
-    * aggregate, one scoring join against the vector table, one
-    * bounded-heap top-k. Monotone: the current graph is always in the
+    * Scale shape per round: ONE Spark job over cached vertex blocks
+    * ([[GraphAnnLocal.knnGraphRounds]]) whose exchanges carry packed
+    * id arrays, each vector once per block holding one of its
+    * ≈ (2k)² candidates (NEVER n²) and partial top-k heaps; iters + 2
+    * jobs in all. Monotone: the current graph is always in the
     * candidate set, so neighborhood quality never regresses
-    * (spec-measured convergence).
+    * (spec-measured convergence). Ids must be unique LongType and
+    * vectors `array<float>`.
     *
     * @param build (`b_id`, `b_v`); @param iters refinement rounds
     * @return (a_id, nbr_id, rnk) — each id's k nearest found, rnk by
@@ -1056,6 +1058,9 @@ object AnnSearch {
       seed: Long = 42L, buildK: Int = 0,
       localThreshold: Long = GraphAnnLocal.defaultThreshold): DataFrame = {
     require(k >= 1 && iters >= 0, s"bad knnGraph shape: k=$k iters=$iters")
+    require(GraphAnnLocal.idVecShape(build, "b_id", "b_v"),
+      s"knnGraph needs a LongType b_id and an array<float> b_v, got " +
+        build.schema.simpleString)
     // the graph refines at kk >= k and only the final emit cuts to k —
     // the standard build-K > query-k practice: a wider standing
     // neighborhood feeds each round quadratically more candidates, and
@@ -1068,7 +1073,7 @@ object AnnSearch {
     // (AnnSearchLocalSpec pins fused == distributed; the cap also
     // bounds NN-Descent's n·(2kk)² candidate work). The probe stops
     // scanning at the cap instead of counting a 100 TB table.
-    if (localThreshold > 0 && GraphAnnLocal.idVecShape(build, "b_id", "b_v")) {
+    if (localThreshold > 0) {
       val cap = math.min(localThreshold, GraphAnnLocal.maxBuildN(kk))
       val n = ConnectedComponents.withJobDesc(build, "knn-graph: size probe") {
         build.limit(Dbscan.probeCap(cap)).count()
@@ -1076,66 +1081,22 @@ object AnnSearch {
       if (n <= cap && n > kk)
         return GraphAnnLocal.knnGraphFused(build, k, iters, seed, kk)
     }
-    val vecs = withNorm(build, "b_v", "b_n").persist()
-    val n = vecs.count()
-    require(n > kk, s"need more than buildK=$kk vectors, got $n")
-    // scattered init: pos 1..n in id order (GlobalIndex.rowNumbers —
-    // range-partitioned, never a one-task window); v's j-th guess is
-    // the id at the hash-chosen position md5(v:j:seed) mod n. Self
-    // hits are dropped (that vertex starts with k−1 guesses — the
-    // candidate union refills it on round 1).
-    val ranked = GlobalIndex.rowNumbers(
-      build.select(col("b_id")), Seq("b_id"), "pos")
-      .select(col("b_id"), col("pos")).persist()
-    var g = ranked
-      .select(col("b_id").as("a_id"),
-        explode(array((1 to kk).map(lit): _*)).as("j"))
-      .select(col("a_id"),
-        (pmod(graft.functions.TextFunctions.portableHash48(
-          concat(col("a_id").cast("string"), lit(":"),
-            col("j").cast("string"), lit(":" + seed))),
-          lit(n)) + 1).as("npos"))
-      .join(ranked.select(col("pos").as("npos"), col("b_id").as("nbr")),
-        "npos")
-      .filter(col("a_id") =!= col("nbr"))
-      .select(col("a_id"), col("nbr"))
-      // two hash draws can land on the same position — dedup HERE, not
-      // just in the rounds, or iters=0 emits duplicate (a_id, nbr) rows
-      // at consecutive ranks (the heap has no id dedup)
-      .distinct()
-    for (_ <- 1 to iters)
-      g = nnDescentRound(g, vecs, kk, bcastScore = false)
-    // materialize the emit BEFORE releasing the caches — unpersisting
-    // under a still-lazy plan would force the widest scoring join to
-    // recompute vecs (build scan + norms, twice) at the caller's action
-    val out = scoreTopK(g, vecs, k, bcastScore = false)
-      .select(col("a_id"), posexplode(col("topk")).as(Seq("pos", "p")))
-      .select(col("a_id"), col("p.id").as("nbr_id"),
-        (col("pos") + 1).cast("int").as("rnk"))
-      .localCheckpoint()
-    vecs.unpersist()
-    ranked.unpersist()
-    out
+    GraphAnnLocal.knnGraphRounds(build, k, iters, seed, kk)
   }
 
   /** Exact-cosine bounded-heap top-`keep` of a candidate edge list
     * (`a_id`, `nbr`) against a normed vector table (`b_id`, `b_v`,
-    * `b_n`) — NN-Descent's scoring step, shared by [[knnGraph]] and
-    * [[knnGraphIvf]]'s refinement. With `bcastScore` the two vector
-    * lookups are BROADCAST hash joins: only 3-scalar id-pair rows ever
-    * cross an exchange (the disk-lean discipline — the shuffle-join
+    * `b_n`) — the scoring step of [[knnGraphIvf]]'s refinement. The two
+    * vector lookups are BROADCAST hash joins: only 3-scalar id-pair rows
+    * ever cross an exchange (the disk-lean discipline — a shuffle-join
     * form spills ~|cand| dense vectors through the second lookup,
     * which at 1M vectors × buildK=20 measured ~480 GB and overflowed a
-    * single host's disk). Identical rows either way: same exact fold,
-    * same heap, same ties. */
-  private def scoreTopK(cand: DataFrame, vecs: DataFrame, keep: Int,
-      bcastScore: Boolean): DataFrame = {
-    val side = (c: String) => {
-      val t = vecs.select(col("b_id").as(c),
-        col("b_v").as(if (c == "a_id") "a_v" else "b_v"),
-        col("b_n").as(if (c == "a_id") "a_n" else "b_n"))
-      if (bcastScore) broadcast(t) else t
-    }
+    * single host's disk). */
+  private def scoreTopK(cand: DataFrame, vecs: DataFrame,
+      keep: Int): DataFrame = {
+    val side = (c: String) => broadcast(vecs.select(col("b_id").as(c),
+      col("b_v").as(if (c == "a_id") "a_v" else "b_v"),
+      col("b_n").as(if (c == "a_id") "a_n" else "b_n")))
     cand
       .join(side("a_id"), "a_id")
       .join(side("nbr"), "nbr")
@@ -1148,10 +1109,10 @@ object AnnSearch {
   /** One NN-Descent refinement round over edge list `g` (`a_id`,
     * `nbr`): symmetric closure, 2-hop candidate set ∪ current graph,
     * exact-cosine top-`kk` per vertex (see [[knnGraph]]'s doc for the
-    * paper contract). The candidate stream is id-pairs ONLY —
-    * `bcastScore` keeps it that way through scoring. */
-  private def nnDescentRound(g: DataFrame, vecs: DataFrame, kk: Int,
-      bcastScore: Boolean): DataFrame = {
+    * paper contract). The candidate stream is id-pairs ONLY, through
+    * scoring too. */
+  private def nnDescentRound(g: DataFrame, vecs: DataFrame,
+      kk: Int): DataFrame = {
     val bn = g.unionAll(g.select(col("nbr").as("a_id"),
         col("a_id").as("nbr"))).distinct().localCheckpoint()
     // bn is symmetric, so one 2-hop composition enumerates every
@@ -1163,7 +1124,7 @@ object AnnSearch {
       .filter(col("a_id") =!= col("nbr"))
       .unionAll(g)
       .distinct()
-    scoreTopK(cand, vecs, kk, bcastScore)
+    scoreTopK(cand, vecs, kk)
       .select(col("a_id"), explode(col("topk")).as("p"))
       .select(col("a_id"), col("p.id").as("nbr"))
       .localCheckpoint() // cut per-round lineage, like the CC loop
@@ -1212,7 +1173,7 @@ object AnnSearch {
     * graph (a neighbor missed across a cell boundary is almost always
     * a neighbor-of-a-neighbor of a 0.66-quality graph), with the
     * candidate exchange slimmed to id-pairs and the vector lookups
-    * BROADCAST ([[scoreTopK]]'s `bcastScore`) so the round stays
+    * BROADCAST ([[scoreTopK]]) so the round stays
     * disk-lean where plain NN-Descent at this scale overflowed a
     * host's shuffle disk.
     *
@@ -1266,8 +1227,8 @@ object AnnSearch {
           .select(col("a_id"), col("p.id").as("nbr"))
           .localCheckpoint()
         for (_ <- 1 to refineIters)
-          g = nnDescentRound(g, vecs, k, bcastScore = true)
-        scoreTopK(g, vecs, k, bcastScore = true)
+          g = nnDescentRound(g, vecs, k)
+        scoreTopK(g, vecs, k)
           .select(col("a_id"), posexplode(col("topk")).as(Seq("pos", "p")))
           .select(col("a_id"), col("p.id").as("nbr_id"),
             (col("pos") + 1).cast("int").as("rnk"))

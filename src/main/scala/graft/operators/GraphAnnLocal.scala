@@ -1,27 +1,34 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import graft.functions.TopKByScore.Heap
+import org.apache.spark.{Partitioner, RangePartitioner, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import InTask.parallelFor
 
 /** Fused single-task twins of the graph-ANN operators (the
   * [[Dbscan]] `runLocal` discipline applied to [[AnnSearch]]'s k-NN
-  * graph family).
+  * graph family), and the NN-Descent kernel the distributed build runs
+  * per partition.
   *
-  * WHY: the distributed NN-Descent build + beam-walk serve cost ~10-60
-  * Spark jobs (per-round localCheckpoints, distincts, scoring joins),
-  * each ~0.1-0.3 s of orchestration in local mode — on the bench's
-  * small standing indexes that floor, not data volume, is the entire
-  * bill (measured round 11: the seven graph-family queries were 7 of
-  * the 10 slowest at sf0.1 on 2,000 vectors). Below a size guard the
-  * whole operator runs in ONE task (thread-parallel inside through
-  * [[InTask.parallelFor]], like [[LocalDbscan]]) with NO driver-side
-  * row data and NO shuffles.
+  * WHY: every Spark job costs ~0.1-0.3 s of orchestration in local
+  * mode, and on the bench's small standing indexes that floor, not data
+  * volume, is the bill (measured round 11: the seven graph-family
+  * queries were 7 of the 10 slowest at sf0.1 on 2,000 vectors). Below a
+  * size guard the whole operator runs in ONE task (thread-parallel
+  * inside through [[InTask.parallelFor]], like [[LocalDbscan]]) with NO
+  * driver-side row data and NO shuffles. Above it, the NN-Descent build
+  * runs the SAME per-vertex step inside cached vertex blocks, one Spark
+  * job per round ([[knnGraphRounds]]).
   *
   * EXACTNESS CONTRACT: every fused kernel reproduces the distributed
   * dataflow bit-for-bit —
-  *  - positions: ids ascending, 1-based (`GlobalIndex.rowNumbers`);
+  *  - positions: ids ascending (the build's vertex names);
   *  - hash draws: `TextFunctions.portableHash48` == first 12 md5 hex
   *    chars of the UTF-8 string, parsed base 16 ([[h48]]);
   *  - scores: `-(dot(a,b) / sqrt(dot(a,a)*dot(b,b)))` with
@@ -41,10 +48,9 @@ import InTask.parallelFor
   * per-vertex candidate work n·(2·buildK)². Scale paths
   * (Scaling/ClusterParity/knnGraphRecall) pass
   * `localThreshold = 0` so the scale evidence keeps measuring the
-  * distributed machinery. Preconditions (same as the practical
-  * distributed contract): unique ids, LongType ids,
-  * `array<float>` vectors — any other shape falls through to the
-  * distributed path untouched.
+  * distributed machinery. Preconditions: unique LongType ids and
+  * `array<float>` vectors — the build fails on anything else; the
+  * walk and insert fall through to their distributed path.
   */
 private[graft] object GraphAnnLocal {
 
@@ -141,151 +147,321 @@ private[graft] object GraphAnnLocal {
       case _ => false
     }))
 
-  // ---------- NN-Descent build (AnnSearch.knnGraph's fused twin) ----------
+  // ---------- NN-Descent build (AnnSearch.knnGraph) ----------
+  //
+  // A vertex is named by its POSITION, the 0-based rank of its id (the
+  // init's `npos − 1`). Positions rank as ids do, so a heap keyed on
+  // positions breaks ties like the id-keyed SQL heap.
 
-  /** The whole build in one task over the collected partition rows.
-    * Returns (a_id, nbr_id, rnk) rows — identical to the distributed
-    * emit. */
-  private[operators] def buildRows(idsIn: Array[Long],
-      vecsIn: Array[Array[Float]], k: Int, iters: Int, seed: Long,
-      kk: Int): Iterator[Row] = {
-    val n = idsIn.length
+  /** Vertices in ascending id order with their vectors and norms. A null
+    * vector scores nothing, as the aggregate skips a null SQL score. */
+  final case class Block(ids: Array[Long], vecs: Array[Array[Float]],
+      norms: Array[Double])
+
+  private def idVec(r: Row): (Long, Array[Float]) =
+    (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+
+  /** Sort rows into a [[Block]]. Unique ids are a precondition of both
+    * paths (a position names one id), so a duplicate fails here. */
+  private def block(rows: Array[(Long, Array[Float])]): Block = {
+    val sorted = rows.sortBy(_._1)
+    val ids = sorted.map(_._1)
+    var i = 1
+    while (i < ids.length) {
+      require(ids(i) != ids(i - 1),
+        s"knnGraph requires unique ids, got duplicate ${ids(i)}")
+      i += 1
+    }
+    val vecs = sorted.map(_._2)
+    val norms = new Array[Double](ids.length)
+    parallelFor(ids.length) { j =>
+      if (vecs(j) != null) norms(j) = dot(vecs(j), vecs(j))
+    }
+    Block(ids, vecs, norms)
+  }
+
+  /** Scattered initial guesses of the block at positions `off…`: v's
+    * j-th guess is position pmod(h48("id:j:seed"), n); self hits are
+    * dropped and repeated draws merged. */
+  private def initGuesses(b: Block, off: Int, n: Int, kk: Int,
+      seed: Long): Array[Array[Int]] = {
+    val g = new Array[Array[Int]](b.ids.length)
+    parallelFor(g.length) { i =>
+      val buf = Array.tabulate(kk)(j =>
+        (h48(s"${b.ids(i)}:${j + 1}:$seed") % n).toInt)
+      g(i) = sortedDistinct(buf, kk, off + i)
+    }
+    g
+  }
+
+  /** Reversed edges (w, v) of every list entry v → w of the block at
+    * positions `off…`, flattened and bucketed by `owner(w)`. */
+  private def reversed(g: Array[Array[Int]], off: Int, parts: Int,
+      owner: Int => Int): Array[Array[Int]] = {
+    val out = Array.fill(parts)(new mutable.ArrayBuilder.ofInt)
+    for (v <- g.indices; w <- g(v)) out(owner(w)) += w += off + v
+    out.map(_.result())
+  }
+
+  /** Symmetric closure bn(v) = g(v) ∪ {a : v ∈ g(a)}, sorted, distinct,
+    * minus v, of the block at positions `off…`; `rev` holds the reversed
+    * edges into the block as flattened (v, a) pairs. */
+  private def closure(g: Array[Array[Int]], off: Int,
+      rev: Iterable[Array[Int]]): Array[Array[Int]] = {
+    val raw = g.map(new mutable.ArrayBuilder.ofInt().addAll(_))
+    for (r <- rev; j <- r.indices by 2) raw(r(j) - off) += r(j + 1)
+    val bn = raw.map(_.result())
+    parallelFor(bn.length) { v =>
+      bn(v) = sortedDistinct(bn(v), bn(v).length, off + v)
+    }
+    bn
+  }
+
+  /** The per-vertex step, first half: v's candidates are the closure
+    * lists of its closure neighbours `mids` ∪ its own list, sorted,
+    * distinct, minus v. */
+  private def candidates(v: Int, own: Array[Int], mids: Array[Int],
+      bnOf: Int => Array[Int]): Array[Int] = {
+    val buf = Array.concat(own +: mids.map(bnOf).toSeq: _*)
+    sortedDistinct(buf, buf.length, v)
+  }
+
+  /** The per-vertex step, second half: push the negated cosine of
+    * (va, na) against candidates `cs(from until until)` — positions in
+    * block `b`, which starts at `off` — into `heap`, keyed by position,
+    * or by id where the caller cannot map positions back. */
+  private def score(heap: Heap, va: Array[Float], na: Double, b: Block,
+      off: Int, cs: Array[Int], from: Int, until: Int,
+      byId: Boolean): Unit = {
+    var j = from
+    while (j < until) {
+      val w = cs(j) - off
+      if (b.vecs(w) != null)
+        heap.push(if (byId) b.ids(w) else cs(j),
+          negcos(va, na, b.vecs(w), b.norms(w)))
+      j += 1
+    }
+  }
+
+  /** The build's scoring passes as (expand, keep): iters − 1 rounds at
+    * kk, then a last round that keeps k — the top-k of the top-kk is
+    * the top-k, so no emit pass re-scores the final lists. With no
+    * round, the one pass scores the initial guesses. */
+  private def passes(k: Int, iters: Int, kk: Int): Seq[(Boolean, Int)] =
+    if (iters == 0) Seq((false, k))
+    else Seq.fill(iters - 1)((true, kk)) :+ ((true, k))
+
+  /** The whole build in one task: (a_id, nbr_id, rnk) rows. */
+  private[operators] def buildRows(rows: Array[(Long, Array[Float])],
+      k: Int, iters: Int, seed: Long, kk: Int): Iterator[Row] = {
+    val n = rows.length
     require(n > kk, s"need more than buildK=$kk vectors, got $n")
-    // positions 1..n in id-ascending order (GlobalIndex.rowNumbers)
-    val order = Array.range(0, n).sortBy(idsIn(_))
-    val ids = order.map(idsIn(_))
-    // unique ids are a documented precondition (binarySearch position
-    // lookup requires it); a violation must FAIL here, not silently
-    // diverge from the distributed path's rows
-    var dup = 1
-    while (dup < n) {
-      require(ids(dup) != ids(dup - 1),
-        s"knnGraph fused path requires unique ids, got duplicate " +
-          s"${ids(dup)}")
-      dup += 1
+    val b = block(rows)
+    var g = initGuesses(b, 0, n, kk, seed)
+    for ((expand, keep) <- passes(k, iters, kk)) {
+      val cur = g
+      val bn = if (expand) closure(cur, 0, reversed(cur, 0, 1, _ => 0))
+        else null
+      g = new Array[Array[Int]](n)
+      parallelFor(n) { v =>
+        val cs = if (expand) candidates(v, cur(v), bn(v), bn(_)) else cur(v)
+        val heap = new Heap(keep)
+        if (b.vecs(v) != null)
+          score(heap, b.vecs(v), b.norms(v), b, 0, cs, 0, cs.length,
+            byId = false)
+        g(v) = heap.sortedAsc.map(_._1.toInt)
+      }
     }
-    val vecs = order.map(vecsIn(_))
-    val norms = new Array[Double](n)
-    parallelFor(n) { i => norms(i) = dot(vecs(i), vecs(i)) }
-
-    // scattered init: v's j-th guess = id at position
-    // pmod(h48("id:j:seed"), n) + 1; self-hits dropped; per-pair dedup
-    var g = new Array[Array[Int]](n)
-    parallelFor(n) { i =>
-      val buf = new Array[Int](kk)
-      var c = 0
-      var j = 1
-      while (j <= kk) {
-        val p = (h48(s"${ids(i)}:$j:$seed") % n).toInt // index = npos−1
-        buf(c) = p; c += 1
-        j += 1
-      }
-      g(i) = sortedDistinct(buf, c, i)
-    }
-
-    // refinement rounds: bn = distinct symmetric closure; candidates =
-    // 2-hop ∪ current graph (distinct, minus self); exact-cosine
-    // top-kk per vertex via the aggregate's own heap
-    def round(gIn: Array[Array[Int]]): Array[Array[Int]] = {
-      val deg = new Array[Int](n)
-      var i = 0
-      while (i < n) {
-        val e = gIn(i)
-        var j = 0
-        while (j < e.length) { deg(i) += 1; deg(e(j)) += 1; j += 1 }
-        i += 1
-      }
-      val raw = new Array[Array[Int]](n)
-      i = 0
-      while (i < n) { raw(i) = new Array[Int](deg(i)); i += 1 }
-      val fill = new Array[Int](n)
-      i = 0
-      while (i < n) {
-        val e = gIn(i)
-        var j = 0
-        while (j < e.length) {
-          val w = e(j)
-          raw(i)(fill(i)) = w; fill(i) += 1
-          raw(w)(fill(w)) = i; fill(w) += 1
-          j += 1
-        }
-        i += 1
-      }
-      val bn = new Array[Array[Int]](n)
-      parallelFor(n) { a => bn(a) = sortedDistinct(raw(a), raw(a).length, a) }
-      // (bn drops self-loops: the distributed bn can hold (a,a) only if
-      // g had it, and g never does — init and rounds both exclude self)
-      val out = new Array[Array[Int]](n)
-      parallelFor(n) { a =>
-        var cap = gIn(a).length
-        val ba = bn(a)
-        var m = 0
-        while (m < ba.length) { cap += bn(ba(m)).length; m += 1 }
-        val buf = new Array[Int](cap)
-        var c = 0
-        m = 0
-        while (m < ba.length) {
-          val bm = bn(ba(m))
-          var w = 0
-          while (w < bm.length) { buf(c) = bm(w); c += 1; w += 1 }
-          m += 1
-        }
-        val ga = gIn(a)
-        var j = 0
-        while (j < ga.length) { buf(c) = ga(j); c += 1; j += 1 }
-        val cands = sortedDistinct(buf, c, a)
-        val heap = new graft.functions.TopKByScore.Heap(kk)
-        j = 0
-        while (j < cands.length) {
-          val w = cands(j)
-          heap.push(ids(w), negcos(vecs(a), norms(a), vecs(w), norms(w)))
-          j += 1
-        }
-        val kept = heap.sortedAsc
-        val res = new Array[Int](kept.length)
-        j = 0
-        while (j < kept.length) {
-          // ids are unique and sorted — position == binary search
-          res(j) = java.util.Arrays.binarySearch(ids, kept(j)._1)
-          j += 1
-        }
-        out(a) = res
-      }
-      out
-    }
-
-    var it = 0
-    while (it < iters) { g = round(g); it += 1 }
-
-    // final emit: exact top-k of each vertex's standing kk-neighborhood
-    val rows = new Array[Array[Row]](n)
-    parallelFor(n) { a =>
-      val heap = new graft.functions.TopKByScore.Heap(k)
-      val ga = g(a)
-      var j = 0
-      while (j < ga.length) {
-        val w = ga(j)
-        heap.push(ids(w), negcos(vecs(a), norms(a), vecs(w), norms(w)))
-        j += 1
-      }
-      val kept = heap.sortedAsc
-      rows(a) = Array.tabulate(kept.length)(p =>
-        Row(ids(a), kept(p)._1, p + 1))
-    }
-    rows.iterator.flatMap(_.iterator)
+    Iterator.range(0, n).flatMap(v => g(v).iterator.zipWithIndex.map {
+      case (w, p) => Row(b.ids(v), b.ids(w), p + 1)
+    })
   }
 
   /** DataFrame wrapper: one coalesced partition, no driver row data. */
   def knnGraphFused(build: DataFrame, k: Int, iters: Int, seed: Long,
       kk: Int): DataFrame = {
-    val spark = build.sparkSession
-    val rdd = build.select(col("b_id"), col("b_v"))
-      .coalesce(1).rdd.mapPartitions { it =>
-        val rows = it.map(r =>
-          (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
-        buildRows(rows.map(_._1), rows.map(_._2), k, iters, seed, kk)
+    val rdd = build.select(col("b_id"), col("b_v")).coalesce(1).rdd
+      .mapPartitions(it => buildRows(it.map(idVec).toArray, k, iters, seed,
+        kk))
+    build.sparkSession.createDataFrame(rdd, OutSchema).localCheckpoint()
+  }
+
+  /** Routes a message keyed by a position to the block holding it; block
+    * r holds positions `starts(r) until starts(r + 1)`. */
+  private final class ByPosition(val starts: Array[Int]) extends Partitioner {
+    def numPartitions: Int = starts.length - 1
+    def getPartition(key: Any): Int = owner(key.asInstanceOf[Int])
+    def owner(pos: Int): Int = {
+      var lo = 0
+      var hi = numPartitions // starts(lo) <= pos < starts(hi)
+      while (hi - lo > 1) {
+        val mid = (lo + hi) >>> 1
+        if (starts(mid) <= pos) lo = mid else hi = mid
       }
-    spark.createDataFrame(rdd, OutSchema).localCheckpoint()
+      lo
+    }
+    /** One message per block, keyed by the block's first position. */
+    def keyed[M](msgs: Array[M]): Iterator[(Int, M)] =
+      starts.iterator.zip(msgs.iterator)
+    /** (block, from, until): sorted positions `c` cut into block runs. */
+    def runs(c: Array[Int]): Iterator[(Int, Int, Int)] = {
+      def lower(x: Int) = {
+        val i = java.util.Arrays.binarySearch(c, x)
+        if (i >= 0) i else -i - 1
+      }
+      Iterator.range(0, numPartitions)
+        .map(q => (q, lower(starts(q)), lower(starts(q + 1))))
+        .filter(r => r._2 < r._3)
+    }
+  }
+
+  /** The distributed build: vertices range-partitioned by id into cached
+    * [[Block]]s, so each block holds one run of positions, then one
+    * Spark job per pass. Each block sends every other block at most one
+    * message per exchange, packed into primitive arrays:
+    *  1. reversed edges, to the block of their target (closure);
+    *  2. each closure list, to its own block and to every block holding
+    *     one of its members, where the 2-hop candidates assemble;
+    *  3. each vertex's vector with its candidates in a block, once per
+    *     block holding a candidate, not once per candidate;
+    *  4. each block's partial top-keep heap per vertex, merged at the
+    *     vertex's block. Top-k of a union is the top-k of the per-part
+    *     top-ks under (score + 0.0, id), so the merge is exact.
+    * The last pass's heaps carry ids and become the output rows. */
+  def knnGraphRounds(build: DataFrame, k: Int, iters: Int, seed: Long,
+      kk: Int): DataFrame = {
+    val spark = build.sparkSession
+    val sc = spark.sparkContext
+    val pts = build.select(col("b_id"), col("b_v")).rdd.map(idVec)
+    val (blocks, sizes) = ConnectedComponents.withJobDesc(sc,
+        "knn-graph: vertex blocks") {
+      val blocks = pts
+        .partitionBy(new RangePartitioner(
+          spark.sessionState.conf.numShufflePartitions, pts))
+        .mapPartitions(it => Iterator(block(it.toArray)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (blocks, blocks.map(_.ids.length.toLong).collect())
+    }
+    val n = sizes.sum
+    require(n > kk && n <= Int.MaxValue, s"need more than buildK=$kk " +
+      s"and at most ${Int.MaxValue} vectors, got $n")
+    val at = new ByPosition(sizes.scanLeft(0L)(_ + _).map(_.toInt))
+    val parts = at.numPartitions
+    def here = at.starts(TaskContext.getPartitionId())
+    def ints() = Array.fill(parts)(new mutable.ArrayBuilder.ofInt)
+
+    def pass(g: RDD[Array[Array[Int]]], expand: Boolean, keep: Int,
+        byId: Boolean): RDD[Array[Array[Long]]] = {
+      val cands = if (!expand) g else {
+        val rev = g.mapPartitions(it =>
+          at.keyed(reversed(it.next(), here, parts, at.owner)))
+        val lists = g.zipPartitions(rev.partitionBy(at).values) {
+          (git, rit) =>
+            val off = here
+            val bn = closure(git.next(), off, rit.toSeq)
+            val out = ints()
+            for (m <- bn.indices;
+                 q <- ((off + m) +: bn(m)).map(at.owner).distinct) {
+              out(q) += off + m += bn(m).length
+              out(q).addAll(bn(m))
+            }
+            at.keyed(out.map(_.result()))
+        }
+        g.zipPartitions(lists.partitionBy(at).values) { (git, lit) =>
+          val bnOf = new mutable.LongMap[Array[Int]]
+          for (l <- lit) {
+            var i = 0
+            while (i < l.length) {
+              bnOf(l(i)) = java.util.Arrays.copyOfRange(l, i + 2,
+                i + 2 + l(i + 1))
+              i += 2 + l(i + 1)
+            }
+          }
+          val off = here
+          val gl = git.next()
+          Iterator(Array.tabulate(gl.length)(v =>
+            candidates(off + v, gl(v), bnOf(off + v), bnOf(_))))
+        }
+      }
+      val requests = blocks.zipPartitions(cands) { (bit, cit) =>
+        val b = bit.next()
+        val off = here
+        val (is, fs) = (ints(), Array.fill(parts)(
+          new mutable.ArrayBuilder.ofFloat))
+        for ((c, v) <- cit.next().iterator.zipWithIndex
+             if b.vecs(v) != null; (q, from, until) <- at.runs(c)) {
+          is(q) += off + v += b.vecs(v).length += until - from
+          is(q).addAll(c, from, until - from)
+          fs(q).addAll(b.vecs(v))
+        }
+        at.keyed(is.map(_.result()).zip(fs.map(_.result())))
+      }
+      val partials = blocks.zipPartitions(requests.partitionBy(at).values) {
+        (bit, rit) =>
+          val b = bit.next()
+          val off = here
+          val ks = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
+          val ss = Array.fill(parts)(new mutable.ArrayBuilder.ofDouble)
+          for ((is, fs) <- rit) {
+            var i = 0
+            var f = 0
+            while (i < is.length) {
+              val (v, dim, cnt) = (is(i), is(i + 1), is(i + 2))
+              val va = java.util.Arrays.copyOfRange(fs, f, f + dim)
+              val heap = new Heap(keep)
+              score(heap, va, dot(va, va), b, off, is, i + 3, i + 3 + cnt,
+                byId)
+              val q = at.owner(v)
+              ks(q) += v += heap.size
+              heap.foreach { (key, s) => ks(q) += key; ss(q) += s }
+              i += 3 + cnt
+              f += dim
+            }
+          }
+          at.keyed(ks.map(_.result()).zip(ss.map(_.result())))
+      }
+      partials.partitionBy(at).values.mapPartitions { it =>
+        val off = here
+        val heaps = Array.fill(at.starts(TaskContext.getPartitionId() + 1) -
+          off)(new Heap(keep))
+        for ((ks, ss) <- it) {
+          var i = 0
+          var s = 0
+          while (i < ks.length) {
+            val cnt = ks(i + 1).toInt
+            for (j <- 0 until cnt)
+              heaps(ks(i).toInt - off).push(ks(i + 2 + j), ss(s + j))
+            i += 2 + cnt
+            s += cnt
+          }
+        }
+        Iterator(heaps.map(_.sortedAsc.map(_._1)))
+      }
+    }
+
+    val init = blocks.mapPartitions(it =>
+      Iterator(initGuesses(it.next(), here, n.toInt, kk, seed))).persist()
+    var g: RDD[Array[Array[Int]]] = init
+    val done = mutable.ArrayBuffer[RDD[_]](blocks, init)
+    val ps = passes(k, iters, kk)
+    for ((expand, keep) <- ps.init) {
+      g = pass(g, expand, keep, byId = false)
+        .map(_.map(_.map(_.toInt))).localCheckpoint()
+      ConnectedComponents.withJobDesc(sc, "knn-graph: round") { g.count() }
+      done += g
+    }
+    val rows = blocks.zipPartitions(pass(g, ps.last._1, ps.last._2,
+        byId = true)) { (bit, kit) =>
+      val ids = bit.next().ids
+      kit.next().iterator.zipWithIndex.flatMap { case (ws, v) =>
+        ws.iterator.zipWithIndex.map { case (w, p) => Row(ids(v), w, p + 1) }
+      }
+    }
+    val out = ConnectedComponents.withJobDesc(sc, "knn-graph: last round") {
+      spark.createDataFrame(rows, OutSchema).localCheckpoint()
+    }
+    done.foreach(_.unpersist())
+    out
   }
 
   // ---------- beam walk (AnnSearch.graphWalk's fused twin) ----------
@@ -297,14 +473,14 @@ private[graft] object GraphAnnLocal {
     * path; callers that dedup did so upstream). */
   private[operators] def walkRows(rows: Iterator[Row], k: Int, ef: Int,
       rounds: Int): Iterator[Row] = {
-    val qIds = new scala.collection.mutable.ArrayBuffer[Long]
-    val qVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]]
-    val bIds = new scala.collection.mutable.ArrayBuffer[Long]
-    val bVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]]
-    val eSrc = new scala.collection.mutable.ArrayBuffer[Long]
-    val eNbr = new scala.collection.mutable.ArrayBuffer[Long]
-    val sQ = new scala.collection.mutable.ArrayBuffer[Long]
-    val sN = new scala.collection.mutable.ArrayBuffer[Long]
+    val qIds = new mutable.ArrayBuffer[Long]
+    val qVecs = new mutable.ArrayBuffer[Array[Float]]
+    val bIds = new mutable.ArrayBuffer[Long]
+    val bVecs = new mutable.ArrayBuffer[Array[Float]]
+    val eSrc = new mutable.ArrayBuffer[Long]
+    val eNbr = new mutable.ArrayBuffer[Long]
+    val sQ = new mutable.ArrayBuffer[Long]
+    val sN = new mutable.ArrayBuffer[Long]
     rows.foreach { r =>
       r.getInt(0) match {
         case 0 => qIds += r.getLong(1); qVecs += r.getSeq[Float](3).toArray
@@ -326,7 +502,7 @@ private[graft] object GraphAnnLocal {
       ef: Int, rounds: Int): Array[Array[Row]] = {
     val nq = qIds.length
     // corpus lookup
-    val bIdx = new scala.collection.mutable.LongMap[Int](bIds.length * 2)
+    val bIdx = new mutable.LongMap[Int](bIds.length * 2)
     var i = 0
     while (i < bIds.length) { bIdx.update(bIds(i), i); i += 1 }
     // last-wins on a duplicate corpus id would silently diverge from
@@ -338,21 +514,21 @@ private[graft] object GraphAnnLocal {
     parallelFor(bIds.length) { j => bNorm(j) = dot(bVecs(j), bVecs(j)) }
     // adjacency (edge sources need not be corpus members; absent
     // candidates drop at scoring, exactly like the SQL inner join)
-    val adj = new scala.collection.mutable.LongMap[
-      scala.collection.mutable.ArrayBuffer[Long]]()
+    val adj = new mutable.LongMap[
+      mutable.ArrayBuffer[Long]]()
     i = 0
     while (i < eSrc.length) {
       adj.getOrElseUpdate(eSrc(i),
-        new scala.collection.mutable.ArrayBuffer[Long]) += eNbr(i)
+        new mutable.ArrayBuffer[Long]) += eNbr(i)
       i += 1
     }
     // per-query seed multisets
-    val seeds = new scala.collection.mutable.LongMap[
-      scala.collection.mutable.ArrayBuffer[Long]]()
+    val seeds = new mutable.LongMap[
+      mutable.ArrayBuffer[Long]]()
     i = 0
     while (i < sQ.length) {
       seeds.getOrElseUpdate(sQ(i),
-        new scala.collection.mutable.ArrayBuffer[Long]) += sN(i)
+        new mutable.ArrayBuffer[Long]) += sN(i)
       i += 1
     }
     val out = new Array[Array[Row]](nq)
@@ -364,7 +540,7 @@ private[graft] object GraphAnnLocal {
       // the heap sees every row, like the SQL aggregate)
       def topIds(cands: Array[Long], keep: Int):
           Array[(Long, Double)] = {
-        val heap = new graft.functions.TopKByScore.Heap(keep)
+        val heap = new Heap(keep)
         var ci = 0
         while (ci < cands.length) {
           val c = cands(ci)
@@ -441,13 +617,13 @@ private[graft] object GraphAnnLocal {
     * touched vertex to k — bit-identical to the distributed joins. */
   private[operators] def addRows(rows: Iterator[Row], k: Int):
       Iterator[Row] = {
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]
-    val vecs = new scala.collection.mutable.ArrayBuffer[Array[Float]]
-    val eSrc = new scala.collection.mutable.ArrayBuffer[Long]
-    val eNbr = new scala.collection.mutable.ArrayBuffer[Long]
-    val fQ = new scala.collection.mutable.ArrayBuffer[Long]
-    val fN = new scala.collection.mutable.ArrayBuffer[Long]
-    val fR = new scala.collection.mutable.ArrayBuffer[Int]
+    val ids = new mutable.ArrayBuffer[Long]
+    val vecs = new mutable.ArrayBuffer[Array[Float]]
+    val eSrc = new mutable.ArrayBuffer[Long]
+    val eNbr = new mutable.ArrayBuffer[Long]
+    val fQ = new mutable.ArrayBuffer[Long]
+    val fN = new mutable.ArrayBuffer[Long]
+    val fR = new mutable.ArrayBuffer[Int]
     rows.foreach { r =>
       r.getInt(0) match {
         case 1 => ids += r.getLong(1); vecs += r.getSeq[Float](3).toArray
@@ -457,13 +633,13 @@ private[graft] object GraphAnnLocal {
       }
     }
     val n = ids.length
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
+    val idx = new mutable.LongMap[Int](n * 2)
     var i = 0
     while (i < n) { idx.update(ids(i), i); i += 1 }
     val norms = new Array[Double](n)
     parallelFor(n) { j => norms(j) = dot(vecs(j), vecs(j)) }
     // allEdges = standing ∪ reverse(found) ∪ found(rnk ≤ k), DISTINCT
-    val per = new scala.collection.mutable.LongMap[
+    val per = new mutable.LongMap[
       java.util.TreeSet[java.lang.Long]]()
     def add(a: Long, b: Long): Unit =
       per.getOrElseUpdate(a, new java.util.TreeSet[java.lang.Long]())
@@ -483,7 +659,7 @@ private[graft] object GraphAnnLocal {
       idx.get(a) match {
         case None => out(ki) = Array.empty // endpoint not in allVecs
         case Some(ai) =>
-          val heap = new graft.functions.TopKByScore.Heap(k)
+          val heap = new Heap(k)
           val it2 = per(a).iterator()
           while (it2.hasNext) {
             val w = it2.next().longValue()

@@ -45,12 +45,78 @@ class AnnSearchLocalSpec extends SparkSpec {
       java.lang.Double.doubleToRawLongBits(GraphAnnLocal.dot(v, w)))
   }
 
+  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`. */
+  private def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** Spark jobs `f` starts, counted by a listener. */
+  private def jobsOf(f: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try f finally {
+      Thread.sleep(500) // let the async listener bus drain
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
   test("knnGraph: fused == forced-distributed, row for row") {
-    val fused = rows(AnnSearch.knnGraph(b, k = 5, iters = 2, buildK = 8))
-    val dist = rows(AnnSearch.knnGraph(b, k = 5, iters = 2, buildK = 8,
-      localThreshold = 0L))
+    // k < buildK throughout; the input is repartitioned to 1, 3 and 13
+    // partitions and the distributed build gets as many vertex blocks
+    for (iters <- Seq(0, 1, 3); parts <- Seq(1, 3, 13); seed <- Seq(42L, 7L))
+      withShufflePartitions(parts) {
+        val in = b.repartition(parts)
+        val fused = rows(AnnSearch.knnGraph(in, k = 5, iters = iters,
+          seed = seed, buildK = 8))
+        val dist = rows(AnnSearch.knnGraph(in, k = 5, iters = iters,
+          seed = seed, buildK = 8, localThreshold = 0L))
+        assert(fused == dist, s"iters=$iters parts=$parts seed=$seed")
+        assert(fused.size == 500 * 5, s"iters=$iters parts=$parts seed=$seed")
+      }
+  }
+
+  test("a duplicated id fails on both knnGraph paths") {
+    val dup = b.unionAll(b.filter(col("b_id") === 17L))
+    Seq("fused" -> GraphAnnLocal.defaultThreshold, "distributed" -> 0L)
+      .foreach { case (name, threshold) =>
+        val e = intercept[Exception](AnnSearch.knnGraph(dup, k = 5,
+          iters = 1, buildK = 8, localThreshold = threshold).collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(c =>
+            c.isInstanceOf[IllegalArgumentException] &&
+              c.getMessage.contains("unique ids, got duplicate 17")),
+          s"$name: $e")
+      }
+  }
+
+  test("a null vector scores nothing on both knnGraph paths") {
+    val withNull = b.select(col("b_id"),
+      when(col("b_id") =!= 17L, col("b_v")).as("b_v"))
+    val fused = rows(AnnSearch.knnGraph(withNull, k = 5, iters = 2,
+      buildK = 8))
+    val dist = rows(AnnSearch.knnGraph(withNull, k = 5, iters = 2,
+      buildK = 8, localThreshold = 0L))
     assert(fused == dist)
-    assert(fused.nonEmpty)
+    assert(fused.size == 499 * 5)
+    assert(!fused.exists { case (a, w, _) => a == 17L || w == 17L })
+  }
+
+  test("distributed knnGraph runs one job per round plus two setup jobs") {
+    b.count() // warm the scan outside the counted window
+    Seq(0, 1, 3).foreach { iters =>
+      val jobs = jobsOf(AnnSearch.knnGraph(b, k = 5, iters = iters,
+        buildK = 8, localThreshold = 0L))
+      assert(jobs <= iters + 6, s"iters=$iters ran $jobs jobs")
+    }
   }
 
   test("graphTopK serve: fused == forced-distributed") {
@@ -107,18 +173,9 @@ class AnnSearchLocalSpec extends SparkSpec {
     // the final frame hides behind a localCheckpoint either way — the
     // honest fused-path evidence is the JOB count: size probe + the
     // single-task build materialization, nothing else
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     b.count() // warm the scan outside the counted window
-    spark.sparkContext.addSparkListener(listener)
-    AnnSearch.knnGraph(b, k = 5, iters = 2, buildK = 8)
-    Thread.sleep(500) // let the async listener bus drain
-    spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get <= 3, s"fused build should be ~2 jobs, ran ${jobs.get}")
+    val jobs = jobsOf(AnnSearch.knnGraph(b, k = 5, iters = 2, buildK = 8))
+    assert(jobs <= 3, s"fused build should be ~2 jobs, ran $jobs")
   }
 
   test("retraction serve over a fused-built graph matches distributed") {

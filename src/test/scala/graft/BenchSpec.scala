@@ -17,6 +17,13 @@ class BenchSpec extends AnyFunSuite {
       overridden = true) == "out.json")
   }
 
+  test("the q24 oracle reads the working directory's parquet twin") {
+    val twin = new java.io.File("fixtures/t4_8k_points.parquet")
+    assert(twin.exists)
+    assert(SparkEntry.oracleSql("q24_binary_scan")
+      .contains(s"read_parquet('${twin.getAbsolutePath}')"))
+  }
+
   // resolution only builds closures: the directory is never read
   private val sf = "sf0.01"
 
