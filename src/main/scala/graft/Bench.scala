@@ -208,7 +208,7 @@ object Bench {
     // could not score rounds per-query (PERF_r11 per_query: {}). The
     // legacy name is still written as a copy for old readers.
     val artifactOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"/root/repo/BENCH_full_c$cpus.json")
+      s"BENCH_full_c$cpus.json")
     val overridden = sys.env.contains("SPARK_GRAFT_BENCH_OUT")
     // comma-separated substring filter for focused iteration, e.g.
     // SPARK_GRAFT_BENCH_ONLY=q9,q10 — unset runs everything
@@ -217,7 +217,7 @@ object Bench {
     val fullOut = fullOutPath(artifactOut, only, overridden)
     if (fullOut != artifactOut)
       System.err.println(s"[bench] focused run: full map goes to $fullOut")
-    val legacyOut = "/root/repo/BENCH_full.json"
+    val legacyOut = "BENCH_full.json"
     def parseMins(path: String): Map[String, Double] =
       try {
         val txt = java.nio.file.Files.readString(
@@ -248,7 +248,7 @@ object Bench {
       // single-file artifact so adjudication isn't blind
       val cur = if (cur0.nonEmpty) cur0 else parseMins(legacyOut)
       val prevRoundPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV_ROUND",
-        "/root/repo/BENCH_full_prev.json")
+        "BENCH_full_prev.json")
       val lastRound = parseMins(prevRoundPath)
       // an unreadable cross-round reference silently reopens the very
       // blind spot this comparison closes — say so

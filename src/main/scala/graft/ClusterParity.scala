@@ -310,7 +310,7 @@ object ClusterParity {
     // persist the artifact directly (earlier rounds hand-captured
     // stdout); SPARK_GRAFT_PARITY_OUT overrides, empty disables
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PARITY_OUT",
-      "/root/repo/CLUSTER_PARITY.json")
+      "CLUSTER_PARITY.json")
     if (outPath.nonEmpty)
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outPath), out + "\n")

@@ -158,7 +158,7 @@ object Scaling {
     val out = s"""{"invariant":$invariant,"note":"$note",""" +
       s""""runs":[${rows.mkString(",")}]}"""
     val path = sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT",
-      "/root/repo/SCALING.json")
+      "SCALING.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       out + "\n")
     println(out)

@@ -178,10 +178,19 @@ object AnnSearch {
       .orderBy(col("b_id"))
       .select(col("b_v").cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toArray)
+    // the first seed vector fixes the dimension; a ragged build vector
+    // fails here or in the round's check instead of being truncated
+    val dims = if (pool.nonEmpty) pool(0).length else 0
+    val (pre, post) = ("centroidArrays: build vector length ",
+      s" differs from the first seed vector's length $dims")
+    pool.foreach(v => require(v.length == dims, s"$pre${v.length}$post"))
     var cents: Array[(Int, Array[Double])] =
       farthestFirst(pool, nCentroids).zipWithIndex
         .map { case (pi, i) => (i + 1, pool(pi)) }.toArray
-    val dims = if (cents.nonEmpty) cents(0)._2.length else 0
+    val checked = build.select(when(col("b_v").isNull ||
+        size(col("b_v")) === dims, col("b_v"))
+      .otherwise(raise_error(concat(lit(pre),
+        size(col("b_v")).cast("string"), lit(post)))).as("b_v"))
     for (_ <- 0 until iters) {
       // the kernel's generated code is O(1) in nCentroids (matrix rides as
       // a referenced object), so no size split is needed here — every round
@@ -193,7 +202,7 @@ object AnnSearch {
       // the same round(v·1e6) longs sum per cluster either way
       // (order-free integer sums), null vectors excluded like
       // posexplode-of-null emitted nothing.
-      val assigned = build
+      val assigned = checked
         .select(nearestCentroid(col("b_v"), cents).as("c_id"),
           col("b_v").cast("array<double>").as("__v"))
         .filter(col("__v").isNotNull)

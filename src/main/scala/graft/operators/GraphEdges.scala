@@ -6,6 +6,9 @@ import org.apache.spark.sql.types.StructType
 
 /** Shared edge normalization and the one-task compact graph for the
   * graph operators — one definition of "the same graph":
+  *  - [[longs]]: columns cast to long, rows with a NULL dropped — an
+  *    edge with a NULL endpoint or weight, or a NULL seed id, is no
+  *    edge and no seed on any path;
   *  - [[directed]]: the distinct (src, dst) long edge set;
   *  - [[canonical]]: (a < b) deduplicated loop-free undirected pairs,
   *    and [[symmetrize]], the two-orientation view that degree
@@ -18,11 +21,15 @@ import org.apache.spark.sql.types.StructType
   */
 object GraphEdges {
 
-  /** (src, dst) as longs, duplicates collapsed. */
+  /** `cols` (column -> name) cast to long, rows with any NULL dropped. */
+  def longs(df: DataFrame, cols: (String, String)*): DataFrame =
+    df.select(cols.map { case (c, as) => col(c).cast("long").as(as) }: _*)
+      .na.drop()
+
+  /** (src, dst) as longs, duplicates and NULL endpoints dropped. */
   def directed(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
-    edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct()
+    longs(edges, srcCol -> "src", dstCol -> "dst").distinct()
 
   /** (a, b) with a < b, duplicates and self-loops dropped. */
   def canonical(edges: DataFrame, srcCol: String,
@@ -81,36 +88,10 @@ object GraphEdges {
           if (weighted) wb += r.getLong(2)
         }
       }
-      val srcId = sb.result(); val dstId = db.result()
       val seedId = seedB.result()
-      val m = srcId.length
-      // node table = edge endpoints ∪ seeds: sort + in-place dedup;
-      // id → index by binary search, never a boxed map
-      val all = new Array[Long](2 * m + seedId.length)
-      System.arraycopy(srcId, 0, all, 0, m)
-      System.arraycopy(dstId, 0, all, m, m)
-      System.arraycopy(seedId, 0, all, 2 * m, seedId.length)
-      java.util.Arrays.sort(all)
-      var n = 0
-      var i = 0
-      while (i < all.length) {
-        if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-        i += 1
-      }
-      if (n == 0) Iterator.empty
-      else {
-        val ids = java.util.Arrays.copyOf(all, n)
-        def index(xs: Array[Long]): Array[Int] = {
-          val ix = new Array[Int](xs.length)
-          var j = 0
-          while (j < xs.length) {
-            ix(j) = java.util.Arrays.binarySearch(ids, xs(j)); j += 1
-          }
-          ix
-        }
-        kernel(new LocalGraph(ids, index(srcId), index(dstId), wb.result(),
-          index(seedId)))
-      }
+      val g = LocalGraph(sb.result(), db.result(), wb.result(), seedId,
+        seedId)
+      if (g.n == 0) Iterator.empty else kernel(g)
     }(Encoders.row(schema))
   }
 }
@@ -118,17 +99,21 @@ object GraphEdges {
 /** A graph compacted inside one task: node `ids` sorted and distinct,
   * edge `i` = `src(i)` → `dst(i)` as indices into `ids`, `w(i)` its
   * weight (empty for an unweighted edge set), `seeds` the indices of
-  * the extra node ids handed to [[GraphEdges.local]]. */
+  * the extra node ids handed to [[GraphEdges.local]]. A vertex block
+  * of [[GraphRounds]] is one too, over its local id table. */
 final class LocalGraph(val ids: Array[Long], val src: Array[Int],
-    val dst: Array[Int], val w: Array[Long], val seeds: Array[Int]) {
+    val dst: Array[Int], val w: Array[Long], val seeds: Array[Int])
+    extends Serializable {
 
   def n: Int = ids.length
   def m: Int = src.length
 
-  /** CSR adjacency grouped by `from` (a counting sort of the edges):
+  /** CSR adjacency of the edge list `from`/`to` (any one over these
+    * nodes) grouped by `from`, by a counting sort:
     * node v's edges occupy `off(v) until off(v + 1)` of `adj`, which
     * holds their `to` endpoints in edge order. */
   def csr(from: Array[Int], to: Array[Int]): (Array[Int], Array[Int]) = {
+    val m = from.length
     val off = new Array[Int](n + 1)
     var i = 0
     while (i < m) { off(from(i) + 1) += 1; i += 1 }
@@ -141,5 +126,44 @@ final class LocalGraph(val ids: Array[Long], val src: Array[Int],
       adj(cursor(from(i))) = to(i); cursor(from(i)) += 1; i += 1
     }
     (off, adj)
+  }
+
+  /** In-neighbours by node, `csr(dst, src)`, built once per graph. */
+  lazy val byDst: (Array[Int], Array[Int]) = csr(dst, src)
+
+  /** Out-neighbours by node, `csr(src, dst)`, built once per graph. */
+  lazy val bySrc: (Array[Int], Array[Int]) = csr(src, dst)
+}
+
+object LocalGraph {
+
+  /** Compacts long edge endpoints: nodes = src ∪ dst ∪ `extra`, sorted
+    * and distinct, id → index by binary search (never a boxed map);
+    * `seeds` = the indices of `seedId`, ids that are no node dropped. */
+  def apply(srcId: Array[Long], dstId: Array[Long], w: Array[Long],
+      extra: Array[Long], seedId: Array[Long]): LocalGraph = {
+    val m = srcId.length
+    val all = new Array[Long](2 * m + extra.length)
+    System.arraycopy(srcId, 0, all, 0, m)
+    System.arraycopy(dstId, 0, all, m, m)
+    System.arraycopy(extra, 0, all, 2 * m, extra.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    var i = 0
+    while (i < all.length) {
+      if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    def index(xs: Array[Long]): Array[Int] = {
+      val ix = new Array[Int](xs.length)
+      var j = 0
+      while (j < xs.length) {
+        ix(j) = java.util.Arrays.binarySearch(ids, xs(j)); j += 1
+      }
+      ix
+    }
+    new LocalGraph(ids, index(srcId), index(dstId), w,
+      index(seedId).filter(_ >= 0))
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Synchronous label propagation (community detection): every node
@@ -12,11 +11,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * twin could reproduce; synchronous rounds are a pure dataflow.
   *
   * The fourth member of the iterate-to-fixpoint family (CC, PageRank,
-  * BFS/SSSP): per round one join (edges ⋈ labels on src — edges
-  * partitioned once and cached) and two aggregates (label counts per
-  * node, then the (count DESC, label ASC) argmin via the one-pass
-  * min(struct(-cnt, lbl)) trick — no window), `localCheckpoint`
-  * cutting lineage. Nodes with no in-edges keep their current label.
+  * BFS/SSSP). Scale shape: one per-node update, [[adopt]] (label
+  * counts over the in-neighbours, the (count DESC, label ASC) winner).
+  * At or below `localThreshold` distinct edges it runs over CSR arrays
+  * in ONE task; above it, per vertex block of [[GraphRounds]]: one
+  * exchange of the owned vertices' labels per round, every round
+  * chained into one job whose output is checkpointed once. Nodes with
+  * no in-edges keep their current label.
   */
 object LabelProp {
 
@@ -25,7 +26,8 @@ object LabelProp {
     StructField("label", LongType, nullable = false)))
 
   /** @param edges directed (labels flow src → dst); pass both
-    *   orientations for an undirected graph. Duplicates collapse.
+    *   orientations for an undirected graph. Duplicates collapse;
+    *   edges with a NULL endpoint are dropped.
     * @param localThreshold max deduplicated edge count for the fused
     *   single-task path (all-integer semantics, so the paths are
     *   bit-identical — spec-enforced); 0 forces the distributed loop.
@@ -39,63 +41,75 @@ object LabelProp {
     else runDistributed(e, rounds)
   }
 
-  /** Small-graph path: CSR-by-dst + per-node count maps in ONE task. */
+  /** One synchronous round, the update every path runs: each node that
+    * is not `clamped` and has at least one labeled in-neighbour adopts
+    * their most frequent label, ties to the smallest; every other node
+    * keeps its state (a node with no in-edges too). `labeled == null`
+    * means every node is labeled, `clamped == null` none is clamped.
+    * @return the next (labels, labeled); `labeled` stays null. */
+  private def adopt(g: LocalGraph, label: Array[Long],
+      labeled: Array[Boolean],
+      clamped: Array[Boolean]): (Array[Long], Array[Boolean]) = {
+    val (off, in) = g.byDst
+    val next = label.clone() // Jacobi: read `label`, write `next`
+    val nextLabeled = if (labeled == null) null else labeled.clone()
+    val counts = new java.util.HashMap[Long, Int]()
+    var v = 0
+    while (v < g.n) {
+      if (off(v + 1) > off(v) && (clamped == null || !clamped(v))) {
+        counts.clear()
+        var bestL = Long.MaxValue
+        var bestC = 0
+        var j = off(v)
+        while (j < off(v + 1)) {
+          val u = in(j)
+          if (labeled == null || labeled(u)) {
+            val l = label(u)
+            val c = counts.merge(l, 1, Integer.sum)
+            if (c > bestC || (c == bestC && l < bestL)) {
+              bestC = c; bestL = l
+            }
+          }
+          j += 1
+        }
+        if (bestC > 0) {
+          next(v) = bestL
+          if (nextLabeled != null) nextLabeled(v) = true
+        }
+      }
+      v += 1
+    }
+    (next, nextLabeled)
+  }
+
+  /** Small-graph path: [[adopt]] rounds over CSR-by-dst in ONE task. */
   private def runFused(e: DataFrame, rounds: Int): DataFrame =
     GraphEdges.local(e, outSchema) { g =>
-      val n = g.n
-      // CSR indexed by DST: for each node, its in-neighbor sources
-      val (off, inAdj) = g.csr(g.dst, g.src)
-      var label: Array[Long] = g.ids.clone()
-      for (_ <- 1 to rounds) {
-        val next = label.clone() // Jacobi: no-in-edge nodes keep theirs
-        val counts = new java.util.HashMap[Long, Int]()
-        var v = 0
-        while (v < n) {
-          if (off(v + 1) > off(v)) {
-            counts.clear()
-            var bestL = Long.MaxValue
-            var bestC = 0
-            var j = off(v)
-            while (j < off(v + 1)) {
-              val l = label(inAdj(j))
-              val c = counts.merge(l, 1, Integer.sum)
-              if (c > bestC || (c == bestC && l < bestL)) {
-                bestC = c; bestL = l
-              }
-              j += 1
-            }
-            next(v) = bestL
-          }
-          v += 1
-        }
-        label = next
-      }
-      Iterator.range(0, n).map(v => Row(g.ids(v), label(v)))
+      var label = g.ids.clone()
+      for (_ <- 1 to rounds) label = adopt(g, label, null, null)._1
+      Iterator.range(0, g.n).map(v => Row(g.ids(v), label(v)))
     }
 
-  /** Cluster-scale path: join + two aggregates per round, checkpointed. */
+  /** Cluster-scale path: [[adopt]] per vertex block of [[GraphRounds]];
+    * every vertex sends its label each round. */
   private def runDistributed(e: DataFrame, rounds: Int): DataFrame = {
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst"))).distinct()
-    var labels = nodes.select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val adopted = e.join(labels, col("src") === col("id"))
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
-          .as("m"))
-        .select(col("dst").as("id"), col("m.l").as("label"))
-      labels = labels.join(adopted.withColumnRenamed("label", "__new"),
-          Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("__new"), col("label")).as("label"))
-        .localCheckpoint()
+    val gr = GraphRounds(e, None, addSeeds = false)
+    var label = gr.init(_.g.ids.clone())
+    for (_ <- 1 to rounds)
+      label = gr.round(label) { (b, l, emit) =>
+        for (v <- l.indices if b.owned(v)) emit(v, l(v))
+      } { (b, l, mix, vals) =>
+        adopt(b.g, GraphRounds.received(l, mix, vals), null, null)._1
+      }
+    gr.finish(label, outSchema) { (b, l) =>
+      Iterator.range(0, b.g.n).filter(b.owned(_))
+        .map(v => Row(b.g.ids(v), l(v)))
     }
-    e.unpersist()
-    labels
   }
+
+  private val spreadSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("label", LongType, nullable = true)))
 
   /** Semi-supervised label SPREADING: a small labeled seed set is
     * clamped, every other node adopts each round the most frequent
@@ -105,49 +119,45 @@ object LabelProp {
     * sibling, the standard "propagate the 10% you annotated across
     * the similarity graph" step over an ε-graph or k-NN graph.
     *
-    * Same per-round plan as the community loop (one edge⋈labels join,
-    * the min(struct(-cnt, label)) argmax, localCheckpoint) with a
-    * NULL-aware twist: unlabeled nodes simply cast no votes, and the
-    * clamp is a coalesce with the seed column — all-integer
-    * semantics, so an unrolled SQL twin matches exactly.
+    * The same [[adopt]] update as [[run]], NULL-aware: unlabeled nodes
+    * cast no vote and seeds are clamped — all-integer semantics, so an
+    * unrolled SQL twin matches exactly. It always runs on the vertex
+    * blocks of [[GraphRounds]]; each round only labeled vertices send.
     *
     * @param seeds (idCol, labelCol) — the annotated subset; ids not in
-    *   the graph are ignored, and duplicate ids collapse to their
-    *   SMALLEST label (one seed row per node, deterministically).
+    *   the graph and rows with a NULL id or label are ignored, and
+    *   duplicate ids collapse to their SMALLEST label (one seed per
+    *   node, deterministically).
     * @return (id, label) for every node incident to an edge; label is
     *   NULL where no seed's influence arrived within `rounds`. */
   def spread(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, idCol: String, labelCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst"))).distinct()
-    // one row per seed id: disagreeing duplicates would otherwise fan
-    // the node into multiple label rows and double-count its votes
-    val sd = seeds.select(col(idCol).cast("long").as("id"),
-      col(labelCol).cast("long").as("__lbl"))
-      .groupBy(col("id")).agg(min(col("__lbl")).as("__seed"))
-    var labels = nodes.join(broadcast(sd), Seq("id"), "left")
-      .select(col("id"), col("__seed"), col("__seed").as("label"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val votes = e
-        .join(labels.select(col("id").as("src"), col("label")), "src")
-        .filter(col("label").isNotNull) // unlabeled nodes cast no vote
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
-          .as("m"))
-        .select(col("dst").as("id"), col("m.l").as("__vote"))
-      labels = labels.join(votes, Seq("id"), "left")
-        .select(col("id"), col("__seed"),
-          coalesce(col("__seed"), col("__vote"), col("label"))
-            .as("label"))
-        .localCheckpoint()
+    val gr = GraphRounds(GraphEdges.directed(edges, srcCol, dstCol),
+      Some(GraphEdges.longs(seeds, idCol -> "id", labelCol -> "label")),
+      addSeeds = false)
+    var state = gr.init { b =>
+      val (label, labeled) = (new Array[Long](b.g.n),
+        new Array[Boolean](b.g.n))
+      for ((v, k) <- b.g.seeds.zipWithIndex) {
+        label(v) = b.seedVal(k); labeled(v) = true
+      }
+      (label, labeled)
     }
-    e.unpersist()
-    labels.select(col("id"), col("label"))
+    for (_ <- 1 to rounds)
+      state = gr.round(state) { case (b, (l, has), emit) =>
+        for (v <- l.indices if b.owned(v) && has(v)) emit(v, l(v))
+      } { case (b, (l, has), mix, vals) =>
+        val labeled = has.clone()
+        mix.foreach(labeled(_) = true)
+        val clamped = new Array[Boolean](b.g.n)
+        b.g.seeds.foreach(clamped(_) = true)
+        adopt(b.g, GraphRounds.received(l, mix, vals), labeled, clamped)
+      }
+    gr.finish(state, spreadSchema) { case (b, (l, has)) =>
+      Iterator.range(0, b.g.n).filter(b.owned(_)).map(v =>
+        Row(b.g.ids(v), if (has(v)) l(v) else null))
+    }
   }
 }

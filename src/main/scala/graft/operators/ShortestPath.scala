@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -18,16 +20,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * exploration depth — the result is exact for every node whose true
   * distance is ≤ maxHops (and the oracle can mirror the same bound).
   *
-  * Scale shape (distributed path): classic frontier BFS — per round the
-  * FRONTIER (not the full visited set) joins the edge table, newly
-  * reached nodes come from one anti join against the visited set, and
-  * `localCheckpoint` cuts the growing lineage. Edges are partitioned by
-  * src once and cached; each round shuffles only frontier-sized data.
-  * The driver's emptiness check on the new frontier is the fixpoint
-  * test. Like [[PageRank.run]], a deduplicated edge set at or below
-  * `localThreshold` takes a fused single-task path instead: CSR
-  * adjacency + an int work-queue, zero per-round jobs. Both paths are
-  * exact (integer hops — no float order issues), spec-enforced equal.
+  * Scale shape: one frontier step, [[expand]] (every unvisited
+  * out-neighbour of a frontier node is reached at the next level). At
+  * or below `localThreshold` distinct edges it runs over CSR arrays in
+  * ONE task. Above it, per vertex block of [[GraphRounds]]: level d
+  * sends only the vertices reached at d - 1 to the blocks holding
+  * their out-edges, so levels past the last are empty; all `maxHops`
+  * levels chain into one job whose output is checkpointed once, with
+  * no per-level emptiness test. Both paths are exact (integer hops —
+  * no float order issues), spec-enforced equal.
   */
 object ShortestPath {
 
@@ -36,9 +37,9 @@ object ShortestPath {
     StructField("hops", IntegerType, nullable = false)))
 
   /** @param edges directed edge table (traversed src → dst);
-    *   duplicates are collapsed.
+    *   duplicates and edges with a NULL endpoint are dropped.
     * @param seeds one long id column; seeds absent from the edge table
-    *   still appear in the output at hop 0.
+    *   still appear in the output at hop 0, NULL ids are dropped.
     * @param localThreshold max deduplicated edge count for the fused
     *   single-task path; 0 forces the distributed loop.
     * @return (id, hops) for every node within maxHops of a seed. */
@@ -47,46 +48,77 @@ object ShortestPath {
       localThreshold: Long = 5_000_000L): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
-    val s = seeds.select(col(seedCol).cast("long").as("id")).distinct()
+    val s = GraphEdges.longs(seeds, seedCol -> "id")
     val nEdges = e.count()
     if (nEdges <= localThreshold) runFused(e, s, maxHops)
     else runDistributed(e, s, maxHops)
   }
 
-  /** Small-graph path: CSR + array-based BFS in ONE task; the seeds
-    * ride in-band ([[GraphEdges.local]]). */
+  /** One BFS level, the step both paths run: every unvisited
+    * out-neighbour of a `frontier` node is reached at `depth` (in
+    * `hops`, in place). @return the newly reached nodes. */
+  private def expand(g: LocalGraph, frontier: Array[Int],
+      hops: Array[Int], depth: Int): Array[Int] = {
+    val (off, adj) = g.bySrc
+    val next = new mutable.ArrayBuilder.ofInt
+    for (v <- frontier) {
+      var j = off(v)
+      while (j < off(v + 1)) {
+        val w = adj(j)
+        if (hops(w) < 0) { hops(w) = depth; next += w }
+        j += 1
+      }
+    }
+    next.result()
+  }
+
+  /** Seeds at hop 0, every other node unvisited (-1). */
+  private def startHops(g: LocalGraph): Array[Int] = {
+    val hops = Array.fill(g.n)(-1)
+    g.seeds.foreach(hops(_) = 0)
+    hops
+  }
+
+  /** Small-graph path: frontier BFS over CSR arrays in ONE task; the
+    * seeds ride in-band ([[GraphEdges.local]]). */
   private def runFused(e: DataFrame, s: DataFrame,
       maxHops: Int): DataFrame =
     GraphEdges.local(e, outSchema, Some(s)) { g =>
-      val n = g.n
-      val (off, adj) = g.csr(g.src, g.dst)
-      val hops = Array.fill(n)(-1)
-      var frontier = new Array[Int](g.seeds.length)
-      var fn = 0
-      g.seeds.foreach { ix =>
-        if (hops(ix) < 0) { hops(ix) = 0; frontier(fn) = ix; fn += 1 }
-      }
+      val hops = startHops(g)
+      var frontier = g.seeds
       var depth = 0
-      while (fn > 0 && depth < maxHops) {
+      while (frontier.nonEmpty && depth < maxHops) {
         depth += 1
-        val next = new Array[Int](n)
-        var nn = 0
-        var i = 0
-        while (i < fn) {
-          val v = frontier(i)
-          var j = off(v)
-          while (j < off(v + 1)) {
-            val w = adj(j)
-            if (hops(w) < 0) { hops(w) = depth; next(nn) = w; nn += 1 }
-            j += 1
-          }
-          i += 1
-        }
-        frontier = next; fn = nn
+        frontier = expand(g, frontier, hops, depth)
       }
-      Iterator.range(0, n).filter(hops(_) >= 0)
+      Iterator.range(0, g.n).filter(hops(_) >= 0)
         .map(v => Row(g.ids(v), hops(v)))
     }
+
+  /** Cluster-scale path: [[GraphRounds]]; round d sends only the
+    * vertices reached at d - 1, so rounds past the last level are
+    * empty and no round needs a driver-side emptiness test. */
+  private def runDistributed(e: DataFrame, s: DataFrame,
+      maxHops: Int): DataFrame = {
+    val gr = GraphRounds(e, Some(s.select(col("id"), lit(0L))),
+      addSeeds = true)
+    var hops = gr.init(b => startHops(b.g))
+    for (depth <- 1 to maxHops) {
+      def reachedLast(h: Array[Int]) =
+        Array.range(0, h.length).filter(h(_) == depth - 1)
+      hops = gr.round(hops) { (_, h, emit) =>
+        reachedLast(h).foreach(emit(_, 0L))
+      } { (b, h, mix, _) =>
+        val next = h.clone()
+        expand(b.g, reachedLast(h) ++ mix, next, depth)
+        next
+      }
+    }
+    gr.finish(hops, outSchema) { (b, h) =>
+      Iterator.range(0, b.g.n).filter(h(_) >= 0)
+        .map(v => Row(b.g.ids(v), h(v)))
+    }
+  }
 
   private val wOutSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -98,13 +130,14 @@ object ShortestPath {
     * seed — exact for every node whose true shortest path uses ≤ rounds
     * edges. Weights are LONG (integer — e.g. cents): distances are sums
     * of longs, so both paths here and any SQL twin agree bit-for-bit
-    * with no float-order caveats.
+    * with no float-order caveats; a sum that overflows a long fails the
+    * query on both paths. Edges with a NULL endpoint or weight are
+    * dropped.
     *
-    * Scale shape: the relaxation round is the engine's iterate-to-
-    * fixpoint shape again — one join (edges ⋈ dist on src; edges
-    * partitioned once and cached) and one min-aggregate per round,
-    * `localCheckpoint` cutting lineage. The fused path (≤ localThreshold
-    * distinct edges) runs the same rounds over CSR arrays in one task.
+    * Scale shape: the fused path (≤ localThreshold distinct edges) runs
+    * the Jacobi rounds over edge arrays in one task; above it the same
+    * [[relax]] runs per vertex block of [[GraphRounds]], one exchange
+    * of the reached vertices' distances per round.
     *
     * @param rounds relaxation rounds (= max path edge count considered).
     * @return (id, dist) for every node within `rounds` edges of a seed. */
@@ -114,74 +147,69 @@ object ShortestPath {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // parallel edges collapse to their min weight — the only one that
     // can ever win a relaxation
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
+    val e = GraphEdges.longs(edges, srcCol -> "src", dstCol -> "dst",
+        wCol -> "w")
       .groupBy("src", "dst").agg(min(col("w")).as("w")).persist()
-    val s = seeds.select(col(seedCol).cast("long").as("id")).distinct()
+    val s = GraphEdges.longs(seeds, seedCol -> "id")
     val nEdges = e.count()
     if (nEdges <= localThreshold) weightedFused(e, s, rounds)
     else weightedDistributed(e, s, rounds)
   }
 
-  /** Small-graph path: Bellman–Ford rounds over edge arrays in ONE
-    * task. Seeds ride in-band like [[runFused]]; a distance that
-    * overflows a long fails the query, as the distributed path's ANSI
-    * `bigint + bigint` does. */
+  private val NoDist = Long.MaxValue
+
+  /** Seeds at 0, every other node unreached ([[NoDist]]). */
+  private def startDist(g: LocalGraph): Array[Long] = {
+    val dist = Array.fill(g.n)(NoDist)
+    g.seeds.foreach(dist(_) = 0L)
+    dist
+  }
+
+  /** One Jacobi Bellman–Ford round, the update both paths run: every
+    * edge relaxes its dst from the previous round's `dist`, with
+    * `Math.addExact` (an overflow throws). @return the next round's. */
+  private def relax(g: LocalGraph, dist: Array[Long]): Array[Long] = {
+    val next = dist.clone()
+    var i = 0
+    while (i < g.m) {
+      val ds = dist(g.src(i))
+      if (ds != NoDist) {
+        val d = Math.addExact(ds, g.w(i))
+        if (d < next(g.dst(i))) next(g.dst(i)) = d
+      }
+      i += 1
+    }
+    next
+  }
+
+  /** Small-graph path: [[relax]] rounds over edge arrays in ONE task;
+    * seeds ride in-band like [[runFused]]. */
   private def weightedFused(e: DataFrame, s: DataFrame,
       rounds: Int): DataFrame =
     GraphEdges.local(e, wOutSchema, Some(s)) { g =>
-      val NoDist = Long.MaxValue
-      var dist = Array.fill(g.n)(NoDist)
-      g.seeds.foreach(dist(_) = 0L)
-      for (_ <- 1 to rounds) {
-        val next = dist.clone()
-        var i = 0
-        while (i < g.m) {
-          val ds = dist(g.src(i))
-          if (ds != NoDist) {
-            val d = Math.addExact(ds, g.w(i))
-            if (d < next(g.dst(i))) next(g.dst(i)) = d
-          }
-          i += 1
-        }
-        dist = next
-      }
+      var dist = startDist(g)
+      for (_ <- 1 to rounds) dist = relax(g, dist)
       Iterator.range(0, g.n).filter(dist(_) != NoDist)
         .map(v => Row(g.ids(v), dist(v)))
     }
 
-  /** Cluster-scale path: join + min-aggregate per round, checkpointed. */
+  /** Cluster-scale path: [[relax]] per vertex block of [[GraphRounds]].
+    * Every reached vertex sends its distance each round; distances only
+    * fall, so a mirror slot always holds its source's current one. */
   private def weightedDistributed(e: DataFrame, s: DataFrame,
       rounds: Int): DataFrame = {
-    var dist = s.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relax = e.join(dist, col("src") === col("id"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionAll(relax)
-        .groupBy("id").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+    val gr = GraphRounds(e, Some(s.select(col("id"), lit(0L))),
+      addSeeds = true)
+    var dist = gr.init(b => startDist(b.g))
+    for (_ <- 1 to rounds)
+      dist = gr.round(dist) { (b, d, emit) =>
+        for (v <- d.indices if b.owned(v) && d(v) != NoDist) emit(v, d(v))
+      } { (b, d, mix, vals) =>
+        relax(b.g, GraphRounds.received(d, mix, vals))
+      }
+    gr.finish(dist, wOutSchema) { (b, d) =>
+      Iterator.range(0, b.g.n).filter(v => b.owned(v) && d(v) != NoDist)
+        .map(v => Row(b.g.ids(v), d(v)))
     }
-    e.unpersist()
-    dist
-  }
-
-  /** Cluster-scale path: frontier join per round, checkpointed. */
-  private def runDistributed(e: DataFrame, s: DataFrame,
-      maxHops: Int): DataFrame = {
-    var visited = s.select(col("id"), lit(0).as("hops")).localCheckpoint()
-    var frontier = visited
-    var depth = 0
-    while (depth < maxHops && !frontier.isEmpty) {
-      depth += 1
-      val next = e.join(frontier, col("src") === col("id"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited.select("id"), Seq("id"), "left_anti")
-        .select(col("id"), lit(depth).as("hops"))
-        .localCheckpoint() // cut lineage; also pins the frontier for reuse
-      visited = visited.unionAll(next).localCheckpoint()
-      frontier = next
-    }
-    e.unpersist()
-    visited
   }
 }

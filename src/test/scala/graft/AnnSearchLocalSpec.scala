@@ -45,30 +45,6 @@ class AnnSearchLocalSpec extends SparkSpec {
       java.lang.Double.doubleToRawLongBits(GraphAnnLocal.dot(v, w)))
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`. */
-  private def withShufflePartitions[T](n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
-  }
-
-  /** Spark jobs `f` starts, counted by a listener. */
-  private def jobsOf(f: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try f finally {
-      Thread.sleep(500) // let the async listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    jobs.get
-  }
-
   test("knnGraph: fused == forced-distributed, row for row") {
     // k < buildK throughout; the input is repartitioned to 1, 3 and 13
     // partitions and the distributed build gets as many vertex blocks

@@ -226,6 +226,24 @@ class AnnSearchSpec extends SparkSpec {
     assert(graft.operators.KnnJoin.knnAuto(q, empty, 3).count() == 0L)
   }
 
+  test("centroids: a ragged build vector fails naming both lengths") {
+    // id 40 is never the pool's first (smallest-id) seed vector, so the
+    // dimension is 3 and the ragged one is 40, shorter or longer
+    val spark2 = spark
+    import spark2.implicits._
+    for (bad <- Seq(2, 4)) {
+      val build = (1L to 40L)
+        .map(i => (i, Seq.fill(if (i == 40L) bad else 3)(i.toFloat)))
+        .toDF("b_id", "b_v")
+      val ex = intercept[Exception](
+        AnnSearch.centroids(build, nCentroids = 2).collect())
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msgs.contains(s"length $bad differs from the first seed " +
+        "vector's length 3"), msgs)
+    }
+  }
+
   test("ivfTopK with full probing == exact") {
     val exact = AnnSearch.bruteForceTopK(q, b, 3).collect()
       .map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap

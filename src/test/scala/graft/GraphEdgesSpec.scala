@@ -38,4 +38,34 @@ class GraphEdgesSpec extends SparkSpec {
       assert(rows(-1L) == want, s"$name distributed")
     }
   }
+
+  test("NULL endpoints, weights and seed ids are dropped on both paths") {
+    def some(xs: (Long, Long)*) = xs.map { case (a, b) => (Some(a), Some(b)) }
+    val e = (some((1L, 2L), (2L, 3L), (2L, 1L)) ++
+      Seq((None, Some(3L)), (Some(3L), None))).toDF("src", "dst")
+    val ew = Seq[(Option[Long], Option[Long], Option[Long])](
+      (Some(1L), Some(2L), Some(5L)), (Some(2L), Some(3L), Some(7L)),
+      (Some(2L), Some(1L), Some(1L)), (None, Some(3L), Some(1L)),
+      (Some(3L), None, Some(1L)), (Some(1L), Some(3L), None))
+      .toDF("src", "dst", "w")
+    val seeds = Seq(Some(1L), None).toDF("id")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    for (t <- Seq(5_000_000L, 0L)) {
+      assert(rows(LabelProp.run(e, "src", "dst", 3, localThreshold = t)) ==
+        Set(Seq(1L, 2L), Seq(2L, 1L), Seq(3L, 2L)), s"LabelProp.run $t")
+      assert(rows(ShortestPath.hops(e, "src", "dst", seeds, "id",
+        localThreshold = t)) == Set(Seq(1L, 0), Seq(2L, 1), Seq(3L, 2)),
+        s"ShortestPath.hops $t")
+      assert(rows(ShortestPath.weighted(ew, "src", "dst", "w", seeds, "id",
+        3, localThreshold = t)) ==
+        Set(Seq(1L, 0L), Seq(2L, 5L), Seq(3L, 12L)),
+        s"ShortestPath.weighted $t")
+    }
+    val labels = Seq[(Option[Long], Option[Long])]((Some(1L), Some(100L)),
+      (None, Some(5L)), (Some(2L), None)).toDF("id", "lbl")
+    for ((rounds, three) <- Seq(1 -> null, 2 -> 100L))
+      assert(rows(LabelProp.spread(e, "src", "dst", labels, "id", "lbl",
+        rounds)) == Set(Seq(1L, 100L), Seq(2L, 100L), Seq(3L, three)),
+        s"LabelProp.spread $rounds")
+  }
 }

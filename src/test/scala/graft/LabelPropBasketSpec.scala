@@ -65,6 +65,95 @@ class LabelPropBasketSpec extends SparkSpec {
     assert(got(6L) == 5L)
   }
 
+  /** Sequential synchronous rounds: each unclamped node adopts the most
+    * frequent label among its labeled in-neighbours (ties to the
+    * smallest), else keeps its state; `None` = unlabeled. */
+  private def roundsRef(edges: Seq[(Long, Long)],
+      start: Map[Long, Option[Long]], clamped: Set[Long],
+      rounds: Int): Map[Long, Option[Long]] = {
+    val in = edges.distinct.groupBy(_._2)
+      .map { case (d, es) => d -> es.map(_._1) }
+    var lab = start
+    for (_ <- 1 to rounds) {
+      lab = lab.map { case (v, l) =>
+        val votes = in.getOrElse(v, Nil).flatMap(lab)
+        if (clamped(v) || votes.isEmpty) v -> l
+        else v -> Some(votes.groupBy(identity).toSeq
+          .minBy { case (k, vs) => (-vs.size, k) }._1)
+      }
+    }
+    lab
+  }
+
+  private def lpaRef(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] =
+    roundsRef(edges, edges.flatMap(e => Seq(e._1, e._2))
+      .map(v => v -> Some(v)).toMap, Set.empty, rounds)
+      .map { case (v, l) => v -> l.get }
+
+  private def runAt(edges: Seq[(Long, Long)], rounds: Int,
+      threshold: Long): Map[Long, Long] = LabelProp.run(
+      spark.createDataFrame(edges).toDF("src", "dst").repartition(4),
+      "src", "dst", rounds, localThreshold = threshold)
+    .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def spreadRun(edges: Seq[(Long, Long)], seeds: Seq[(Long, Long)],
+      rounds: Int): Map[Long, Option[Long]] = LabelProp.spread(
+      spark.createDataFrame(edges).toDF("src", "dst").repartition(3),
+      "src", "dst", spark.createDataFrame(seeds).toDF("id", "lbl"),
+      "id", "lbl", rounds)
+    .collect().map(r => r.getLong(0) ->
+      (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+
+  // an ε-graph-like undirected random graph (q185's shape) with
+  // self-loops and duplicate edges; seeds: every 10th node, one id
+  // seeded twice (the smaller label wins) and one id outside the graph
+  private val rnd = new scala.util.Random(13)
+  private val dirty = {
+    val und = (1 to 260).map(_ =>
+      (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+    und ++ und.map(_.swap) ++ Seq((4L, 4L), (7L, 7L)) ++ und.take(15)
+  }
+  private val dirtySeeds = (0L until 80L by 10L).map(v => v -> v % 3) ++
+    Seq(20L -> 7L, 20L -> 1L, 500L -> 2L)
+
+  private def spreadRef(rounds: Int): Map[Long, Option[Long]] = {
+    val nodes = dirty.flatMap(e => Seq(e._1, e._2)).toSet
+    val seedOf = dirtySeeds.filter(s => nodes(s._1)).groupBy(_._1)
+      .map { case (v, ls) => v -> ls.map(_._2).min }
+    roundsRef(dirty, nodes.map(v => v -> seedOf.get(v)).toMap,
+      seedOf.keySet, rounds)
+  }
+
+  test("vertex blocks: 1, 3 and 7 blocks == fused == sequential, " +
+      "self-loops and duplicate edges included") {
+    val want = lpaRef(dirty, 4)
+    assert(runAt(dirty, 4, 1000000L) == want)
+    for (blocks <- Seq(1, 3, 7)) withShufflePartitions(blocks) {
+      assert(runAt(dirty, 4, 0L) == want, s"LPA at $blocks blocks")
+      assert(spreadRun(dirty, dirtySeeds, 3) == spreadRef(3),
+        s"spread at $blocks blocks")
+    }
+  }
+
+  test("vertex blocks: an empty edge set has no node") {
+    for (blocks <- Seq(1, 3, 7)) withShufflePartitions(blocks) {
+      assert(runAt(Nil, 3, -1L).isEmpty)
+      assert(spreadRun(Nil, Seq(1L -> 5L), 3).isEmpty)
+    }
+  }
+
+  test("vertex blocks: the job count does not grow with the rounds") {
+    assert(jobsOf(runAt(dirty, 2, 0L)) == jobsOf(runAt(dirty, 8, 0L)))
+    assert(jobsOf(spreadRun(dirty, dirtySeeds, 2)) ==
+      jobsOf(spreadRun(dirty, dirtySeeds, 8)))
+  }
+
+  test("vertex blocks: only the output's checkpoint stays cached") {
+    for (left <- Seq(persistedBy(runAt(dirty, 3, 0L)),
+        persistedBy(spreadRun(dirty, dirtySeeds, 3))))
+      assert(left.size == 1 && left.head.isCheckpointed, left)
+  }
+
   test("frequentPairs: hand case with the A-priori prune biting") {
     val rows = Seq(
       (1L, "a"), (1L, "b"), (1L, "c"),

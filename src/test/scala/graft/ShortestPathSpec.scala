@@ -81,13 +81,9 @@ class ShortestPathSpec extends SparkSpec {
     }
   }
 
-  test("weighted random graph: both paths equal sequential Bellman-Ford") {
-    val rnd = new scala.util.Random(23)
-    val edges = (1 to 400).map(_ => (rnd.nextInt(80).toLong,
-      rnd.nextInt(80).toLong, (rnd.nextInt(100) + 1).toLong))
-    val seeds = Seq(0L, 40L)
-    val rounds = 5
-    // sequential Jacobi Bellman-Ford over min-collapsed parallel edges
+  /** Sequential Jacobi Bellman-Ford over min-collapsed parallel edges. */
+  private def bellmanFordRef(edges: Seq[(Long, Long, Long)],
+      seeds: Seq[Long], rounds: Int): Map[Long, Long] = {
     val e = edges.groupBy(t => (t._1, t._2))
       .map { case ((s, d), v) => (s, d, v.map(_._3).min) }.toSeq
     var dist = seeds.map(_ -> 0L).toMap
@@ -97,6 +93,33 @@ class ShortestPathSpec extends SparkSpec {
       dist = (dist.toSeq ++ relaxed).groupBy(_._1)
         .map { case (k, v) => k -> v.map(_._2).min }
     }
+    dist
+  }
+
+  /** Sequential frontier BFS. */
+  private def bfsRef(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxHops: Int): Map[Long, Int] = {
+    val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    var level = Map(seeds.map(_ -> 0): _*)
+    var frontier = seeds.distinct
+    var d = 0
+    while (frontier.nonEmpty && d < maxHops) {
+      d += 1
+      val next = frontier.flatMap(v => adj.getOrElse(v, Nil))
+        .distinct.filterNot(level.contains)
+      next.foreach(v => level += v -> d)
+      frontier = next
+    }
+    level
+  }
+
+  test("weighted random graph: both paths equal sequential Bellman-Ford") {
+    val rnd = new scala.util.Random(23)
+    val edges = (1 to 400).map(_ => (rnd.nextInt(80).toLong,
+      rnd.nextInt(80).toLong, (rnd.nextInt(100) + 1).toLong))
+    val seeds = Seq(0L, 40L)
+    val rounds = 5
+    val dist = bellmanFordRef(edges, seeds, rounds)
     assert(runW(edges, seeds, rounds, localThreshold = 10000) == dist)
     assert(runW(edges, seeds, rounds, localThreshold = 0) == dist)
   }
@@ -106,18 +129,61 @@ class ShortestPathSpec extends SparkSpec {
     val edges = (1 to 600).map(_ =>
       (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
     val seeds = Seq(0L, 60L)
-    val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    var level = Map(seeds.map(_ -> 0): _*)
-    var frontier = seeds
-    var d = 0
-    while (frontier.nonEmpty && d < 20) {
-      d += 1
-      val next = frontier.flatMap(v => adj.getOrElse(v, Nil))
-        .distinct.filterNot(level.contains)
-      next.foreach(v => level += v -> d)
-      frontier = next
-    }
+    val level = bfsRef(edges, seeds, 20)
     assert(run(edges, seeds, 20, localThreshold = 10000) == level)
     assert(run(edges, seeds, 20, localThreshold = 0) == level)
+  }
+
+  // a random graph plus explicit self-loops and duplicate edges; the
+  // seeds repeat one id and add one that no edge touches
+  private val rnd = new scala.util.Random(5)
+  private val dirty = {
+    val e = (1 to 300).map(_ => (rnd.nextInt(70).toLong,
+      rnd.nextInt(70).toLong, (rnd.nextInt(50) + 1).toLong))
+    e ++ Seq((3L, 3L, 1L), (9L, 9L, 4L)) ++
+      e.take(20).map { case (s, d, w) => (s, d, w + 7) }
+  }
+  private val dirtySeeds = Seq(0L, 35L, 35L, 999L)
+
+  test("vertex blocks: 1, 3 and 7 blocks == fused == sequential, " +
+      "self-loops and duplicate edges included") {
+    val unweighted = dirty.map(e => (e._1, e._2))
+    val level = bfsRef(unweighted, dirtySeeds, 20)
+    val dist = bellmanFordRef(dirty, dirtySeeds, 6)
+    assert(run(unweighted, dirtySeeds, 20, localThreshold = 10000) == level)
+    assert(runW(dirty, dirtySeeds, 6, localThreshold = 10000) == dist)
+    for (blocks <- Seq(1, 3, 7)) withShufflePartitions(blocks) {
+      assert(run(unweighted, dirtySeeds, 20, localThreshold = 0) == level,
+        s"hops at $blocks blocks")
+      assert(run(unweighted, dirtySeeds, 2, localThreshold = 0) ==
+        bfsRef(unweighted, dirtySeeds, 2), s"hops<=2 at $blocks blocks")
+      assert(runW(dirty, dirtySeeds, 6, localThreshold = 0) == dist,
+        s"weighted at $blocks blocks")
+    }
+  }
+
+  test("vertex blocks: an empty edge set keeps the seeds at 0") {
+    for (blocks <- Seq(1, 3, 7)) withShufflePartitions(blocks) {
+      assert(run(Nil, Seq(4L, 8L), 5, localThreshold = -1) ==
+        Map(4L -> 0, 8L -> 0))
+      assert(runW(Nil, Seq(4L, 8L), 3, localThreshold = -1) ==
+        Map(4L -> 0L, 8L -> 0L))
+    }
+  }
+
+  test("vertex blocks: the job count does not grow with the rounds") {
+    val unweighted = dirty.map(e => (e._1, e._2))
+    def jobsW(rounds: Int) = jobsOf(runW(dirty, dirtySeeds, rounds, 0L))
+    def jobsH(maxHops: Int) =
+      jobsOf(run(unweighted, dirtySeeds, maxHops, 0L))
+    assert(jobsW(2) == jobsW(8))
+    assert(jobsH(2) == jobsH(20))
+  }
+
+  test("vertex blocks: only the output's checkpoint stays cached") {
+    val unweighted = dirty.map(e => (e._1, e._2))
+    for (left <- Seq(persistedBy(runW(dirty, dirtySeeds, 4, 0L)),
+        persistedBy(run(unweighted, dirtySeeds, 6, 0L))))
+      assert(left.size == 1 && left.head.isCheckpointed, left)
   }
 }

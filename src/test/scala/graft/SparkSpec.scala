@@ -8,6 +8,38 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = {} // shared session: never stop per-suite
+
+  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`. */
+  protected def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** Spark jobs `f` starts, counted by a listener. */
+  protected def jobsOf(f: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try f finally {
+      Thread.sleep(500) // let the async listener bus drain
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  /** The RDDs `f` leaves persisted that were not before. */
+  protected def persistedBy(f: => Any): Seq[org.apache.spark.rdd.RDD[_]] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    f
+    spark.sparkContext.getPersistentRDDs.toSeq
+      .collect { case (id, rdd) if !before(id) => rdd }
+  }
 }
 
 object SparkSpec {
