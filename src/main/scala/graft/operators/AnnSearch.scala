@@ -1084,9 +1084,7 @@ object AnnSearch {
     // scanning at the cap instead of counting a 100 TB table.
     if (localThreshold > 0) {
       val cap = math.min(localThreshold, GraphAnnLocal.maxBuildN(kk))
-      val n = ConnectedComponents.withJobDesc(build, "knn-graph: size probe") {
-        build.limit(Dbscan.probeCap(cap)).count()
-      }
+      val n = Dispatch.counts("knn-graph", build -> cap).head
       if (n <= cap && n > kk)
         return GraphAnnLocal.knnGraphFused(build, k, iters, seed, kk)
     }
@@ -1271,6 +1269,11 @@ object AnnSearch {
     *   corpus members: with a single entry point, a query that IS that
     *   entry self-filters to an empty beam and is absent from the
     *   output (no rows, not an error)
+    * @param localThreshold the single-task walk runs when |Q| and |B|
+    *   are at most this and the graph's edge rows and the round-0 seed
+    *   pairs at most `GraphAnnLocal.edgeCap` of it — rows as given,
+    *   counted before any dedupe, in one probe job; 0 forces the
+    *   distributed walk. Both walks return the same rows.
     * @return (a_id, nbr_id, rnk) — rnk 1..k by cosine desc, ties by id. */
   def graphTopK(queries: DataFrame, build: DataFrame, graph: DataFrame,
       k: Int, ef: Int, rounds: Int, nEntries: Int,
@@ -1286,7 +1289,7 @@ object AnnSearch {
       .limit(nEntries)
     graphWalk(queries, build, graph, k, ef, rounds,
       queries.select(col("a_id")).crossJoin(broadcast(entries)),
-      localThreshold)
+      Some(nEntries), localThreshold)
   }
 
   /** [[graphTopK]] with CALLER-SUPPLIED round-0 candidates instead of
@@ -1299,34 +1302,36 @@ object AnnSearch {
       graph: DataFrame, k: Int, ef: Int, rounds: Int,
       seedCand: DataFrame,
       localThreshold: Long = GraphAnnLocal.defaultThreshold): DataFrame =
-    graphWalk(queries, build, graph, k, ef, rounds, seedCand,
+    graphWalk(queries, build, graph, k, ef, rounds, seedCand, None,
       localThreshold)
 
+  /** @param perQuery `Some(w)` when `seedCand` pairs every query with
+    *   the same at most `w` build ids ([[graphTopK]]'s entry
+    *   crossJoin): its size is then |Q| × min(w, |B|) from the probed
+    *   counts and the seed frame itself is never probed; `None` probes
+    *   it like the edge list. */
   private def graphWalk(queries: DataFrame, build: DataFrame,
       graph: DataFrame, k: Int, ef: Int, rounds: Int,
-      seedCand: DataFrame,
-      localThreshold: Long = GraphAnnLocal.defaultThreshold): DataFrame = {
+      seedCand: DataFrame, perQuery: Option[Int],
+      localThreshold: Long): DataFrame = {
     require(k >= 1 && ef >= k && rounds >= 0,
       s"bad graph-walk shape: k=$k ef=$ef rounds=$rounds")
-    // Fused single-task walk below the size guard (probes stop early;
-    // in-repo callers bound seeds by |Q|·width, but graphTopKFrom is
-    // public with caller-supplied seeds — the seed frame is probed
-    // like the edge list so an unbounded one cannot coalesce into the
-    // single task). Bit-identical rows: AnnSearchLocalSpec + the
-    // q253/q264/q268 oracle rows.
+    // Fused single-task walk below the size guard (one probe job that
+    // stops early; in-repo callers bound seeds by |Q|·width, but
+    // graphTopKFrom is public with caller-supplied seeds — the seed
+    // frame is probed like the edge list so an unbounded one cannot
+    // coalesce into the single task). Bit-identical rows:
+    // AnnSearchLocalSpec + the q253/q264/q268 oracle rows.
     if (localThreshold > 0 &&
         GraphAnnLocal.idVecShape(queries, "a_id", "a_v") &&
         GraphAnnLocal.idVecShape(build, "b_id", "b_v")) {
       val eCap = GraphAnnLocal.edgeCap(localThreshold)
-      val small =
-        ConnectedComponents.withJobDesc(build, "graph-walk: size probe") {
-          queries.limit(Dbscan.probeCap(localThreshold)).count() <=
-            localThreshold &&
-          build.limit(Dbscan.probeCap(localThreshold)).count() <=
-            localThreshold &&
-          graph.limit(Dbscan.probeCap(eCap)).count() <= eCap &&
-          seedCand.limit(Dbscan.probeCap(eCap)).count() <= eCap
-        }
+      val n = Dispatch.counts("graph-walk", Seq(queries -> localThreshold,
+        build -> localThreshold, graph -> eCap) ++
+        perQuery.fold(Seq(seedCand -> eCap))(_ => Nil): _*)
+      val small = n(0) <= localThreshold && n(1) <= localThreshold &&
+        n(2) <= eCap &&
+        perQuery.fold(n(3))(w => n(0) * math.min(w.toLong, n(1))) <= eCap
       if (small)
         return GraphAnnLocal.graphWalkFused(queries, build, graph,
           seedCand, k, ef, rounds)
@@ -1576,15 +1581,8 @@ object AnnSearch {
         GraphAnnLocal.idVecShape(nv, "a_id", "a_v") &&
         GraphAnnLocal.idVecShape(build, "b_id", "b_v")) {
       val eCap = GraphAnnLocal.edgeCap(localThreshold)
-      val small =
-        ConnectedComponents.withJobDesc(build, "graph-insert: size probe") {
-          nv.limit(Dbscan.probeCap(localThreshold)).count() <=
-            localThreshold &&
-          build.limit(Dbscan.probeCap(localThreshold)).count() <=
-            localThreshold &&
-          graph.limit(Dbscan.probeCap(eCap)).count() <= eCap
-        }
-      if (small) {
+      if (Dispatch.fits("graph-insert", nv -> localThreshold,
+          build -> localThreshold, graph -> eCap)) {
         val found = graphTopK(nv, build, graph, ef, ef, rounds, nEntries,
           seed, localThreshold)
         val allV = build.unionByName(newVecs.select(

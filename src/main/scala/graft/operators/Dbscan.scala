@@ -38,13 +38,6 @@ import scala.collection.mutable
   */
 object Dbscan {
 
-  /** Size-probe limit for the local fast path: `localThreshold + 1`,
-    * clamped so a huge threshold (e.g. `Long.MaxValue` for "always
-    * local") can't overflow to a 0-row `limit(0)` probe that would
-    * misroute arbitrarily large inputs onto the single-task path. */
-  private[graft] def probeCap(localThreshold: Long): Int =
-    (math.min(localThreshold, Int.MaxValue.toLong - 1) + 1).toInt
-
   /** Dense cluster ids 1..K ordered by comp, for components of at
     * least `minClusterSize` members: (comp, cluster_id: int).
     *
@@ -122,15 +115,12 @@ object Dbscan {
     // threshold, run the whole clustering in ONE task with the
     // grid-indexed LocalDbscan kernel — the same kernel every tile runs,
     // with the same canonical labels (same distance fold, same min-id
-    // component labels, same dense-id ordering). Size probe via
-    // limit(threshold+1): stops scanning early on big inputs instead of
-    // counting 100 TB to decide. k=0 (no bucket dims) means a brute-force
-    // O(n²) scan — only allowed for tiny inputs.
+    // component labels, same dense-id ordering). The size probe
+    // ([[Dispatch]]) stops scanning at threshold + 1 rows instead of
+    // counting 100 TB to decide. k=0 (no bucket dims) means a
+    // brute-force O(n²) scan — only allowed for tiny inputs.
     if (localThreshold > 0) {
-      val cap = probeCap(localThreshold)
-      val n = ConnectedComponents.withJobDesc(pts, "dbscan: size probe") {
-        pts.limit(cap).count()
-      }
+      val n = Dispatch.counts("dbscan", pts -> localThreshold).head
       val bruteForceCap = 4096L
       if (n <= localThreshold && (bucketDims.nonEmpty || n <= bruteForceCap))
         return runLocal(pts, idCol, vecCol, eps, minPts, bucketDims,

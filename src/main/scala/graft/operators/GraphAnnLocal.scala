@@ -41,8 +41,8 @@ import InTask.parallelFor
   * AnnSearchLocalSpec pins fused == forced-distributed equality on
   * randomized corpora; the DuckDB oracle gate pins both against SQL.
   *
-  * SCALE HONESTY: the guard is a size PROBE (`limit(cap).count()` —
-  * stops scanning early on big inputs, the Dbscan rule), the threshold
+  * SCALE HONESTY: the guard is a size PROBE ([[Dispatch]] — one job
+  * that stops scanning early on big inputs), the threshold
   * is parameterised (`SPARK_GRAFT_GRAPH_LOCAL`, default 100k vectors,
   * `0` disables), and the build guard also bounds NN-Descent's
   * per-vertex candidate work n·(2·buildK)². Scale paths

@@ -56,8 +56,9 @@ object GraphEdges {
     * `kernel` runs its iteration over it — zero further shuffles, none
     * of the per-round job latency that dominates small graphs.
     *
-    * @param e already-distinct edges; by position, long endpoints
-    *   (src, dst) and optionally a long weight as a third column.
+    * @param e edges; by position, long endpoints (src, dst) and
+    *   optionally a long weight as a third column. Repeated edges
+    *   collapse inside the task ([[LocalGraph.apply]]).
     * @param seeds optional one-column table of extra node ids (`id`):
     *   they ride in-band with the edges (flagged rows, so the one task
     *   sees both inputs without a join) and join the node table even
@@ -137,11 +138,13 @@ final class LocalGraph(val ids: Array[Long], val src: Array[Int],
 
 object LocalGraph {
 
-  /** Compacts long edge endpoints: nodes = src ∪ dst ∪ `extra`, sorted
-    * and distinct, id → index by binary search (never a boxed map);
+  /** Compacts long edge endpoints: repeated edges dropped
+    * ([[distinctEdges]]), nodes = src ∪ dst ∪ `extra`, sorted and
+    * distinct, id → index by binary search (never a boxed map);
     * `seeds` = the indices of `seedId`, ids that are no node dropped. */
-  def apply(srcId: Array[Long], dstId: Array[Long], w: Array[Long],
+  def apply(rawSrc: Array[Long], rawDst: Array[Long], rawW: Array[Long],
       extra: Array[Long], seedId: Array[Long]): LocalGraph = {
+    val (srcId, dstId, w) = distinctEdges(rawSrc, rawDst, rawW)
     val m = srcId.length
     val all = new Array[Long](2 * m + extra.length)
     System.arraycopy(srcId, 0, all, 0, m)
@@ -165,5 +168,53 @@ object LocalGraph {
     }
     new LocalGraph(ids, index(srcId), index(dstId), w,
       index(seedId).filter(_ >= 0))
+  }
+
+  /** The edge list with each repeated (src, dst) edge dropped: the first
+    * copy stays in place, and in a weighted list (`w` nonEmpty) it takes
+    * the least weight among its copies — the only one a min-plus
+    * relaxation can use. Input with no repeat comes back as the same
+    * arrays, arrival order included, so kernels whose float sums follow
+    * edge order keep their bits. One open-addressing table of edge
+    * indices; primitive arrays only. */
+  def distinctEdges(src: Array[Long], dst: Array[Long],
+      w: Array[Long]): (Array[Long], Array[Long], Array[Long]) = {
+    val m = src.length
+    val weighted = w.nonEmpty
+    val mask = Integer.highestOneBit(math.max(2 * m, 2)) * 2 - 1
+    val table = Array.fill(mask + 1)(-1)
+    val keep = new Array[Boolean](m)
+    var least = w
+    var kept = 0
+    var i = 0
+    while (i < m) {
+      var x = src(i) * 0x9E3779B97F4A7C15L ^ dst(i)
+      x = (x ^ (x >>> 33)) * 0xFF51AFD7ED558CCDL
+      var h = (x ^ (x >>> 33)).toInt & mask
+      while (table(h) >= 0 &&
+          (src(table(h)) != src(i) || dst(table(h)) != dst(i)))
+        h = (h + 1) & mask
+      val j = table(h)
+      if (j < 0) { table(h) = i; keep(i) = true; kept += 1 }
+      else if (weighted && w(i) < least(j)) {
+        if (least eq w) least = w.clone()
+        least(j) = w(i)
+      }
+      i += 1
+    }
+    if (kept == m) return (src, dst, w)
+    val (s, d) = (new Array[Long](kept), new Array[Long](kept))
+    val lw = if (weighted) new Array[Long](kept) else Array.emptyLongArray
+    var k = 0
+    i = 0
+    while (i < m) {
+      if (keep(i)) {
+        s(k) = src(i); d(k) = dst(i)
+        if (weighted) lw(k) = least(i)
+        k += 1
+      }
+      i += 1
+    }
+    (s, d, lw)
   }
 }

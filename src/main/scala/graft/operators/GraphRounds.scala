@@ -5,7 +5,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -29,11 +29,13 @@ private[operators] final class VertexBlock(val g: LocalGraph,
   * on (Pregel's shape, and the reference's: each rank works on its own
   * partition, then trades boundary facts, `dbscan.cpp:847-1012`).
   *
-  *  - Build ([[GraphRounds.apply]], one shuffle): the distinct edges are
-  *    hashed by the owner block of `dst` into B cached [[VertexBlock]]s,
+  *  - Build ([[GraphRounds.apply]], one shuffle): the edges are hashed
+  *    by the owner block of `dst` into B cached [[VertexBlock]]s,
   *    B = `spark.sql.shuffle.partitions`; each cross-block edge also
   *    sends `(src, block)` to the owner of `src`, which makes its
-  *    routing list.
+  *    routing list. Every copy of an edge lands in the same block, so
+  *    repeated edges collapse there exactly ([[LocalGraph.apply]]);
+  *    each input partition drops its own repeats before the shuffle.
   *  - Round ([[round]], one shuffle): each block ships the packed
   *    `(ids, values)` its operator picks among its owned vertices, each
   *    only to the blocks on the vertex's routing list; the receiving
@@ -42,11 +44,11 @@ private[operators] final class VertexBlock(val g: LocalGraph,
   *    fused single-task path runs over the whole graph.
   *  - Rounds chain lazily; [[finish]] runs the ONE job that builds the
   *    blocks, runs every round and checkpoints the output rows, then
-  *    releases the edge table, the blocks and every round's state.
+  *    releases the blocks and every round's state.
   *
   * A round's state is one `S` per block, over its local ids; each is
   * cached because the next round reads it twice (to send, to update). */
-private[operators] final class GraphRounds private (e: DataFrame,
+private[operators] final class GraphRounds private (spark: SparkSession,
     blocks: RDD[VertexBlock], parts: Int) {
 
   private val done = mutable.ArrayBuffer[RDD[_]](blocks)
@@ -97,23 +99,21 @@ private[operators] final class GraphRounds private (e: DataFrame,
   }
 
   /** Runs the loop: `rows(b, s)` of every block's final state,
-    * checkpointed; then releases the edge table and every cache. */
+    * checkpointed; then releases every cache. */
   def finish[S: ClassTag](state: RDD[S], schema: StructType)(
       rows: (VertexBlock, S) => Iterator[Row]): DataFrame =
-    try ConnectedComponents.withJobDesc(e, "graph: rounds") {
-      e.sparkSession.createDataFrame(blocks.zipPartitions(state) {
+    try ConnectedComponents.withJobDesc(spark.sparkContext, "graph: rounds") {
+      spark.createDataFrame(blocks.zipPartitions(state) {
         (bit, sit) => rows(bit.next(), sit.next())
       }, schema).localCheckpoint()
-    } finally {
-      done.foreach(_.unpersist())
-      e.unpersist()
-    }
+    } finally done.foreach(_.unpersist())
 }
 
 private[operators] object GraphRounds {
 
-  /** Builds the (lazy, cached) blocks of the distinct edge table `e`:
-    * long (src, dst) and optionally a long weight, by position.
+  /** Builds the (lazy, cached) blocks of the edge table `e`: long
+    * (src, dst) and optionally a long weight, by position; repeated
+    * edges count once, parallel weighted ones at their least weight.
     *
     * @param seeds (id, value) rows; an id's smallest value becomes its
     *   seed value ([[VertexBlock.seedVal]]).
@@ -126,35 +126,47 @@ private[operators] object GraphRounds {
       val at = new HashPartitioner(parts)
       val stride = e.columns.length
       // per target block: packed edges, (src, block) routes, seeds
-      type Packed = (Array[Long], Array[Long], Array[Long])
-      def packed(rows: RDD[Row])(
-          put: (Row, Array[mutable.ArrayBuilder.ofLong]) => Unit)
-          : RDD[(Int, Packed)] = rows.mapPartitions { it =>
-        val out = Array.fill(3 * parts)(new mutable.ArrayBuilder.ofLong)
-        it.foreach(put(_, out))
+      def packed(out: Array[mutable.ArrayBuilder.ofLong]) =
         Iterator.range(0, parts)
           .filter(q => (0 until 3).exists(k => out(3 * q + k).length > 0))
           .map(q => (q, (out(3 * q).result(), out(3 * q + 1).result(),
             out(3 * q + 2).result())))
-      }
-      val fromEdges = packed(e.rdd) { (r, out) =>
-        val (src, dst) = (r.getLong(0), r.getLong(1))
-        val q = at.getPartition(dst)
-        out(3 * q) += src += dst
-        if (stride == 3) out(3 * q) += r.getLong(2)
-        val p = at.getPartition(src)
-        if (p != q) out(3 * p + 1) += src += q
+      val fromEdges = e.queryExecution.toRdd.mapPartitions { it =>
+        val (sb, db, wb) = (new mutable.ArrayBuilder.ofLong,
+          new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+        it.foreach { r =>
+          sb += r.getLong(0); db += r.getLong(1)
+          if (stride == 3) wb += r.getLong(2)
+        }
+        val (src, dst, w) =
+          LocalGraph.distinctEdges(sb.result(), db.result(), wb.result())
+        val out = Array.fill(3 * parts)(new mutable.ArrayBuilder.ofLong)
+        val (from, to) = (new mutable.ArrayBuilder.ofLong,
+          new mutable.ArrayBuilder.ofLong)
+        for (i <- src.indices) {
+          val q = at.getPartition(dst(i))
+          out(3 * q) += src(i) += dst(i)
+          if (stride == 3) out(3 * q) += w(i)
+          if (at.getPartition(src(i)) != q) { from += src(i); to += q }
+        }
+        val (rs, rq, _) = LocalGraph.distinctEdges(from.result(),
+          to.result(), Array.emptyLongArray)
+        for (k <- rs.indices)
+          out(3 * at.getPartition(rs(k)) + 1) += rs(k) += rq(k)
+        packed(out)
       }
       val all = seeds.fold(fromEdges)(s => fromEdges.union(
-        packed(s.rdd) { (r, out) =>
-          out(3 * at.getPartition(r.getLong(0)) + 2) +=
-            r.getLong(0) += r.getLong(1)
+        s.queryExecution.toRdd.mapPartitions { it =>
+          val out = Array.fill(3 * parts)(new mutable.ArrayBuilder.ofLong)
+          it.foreach(r => out(3 * at.getPartition(r.getLong(0)) + 2) +=
+            r.getLong(0) += r.getLong(1))
+          packed(out)
         }))
       val blocks = all.partitionBy(at).values.mapPartitionsWithIndex {
         (p, it) => Iterator(block(p, at, stride, addSeeds, it))
       }
-      new GraphRounds(e, blocks.persist(StorageLevel.MEMORY_AND_DISK),
-        parts)
+      new GraphRounds(e.sparkSession,
+        blocks.persist(StorageLevel.MEMORY_AND_DISK), parts)
     }
 
   private def block(p: Int, at: HashPartitioner, stride: Int,

@@ -146,10 +146,7 @@ object IncrementalDbscan {
       localThreshold: Long = IncrDbscanLocal.defaultThreshold): State = {
     val sel = points.select(col(idCol).as("id"), col(vecCol).as("vec"))
     if (localThreshold > 0 && GraphAnnLocal.idVecShape(sel, "id", "vec")) {
-      val n = ConnectedComponents.withJobDesc(sel, "incr-dbscan: size probe") {
-        sel.limit(Dbscan.probeCap(localThreshold)).count()
-      }
-      if (n <= localThreshold)
+      if (Dispatch.fits("incr-dbscan", sel -> localThreshold))
         return IncrDbscanLocal.stateFused(sel, None, eps, minPts,
           bucketDims)
     }
@@ -168,11 +165,8 @@ object IncrementalDbscan {
     val npSel = newPoints.select(col(idCol).as("id"), col(vecCol).as("vec"))
     if (localThreshold > 0 && GraphAnnLocal.idVecShape(npSel, "id", "vec") &&
         GraphAnnLocal.idVecShape(st.points, "id", "vec")) {
-      val cap = Dbscan.probeCap(localThreshold)
-      val total =
-        ConnectedComponents.withJobDesc(npSel, "incr-dbscan: size probe") {
-          st.points.limit(cap).count() + npSel.limit(cap).count()
-        }
+      val total = Dispatch.counts("incr-dbscan",
+        st.points -> localThreshold, npSel -> localThreshold).sum
       if (total <= localThreshold)
         return IncrDbscanLocal.stateFused(
           st.points.select("id", "vec").unionAll(npSel), None, eps, minPts,
@@ -198,11 +192,7 @@ object IncrementalDbscan {
     val rm = removeIds.select(col(idCol).as("id"))
     if (localThreshold > 0 &&
         GraphAnnLocal.idVecShape(st.points, "id", "vec")) {
-      val n = ConnectedComponents.withJobDesc(st.points,
-          "decr-dbscan: size probe") {
-        st.points.limit(Dbscan.probeCap(localThreshold)).count()
-      }
-      if (n <= localThreshold)
+      if (Dispatch.fits("decr-dbscan", st.points -> localThreshold))
         // removed ids subtract INSIDE the task (unknown ids ignored,
         // the contract below); the rebuilt state is bit-identical to
         // the incremental fold's — see IncrDbscanLocal

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * The fourth member of the iterate-to-fixpoint family (CC, PageRank,
   * BFS/SSSP). Scale shape: one per-node update, [[adopt]] (label
   * counts over the in-neighbours, the (count DESC, label ASC) winner).
-  * At or below `localThreshold` distinct edges it runs over CSR arrays
-  * in ONE task; above it, per vertex block of [[GraphRounds]]: one
+  * At or below `localThreshold` edge rows it runs over CSR arrays in
+  * ONE task; above it, per vertex block of [[GraphRounds]]: one
   * exchange of the owned vertices' labels per round, every round
   * chained into one job whose output is checkpointed once. Nodes with
   * no in-edges keep their current label.
@@ -28,16 +28,18 @@ object LabelProp {
   /** @param edges directed (labels flow src → dst); pass both
     *   orientations for an undirected graph. Duplicates collapse;
     *   edges with a NULL endpoint are dropped.
-    * @param localThreshold max deduplicated edge count for the fused
-    *   single-task path (all-integer semantics, so the paths are
-    *   bit-identical — spec-enforced); 0 forces the distributed loop.
+    * @param localThreshold max edge rows with no NULL endpoint, counted
+    *   before duplicates drop, for the fused single-task path; 0 forces
+    *   the distributed loop. All-integer semantics, so both paths return
+    *   the same rows (spec-enforced) — only the route depends on it.
     * @return (id, label) after `rounds` synchronous rounds. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, localThreshold: Long = 5_000_000L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
-    val nEdges = e.count()
-    if (nEdges <= localThreshold) runFused(e, rounds)
+    // repeated edges collapse inside the tasks on either path
+    val e = GraphEdges.longs(edges, srcCol -> "src", dstCol -> "dst")
+    if (localThreshold > 0 &&
+        Dispatch.fits("label-prop", e -> localThreshold)) runFused(e, rounds)
     else runDistributed(e, rounds)
   }
 
@@ -134,7 +136,8 @@ object LabelProp {
       seeds: DataFrame, idCol: String, labelCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val gr = GraphRounds(GraphEdges.directed(edges, srcCol, dstCol),
+    val gr = GraphRounds(
+      GraphEdges.longs(edges, srcCol -> "src", dstCol -> "dst"),
       Some(GraphEdges.longs(seeds, idCol -> "id", labelCol -> "label")),
       addSeeds = false)
     var state = gr.init { b =>

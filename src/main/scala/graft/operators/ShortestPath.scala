@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *
   * Scale shape: one frontier step, [[expand]] (every unvisited
   * out-neighbour of a frontier node is reached at the next level). At
-  * or below `localThreshold` distinct edges it runs over CSR arrays in
-  * ONE task. Above it, per vertex block of [[GraphRounds]]: level d
+  * or below `localThreshold` edge rows it runs over CSR arrays in ONE
+  * task. Above it, per vertex block of [[GraphRounds]]: level d
   * sends only the vertices reached at d - 1 to the blocks holding
   * their out-edges, so levels past the last are empty; all `maxHops`
   * levels chain into one job whose output is checkpointed once, with
@@ -40,19 +40,27 @@ object ShortestPath {
     *   duplicates and edges with a NULL endpoint are dropped.
     * @param seeds one long id column; seeds absent from the edge table
     *   still appear in the output at hop 0, NULL ids are dropped.
-    * @param localThreshold max deduplicated edge count for the fused
-    *   single-task path; 0 forces the distributed loop.
+    * @param localThreshold max edge rows with no NULL endpoint, counted
+    *   before duplicates drop, for the fused single-task path; 0 forces
+    *   the distributed loop. Both paths return the same rows — only the
+    *   route depends on it.
     * @return (id, hops) for every node within maxHops of a seed. */
   def hops(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int = 20,
       localThreshold: Long = 5_000_000L): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = GraphEdges.directed(edges, srcCol, dstCol).persist()
+    val e = GraphEdges.longs(edges, srcCol -> "src", dstCol -> "dst")
     val s = GraphEdges.longs(seeds, seedCol -> "id")
-    val nEdges = e.count()
-    if (nEdges <= localThreshold) runFused(e, s, maxHops)
+    if (fused(e, localThreshold)) runFused(e, s, maxHops)
     else runDistributed(e, s, maxHops)
   }
+
+  /** The dispatch of both operators: the raw edge rows, probed up to
+    * `localThreshold` (no probe at all when it is <= 0). Repeated edges
+    * collapse inside the tasks on either path. */
+  private def fused(e: DataFrame, localThreshold: Long): Boolean =
+    localThreshold > 0 &&
+      Dispatch.fits("shortest-path", e -> localThreshold)
 
   /** One BFS level, the step both paths run: every unvisited
     * out-neighbour of a `frontier` node is reached at `depth` (in
@@ -134,8 +142,10 @@ object ShortestPath {
     * query on both paths. Edges with a NULL endpoint or weight are
     * dropped.
     *
-    * Scale shape: the fused path (≤ localThreshold distinct edges) runs
-    * the Jacobi rounds over edge arrays in one task; above it the same
+    * Scale shape: the fused path (≤ localThreshold edge rows, as in
+    * [[hops]]) runs the Jacobi rounds over edge arrays in one task;
+    * parallel edges collapse to their least weight — the only one that
+    * can ever win a relaxation — inside the tasks. Above it the same
     * [[relax]] runs per vertex block of [[GraphRounds]], one exchange
     * of the reached vertices' distances per round.
     *
@@ -145,14 +155,10 @@ object ShortestPath {
       wCol: String, seeds: DataFrame, seedCol: String, rounds: Int,
       localThreshold: Long = 5_000_000L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // parallel edges collapse to their min weight — the only one that
-    // can ever win a relaxation
     val e = GraphEdges.longs(edges, srcCol -> "src", dstCol -> "dst",
-        wCol -> "w")
-      .groupBy("src", "dst").agg(min(col("w")).as("w")).persist()
+      wCol -> "w")
     val s = GraphEdges.longs(seeds, seedCol -> "id")
-    val nEdges = e.count()
-    if (nEdges <= localThreshold) weightedFused(e, s, rounds)
+    if (fused(e, localThreshold)) weightedFused(e, s, rounds)
     else weightedDistributed(e, s, rounds)
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dbscan, EpsilonJoin}
+import graft.operators.{Dbscan, Dispatch, EpsilonJoin}
 import graft.sources.BinaryPoints
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -226,12 +226,15 @@ class DbscanSpec extends SparkSpec {
   }
 
   test("size-probe cap survives extreme localThreshold values") {
-    // Long.MaxValue ("always local") must not overflow to a limit(0)
-    // probe that reads n=0 and routes any input to the one-task path
-    assert(Dbscan.probeCap(Long.MaxValue) == Int.MaxValue)
-    assert(Dbscan.probeCap(Int.MaxValue.toLong) == Int.MaxValue)
-    assert(Dbscan.probeCap(100_000L) == 100_001)
-    assert(Dbscan.probeCap(1L) == 2)
+    // Long.MaxValue ("always local") must not overflow to a 0-row probe
+    // that reads n=0 and routes any input to the one-task path
+    val rows = spark.range(0, 300, 1, 7).toDF()
+    def n(cap: Long) = Dispatch.counts("spec", rows -> cap).head
+    assert(n(Long.MaxValue) == 300)
+    assert(n(Long.MaxValue - 1) == 300)
+    assert(n(Int.MaxValue.toLong) == 300)
+    assert(n(300L) == 300 && n(299L) == 300)
+    assert(n(100L) == 101 && n(1L) == 2 && n(0L) == 1)
   }
 
   test("synthPoints generator: deterministic, partitioning-free; the " +

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.{Hits, KCore, LabelProp, PageRank, ShortestPath,
-  TriangleCount}
+import graft.operators.{Hits, KCore, LabelProp, LocalGraph, PageRank,
+  ShortestPath, TriangleCount}
 import org.apache.spark.sql.DataFrame
 
 class GraphEdgesSpec extends SparkSpec {
@@ -67,5 +67,38 @@ class GraphEdgesSpec extends SparkSpec {
       assert(rows(LabelProp.spread(e, "src", "dst", labels, "id", "lbl",
         rounds)) == Set(Seq(1L, 100L), Seq(2L, 100L), Seq(3L, three)),
         s"LabelProp.spread $rounds")
+  }
+
+  test("LocalGraph over distinct edges: the same arrays, in arrival " +
+      "order, as a plain compaction") {
+    val rnd = new scala.util.Random(29)
+    val pairs = (1 to 400).map(_ =>
+      (rnd.nextInt(90).toLong - 20, rnd.nextInt(90).toLong)).distinct
+    val (src, dst) = (pairs.map(_._1).toArray, pairs.map(_._2).toArray)
+    val w = Array.fill(src.length)(rnd.nextLong())
+    val extra = Array(500L, 3L, -7L)
+    val g = LocalGraph(src, dst, w, extra, Array(3L, 999L))
+    // the construction without any dedupe step
+    val ids = (src ++ dst ++ extra).distinct.sorted
+    def ix(xs: Array[Long]) = xs.map(java.util.Arrays.binarySearch(ids, _))
+    assert(g.ids.sameElements(ids))
+    assert(g.src.sameElements(ix(src)) && g.dst.sameElements(ix(dst)))
+    assert(g.w eq w)
+    assert(g.seeds.sameElements(ix(Array(3L))))
+    val (s2, d2, w2) = LocalGraph.distinctEdges(src, dst, w)
+    assert((s2 eq src) && (d2 eq dst) && (w2 eq w))
+  }
+
+  test("distinctEdges: the first copy stays in place at the least weight") {
+    val src = Array(1L, 2L, 1L, 3L, 2L, 1L)
+    val dst = Array(2L, 3L, 2L, 1L, 3L, 4L)
+    val w = Array(9L, 4L, 5L, 1L, 6L, 2L)
+    val (s, d, lw) = LocalGraph.distinctEdges(src, dst, w)
+    assert(s.toSeq == Seq(1L, 2L, 3L, 1L) && d.toSeq == Seq(2L, 3L, 1L, 4L))
+    assert(lw.toSeq == Seq(5L, 4L, 1L, 2L))
+    assert(w.toSeq == Seq(9L, 4L, 5L, 1L, 6L, 2L)) // input untouched
+    val (us, ud, uw) =
+      LocalGraph.distinctEdges(src, dst, Array.emptyLongArray)
+    assert(us.toSeq == s.toSeq && ud.toSeq == d.toSeq && uw.isEmpty)
   }
 }

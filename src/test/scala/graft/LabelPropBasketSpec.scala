@@ -154,6 +154,22 @@ class LabelPropBasketSpec extends SparkSpec {
       assert(left.size == 1 && left.head.isCheckpointed, left)
   }
 
+  test("raw edge rows over localThreshold, distinct ones under it: the " +
+      "distributed route returns the fused rows") {
+    val base = dirty.distinct
+    val raw = base ++ base ++ base
+    val t = 2L * base.size // raw rows 3x base: over; distinct: under
+    var got = Map.empty[Long, Long]
+    val jobs = jobsByDesc { got = runAt(raw, 4, t) }
+    assert(jobs.contains("graph: rounds"), jobs)
+    assert(got == runAt(base, 4, t))
+    assert(got == lpaRef(base, 4))
+  }
+
+  test("fused path leaves nothing cached") {
+    assert(persistedBy(runAt(dirty, 3, 1000000L)).isEmpty)
+  }
+
   test("frequentPairs: hand case with the A-priori prune biting") {
     val rows = Seq(
       (1L, "a"), (1L, "b"), (1L, "c"),

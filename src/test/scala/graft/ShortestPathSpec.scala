@@ -180,6 +180,52 @@ class ShortestPathSpec extends SparkSpec {
     assert(jobsH(2) == jobsH(20))
   }
 
+  // parallel copies of each edge at different weights, shuffled so the
+  // copies (and their least weight) sit in different input partitions
+  private val parallel = {
+    val rnd = new scala.util.Random(17)
+    val pairs = (1 to 150).map(_ =>
+      (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)).distinct
+    rnd.shuffle(pairs.flatMap { case (s, d) =>
+      Seq.fill(1 + rnd.nextInt(3))((s, d, (rnd.nextInt(40) + 1).toLong))
+    })
+  }
+
+  test("duplicate and parallel edges across input partitions: fused == " +
+      "1, 3 and 7 blocks == sequential, the least weight wins") {
+    val seeds = Seq(0L, 30L)
+    val dist = bellmanFordRef(parallel, seeds, 6)
+    val unweighted = parallel.map(e => (e._1, e._2))
+    val level = bfsRef(unweighted, seeds, 20)
+    assert(runW(parallel, seeds, 6, localThreshold = 10000) == dist)
+    assert(run(unweighted, seeds, 20, localThreshold = 10000) == level)
+    for (blocks <- Seq(1, 3, 7)) withShufflePartitions(blocks) {
+      assert(runW(parallel, seeds, 6, localThreshold = 0) == dist,
+        s"weighted at $blocks blocks")
+      assert(run(unweighted, seeds, 20, localThreshold = 0) == level,
+        s"hops at $blocks blocks")
+    }
+  }
+
+  test("raw edge rows over localThreshold, distinct ones under it: the " +
+      "distributed route returns the fused rows") {
+    val base = parallel.map(e => (e._1, e._2)).distinct
+    val raw = base ++ base ++ base
+    val seeds = Seq(0L, 30L)
+    val t = 2L * base.size // raw rows 3x base: over; distinct: under
+    var got = Map.empty[Long, Int]
+    val jobs = jobsByDesc { got = run(raw, seeds, 20, localThreshold = t) }
+    assert(jobs.contains("graph: rounds"), jobs)
+    assert(got == run(base, seeds, 20, localThreshold = t))
+    assert(got == bfsRef(base, seeds, 20))
+  }
+
+  test("fused paths leave nothing cached") {
+    val unweighted = dirty.map(e => (e._1, e._2))
+    assert(persistedBy(runW(dirty, dirtySeeds, 4, 10000L)).isEmpty)
+    assert(persistedBy(run(unweighted, dirtySeeds, 6, 10000L)).isEmpty)
+  }
+
   test("vertex blocks: only the output's checkpoint stays cached") {
     val unweighted = dirty.map(e => (e._1, e._2))
     for (left <- Seq(persistedBy(runW(dirty, dirtySeeds, 4, 0L)),

@@ -18,19 +18,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Spark jobs `f` starts, counted by a listener. */
-  protected def jobsOf(f: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  protected def jobsOf(f: => Any): Int = jobsByDesc(f).values.sum
+
+  /** Spark jobs `f` starts, counted by job description (`""` for a job
+    * without one). */
+  protected def jobsByDesc(f: => Any): Map[String, Int] = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        descs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
     }
     spark.sparkContext.addSparkListener(listener)
     try f finally {
       Thread.sleep(500) // let the async listener bus drain
       spark.sparkContext.removeSparkListener(listener)
     }
-    jobs.get
+    descs.toArray(Array.empty[String]).groupBy(identity)
+      .map { case (d, ds) => d -> ds.length }
   }
 
   /** The RDDs `f` leaves persisted that were not before. */
