@@ -2524,8 +2524,8 @@ object SparkEntry {
     // k-NN GRAPH, IVF-CELL-SHARDED (the disk-lean scale build beside
     // q252's NN-Descent): top-2 cell assignment over the q23 centroid
     // pipeline, exact per-cell top-k, cross-cell bounded-heap merge,
-    // then ONE NN-Descent refinement round (broadcast-scored id-pair
-    // candidates — the round that buys back cell-coverage loss at 1M).
+    // then ONE NN-Descent refinement round on knnGraph's vertex blocks
+    // (the round that buys back cell-coverage loss at 1M).
     // The oracle shares q23's centroid CTEs byte-for-byte, ranks the
     // distinct shared-cell pairs per vertex (== the engine's per-cell-
     // then-merge under the shared (cos desc, id) tie rule), and unrolls

@@ -487,7 +487,7 @@ object Workloads {
     // overflowed this host's shuffle disk (round-10 finding)
     val g =
       if (ivfCells > 0)
-        // one broadcast-scored NN-Descent round on top of the sharded
+        // one NN-Descent round on top of the sharded
         // build (measured at 1M/1024 cells: graph recall 0.66 sharded
         // → ~0.9 refined). knnGraphIvf checkpoints its own output.
         A.knnGraphIvf(bd, k = buildK, nCells = ivfCells, refineIters = 1)

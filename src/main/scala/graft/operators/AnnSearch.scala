@@ -1091,52 +1091,6 @@ object AnnSearch {
     GraphAnnLocal.knnGraphRounds(build, k, iters, seed, kk)
   }
 
-  /** Exact-cosine bounded-heap top-`keep` of a candidate edge list
-    * (`a_id`, `nbr`) against a normed vector table (`b_id`, `b_v`,
-    * `b_n`) — the scoring step of [[knnGraphIvf]]'s refinement. The two
-    * vector lookups are BROADCAST hash joins: only 3-scalar id-pair rows
-    * ever cross an exchange (the disk-lean discipline — a shuffle-join
-    * form spills ~|cand| dense vectors through the second lookup,
-    * which at 1M vectors × buildK=20 measured ~480 GB and overflowed a
-    * single host's disk). */
-  private def scoreTopK(cand: DataFrame, vecs: DataFrame,
-      keep: Int): DataFrame = {
-    val side = (c: String) => broadcast(vecs.select(col("b_id").as(c),
-      col("b_v").as(if (c == "a_id") "a_v" else "b_v"),
-      col("b_n").as(if (c == "a_id") "a_n" else "b_n")))
-    cand
-      .join(side("a_id"), "a_id")
-      .join(side("nbr"), "nbr")
-      .select(col("a_id"), col("nbr"), (-cosineCol).as("negcos"))
-      .groupBy("a_id")
-      .agg(graft.functions.TopKByScore.topkMin(col("nbr"), col("negcos"),
-        keep).as("topk"))
-  }
-
-  /** One NN-Descent refinement round over edge list `g` (`a_id`,
-    * `nbr`): symmetric closure, 2-hop candidate set ∪ current graph,
-    * exact-cosine top-`kk` per vertex (see [[knnGraph]]'s doc for the
-    * paper contract). The candidate stream is id-pairs ONLY, through
-    * scoring too. */
-  private def nnDescentRound(g: DataFrame, vecs: DataFrame,
-      kk: Int): DataFrame = {
-    val bn = g.unionAll(g.select(col("nbr").as("a_id"),
-        col("a_id").as("nbr"))).distinct().localCheckpoint()
-    // bn is symmetric, so one 2-hop composition enumerates every
-    // neighbor-of-neighbor path v—mid—w in both directions
-    val cand = bn.select(col("a_id"), col("nbr").as("mid"))
-      .join(bn.select(col("a_id").as("mid"), col("nbr").as("cand")),
-        "mid")
-      .select(col("a_id"), col("cand").as("nbr"))
-      .filter(col("a_id") =!= col("nbr"))
-      .unionAll(g)
-      .distinct()
-    scoreTopK(cand, vecs, kk)
-      .select(col("a_id"), explode(col("topk")).as("p"))
-      .select(col("a_id"), col("p.id").as("nbr"))
-      .localCheckpoint() // cut per-round lineage, like the CC loop
-  }
-
   /** k-NN GRAPH construction, IVF-CELL-SHARDED — the disk-lean scale
     * path beside [[knnGraph]]. NN-Descent's per-round candidate volume
     * is n·(2K)² rows through a distinct + two scoring joins; at 1M
@@ -1178,11 +1132,11 @@ object AnnSearch {
     * graph recall@10 = 0.66 — and `refineIters` buys it back: each
     * refinement round is ONE NN-Descent round seeded by the sharded
     * graph (a neighbor missed across a cell boundary is almost always
-    * a neighbor-of-a-neighbor of a 0.66-quality graph), with the
-    * candidate exchange slimmed to id-pairs and the vector lookups
-    * BROADCAST ([[scoreTopK]]) so the round stays
-    * disk-lean where plain NN-Descent at this scale overflowed a
-    * host's shuffle disk.
+    * a neighbor-of-a-neighbor of a 0.66-quality graph), run on
+    * [[knnGraph]]'s vertex blocks ([[GraphAnnLocal.knnGraphRounds]]
+    * with the sharded graph as its start lists and buildK = k): one
+    * Spark job per round. Ids must be unique LongType and vectors
+    * `array<float>`.
     *
     * @param build (`b_id`, `b_v`); @param nCells coarse cells (≥ 2);
     * @param nAssign cells per vector (2 = boundary coverage);
@@ -1195,6 +1149,9 @@ object AnnSearch {
     require(k >= 1 && nCells >= 2 && nAssign >= 1 && refineIters >= 0,
       s"bad knnGraphIvf shape: k=$k nCells=$nCells nAssign=$nAssign " +
         s"refine=$refineIters")
+    require(GraphAnnLocal.idVecShape(build, "b_id", "b_v"),
+      s"knnGraphIvf needs a LongType b_id and an array<float> b_v, got " +
+        build.schema.simpleString)
     val cents = centroidArrays(build, nCells, lloydIters, seed)
     val vecs = withNorm(build, "b_v", "b_n").persist()
     val assigned = vecs
@@ -1228,20 +1185,11 @@ object AnnSearch {
           .select(col("a_id"), col("p.id").as("nbr_id"),
             (col("pos") + 1).cast("int").as("rnk"))
           .localCheckpoint()
-      else {
-        var g = merged
-          .select(col("a_id"), explode(col("topk")).as("p"))
-          .select(col("a_id"), col("p.id").as("nbr"))
-          .localCheckpoint()
-        for (_ <- 1 to refineIters)
-          g = nnDescentRound(g, vecs, k)
-        scoreTopK(g, vecs, k)
-          .select(col("a_id"), posexplode(col("topk")).as(Seq("pos", "p")))
-          .select(col("a_id"), col("p.id").as("nbr_id"),
-            (col("pos") + 1).cast("int").as("rnk"))
-          .localCheckpoint()
-      }
-    out.count() // pin before releasing the scoring cache
+      else
+        GraphAnnLocal.knnGraphRounds(build, k, refineIters, seed, kk = k,
+          start = Some(merged
+            .select(col("a_id"), explode(col("topk")).as("p"))
+            .select(col("a_id"), col("p.id").as("nbr"))))
     vecs.unpersist()
     out
   }
@@ -1294,10 +1242,10 @@ object AnnSearch {
 
   /** [[graphTopK]] with CALLER-SUPPLIED round-0 candidates instead of
     * the global entry shortlist — per-query seeds (`a_id`, `nbr`).
-    * The layered serve ([[graphTopKLayered]]) feeds the upper layer's
-    * results in here; any candidate generator (IVF cells, LSH buckets)
-    * composes the same way. Queries with no seed rows are absent from
-    * the output. */
+    * The layered serve ([[graphTopKLayeredMulti]]) feeds each upper
+    * level's results in here; any candidate generator (IVF cells, LSH
+    * buckets) composes the same way. Queries with no seed rows are
+    * absent from the output. */
   def graphTopKFrom(queries: DataFrame, build: DataFrame,
       graph: DataFrame, k: Int, ef: Int, rounds: Int,
       seedCand: DataFrame,
@@ -1376,30 +1324,9 @@ object AnnSearch {
     out
   }
 
-  /** Hash-chosen upper LAYER of a corpus — the HNSW idea (Malkov &
-    * Yashunin 2018) in its BSP-friendly two-layer form: every ~
-    * `levelDiv`-th vector (by deterministic id hash) is promoted, and
-    * the k-NN graph over the SPARSE promoted subset carries the
-    * long-range links a base k-NN graph over clustered data lacks
-    * (each promoted vector has few same-cluster peers, so its nearest
-    * promoted neighbors CROSS clusters — exactly the connectivity
-    * that makes a handful of entries reach every region). Build once
-    * beside the base graph; both persist via
-    * [[graft.operators.IndexStore.saveKnnGraph]].
-    * @return (layer vectors (b_id, b_v), layer k-NN graph). */
-  def layerGraph(build: DataFrame, levelDiv: Int, k: Int, iters: Int,
-      seed: Long = 42L,
-      localThreshold: Long = GraphAnnLocal.defaultThreshold):
-      (DataFrame, DataFrame) = {
-    require(levelDiv >= 2, s"levelDiv must be >= 2, got $levelDiv")
-    val l1 = build.filter(layerPromoted(col("b_id"), levelDiv, seed))
-    (l1, knnGraph(l1, k = k, iters = iters, seed = seed, buildK = k,
-      localThreshold = localThreshold))
-  }
-
-  /** The promotion predicate shared by [[layerGraph]] /
-    * [[layerGraphs]] and the CDC maintenance stream: an id belongs to
-    * the layer with divisor `divisor` iff its PORTABLE hash
+  /** The promotion predicate shared by [[layerGraphs]] and the CDC
+    * maintenance stream: an id belongs to the layer with divisor
+    * `divisor` iff its PORTABLE hash
     * (md5-derived, like the entry shortlist, so a SQL oracle
     * reproduces the membership) is ≡ 0 mod `divisor`. Divisors that
     * divide each other give NESTED layers — HNSW's level assignment,
@@ -1409,8 +1336,8 @@ object AnnSearch {
       concat(id.cast("string"), lit(s":lvl:$seed"))),
       lit(divisor)) === 0
 
-  /** Multi-level layer STACK — HNSW proper, recursed from
-    * [[layerGraph]]'s two-level form: level i promotes ids whose hash
+  /** Multi-level layer STACK — HNSW proper (Malkov & Yashunin 2018)
+    * in BSP form: level i promotes ids whose hash
     * is ≡ 0 mod `levelDiv · growth^(i-1)` (divisors divide each other
     * ⇒ levels nest), recursing while the current top level holds more
     * than `minTop` vectors. The measured rationale (1M × 64-blob
@@ -1471,14 +1398,20 @@ object AnnSearch {
     out.toSeq
   }
 
-  /** Multi-level layered serve — [[graphTopKLayered]] recursed over a
-    * [[layerGraphs]] stack: the TOP (sparsest, cross-cluster-linked)
-    * level is walked from the md5 entry shortlist, each level's beam
-    * seeds the next denser level's round 0, and the final beam seeds
-    * the base walk. Layer walks default wider and longer than the
-    * base walk exactly like the two-level serve (`l1Ef`/`l1Rounds`/
-    * `l1Entries` override all levels uniformly). Deterministic end to
-    * end — same tie rules as every walk. */
+  /** Multi-level layered serve over a [[layerGraphs]] stack: the TOP
+    * (sparsest, cross-cluster-linked) level is walked from the md5
+    * entry shortlist, each level's beam seeds the next denser level's
+    * round 0, and the final beam seeds the base walk
+    * ([[graphTopKFrom]]). On clustered corpora this replaces the
+    * hundreds of flat entries a disconnected base graph needs with
+    * `nEntries` ≈ 10. Layer walks are nearly free (a level holds
+    * ≈ n/levelDiv vectors or fewer), so they default wider and longer
+    * than the base walk and with at least 64 entries (`l1Ef`/
+    * `l1Rounds`/`l1Entries` override all levels uniformly): a stalled
+    * layer walk caps base recall (20k × 64-blob, one level: 10 → 0.76,
+    * 64 → 0.83, 128 → 0.85 base recall by layer entries, vs 0.16 for
+    * the flat 10-entry walk). Deterministic end to end — same tie
+    * rules as every walk. */
   def graphTopKLayeredMulti(queries: DataFrame, build: DataFrame,
       graph: DataFrame, layers: Seq[(DataFrame, DataFrame)], k: Int,
       ef: Int, rounds: Int, nEntries: Int, seed: Long = 42L,
@@ -1515,34 +1448,6 @@ object AnnSearch {
     }
     graphTopKFrom(queries, build, graph, k, ef, rounds,
       seeds.select(col("a_id"), col("nbr_id").as("nbr")), localThreshold)
-  }
-
-  /** Two-layer graph serve: beam-walk the sparse [[layerGraph]] first
-    * (its cross-cluster links route a FEW global entries to every
-    * query's region), then seed the base-graph walk with each query's
-    * layer results ([[graphTopKFrom]]). On clustered corpora this
-    * replaces the hundreds of flat entries the disconnected base
-    * graph needs (the AnnSearchSpec sweep's measured lesson) with
-    * `nEntries` ≈ 10 — the layer walk touches only |L1| ≈ n/levelDiv
-    * vectors. Deterministic end to end, same tie rules everywhere. */
-  def graphTopKLayered(queries: DataFrame, build: DataFrame,
-      graph: DataFrame, l1Build: DataFrame, l1Graph: DataFrame, k: Int,
-      ef: Int, rounds: Int, nEntries: Int, seed: Long = 42L,
-      l1Ef: Int = 0, l1Rounds: Int = 0, l1Entries: Int = 0,
-      localThreshold: Long = GraphAnnLocal.defaultThreshold): DataFrame = {
-    // the layer walk is nearly free (|L1| ≈ n/levelDiv vectors) — so
-    // it defaults WIDER and LONGER than the base walk, and with MORE
-    // entries (routing quality is what the layer exists for; a stalled
-    // layer walk caps base recall — the 20k×64-blob spec measured the
-    // layer-entry curve: 10 → 0.76, 64 → 0.83, 128 → 0.85 base recall,
-    // vs 0.16 for the flat 10-entry walk)
-    val lEf = if (l1Ef > 0) l1Ef else 2 * ef
-    val lRounds = if (l1Rounds > 0) l1Rounds else 2 * rounds
-    val lNe = if (l1Entries > 0) l1Entries else math.max(nEntries, 64)
-    val l1Res = graphTopK(queries, l1Build, l1Graph, lEf, lEf, lRounds,
-      lNe, seed, localThreshold)
-    graphTopKFrom(queries, build, graph, k, ef, rounds,
-      l1Res.select(col("a_id"), col("nbr_id").as("nbr")), localThreshold)
   }
 
   /** Insert into a standing [[knnGraph]] — the graph member of the

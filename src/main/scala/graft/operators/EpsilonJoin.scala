@@ -153,9 +153,8 @@ object EpsilonJoin {
     * Per-cell (not uniform) salting: a global salt factor would
     * replicate EVERY probe row ×salt to spread ONE hot cell; the salt
     * table confines the replication to the dense cells themselves.
-    * This is the auto-heuristic version of the manual `saltBuckets`
-    * knob — AQE can split post-shuffle files but not a single giant
-    * hash group, so one ultra-dense ε-cell otherwise pins a reducer.
+    * AQE can split post-shuffle files but not a single giant hash
+    * group, so one ultra-dense ε-cell otherwise pins a reducer.
     *
     * The table is driver-collected and broadcast: bounded by
     * `maxDenseCells` top cells (densest first) — salting only the top
@@ -194,32 +193,20 @@ object EpsilonJoin {
   }
 
   /** Ordered neighbor pairs `(a_id, b_id, d2)` with d2 ≤ ε², a ≠ b.
-    * Each ordered pair appears exactly once.
-    *
-    * @param saltBuckets skew guard: when > 1, the build side of every cell
-    *   is split into this many salt shards (build row → one shard by id
-    *   hash; probe row → replicated to all shards), so one ultra-dense
-    *   ε-cell fans out across `saltBuckets` reducers instead of pinning a
-    *   single task. Complements AQE skew-join (which can only split
-    *   post-shuffle files, not a single giant hash group). Default 1 —
-    *   salting costs probe×saltBuckets replication, pay only on skew.
-    *   For automatic, dense-cell-only salting use [[selfJoinSalted]]
-    *   with [[denseCellSalts]]. */
+    * Each ordered pair appears exactly once. For skew, salt the dense
+    * cells with [[selfJoinSalted]] and [[denseCellSalts]]. */
   def selfJoin(points: DataFrame, idCol: String, vecCol: String,
-      eps: Double, bucketDims: Seq[Int], saltBuckets: Int = 1): DataFrame =
-    selfJoinImpl(points, idCol, vecCol, eps, bucketDims, saltBuckets, None)
+      eps: Double, bucketDims: Seq[Int]): DataFrame =
+    selfJoinSalted(points, idCol, vecCol, eps, bucketDims, None)
 
   /** [[selfJoin]] with a per-cell salt table from [[denseCellSalts]]:
-    * rows in a dense cell split into `nsalt` build shards (probe rows
-    * targeting that cell replicate ×nsalt); every other cell joins
-    * unsalted. Results are bit-identical to the unsalted join. */
+    * rows in a dense cell split into `nsalt` build shards (build row →
+    * one shard by id hash; probe rows targeting that cell replicate
+    * ×nsalt), so the cell fans out across `nsalt` reducers instead of
+    * pinning one task; every other cell joins unsalted. Results are
+    * bit-identical to the unsalted join. */
   def selfJoinSalted(points: DataFrame, idCol: String, vecCol: String,
       eps: Double, bucketDims: Seq[Int],
-      saltTable: Option[DataFrame]): DataFrame =
-    selfJoinImpl(points, idCol, vecCol, eps, bucketDims, 1, saltTable)
-
-  private def selfJoinImpl(points: DataFrame, idCol: String, vecCol: String,
-      eps: Double, bucketDims: Seq[Int], saltBuckets: Int,
       saltTable: Option[DataFrame]): DataFrame = {
     val k = bucketDims.size
     val cell: Column => Column = VectorOps.cellId(_, eps, bucketDims)
@@ -235,10 +222,7 @@ object EpsilonJoin {
             .otherwise(pmod(xxhash64(col("b_id")), col("nsalt").cast("long"))
               .cast("int")))
           .drop("nsalt")
-      case None =>
-        if (saltBuckets <= 1) build0.withColumn("salt", lit(0))
-        else build0.withColumn("salt",
-          pmod(xxhash64(col("b_id")), lit(saltBuckets.toLong)).cast("int"))
+      case None => build0.withColumn("salt", lit(0))
     }
 
     val home0 = points.select(
@@ -259,10 +243,7 @@ object EpsilonJoin {
               array(lit(0)))
             .otherwise(sequence(lit(0), col("nsalt") - 1))))
           .drop("nsalt")
-      case None =>
-        if (saltBuckets <= 1) df.withColumn("salt", lit(0))
-        else df.withColumn("salt",
-          explode(typedlit((0 until saltBuckets).toList)))
+      case None => df.withColumn("salt", lit(0))
     }
 
     // Each UNDIRECTED pair is produced exactly once:
@@ -302,12 +283,6 @@ object EpsilonJoin {
       .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
         col("p.d2").as("d2"))
   }
-
-  /** selfJoin with automatic bucket-dim selection. */
-  def selfJoinAuto(points: DataFrame, idCol: String, vecCol: String,
-      eps: Double, maxDims: Int = 3): DataFrame =
-    selfJoin(points, idCol, vecCol, eps,
-      pickBucketDims(points, vecCol, eps, maxDims))
 
   /** High-dimensional ε self-join through per-partition k-d trees — the
     * fallback for inputs whose dimensionality defeats the ε-grid

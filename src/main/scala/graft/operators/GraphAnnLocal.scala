@@ -13,8 +13,10 @@ import InTask.parallelFor
 
 /** Fused single-task twins of the graph-ANN operators (the
   * [[Dbscan]] `runLocal` discipline applied to [[AnnSearch]]'s k-NN
-  * graph family), and the NN-Descent kernel the distributed build runs
-  * per partition.
+  * graph family), and the only NN-Descent: one per-vertex kernel that
+  * `knnGraph`'s fused build runs in one task and its distributed build
+  * ([[knnGraphRounds]]) runs per vertex block, where
+  * `knnGraphIvf`'s refinement runs too, started from the sharded graph.
   *
   * WHY: every Spark job costs ~0.1-0.3 s of orchestration in local
   * mode, and on the bench's small standing indexes that floor, not data
@@ -315,10 +317,22 @@ private[graft] object GraphAnnLocal {
     }
   }
 
+  /** Position of id `x` in block `b`, which starts at `off`; an id the
+    * build does not hold fails. */
+  private def position(b: Block, off: Int, x: Long): Int = {
+    val i = java.util.Arrays.binarySearch(b.ids, x)
+    require(i >= 0, s"knnGraph start graph names id $x, which is not in build")
+    off + i
+  }
+
   /** The distributed build: vertices range-partitioned by id into cached
     * [[Block]]s, so each block holds one run of positions, then one
-    * Spark job per pass. Each block sends every other block at most one
-    * message per exchange, packed into primitive arrays:
+    * Spark job per pass. The lists start from the hash-scattered guesses
+    * or, given `start`, from its (`a_id`, `nbr`) id rows: each edge goes
+    * to the block of `nbr`, which names it by position, then to the
+    * block of `a_id`; a vertex with no start edge starts empty. Each
+    * block sends every other block at most one message per exchange,
+    * packed into primitive arrays:
     *  1. reversed edges, to the block of their target (closure);
     *  2. each closure list, to its own block and to every block holding
     *     one of its members, where the 2-hop candidates assemble;
@@ -329,18 +343,19 @@ private[graft] object GraphAnnLocal {
     *     top-ks under (score + 0.0, id), so the merge is exact.
     * The last pass's heaps carry ids and become the output rows. */
   def knnGraphRounds(build: DataFrame, k: Int, iters: Int, seed: Long,
-      kk: Int): DataFrame = {
+      kk: Int, start: Option[DataFrame] = None): DataFrame = {
     val spark = build.sparkSession
     val sc = spark.sparkContext
     val pts = build.select(col("b_id"), col("b_v")).rdd.map(idVec)
-    val (blocks, sizes) = ConnectedComponents.withJobDesc(sc,
+    val (ranges, blocks, sizes) = ConnectedComponents.withJobDesc(sc,
         "knn-graph: vertex blocks") {
+      val ranges = new RangePartitioner(
+        spark.sessionState.conf.numShufflePartitions, pts)
       val blocks = pts
-        .partitionBy(new RangePartitioner(
-          spark.sessionState.conf.numShufflePartitions, pts))
+        .partitionBy(ranges)
         .mapPartitions(it => Iterator(block(it.toArray)))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      (blocks, blocks.map(_.ids.length.toLong).collect())
+      (ranges, blocks, blocks.map(_.ids.length.toLong).collect())
     }
     val n = sizes.sum
     require(n > kk && n <= Int.MaxValue, s"need more than buildK=$kk " +
@@ -439,8 +454,25 @@ private[graft] object GraphAnnLocal {
       }
     }
 
-    val init = blocks.mapPartitions(it =>
-      Iterator(initGuesses(it.next(), here, n.toInt, kk, seed))).persist()
+    val init = start.fold(blocks.mapPartitions(it =>
+        Iterator(initGuesses(it.next(), here, n.toInt, kk, seed)))) { s =>
+      val edges = s.select(col("nbr").cast("long"), col("a_id").cast("long"))
+        .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      val named = blocks.zipPartitions(edges.partitionBy(ranges)) {
+        (bit, eit) =>
+          val (b, off) = (bit.next(), here)
+          eit.map { case (w, a) => (a, position(b, off, w)) }
+      }
+      blocks.zipPartitions(named.partitionBy(ranges)) { (bit, eit) =>
+        val (b, off) = (bit.next(), here)
+        val raw = Array.fill(b.ids.length)(new mutable.ArrayBuilder.ofInt)
+        for ((a, w) <- eit) raw(position(b, off, a) - off) += w
+        Iterator(Array.tabulate(raw.length) { v =>
+          val l = raw(v).result()
+          sortedDistinct(l, l.length, off + v)
+        })
+      }
+    }.persist()
     var g: RDD[Array[Array[Int]]] = init
     val done = mutable.ArrayBuffer[RDD[_]](blocks, init)
     val ps = passes(k, iters, kk)

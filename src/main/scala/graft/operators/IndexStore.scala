@@ -245,10 +245,10 @@ object IndexStore {
       Map("k" -> k.toString, "iters" -> iters.toString,
         "seed" -> seed.toString))("edges")
 
-  /** Persist a LAYERED graph index — the [[AnnSearch.layerGraph]] +
-    * base-[[AnnSearch.knnGraph]] triple that
-    * [[AnnSearch.graphTopKLayered]] serves from: base edges, the
-    * promoted layer's vectors, and the layer's edges, under one
+  /** Persist a LAYERED graph index — a one-level
+    * [[AnnSearch.layerGraphs]] stack + base-[[AnnSearch.knnGraph]]
+    * triple that [[AnnSearch.graphTopKLayeredMulti]] serves from: base
+    * edges, the promoted layer's vectors, and the layer's edges, under one
     * manifest (serving needs all three consistently — persisting them
     * separately invites mixed-generation loads). */
   def saveLayeredGraph(dir: String, baseEdges: DataFrame,
@@ -261,7 +261,8 @@ object IndexStore {
         "layer_edges" -> layerEdges))
 
   /** @return (base edges, layer vectors, layer edges) for
-    * [[AnnSearch.graphTopKLayered]]. */
+    * [[AnnSearch.graphTopKLayeredMulti]] (layers = Seq((layer vectors,
+    * layer edges))). */
   def loadLayeredGraph(spark: SparkSession, dir: String, k: Int,
       iters: Int, levelDiv: Int, seed: Long)
       : (DataFrame, DataFrame, DataFrame) = {

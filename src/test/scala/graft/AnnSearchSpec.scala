@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.AnnSearch
+import graft.operators.{AnnSearch, GraphAnnLocal}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class AnnSearchSpec extends SparkSpec {
@@ -615,9 +616,9 @@ class AnnSearchSpec extends SparkSpec {
     val recall = truth.count(gotPairs.contains).toDouble / truth.size
     info(s"knnGraphIvf recall@10 on 4k/16-blob corpus: $recall")
     assert(recall >= 0.9, s"sharded-build recall too low: $recall")
-    // the broadcast-scored NN-Descent refinement round: monotone (the
-    // current graph is always in the candidate set) and partitioning-
-    // invariant like the sharded base
+    // the NN-Descent refinement round: monotone (the current graph is
+    // always in the candidate set) and partitioning-invariant like the
+    // sharded base
     val r1 = edgeSet(AnnSearch.knnGraphIvf(bd.repartition(13), 10,
       nCells = 16, nAssign = 2, refineIters = 1))
     val r2 = edgeSet(AnnSearch.knnGraphIvf(bd.repartition(3), 10,
@@ -632,6 +633,82 @@ class AnnSearchSpec extends SparkSpec {
     assert(refinedRecall >= recall,
       s"refinement round LOST recall: $recall -> $refinedRecall")
     bd.unpersist(blocking = false)
+  }
+
+  /** (a_id → neighbors by rank) of an (a_id, nbr_id, rnk) graph. */
+  private def lists(df: DataFrame): Map[Long, Seq[Long]] = df
+    .select(col("a_id"), col("nbr_id"), col("rnk")).collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    .groupBy(_._1).map { case (a, rs) => a -> rs.sortBy(_._3).map(_._2) }
+
+  test("knnGraphIvf refine == plain-Scala NN-Descent rounds started " +
+      "from the sharded graph, at 1, 3 and 7 vertex blocks") {
+    val vecs = emb.collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val norms = vecs.map { case (v, a) => v -> GraphAnnLocal.dot(a, a) }
+    // one round: symmetric closure bn, candidates = own list ∪ 2-hop
+    // over bn minus self, exact DotProduct-order cosine, top-k by
+    // (cos desc, id)
+    def round(g: Map[Long, Seq[Long]], k: Int): Map[Long, Seq[Long]] = {
+      val bn = g.toSeq.flatMap { case (a, ws) => ws.flatMap(w =>
+          Seq(a -> w, w -> a)) }
+        .groupBy(_._1).map { case (a, ps) => a -> ps.map(_._2).distinct }
+      (bn.keySet ++ g.keySet).toSeq.map { v =>
+        val cs = (g.getOrElse(v, Nil) ++
+          bn.getOrElse(v, Nil).flatMap(bn)).distinct.filter(_ != v)
+        v -> cs.map(w => (-(GraphAnnLocal.dot(vecs(v), vecs(w)) /
+            math.sqrt(norms(v) * norms(w))) + 0.0, w))
+          .sortBy(identity).take(k).map(_._2)
+      }.filter(_._2.nonEmpty).toMap
+    }
+    // ~4 vectors per cell, two cells per vector: some vectors' cells
+    // hold ≤ k other members between them
+    val k = 8
+    def ivf(refine: Int) = lists(AnnSearch.knnGraphIvf(b, k,
+      nCells = 128, refineIters = refine))
+    val g0 = ivf(0)
+    assert(vecs.keys.exists(v => g0.getOrElse(v, Nil).size < k),
+      "every vector's cells hold more than k members: the short-list " +
+        "case is untested")
+    val (r1, r2) = (round(g0, k), round(round(g0, k), k))
+    assert(r1 != g0 && r2 != r1, "the rounds change nothing here")
+    for (blocks <- Seq(1, 3, 7)) withShufflePartitions(blocks) {
+      assert(ivf(1) == r1, s"refineIters = 1 at $blocks blocks")
+      assert(ivf(2) == r2, s"refineIters = 2 at $blocks blocks")
+    }
+  }
+
+  test("knnGraphIvf refine: one job per extra round, only the output's " +
+      "checkpoint stays cached") {
+    b.count() // warm the scan outside the counted windows
+    def ivf(refine: Int) =
+      AnnSearch.knnGraphIvf(b, 5, nCells = 16, refineIters = refine)
+    val left = persistedBy(ivf(1))
+    assert(left.size == 1 && left.head.isCheckpointed, left)
+    val rounds = Seq(1, 2).map(r =>
+      jobsByDesc(ivf(r)).getOrElse("knn-graph: round", 0))
+    assert(rounds(1) == rounds.head + 1, rounds)
+  }
+
+  test("knnGraphIvf refine: a duplicate b_id and a start-graph id " +
+      "absent from build each fail with their message") {
+    import spark.implicits._
+    def failsWith(msg: String)(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      assert(Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).exists(c =>
+          c.isInstanceOf[IllegalArgumentException] &&
+            c.getMessage.contains(msg)), e)
+    }
+    failsWith("unique ids, got duplicate 17") {
+      AnnSearch.knnGraphIvf(b.unionAll(b.filter(col("b_id") === 17L)), 5,
+        nCells = 16, refineIters = 1)
+    }
+    for (edge <- Seq((3L, 100000L), (100000L, 3L)))
+      failsWith("start graph names id 100000, which is not in build") {
+        GraphAnnLocal.knnGraphRounds(b, 5, 1, 42L, 5,
+          start = Some(Seq(edge).toDF("a_id", "nbr")))
+      }
   }
 
   test("graphTopK beam search over the NN-Descent graph: walk rounds " +
@@ -821,8 +898,8 @@ class AnnSearchSpec extends SparkSpec {
       .select(col("vec_id").as("a_id"), col("embedding").as("a_v"))
       .persist()
     val g = AnnSearch.knnGraph(bd, k = 10, iters = 2, buildK = 10)
-    val (l1, l1g) = AnnSearch.layerGraph(bd, levelDiv = 64, k = 10,
-      iters = 2)
+    val layers = AnnSearch.layerGraphs(bd, levelDiv = 64, k = 10,
+      iters = 2, maxLevels = 1)
     def pairSet(df: org.apache.spark.sql.DataFrame) = df
       .select("a_id", "nbr_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -831,13 +908,13 @@ class AnnSearchSpec extends SparkSpec {
       pairSet(res).intersect(truth).size.toDouble / truth.size
     val flat = recallOf(AnnSearch.graphTopK(qd, bd, g, 10, 20, 4,
       nEntries = 10))
-    val layered = recallOf(AnnSearch.graphTopKLayered(qd, bd, g, l1,
-      l1g, 10, 20, 4, nEntries = 10))
+    val layered = recallOf(AnnSearch.graphTopKLayeredMulti(qd, bd, g,
+      layers, 10, 20, 4, nEntries = 10))
     // flat 10 entries reach ≤10 of the 64 disconnected blob
     // components (measured 0.16); the layer walk routes queries to
     // their region (measured 0.83 at default layer knobs — the
     // residual miss is greedy-walk local optima on this deliberately
-    // hard 64-blob geometry, curve documented in graphTopKLayered)
+    // hard 64-blob geometry, curve documented in graphTopKLayeredMulti)
     assert(layered >= 0.78,
       s"layered recall $layered (flat was $flat) — layer routing broke")
     assert(flat < 0.3, s"flat low-entry walk unexpectedly high: $flat")
@@ -845,8 +922,8 @@ class AnnSearchSpec extends SparkSpec {
       s"layered $layered did not clearly beat flat $flat at the same " +
         "base-entry budget")
     // determinism: the layered serve is hash-seeded end to end
-    val again = recallOf(AnnSearch.graphTopKLayered(qd, bd, g, l1, l1g,
-      10, 20, 4, nEntries = 10))
+    val again = recallOf(AnnSearch.graphTopKLayeredMulti(qd, bd, g,
+      layers, 10, 20, 4, nEntries = 10))
     assert(again == layered)
     bd.unpersist(); qd.unpersist()
   }

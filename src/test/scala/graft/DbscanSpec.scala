@@ -123,8 +123,12 @@ class DbscanSpec extends SparkSpec {
     val plain = EpsilonJoin.selfJoin(df, "id", "features", 10.0, Seq(0, 1))
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val salted = EpsilonJoin.selfJoin(df, "id", "features", 10.0, Seq(0, 1),
-      saltBuckets = 7)
+    // a 2-row budget salts every ε-cell holding more than two points
+    val st = EpsilonJoin.denseCellSalts(df, "features", 10.0, Seq(0, 1),
+      rowsPerTask = 2L)
+    assert(st.isDefined, "no t4 cell tripped the salt budget")
+    val salted = EpsilonJoin.selfJoinSalted(df, "id", "features", 10.0,
+      Seq(0, 1), st)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(salted == plain)

@@ -183,16 +183,16 @@ class IndexStoreSpec extends SparkSpec {
       rows(AnnSearch.graphTopK(q, b, g, 5, 10, 2, 10)))
 
     // layered graph: all three artifacts under one manifest
-    val (l1, l1g) = AnnSearch.layerGraph(b, levelDiv = 4, k = 10,
-      iters = 1)
+    val Seq((l1, l1g)) = AnnSearch.layerGraphs(b, levelDiv = 4, k = 10,
+      iters = 1, maxLevels = 1)
     val lyDir = tmp("layered")
     IndexStore.saveLayeredGraph(lyDir, g, l1, l1g, k = 10, iters = 1,
       levelDiv = 4, seed = 42L)
     val (m6, m7, m8) = IndexStore.loadLayeredGraph(spark, lyDir, 10, 1,
       4, 42L)
-    assert(rows(AnnSearch.graphTopKLayered(q, b, m6, m7, m8, 5, 10, 2,
-      10)) == rows(AnnSearch.graphTopKLayered(q, b, g, l1, l1g, 5, 10,
-      2, 10)))
+    assert(rows(AnnSearch.graphTopKLayeredMulti(q, b, m6, Seq((m7, m8)),
+      5, 10, 2, 10)) == rows(AnnSearch.graphTopKLayeredMulti(q, b, g,
+      Seq((l1, l1g)), 5, 10, 2, 10)))
     // levelDiv drift is a different layer geometry — refused
     intercept[IllegalArgumentException] {
       IndexStore.loadLayeredGraph(spark, lyDir, 10, 1, 8, 42L)
