@@ -413,8 +413,10 @@ object Bench {
     // round-10 measurements recorded in NOTES_DEV.md.
     // last field = ivfCells: 0 → NN-Descent build; > 0 → the
     // IVF-cell-sharded exact build (knnGraphIvf — round-11), whose
-    // exchanges are linear in n and which therefore RUNS at 1M on this
-    // host where NN-Descent at buildK=20 overflowed the shuffle disk
+    // sharded exchanges are linear in n and which therefore ran at 1M
+    // on this host where NN-Descent at buildK=20 overflowed the shuffle
+    // disk; its one refine round runs on knnGraph's vertex blocks,
+    // whose exchanges also grow with the block count (knnGraphIvf doc)
     val graphAnnConfigs
         : Seq[(String, Long, Int, Int, Int, Int, Int, Boolean, Int)] =
       if (sys.env.getOrElse("SPARK_GRAFT_BENCH_GRAPH", "1") == "0") Nil

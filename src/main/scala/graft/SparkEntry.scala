@@ -2521,7 +2521,7 @@ object SparkEntry {
         .select(col("a_id").as("vec_id"), col("nbr_id"), col("rnk"))
     }),
 
-    // k-NN GRAPH, IVF-CELL-SHARDED (the disk-lean scale build beside
+    // k-NN GRAPH, IVF-CELL-SHARDED (the cell-sharded scale build beside
     // q252's NN-Descent): top-2 cell assignment over the q23 centroid
     // pipeline, exact per-cell top-k, cross-cell bounded-heap merge,
     // then ONE NN-Descent refinement round on knnGraph's vertex blocks

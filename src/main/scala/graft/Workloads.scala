@@ -482,9 +482,9 @@ object Workloads {
     val t0 = System.nanoTime()
     // knnGraph localCheckpoints its result — count() pins the clock to
     // full materialization anyway. ivfCells > 0 selects the IVF-cell-
-    // sharded build (knnGraphIvf): the disk-lean path whose only
-    // exchanges are linear in n, where NN-Descent at buildK=20/1M
-    // overflowed this host's shuffle disk (round-10 finding)
+    // sharded build (knnGraphIvf), whose sharded exchanges are linear
+    // in n, where NN-Descent at buildK=20/1M overflowed this host's
+    // shuffle disk (round-10 finding)
     val g =
       if (ivfCells > 0)
         // one NN-Descent round on top of the sharded

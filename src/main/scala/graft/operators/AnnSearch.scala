@@ -1091,14 +1091,14 @@ object AnnSearch {
     GraphAnnLocal.knnGraphRounds(build, k, iters, seed, kk)
   }
 
-  /** k-NN GRAPH construction, IVF-CELL-SHARDED — the disk-lean scale
-    * path beside [[knnGraph]]. NN-Descent's per-round candidate volume
-    * is n·(2K)² rows through a distinct + two scoring joins; at 1M
-    * vectors and buildK=20 that is ~1.6B rows/round whose
-    * vector-carrying exchange measured ~480 GB of shuffle spill — more
-    * than a single host's disk. This build never materializes a
-    * candidate exchange at all: vectors are assigned to their
-    * `nAssign` nearest IVF cells (a pure [[graft.functions
+  /** k-NN GRAPH construction, IVF-CELL-SHARDED — the scale path beside
+    * [[knnGraph]]. NN-Descent's per-round candidate volume is n·(2K)²;
+    * at 1M vectors and buildK=20 the former DataFrame rounds pushed
+    * ~1.6B rows/round through a vector-carrying exchange that measured
+    * ~480 GB of shuffle spill — more than a single host's disk. The
+    * sharded build never materializes a candidate exchange at all:
+    * vectors are assigned to their `nAssign` nearest IVF cells (a
+    * pure [[graft.functions
     * .TopNCentroidIds]] projection over a driver-trained centroid
     * matrix — [[centroidArrays]]'s exact, engine-portable Lloyd), each
     * cell computes its members' EXACT top-k by cosine inside one
@@ -1120,9 +1120,13 @@ object AnnSearch {
     * `graph_ann`). Deterministic end-to-end (exact centroid fold, id
     * ties), so DuckDB-oracle-able — q269 unrolls it.
     *
-    * Scale shape: the ONLY exchanges are the nAssign-way cell
-    * repartition of the vector table (n·nAssign rows) and the
-    * n·nAssign·k edge merge — both linear in n. Per-cell all-pairs
+    * Scale shape: the sharded build's ONLY exchanges are the
+    * nAssign-way cell repartition of the vector table (n·nAssign rows)
+    * and the n·nAssign·k edge merge — both linear in n. Each refine
+    * round adds [[GraphAnnLocal.knnGraphRounds]]' block exchanges,
+    * which send a vector to every block holding one of its ≈ (2k)²
+    * candidates and so also grow with the block count
+    * (`spark.sql.shuffle.partitions`). Per-cell all-pairs
     * cost is Σ m_c² ≈ n²·nAssign²/nCells exact kernel evaluations;
     * size nCells ~ n/2000 to bound cells at a few thousand members.
     * Cells are the shuffle keys, so nCells must comfortably exceed
@@ -1141,7 +1145,8 @@ object AnnSearch {
     * @param build (`b_id`, `b_v`); @param nCells coarse cells (≥ 2);
     * @param nAssign cells per vector (2 = boundary coverage);
     * @param lloydIters centroid refinement rounds;
-    * @param refineIters NN-Descent rounds over the sharded result
+    * @param refineIters NN-Descent rounds over the sharded result; ≥ 1
+    *   needs more than k vectors and unique ids
     * @return (a_id, nbr_id, rnk) — rnk by cosine desc, ties by id. */
   def knnGraphIvf(build: DataFrame, k: Int, nCells: Int,
       nAssign: Int = 2, lloydIters: Int = 2, refineIters: Int = 0,
@@ -1152,6 +1157,12 @@ object AnnSearch {
     require(GraphAnnLocal.idVecShape(build, "b_id", "b_v"),
       s"knnGraphIvf needs a LongType b_id and an array<float> b_v, got " +
         build.schema.simpleString)
+    // the refine's rounds give every vertex k others to list
+    if (refineIters >= 1) {
+      val n = Dispatch.counts("knn-graph-ivf", build -> k.toLong).head
+      require(n > k, s"knnGraphIvf with refineIters=$refineIters needs " +
+        s"more than k=$k vectors, got $n")
+    }
     val cents = centroidArrays(build, nCells, lloydIters, seed)
     val vecs = withNorm(build, "b_v", "b_n").persist()
     val assigned = vecs
@@ -1186,7 +1197,7 @@ object AnnSearch {
             (col("pos") + 1).cast("int").as("rnk"))
           .localCheckpoint()
       else
-        GraphAnnLocal.knnGraphRounds(build, k, refineIters, seed, kk = k,
+        GraphAnnLocal.knnGraphRounds(vecs, k, refineIters, seed, kk = k,
           start = Some(merged
             .select(col("a_id"), explode(col("topk")).as("p"))
             .select(col("a_id"), col("p.id").as("nbr"))))

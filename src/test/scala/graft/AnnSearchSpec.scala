@@ -690,8 +690,8 @@ class AnnSearchSpec extends SparkSpec {
     assert(rounds(1) == rounds.head + 1, rounds)
   }
 
-  test("knnGraphIvf refine: a duplicate b_id and a start-graph id " +
-      "absent from build each fail with their message") {
+  test("knnGraphIvf refine: a duplicate b_id, k or fewer vectors and a " +
+      "start-graph id absent from build each fail with their message") {
     import spark.implicits._
     def failsWith(msg: String)(f: => Any): Unit = {
       val e = intercept[Exception](f)
@@ -704,6 +704,12 @@ class AnnSearchSpec extends SparkSpec {
       AnnSearch.knnGraphIvf(b.unionAll(b.filter(col("b_id") === 17L)), 5,
         nCells = 16, refineIters = 1)
     }
+    val five = b.orderBy("b_id").limit(5)
+    failsWith("knnGraphIvf with refineIters=1 needs more than k=5 " +
+        "vectors, got 5") {
+      AnnSearch.knnGraphIvf(five, 5, nCells = 2, refineIters = 1)
+    }
+    assert(AnnSearch.knnGraphIvf(five, 5, nCells = 2).count() == 20)
     for (edge <- Seq((3L, 100000L), (100000L, 3L)))
       failsWith("start graph names id 100000, which is not in build") {
         GraphAnnLocal.knnGraphRounds(b, 5, 1, 42L, 5,
