@@ -148,8 +148,8 @@ object Bench {
         // persist + re-read price of the nightly restart path
         "ann_index_rt_synth1m" -> ((s: SparkSession) =>
           Workloads.annIndexRoundTrip(s, 1_000_000L)),
-        // HIGH-DIMENSIONAL Euclidean ε-join at scale: the kd fallback
-        // (coarse cells + ghosts + per-cell kd radius queries) over
+        // HIGH-DIMENSIONAL Euclidean ε-join at scale: the kd path
+        // (tiles at halo reach ε + ghosts + per-tile kd radius queries) over
         // 200k 32-d clustered vectors, ~70M true pairs at eps=0.2 —
         // the regime the 3-dim grid path can't prune
         "kdeps_synth200k" -> ((s: SparkSession) =>

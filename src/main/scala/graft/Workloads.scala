@@ -381,15 +381,15 @@ object Workloads {
     spark.range(n).select(id.as("vec_id"), feats.as("embedding"))
   }
 
-  /** High-dimensional Euclidean ε-join scale twin — the kd-tree
-    * fallback path ([[graft.operators.EpsilonJoin.selfJoinKdAuto]]:
-    * coarse-cell partition + ghost replication + per-cell kd radius
-    * queries) over 32-d clustered vectors, where the 3-dim grid path
-    * alone would prune weakly. Returns the per-blob pair histogram
-    * (bounded output; the pair stream itself is the measured work). */
+  /** High-dimensional Euclidean ε-join scale twin — the tiled kd-tree
+    * path ([[graft.operators.EpsilonJoin.selfJoinKd]]: DbscanTiles tiles
+    * at halo reach ε + ghost replication + per-tile kd radius queries)
+    * over 32-d clustered vectors, where the 3-dim grid path alone would
+    * prune weakly. Returns the per-blob pair histogram (bounded output;
+    * the pair stream itself is the measured work). */
   def kdEpsSynth(spark: SparkSession, n: Long, eps: Double): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.operators.EpsilonJoin.selfJoinKdAuto(
+    graft.operators.EpsilonJoin.selfJoinKd(
         synthEmbeddings(spark, n, 32, 64), "vec_id", "embedding", eps)
       // reconstruct the PLANTED blob id (synthEmbeddings' assignment
       // hash) so the histogram actually reflects per-blob pair mass

@@ -64,7 +64,7 @@ object Dbscan {
 
   /** ε-pair stream with automatic physical routing: explicit bucket
     * dims → the grid equi-join; no dims on >3-dimensional data → the
-    * per-partition kd-tree path (the 3-dim grid cannot even represent
+    * tiled kd-tree path (the 3-dim grid cannot even represent
     * those inputs, and the brute nested-loop scan is quadratic); no
     * dims on ≤3-d data → the caller chose brute force, honor it.
     * All three produce the identical ordered pair set. */
@@ -75,7 +75,7 @@ object Dbscan {
     else if (EpsilonJoin.kdCompatible(points, idCol, vecCol)) {
       val dim = graft.functions.VectorOps.probeDim(points, vecCol)
         .getOrElse(0)
-      if (dim > 3) EpsilonJoin.selfJoinKdAuto(points, idCol, vecCol, eps)
+      if (dim > 3) EpsilonJoin.selfJoinKd(points, idCol, vecCol, eps)
       else EpsilonJoin.selfJoin(points, idCol, vecCol, eps, Nil)
     } else
       // non-integral ids or double vectors: the kd physical contract
@@ -153,25 +153,32 @@ object Dbscan {
     * global comp of every local comp, and the labels equal the fused
     * path's whatever the tiling.
     *
-    * @param tileWidth the base tile side; None sizes it from the ranges
-    *   pass that [[EpsilonJoin]]'s kd path runs, at least 4ε
+    * A tile still over `maxTileRows` at the 4ε floor (a blob denser
+    * than the cap within 4ε) is kept and runs whole in one task: the
+    * labels stay exact, but that task's memory is the blob's, not the
+    * cap's. ([[EpsilonJoin.selfJoinKd]] shards such a tile; the DBSCAN
+    * kernel needs a tile's whole 2ε neighbourhood at once.)
+    *
+    * @param tileWidth the base tile side; None sizes it from the same
+    *   ranges pass as [[EpsilonJoin.selfJoinKd]]'s tiles, at least 4ε
     * @param maxTileRows owners + ghosts a tile may hold before it is
     *   halved (down to the 4ε floor) — the per-task memory bound */
   private[graft] def runTiled(pts: DataFrame, idCol: String,
       vecCol: String, eps: Double, minPts: Int, bucketDims: Seq[Int],
       minClusterSize: Int, tileWidth: Option[Double] = None,
-      maxTileRows: Long = EpsilonJoin.DefaultMaxKdCellRows): DataFrame = {
+      maxTileRows: Long = DbscanTiles.DefaultMaxTileRows): DataFrame = {
     val spark = pts.sparkSession
     val partitions = spark.sessionState.conf.numShufflePartitions
     val cast = pts.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<float>").as("v"))
-    val grid = DbscanTiles.base(pts, vecCol, eps, bucketDims, tileWidth,
+    val grid = DbscanTiles.base(pts, vecCol, 2 * eps, bucketDims, tileWidth,
       "dbscan: tile")
     val labeledRows = grid match {
       case None => spark.sparkContext.emptyRDD[Row] // no vector to cluster
       case Some(base) =>
         val rows = DbscanTiles.points(cast, "id", "v")
-        val tiles = DbscanTiles.fit(rows, base, maxTileRows, partitions)
+        val (tiles, _) =
+          DbscanTiles.fit(rows, base, maxTileRows, partitions, "dbscan")
         val facts = tileFacts(rows, tiles, eps, minPts, partitions).persist()
 
         val links = facts.filter(_._1 == Link).map(f => Row(f._2, f._3))
@@ -238,7 +245,7 @@ object Dbscan {
     *    an owned fact uses; no other comp can reach a label. */
   private def tileFacts(rows: RDD[(Long, Array[Float])], tiles: DbscanTiles,
       eps: Double, minPts: Int, partitions: Int): RDD[Fact] =
-    DbscanTiles.groups(rows, tiles, partitions, _ => true)
+    DbscanTiles.groups(rows, partitions)(tiles.rows)
       .flatMap(tileKernel(_, eps, minPts, tiles.dims))
 
   /** The facts of one tile (see [[tileFacts]]). */

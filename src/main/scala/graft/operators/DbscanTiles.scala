@@ -2,12 +2,14 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, element_at, max, min}
 
 import scala.collection.mutable
 
-/** Tile geometry of [[Dbscan]]'s distributed path: boxes that each run
-  * the [[LocalDbscan]] kernel once over their owners and ghosts.
+/** Tile geometry of the ε-operators' distributed paths: boxes that each
+  * run one local kernel over their owners and ghosts — [[LocalDbscan]]
+  * for [[Dbscan]] and [[IncrementalDbscan]], a [[graft.functions.KdTree]]
+  * radius query per owner for [[EpsilonJoin.selfJoinKd]].
   *
   * The base grid has `width`-sided tiles over `dims`, tile index
   * `floor(x / width)` per dim. Every key in `split` names a tile that is
@@ -18,36 +20,40 @@ import scala.collection.mutable
   * halves of code `c` are `2c` (below the midpoint) and `2c + 1`.
   *
   * A point's home is the leaf holding it. Its ghost tiles are the other
-  * leaves whose box, grown by 2ε, holds it, so every tile sees every
-  * point within 2ε of its owners. The envelope is rounded outward: its
-  * half-width is 2ε widened by a relative 1e-9, which covers the
+  * leaves whose box, grown by the halo `reach`, holds it, so every tile
+  * sees every point within `reach` of its owners: 2ε for DBSCAN, which
+  * must know whether a ghost is a core, and ε for ε-pairs. A tile side
+  * is never below 2 × reach. The envelope is rounded outward: its
+  * half-width is `reach` widened by a relative 1e-9, which covers the
   * rounding of the kernel's distance test, and its ends move one ulp
   * out, which covers the rounding of `x ± halo`. An extra ghost is
   * always safe, a missing one is not. The home and the envelope use the
   * same monotone floor and midpoint tests, so a point whose envelope
   * holds an owner is always routed to that owner's leaf. */
 private[graft] final class DbscanTiles(val dims: Array[Int],
-    val width: Double, eps: Double,
+    val width: Double, reach: Double,
     val split: Set[Vector[Long]] = Set.empty) extends Serializable {
-  require(dims.nonEmpty, "DBSCAN tiles need at least one dim")
-  require(!(width < 4 * eps),
-    s"tile width $width is below the 4ε floor ${4 * eps}")
+  import DbscanTiles.{Ghost, Owner, OwnerGhostedElsewhere, Query, TileRow}
+  require(dims.nonEmpty, "tiles need at least one dim")
+  require(!(width < 2 * reach),
+    s"tile width $width is below the floor ${2 * reach} (2 × reach)")
 
   private val k = dims.length
-  private val halo = 2 * eps * (1 + 1e-9)
+  private val halo = reach * (1 + 1e-9)
 
-  /** Whether leaf `key` may be halved: the half keeps the 4ε floor. */
+  /** Whether leaf `key` may be halved: the half keeps the 2 × reach floor. */
   def canSplit(key: Vector[Long]): Boolean = {
     val depth = 63 - java.lang.Long.numberOfLeadingZeros(key(k))
     // the next halving is along dim depth % k, already halved depth / k times
     val side = width / math.pow(2, depth / k)
-    java.lang.Double.isFinite(width) && depth < 62 && side / 2 >= 4 * eps
+    java.lang.Double.isFinite(width) && depth < 62 && side / 2 >= 2 * reach
   }
 
   /** This geometry with every splittable leaf of `keys` halved. */
   def splitting(keys: Iterable[Vector[Long]]): DbscanTiles = {
     val more = keys.filter(canSplit)
-    if (more.isEmpty) this else new DbscanTiles(dims, width, eps, split ++ more)
+    if (more.isEmpty) this
+    else new DbscanTiles(dims, width, reach, split ++ more)
   }
 
   /** The leaf that owns a point. */
@@ -64,6 +70,37 @@ private[graft] final class DbscanTiles(val dims: Array[Int],
     val hi = x.map(xi => Math.nextUp(xi + halo))
     (home, leaves(lo, hi).filter(_ != home))
   }
+
+  /** A point's tile rows: an owner in its home leaf, a ghost in the
+    * others. */
+  def rows(id: Long, v: Array[Float]): Iterator[(Vector[Long], TileRow)] = {
+    val (home, ghosts) = route(v)
+    val role = if (ghosts.isEmpty) Owner else OwnerGhostedElsewhere
+    Iterator.single((home, (role, id, v))) ++
+      ghosts.iterator.map(t => (t, (Ghost, id, v)))
+  }
+
+  /** [[rows]] for ε-pairs, with each leaf of `shards` (one still over
+    * the row cap at the floor, mapped to its shard count s) split by id
+    * hash into s tree shards × s query shards. A point of hash h joins
+    * group (h, q) of every query shard q as a tree-only `Ghost`, and an
+    * owner also joins group (t, h) of every tree shard t as a `Query`.
+    * A group then buffers about 1/s of the leaf's rows plus 1/s of its
+    * owners, and the pair (a, b) meets only in group (hash of b, hash
+    * of a). Group keys are the leaf key followed by (t, q). */
+  def pairRows(shards: Map[Vector[Long], Int])(id: Long,
+      v: Array[Float]): Iterator[(Vector[Long], TileRow)] =
+    rows(id, v).flatMap { case row @ (leaf, (role, _, _)) =>
+      shards.get(leaf) match {
+        case None => Iterator.single(row)
+        case Some(s) =>
+          val h = ((java.lang.Long.hashCode(id * 0x9E3779B97F4A7C15L) &
+            0x7fffffff) % s).toLong
+          (0L until s).iterator.map(q => (leaf :+ h :+ q, (Ghost, id, v))) ++
+            (if (role == Ghost) Iterator.empty
+             else (0L until s).iterator.map(t => (leaf :+ t :+ h, (Query, id, v))))
+      }
+    }
 
   /** Every leaf whose box meets the box `[a, b]`; one leaf when a = b. */
   private def leaves(a: Array[Double], b: Array[Double]): Seq[Vector[Long]] = {
@@ -92,10 +129,10 @@ private[graft] final class DbscanTiles(val dims: Array[Int],
       } else {
         var t = math.floor(a(j) / width).toLong
         val last = math.floor(b(j) / width).toLong
-        // width >= 4ε spans an envelope with at most 3 tiles, unless the
-        // coordinate is so large that a double cannot resolve ε there
-        require(last - t <= 2, s"DBSCAN tiles: coordinate ${a(j)} of " +
-          s"dim ${dims(j)} is too large to resolve eps = $eps")
+        // width >= 2 × reach spans an envelope with at most 3 tiles, unless
+        // the coordinate is so large that a double cannot resolve reach there
+        require(last - t <= 2, s"tiles: coordinate ${a(j)} of " +
+          s"dim ${dims(j)} is too large to resolve reach = $reach")
         while (t <= last) {
           bases(j + 1, acc :+ t)
           if (t == last) t = last + 1 else t += 1 // no wrap at Long.MaxValue
@@ -110,12 +147,19 @@ private[graft] object DbscanTiles {
 
   /** A row of one tile: (role, id, vector). */
   type TileRow = (Byte, Long, Array[Float])
-  // row roles in a tile
+  // row roles in a tile: a ghost is in the tile's index only, an owner
+  // also runs its own query there, a query row runs only its query
   final val Ghost: Byte = 0
   final val Owner: Byte = 1
   final val OwnerGhostedElsewhere: Byte = 2
+  final val Query: Byte = 3
 
-  /** The `(id, vector)` rows a tiling clusters: ids cast to long,
+  /** Default per-task cap on the rows (owners + ghosts) of one tile. 256k
+    * rows of 32-d floats ≈ 45 MB of vectors + the index permutation: a
+    * few concurrent tasks fit comfortably in an executor heap. */
+  val DefaultMaxTileRows: Int = 262144
+
+  /** The `(id, vector)` rows a tiling routes: ids cast to long,
     * vectors to float, rows with a null id or vector left out. */
   def points(df: DataFrame, idCol: String,
       vecCol: String): RDD[(Long, Array[Float])] =
@@ -124,32 +168,63 @@ private[graft] object DbscanTiles {
       .filter(col("id").isNotNull && col("v").isNotNull)
       .rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
 
-  /** The base grid over `df`'s vectors: [[EpsilonJoin.kdHeuristic]]'s
+  /** Shared kd partition heuristic: one aggregate pass over `df` picks
+    * the grid dims (widest spread first, ≤ `maxDims`, zero-range dims
+    * dropped) and the cell size for a grid of ≈ `cellsPerCore` ×
+    * shuffle-parallelism cells. `fixedDims`, when non-empty, are taken
+    * as the dims instead (the pass then only sizes the cells). Returns
+    * None for an empty/all-null input; a degenerate input (every point
+    * identical along every dim) gets `(Seq(0), 0.0)`. */
+  private[operators] def kdHeuristic(df: DataFrame, vecCol: String,
+      maxDims: Int, cellsPerCore: Int, desc: String,
+      fixedDims: Seq[Int] = Nil): Option[(Seq[Int], Double)] = {
+    val spark = df.sparkSession
+    val scanned =
+      if (fixedDims.nonEmpty) fixedDims
+      else 0 until graft.functions.VectorOps.probeDim(df, vecCol).getOrElse(0)
+    if (scanned.isEmpty) return None
+    val aggs = scanned.flatMap { d =>
+      val c = element_at(col(vecCol), d + 1).cast("double")
+      Seq(min(c).as(s"mn$d"), max(c).as(s"mx$d"))
+    }
+    val row = ConnectedComponents.withJobDesc(df, s"$desc: ranges") {
+      df.agg(aggs.head, aggs.tail: _*).first()
+    }
+    if (row.isNullAt(0)) return None // every vector null
+    val spans = scanned.indices
+      .map(i => scanned(i) -> (row.getDouble(2 * i + 1) - row.getDouble(2 * i)))
+    val ranges =
+      if (fixedDims.nonEmpty) spans
+      else spans.sortBy { case (d, r) => (-r, d) }.take(maxDims).filter(_._2 > 0)
+    if (ranges.isEmpty) return Some((Seq(0), 0.0))
+    val dims = ranges.map(_._1)
+    val targetCells =
+      math.max(1, cellsPerCore * spark.sessionState.conf.numShufflePartitions)
+    val volume = ranges.map(_._2).product
+    Some((dims, math.pow(volume / targetCells, 1.0 / dims.size)))
+  }
+
+  /** The base grid over `df`'s vectors at halo `reach`: [[kdHeuristic]]'s
     * dims (`bucketDims` when given) and cell size for `cellsPerCore`
-    * cells per shuffle partition, with a tile side of at least 4ε.
-    * None when no vector is present. */
-  def base(df: DataFrame, vecCol: String, eps: Double,
+    * cells per shuffle partition, with a tile side of at least
+    * 2 × reach. None when no vector is present. */
+  def base(df: DataFrame, vecCol: String, reach: Double,
       bucketDims: Seq[Int], tileWidth: Option[Double],
       desc: String, cellsPerCore: Int = 4): Option[DbscanTiles] =
-    EpsilonJoin.kdHeuristic(df, vecCol, eps, 3, cellsPerCore, desc, bucketDims)
+    kdHeuristic(df, vecCol, 3, cellsPerCore, desc, bucketDims)
       .map { case (dims, cell) => new DbscanTiles(dims.toArray,
-        tileWidth.getOrElse(math.max(4 * eps, cell)), eps) }
+        tileWidth.getOrElse(math.max(2 * reach, cell)), reach) }
 
-  /** Route every point to its home tile and its ghost tiles, keep the
-    * tiles `keep` accepts, and group each tile's rows with one sorted
+  /** Route every point to its tile rows (`route`, e.g. a geometry's
+    * [[DbscanTiles.rows]]) and group each tile's rows with one sorted
     * shuffle: a task holds one tile at a time. */
-  def groups(rows: RDD[(Long, Array[Float])], tiles: DbscanTiles,
-      partitions: Int,
-      keep: Vector[Long] => Boolean): RDD[mutable.ArrayBuffer[TileRow]] = {
+  def groups(points: RDD[(Long, Array[Float])], partitions: Int)(
+      route: (Long, Array[Float]) => Iterator[(Vector[Long], TileRow)])
+      : RDD[mutable.ArrayBuffer[TileRow]] = {
     import scala.math.Ordering.Implicits.seqOrdering
     implicit val keyOrd: Ordering[Vector[Long]] = seqOrdering[Vector, Long]
-    rows
-      .flatMap { case (id, v) =>
-        val (home, ghosts) = tiles.route(v)
-        val role = if (ghosts.isEmpty) Owner else OwnerGhostedElsewhere
-        (Iterator.single((home, (role, id, v))) ++
-          ghosts.iterator.map(t => (t, (Ghost, id, v)))).filter(r => keep(r._1))
-      }
+    points
+      .flatMap { case (id, v) => route(id, v) }
       .repartitionAndSortWithinPartitions(
         new org.apache.spark.HashPartitioner(partitions))
       .mapPartitions { it =>
@@ -167,21 +242,25 @@ private[graft] object DbscanTiles {
   }
 
   /** Halve overfull leaves until every leaf holds at most `maxRows`
-    * rows (owners + ghosts) or sits at the 4ε floor. One counting job
-    * per round; only the overfull leaves reach the driver, so the
-    * common case is a single job that returns nothing. */
+    * rows (owners + ghosts) or sits at the floor. One counting job per
+    * round, labelled `<desc>: tile row counts`; only the overfull leaves
+    * reach the driver, so the common case is a single job that returns
+    * nothing. Returns the geometry and the leaves still over `maxRows`
+    * at the floor, with their row counts. */
   def fit(points: RDD[(Long, Array[Float])], tiles: DbscanTiles,
-      maxRows: Long, partitions: Int): DbscanTiles = {
+      maxRows: Long, partitions: Int,
+      desc: String): (DbscanTiles, Map[Vector[Long], Long]) = {
     val over = ConnectedComponents.withJobDesc(points.sparkContext,
-        "dbscan: tile row counts") {
+        s"$desc: tile row counts") {
       points.flatMap { case (_, v) =>
           val (home, ghosts) = tiles.route(v)
           Iterator.single(home) ++ ghosts
         }
         .map((_, 1L)).reduceByKey(_ + _, partitions)
-        .filter(_._2 > maxRows).keys.collect()
+        .filter(_._2 > maxRows).collect()
     }
-    val next = tiles.splitting(over)
-    if (next eq tiles) tiles else fit(points, next, maxRows, partitions)
+    val next = tiles.splitting(over.map(_._1))
+    if (next eq tiles) (tiles, over.toMap)
+    else fit(points, next, maxRows, partitions, desc)
   }
 }

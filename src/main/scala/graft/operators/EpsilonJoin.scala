@@ -33,12 +33,15 @@ import org.apache.spark.sql.functions._
   *    one ultra-dense ε-cell that AQE cannot split because it is a single
   *    hash group — is auto-salted per cell: [[denseCellSalts]] probes the
   *    cell histogram and [[selfJoinSalted]] shards ONLY the dense cells.
+  *
+  * High-dimensional inputs take [[selfJoinKd]] instead: the same pair
+  * contract from a kd-tree per tile of the [[DbscanTiles]] router (the
+  * one halo exchange DBSCAN also runs on), at halo reach ε.
   */
 object EpsilonJoin {
 
-  /** The (a_id, b_id, d2) frame every ε-join path emits — one shared
-    * definition so the kd RDD paths and the empty-input short-circuits
-    * cannot drift apart. */
+  /** The (a_id, b_id, d2) frame the kd path emits — one shared
+    * definition for its tile output and its empty-input short-circuit. */
   private val pairSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("a_id",
       org.apache.spark.sql.types.LongType, nullable = false),
@@ -50,24 +53,12 @@ object EpsilonJoin {
   private def emptyPairs(spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], pairSchema)
 
-  /** Every coarse cell the per-dim range [lo(j), hi(j)] touches (the
-    * ±ε ghost envelope, home cell included) of the kd self-join
-    * shuffle. Lazy: nothing materializes beyond the recursion frame. */
-  private def envelopeCells(lo: Array[Long], hi: Array[Long])
-      : Iterator[List[Long]] = {
-    val k = lo.length
-    def rec(i: Int): Iterator[List[Long]] =
-      if (i == k) Iterator(Nil)
-      else (lo(i) to hi(i)).iterator.flatMap(c => rec(i + 1).map(c :: _))
-    rec(0)
-  }
-
   /** Whether the kd path's physical contract holds for these columns:
     * ids must be integral (the path shuffles raw (long, float[]) tuples)
     * and vectors must be `array<float>` ([[graft.functions.KdTree]] is
     * float-typed — its d² fold over float inputs is the bit-parity
-    * contract with the codegen'd squaredL2). The auto routers divert to
-    * kd only when this holds; anything else (string ids, double
+    * contract with the codegen'd squaredL2). `Dbscan.neighborCounts`
+    * diverts to kd only when this holds; anything else (string ids, double
     * vectors) keeps the generic grid/brute plan, which supports
     * arbitrary id types and both float/double vectors. */
   private[graft] def kdCompatible(df: DataFrame, idCol: String,
@@ -284,44 +275,38 @@ object EpsilonJoin {
         col("p.d2").as("d2"))
   }
 
-  /** High-dimensional ε self-join through per-partition k-d trees — the
-    * fallback for inputs whose dimensionality defeats the ε-grid
-    * equi-join ([[selfJoin]] buckets at most 3 dims; on 64-d embeddings
-    * with small ε a 3-dim grid prunes weakly and candidate sets grow
-    * toward quadratic). This is the reference's own architecture mapped
-    * onto Spark primitives, one stage each:
+  /** High-dimensional ε self-join on the [[DbscanTiles]] router — the
+    * path for inputs whose dimensionality defeats the ε-grid equi-join
+    * ([[selfJoin]] buckets at most 3 dims; on 64-d embeddings with small
+    * ε a 3-dim grid prunes weakly and candidate sets grow toward
+    * quadratic). This is the reference's own architecture, one halo
+    * exchange feeding one kd-tree per partition (`mpi_main.cpp:161-168`):
     *
-    *   - COARSE spatial partition: home cell = floor(coord/cellSize)
-    *     over ≤ 3 spread-picked dims (GP-1, the median-split ownership
-    *     boxes — ours are grid-aligned, load balance via cell count);
-    *   - ε-halo ghost replication: each point also lands in every cell
-    *     whose box its per-dim ±ε envelope touches (GP-2,
-    *     `geometric_partitioning.cpp:32-235`), so a cell sees its whole
-    *     ε-border; cellSize ≥ ε keeps the envelope ≤ 2–3 cells per dim;
-    *   - per-cell [[graft.functions.KdTree]] over owners + ghosts,
-    *     radius query per OWNED point (IX-1/IX-2): all-dims pruning
-    *     the grid path cannot do.
+    *   - tiles at halo reach ε over ≤ 3 spread-picked dims
+    *     ([[DbscanTiles.base]]), overfull tiles halved down to the 2ε
+    *     floor ([[DbscanTiles.fit]]) — GP-1's ownership boxes;
+    *   - each point lands in its home tile as an owner and in every tile
+    *     within ε as a ghost (GP-2, `geometric_partitioning.cpp:32-235`),
+    *     grouped by one sorted shuffle ([[DbscanTiles.groups]]);
+    *   - per tile one [[graft.functions.KdTree]] over owners + ghosts and
+    *     a radius query per owner (IX-1/IX-2): all-dims pruning the grid
+    *     path cannot do.
     *
-    * Exactly-once: a appears as OWNER in precisely its home cell, and
-    * any b with ‖a−b‖ ≤ ε is present there (owner or ghost, since
-    * |a_d − b_d| ≤ ε per dim puts a's home inside b's envelope) — so
-    * each ordered pair is emitted once, both orientations naturally.
-    * Output contract identical to [[selfJoin]]: (a_id, b_id, d2),
-    * a ≠ b, d2 bit-equal to the codegen'd squaredL2 fold.
+    * Exactly-once: a is an owner in precisely its home tile, and every b
+    * with ‖a−b‖ ≤ ε is in that tile, so each ordered pair is emitted
+    * once, both orientations naturally. Output contract identical to
+    * [[selfJoin]]: (a_id, b_id, d2), a ≠ b, d2 bit-equal to the
+    * codegen'd squaredL2 fold; rows with a null id or vector are left
+    * out.
     *
-    * Scale shape: ONE counting pass (exact per-cell row counts; only
-    * OVERFULL cells ship to the driver) + ONE hash shuffle on the
-    * (cell, salt) key with a secondary sort (tree rows before query
-    * rows), then embarrassingly-parallel local index work — no
-    * quadratic candidate stream ever materializes. Skew: a coarse cell
-    * holding more than `maxCellRows` rows is SALTED — its tree side
-    * splits into ⌈rows/cap⌉ hash groups and each of its owner queries
-    * replicates to every group, so task memory is bounded by `cap`
-    * buffered tree rows regardless of how dense the data is (each pair
-    * still meets exactly once: the tree copy of b lives in one group).
-    * Normal cells pay nothing beyond the counting pass, and the sort
-    * means a task buffers ONE cell group at a time, not every cell
-    * hashed to it.
+    * Memory: a tile still over the row cap at the floor (a dense blob)
+    * is split into ⌈rows/cap⌉ tree shards × as many query shards
+    * ([[DbscanTiles.pairRows]]), so a task buffers about one cap of tree
+    * rows plus one cap of queries, however dense the data. The input is
+    * pinned across the row count and the routed shuffle: a
+    * nondeterministic upstream re-evaluated between the two could leave
+    * a dense tile unsharded (a broken memory bound, not wrong pairs).
+    * Spark's ContextCleaner unpersists it once the result is dropped.
     *
     * Honest limit: on data that is quasi-UNIFORM across many dims at the
     * query radius, no spatial index prunes (boxes only split along
@@ -337,273 +322,61 @@ object EpsilonJoin {
     *   exact distance evaluations (the candidate count) — lets callers
     *   assert the candidate ratio stays bounded. */
   def selfJoinKd(points: DataFrame, idCol: String, vecCol: String,
-      eps: Double, partitionDims: Seq[Int], cellSize: Double,
-      distEvals: Option[org.apache.spark.util.LongAccumulator] = None,
-      maxCellRows: Int = DefaultMaxKdCellRows): DataFrame = {
-    require(partitionDims.nonEmpty, "selfJoinKd needs >= 1 partition dim " +
-      "(k = 0 has no spatial split; use selfJoin's brute path)")
-    require(cellSize >= eps,
-      s"cellSize ($cellSize) must be >= eps ($eps): smaller cells make " +
-        "the ghost envelope span many cells without pruning gain")
+      eps: Double,
+      distEvals: Option[org.apache.spark.util.LongAccumulator] = None)
+      : DataFrame =
+    selfJoinKdTiled(points, idCol, vecCol, eps, distEvals, None,
+      DbscanTiles.DefaultMaxTileRows)
+
+  /** [[selfJoinKd]] with the base tile side (None sizes it from the
+    * ranges pass, at least 2ε) and the per-tile row cap given. */
+  private[graft] def selfJoinKdTiled(points: DataFrame, idCol: String,
+      vecCol: String, eps: Double,
+      distEvals: Option[org.apache.spark.util.LongAccumulator],
+      tileWidth: Option[Double], maxTileRows: Long): DataFrame = {
     require(java.lang.Double.isFinite(eps) && eps > 0,
       s"eps must be positive and finite, got $eps")
     requireKdCompatible(points, idCol, vecCol, "selfJoinKd")
     val spark = points.sparkSession
-    val k = partitionDims.size
-    val dimsArr = partitionDims.toArray
-    val epsL = eps
-    val csL = cellSize
-    val r2 = eps * eps
-    val acc = distEvals
-    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-
-    // The point set is pinned (persisted) across the overfull-cell
-    // count probe and the routed shuffle: a nondeterministic upstream
-    // re-evaluated between the two passes could leave a genuinely
-    // dense cell unsalted (task-memory-bound violation, not wrong
-    // pairs). The base carries raw points only — no ghost
-    // multiplication — and Spark's ContextCleaner unpersists it once
-    // the result lineage is dropped.
-    val base = points.select(col(idCol).cast("long").as("id"),
-        col(vecCol).as("v"))
-      // the grid path drops null vectors through the withinEps predicate
-      // (null ⇒ filter false); the rdd path must drop them explicitly or
-      // getSeq NPEs — and a null id must not silently become 0
-      .filter(col("id").isNotNull && col("v").isNotNull)
-      .rdd
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val keyed = base
-      .flatMap { case (id, v) =>
-        // per-dim cell range touched by the ±ε envelope (home included)
-        val lo = new Array[Long](k)
-        val hi = new Array[Long](k)
-        val home = new Array[Long](k)
-        var j = 0
-        while (j < k) {
-          val x = v(dimsArr(j)).toDouble
-          lo(j) = math.floor((x - epsL) / csL).toLong
-          hi(j) = math.floor((x + epsL) / csL).toLong
-          home(j) = math.floor(x / csL).toLong
-          j += 1
-        }
-        envelopeCells(lo, hi).map { c =>
-          val key = c.toArray
-          val owner = java.util.Arrays.equals(key, home)
-          (key.toSeq, (owner, id, v))
-        }
-      }
-
-    // Exact per-cell ROW counts (owners + ghosts = what a task would
-    // buffer); only overfull cells reach the driver — their number is
-    // bounded by totalRows / cap, and in any non-adversarial geometry
-    // by the handful of genuinely dense regions. Each overfull cell
-    // maps to its salt-group count ⌈rows/cap⌉.
-    val dense: Map[Seq[Long], Int] = keyed
-      .map(kv => (kv._1, 1L)).reduceByKey(_ + _)
-      .filter(_._2 > maxCellRows)
-      .map { case (c, n) =>
-        (c, math.ceil(n.toDouble / maxCellRows).toInt)
-      }
-      .collect().toMap
-
-    // Common case — no cell exceeds the cap: keep the plain hash
-    // shuffle + per-partition cell grouping. The salted path's
-    // secondary SORT of the whole window stream is only worth paying
-    // when an overfull cell actually exists (it measured ~2× on the
-    // kdeps_synth200k diagnostic when applied unconditionally).
-    if (dense.isEmpty) {
-      val pairs = keyed
-        .partitionBy(new org.apache.spark.HashPartitioner(shufflePartitions))
-        .mapPartitions { it =>
-          // group the partition's rows by cell (several cells hash here);
-          // every cell is ≤ maxCellRows by the probe above
-          val byCell = scala.collection.mutable.HashMap
-            .empty[Seq[Long],
-              scala.collection.mutable.ArrayBuffer[(Boolean, Long, Array[Float])]]
-          it.foreach { case (cell, rec) =>
-            byCell.getOrElseUpdate(cell,
-              scala.collection.mutable.ArrayBuffer.empty) += rec
-          }
-          byCell.iterator.flatMap { case (_, rows) =>
-            // ghost-only cells (no owner) run zero queries — skip the
-            // O(m log m) tree build entirely
-            if (!rows.exists(_._1)) Iterator.empty
-            else {
-              val vecs = rows.map(_._3).toArray
-              val tree = new graft.functions.KdTree(vecs)
-              // the lazy ++ tail runs AFTER the queries exhaust, so the
-              // accumulator sees the cell's evals without materializing
-              // the cell's whole (potentially O(m²)) pair output
-              rows.iterator
-                .filter(_._1)
-                .flatMap { case (_, aId, aV) =>
-                  val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-                  tree.radiusQuery(aV, r2, (bi, d2) => {
-                    val bId = rows(bi)._2
-                    if (bId != aId) buf += Row(aId, bId, d2)
-                  })
-                  buf
-                } ++ { acc.foreach(_.add(tree.distEvals)); Iterator.empty }
-            }
-          }
-        }
-      return spark.createDataFrame(pairs, pairSchema)
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    DbscanTiles.base(points, vecCol, eps, Nil, tileWidth, "eps-pairs") match {
+      case None => emptyPairs(spark)
+      case Some(base) =>
+        val rows = DbscanTiles.points(points, idCol, vecCol)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        val (tiles, over) =
+          DbscanTiles.fit(rows, base, maxTileRows, partitions, "eps-pairs")
+        val shards = over.map { case (leaf, n) =>
+          leaf -> math.ceil(n.toDouble / maxTileRows).toInt }
+        val r2 = eps * eps
+        spark.createDataFrame(
+          DbscanTiles.groups(rows, partitions)(tiles.pairRows(shards))
+            .flatMap(tilePairs(_, r2, distEvals)),
+          pairSchema)
     }
-    val denseB = spark.sparkContext.broadcast(dense)
-
-    // route: role 0 = tree row, role 1 = replicated owner query.
-    // Normal cells ship one role-0 record per row (owner flag decides
-    // who queries, as before). Salted cells ship each row as a tree
-    // record into ONE hash group (owner flag off — its query runs via
-    // the role-1 replicas) plus, for owners, one query record per
-    // group: pair (a, b) is found exactly where b's tree copy lives.
-    type Rec = (Boolean, Long, Array[Float])
-    val routed = keyed.flatMap { case (cell, rec) =>
-      denseB.value.get(cell) match {
-        case None => Iterator(((cell, 0, 0), rec))
-        case Some(s) =>
-          val (owner, id, v) = rec
-          val g = (java.lang.Long
-            .hashCode(id * 0x9E3779B97F4A7C15L) & 0x7fffffff) % s
-          val tree = Iterator(((cell, g, 0), (false, id, v)))
-          if (owner)
-            tree ++ (0 until s).iterator.map(gq =>
-              ((cell, gq, 1), (true, id, v)))
-          else tree
-      }
-    }
-
-    // secondary sort: all records of a (cell, group) arrive contiguous,
-    // tree rows (role 0) before query rows (role 1) — a task buffers at
-    // most `maxCellRows` tree rows and streams everything else
-    import scala.math.Ordering.Implicits.seqOrdering
-    implicit val keyOrd: Ordering[(Seq[Long], Int, Int)] =
-      Ordering.Tuple3(seqOrdering[Seq, Long], Ordering.Int, Ordering.Int)
-    val partitioner = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = shufflePartitions
-      override def getPartition(key: Any): Int = {
-        val (cell, g, _) = key.asInstanceOf[(Seq[Long], Int, Int)]
-        (((cell, g).hashCode() % numPartitions) + numPartitions) %
-          numPartitions
-      }
-    }
-    val sorted = routed.repartitionAndSortWithinPartitions(partitioner)
-
-    val pairs = sorted.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[Row] {
-        private var out: Iterator[Row] = Iterator.empty
-        private def startGroup(): Unit = {
-          val (cell, g, _) = buf.head._1
-          def sameGroup: Boolean = buf.hasNext && {
-            val (c2, g2, _) = buf.head._1; c2 == cell && g2 == g
-          }
-          // role-0 prefix: the group's tree rows (bounded by the cap)
-          val rows = scala.collection.mutable.ArrayBuffer.empty[Rec]
-          while (sameGroup && buf.head._1._3 == 0) rows += buf.next()._2
-          val anyBufferedOwner = rows.exists(_._1)
-          if (rows.isEmpty || (!anyBufferedOwner && !sameGroup)) {
-            // ghost-only / query-less group: drain stray queries, skip
-            // the O(m log m) tree build entirely
-            while (sameGroup) buf.next()
-            out = Iterator.empty
-          } else {
-            val tree = new graft.functions.KdTree(rows.map(_._3).toArray)
-            def query(aId: Long, aV: Array[Float]): Iterator[Row] = {
-              val hits = scala.collection.mutable.ArrayBuffer.empty[Row]
-              tree.radiusQuery(aV, r2, (bi, d2) => {
-                val bId = rows(bi)._2
-                if (bId != aId) hits += Row(aId, bId, d2)
-              })
-              hits.iterator
-            }
-            val fromBuffered = rows.iterator
-              .filter(_._1).flatMap(r => query(r._2, r._3))
-            val fromStreamed = new Iterator[Row] {
-              private var cur: Iterator[Row] = Iterator.empty
-              override def hasNext: Boolean = {
-                while (!cur.hasNext && sameGroup) {
-                  val (_, qId, qV) = buf.next()._2
-                  cur = query(qId, qV)
-                }
-                cur.hasNext
-              }
-              override def next(): Row = { hasNext; cur.next() }
-            }
-            // the lazy ++ tail runs AFTER the queries exhaust, so the
-            // accumulator sees the group's evals without materializing
-            // its whole (potentially O(m²)) pair output in memory
-            out = fromBuffered ++ fromStreamed ++ {
-              acc.foreach(_.add(tree.distEvals)); Iterator.empty
-            }
-          }
-        }
-        override def hasNext: Boolean = {
-          while (!out.hasNext && buf.hasNext) startGroup()
-          out.hasNext
-        }
-        override def next(): Row = { hasNext; out.next() }
-      }
-    }
-    spark.createDataFrame(pairs, pairSchema)
   }
 
-  /** Per-task buffered-row cap for [[selfJoinKd]]'s coarse cells —
-    * beyond it a cell salts into multiple tree groups. 256k rows of
-    * 32-d floats ≈ 45 MB of vectors + the index permutation: a few
-    * concurrent tasks fit comfortably in an executor heap. */
-  val DefaultMaxKdCellRows: Int = 262144
-
-  /** Shared kd partition heuristic: one aggregate pass over `df` picks
-    * the coarse-grid dims (widest spread first, ≤ `maxDims`, zero-range
-    * dims dropped) and the cell size (grid yields ≈ `cellsPerCore` ×
-    * shuffle-parallelism cells, clamped ≥ ε so the ghost envelope stays
-    * ≤ 2–3 cells per dim). `fixedDims`, when non-empty, are taken as
-    * the dims instead (the pass then only sizes the cells). Returns None
-    * for an empty/all-null input; a degenerate input (every point
-    * identical along every dim) gets the one-cell fallback
-    * `(Seq(0), eps)`. */
-  private[operators] def kdHeuristic(df: DataFrame, vecCol: String,
-      eps: Double, maxDims: Int, cellsPerCore: Int, desc: String,
-      fixedDims: Seq[Int] = Nil): Option[(Seq[Int], Double)] = {
-    val spark = df.sparkSession
-    val scanned =
-      if (fixedDims.nonEmpty) fixedDims
-      else 0 until graft.functions.VectorOps.probeDim(df, vecCol).getOrElse(0)
-    if (scanned.isEmpty) return None
-    val aggs = scanned.flatMap { d =>
-      val c = element_at(col(vecCol), d + 1).cast("double")
-      Seq(min(c).as(s"mn$d"), max(c).as(s"mx$d"))
-    }
-    val row = ConnectedComponents.withJobDesc(df, s"$desc: ranges") {
-      df.agg(aggs.head, aggs.tail: _*).first()
-    }
-    if (row.isNullAt(0)) return None // every vector null
-    val spans = scanned.indices
-      .map(i => scanned(i) -> (row.getDouble(2 * i + 1) - row.getDouble(2 * i)))
-    val ranges =
-      if (fixedDims.nonEmpty) spans
-      else spans.sortBy { case (d, r) => (-r, d) }.take(maxDims).filter(_._2 > 0)
-    if (ranges.isEmpty) return Some((Seq(0), eps))
-    val dims = ranges.map(_._1)
-    val targetCells =
-      math.max(1, cellsPerCore * spark.sessionState.conf.numShufflePartitions)
-    val volume = ranges.map(_._2).product
-    Some((dims,
-      math.max(eps, math.pow(volume / targetCells, 1.0 / dims.size))))
+  /** The pairs of one tile group: one kd-tree over its index rows (every
+    * role but `Query`) and a radius query per query row (every role but
+    * `Ghost`). */
+  private def tilePairs(
+      rows: scala.collection.mutable.ArrayBuffer[DbscanTiles.TileRow], r2: Double,
+      acc: Option[org.apache.spark.util.LongAccumulator]): Iterator[Row] = {
+    val queries = rows.filter(_._1 != DbscanTiles.Ghost)
+    // a ghost-only tile runs no query: skip the O(m log m) tree build
+    if (queries.isEmpty) return Iterator.empty
+    val indexed = rows.filter(_._1 != DbscanTiles.Query)
+    val tree = new graft.functions.KdTree(indexed.map(_._3).toArray)
+    // the lazy ++ tail runs AFTER the queries exhaust, so the accumulator
+    // sees the tile's evals without materializing its whole (potentially
+    // O(m²)) pair output
+    queries.iterator.flatMap { case (_, aId, aV) =>
+      val hits = scala.collection.mutable.ArrayBuffer.empty[Row]
+      tree.radiusQuery(aV, r2, (bi, d2) => {
+        val bId = indexed(bi)._2
+        if (bId != aId) hits += Row(aId, bId, d2)
+      })
+      hits
+    } ++ { acc.foreach(_.add(tree.distEvals)); Iterator.empty }
   }
-
-  /** [[selfJoinKd]] with the automatic [[kdHeuristic]] partition-dim
-    * and cell-size choice. */
-  def selfJoinKdAuto(points: DataFrame, idCol: String, vecCol: String,
-      eps: Double, maxDims: Int = 3, cellsPerCore: Int = 4,
-      distEvals: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame =
-    kdHeuristic(points, vecCol, eps, maxDims, cellsPerCore,
-      "selfJoinKdAuto") match {
-      case None => emptyPairs(points.sparkSession)
-      case Some((dims, cellSize)) =>
-        selfJoinKd(points, idCol, vecCol, eps, dims, cellSize, distEvals)
-    }
 }

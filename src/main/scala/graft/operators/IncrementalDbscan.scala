@@ -243,7 +243,7 @@ object IncrementalDbscan {
   private[graft] def fold(st: State, added: Option[DataFrame],
       removedIds: Option[DataFrame], eps: Double, minPts: Int,
       bucketDims: Seq[Int], tileWidth: Option[Double] = None,
-      maxTileRows: Long = EpsilonJoin.DefaultMaxKdCellRows): State = {
+      maxTileRows: Long = DbscanTiles.DefaultMaxTileRows): State = {
     val spark = st.points.sparkSession
     val partitions = spark.sessionState.conf.numShufflePartitions
     added.foreach(requireFreshIds(st, _))
@@ -255,13 +255,14 @@ object IncrementalDbscan {
     val unchanged = State(points, st.counts,
       rm.fold(st.coreComp)(st.coreComp.join(_, Seq("id"), "left_anti")),
       st.borderPairs)
-    val base = DbscanTiles.base(all, "vec", eps, bucketDims, tileWidth,
+    val base = DbscanTiles.base(all, "vec", 2 * eps, bucketDims, tileWidth,
         "incr-dbscan: tile", FoldCellsPerCore) match {
       case None => return unchanged // no vector to cluster
       case Some(b) => b
     }
     val corpus = DbscanTiles.points(points, "id", "vec")
-    val tiles = DbscanTiles.fit(corpus, base, maxTileRows, partitions)
+    val (tiles, _) =
+      DbscanTiles.fit(corpus, base, maxTileRows, partitions, "incr-dbscan")
     // 1. the tiles within 2ε of a changed point (an added point, or a
     //    removed point with an ε-neighbor) ...
     val changed = DbscanTiles.points((rm.map(r => st.points
@@ -302,7 +303,8 @@ object IncrementalDbscan {
     // concurrent query stages would otherwise each run the kernels
     val facts = ConnectedComponents.withJobDesc(spark.sparkContext,
         "incr-dbscan: tile kernel") { spark.createDataFrame(
-        DbscanTiles.groups(corpus, tiles, partitions, touched).flatMap { t =>
+        DbscanTiles.groups(corpus, partitions)(
+            tiles.rows(_, _).filter(r => touched(r._1))).flatMap { t =>
           val owned = t.map(_._1 != DbscanTiles.Ghost).toArray
           if (!owned.contains(true)) Iterator.empty
           else IncrDbscanLocal.stateFacts(t.map(_._2).toArray,

@@ -19,7 +19,7 @@ class DbscanTilesSpec extends SparkSpec {
   private def tilesOf(pts: DataFrame, dims: Seq[Int], width: Double,
       eps: Double, maxRows: Long): DbscanTiles =
     DbscanTiles.fit(pts.rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
-      new DbscanTiles(dims.toArray, width, eps), maxRows, 8)
+      new DbscanTiles(dims.toArray, width, 2 * eps), maxRows, 8, "dbscan")._1
 
   /** Labels of every geometry, keyed by name; the fused path first. */
   private def byGeometry(pts: DataFrame, eps: Double, minPts: Int,
@@ -71,7 +71,7 @@ class DbscanTilesSpec extends SparkSpec {
       Seq(i * 0.5f, c * 5.0f))
     val pts = points(chains)
     val eps = 0.6
-    val floorTiles = new DbscanTiles(Array(0, 1), 4 * eps, eps)
+    val floorTiles = new DbscanTiles(Array(0, 1), 4 * eps, 2 * eps)
     val homes = chains.filter(_._2(1) == 0f)
       .map(p => floorTiles.route(p._2.toArray)._1).distinct
     assert(homes.size >= 5, s"chain crosses only ${homes.size} tiles")
@@ -113,6 +113,33 @@ class DbscanTilesSpec extends SparkSpec {
       .persist()
     assert(pts.filter(col("features")(0) < 0).count() > 0)
     assertInvariant(pts, 1.0, 5, Seq(0, 1))
+    pts.unpersist()
+  }
+
+  test("a blob over the row cap at the 4ε floor: fit reports its tile, " +
+      "and the tile path, which runs it whole, == fused") {
+    val eps = 1.0
+    val cap = 200L
+    val rnd = new scala.util.Random(7)
+    // 600 points inside the 4ε tile [8, 12)², 800 spread over 60 × 60
+    val blob = (0 until 600).map(i =>
+      i.toLong -> Seq(8.5f + 3f * rnd.nextFloat(), 8.5f + 3f * rnd.nextFloat()))
+    val spread = (600 until 1400).map(i =>
+      i.toLong -> Seq(60f * rnd.nextFloat(), 60f * rnd.nextFloat()))
+    val pts = points(blob ++ spread).persist()
+    val (tiles, over) = DbscanTiles.fit(
+      pts.rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
+      new DbscanTiles(Array(0, 1), 4 * eps, 2 * eps), cap, 8, "dbscan")
+    val blobTile = tiles.home(Array(10f, 10f))
+    assert(over.get(blobTile).exists(_ >= 600),
+      s"fit must report the blob's tile, got $over")
+    assert(over.keys.forall(!tiles.canSplit(_)))
+    val fused = labels(Dbscan.run(pts, "id", "features", eps, 5, Seq(0, 1),
+      localThreshold = Long.MaxValue))
+    val tiled = labels(Dbscan.runTiled(pts, "id", "features", eps, 5,
+      Seq(0, 1), 2, Some(4 * eps), cap))
+    assert(fused.values.exists(_ > 0), "degenerate fixture: no clusters")
+    assert(tiled == fused)
     pts.unpersist()
   }
 }

@@ -118,8 +118,8 @@ class EpsilonSaltSpec extends SparkSpec {
     val eps = 1.0
     val pts = skewed(1500, 3, eps).persist()
     val rows = pts.rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val tiles = DbscanTiles.fit(rows,
-      new DbscanTiles(Array(0, 1), 64 * eps, eps), 40L, 4)
+    val (tiles, _) = DbscanTiles.fit(rows,
+      new DbscanTiles(Array(0, 1), 64 * eps, 2 * eps), 40L, 4, "dbscan")
     assert(tiles.split.nonEmpty, "a 40-row cap must split 64ε tiles")
     val fused = Dbscan.run(pts, "id", "features", eps, 3, Seq(0, 1),
         localThreshold = 1_000_000L)

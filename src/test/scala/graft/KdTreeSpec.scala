@@ -1,14 +1,14 @@
 package graft
 
 import graft.functions.KdTree
-import graft.operators.EpsilonJoin
+import graft.operators.{DbscanTiles, EpsilonJoin}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** High-dimensional ε-join fallback (VERDICT r4 gap #3): the
-  * per-partition kd-tree path must equal the grid/brute path exactly and
-  * prune candidates the 3-dim grid cannot. */
+/** High-dimensional ε-join (VERDICT r4 gap #3): the tiled kd-tree path
+  * must equal the grid/brute path exactly and prune candidates the
+  * 3-dim grid cannot. */
 class KdTreeSpec extends SparkSpec {
 
   /** Deterministic pseudo-random floats in [0, scale): splitmix-style
@@ -69,7 +69,7 @@ class KdTreeSpec extends SparkSpec {
     val brute = toMap(EpsilonJoin.selfJoin(emb, "vec_id", "embedding", eps, Nil))
     val acc = spark.sparkContext.longAccumulator("kd-dist-evals")
     val kd = toMap(EpsilonJoin.selfJoinKd(emb, "vec_id", "embedding", eps,
-      partitionDims = Seq(0, 1, 2), cellSize = 2 * eps, distEvals = Some(acc)))
+      distEvals = Some(acc)))
     assert(kd.keySet == brute.keySet)
     kd.foreach { case (k, d2) => assert(d2 == brute(k), s"d2 differs at $k") }
     // No candidate bound HERE: these embeddings are quasi-uniform within
@@ -101,15 +101,14 @@ class KdTreeSpec extends SparkSpec {
     val expect = EpsilonJoin.selfJoin(clean, "id", "features", eps, Nil)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val kd = EpsilonJoin.selfJoinKd(df, "id", "features", eps,
-        partitionDims = Seq(0), cellSize = eps)
+    val kd = EpsilonJoin.selfJoinKd(df, "id", "features", eps)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kd == expect)
     df.unpersist()
   }
 
-  test("selfJoinKdAuto matches and prunes on clustered high-d data") {
+  test("selfJoinKd matches and prunes on clustered high-d data") {
     // 3 well-separated 16-d blobs: cross-cluster subtrees must be pruned
     val n = 1500
     val d = 16
@@ -129,7 +128,7 @@ class KdTreeSpec extends SparkSpec {
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val acc = spark.sparkContext.longAccumulator("kd-dist-evals-auto")
-    val kd = EpsilonJoin.selfJoinKdAuto(df, "id", "features", eps,
+    val kd = EpsilonJoin.selfJoinKd(df, "id", "features", eps,
         distEvals = Some(acc))
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -188,49 +187,125 @@ class KdTreeSpec extends SparkSpec {
 
     // direct kd entry points reject the incompatible schema loudly
     intercept[IllegalArgumentException] {
-      EpsilonJoin.selfJoinKd(dbl, "id", "features", eps, Seq(0), eps)
+      EpsilonJoin.selfJoinKd(dbl, "id", "features", eps)
     }
     intercept[IllegalArgumentException] {
-      EpsilonJoin.selfJoinKd(str, "id", "features", eps, Seq(0), eps)
+      EpsilonJoin.selfJoinKd(str, "id", "features", eps)
     }
     dbl.unpersist(); str.unpersist()
   }
 
-  test("overfull coarse cell salts: pair set identical, memory bounded") {
-    // 80% of the points pile into ONE coarse cell (a dense blob far from
-    // everything else), the rest scatter; a tiny cap forces the blob's
-    // cell into many salt groups. The salted pair set (and d2 values)
-    // must equal the unsalted run's and the grid path's bit for bit.
-    val n = 4000
-    val d = 6
-    val rows = (0 until n).map { i =>
+  /** 80% of the points pile into ONE ε-sized blob far from everything
+    * else, the rest scatter. */
+  private def denseBlob(n: Int, d: Int): Seq[(Long, Array[Float])] =
+    (0 until n).map { i =>
       val dense = i % 5 != 0 // 80%
-      Row(i.toLong, Array.tabulate(d) { j =>
+      i.toLong -> Array.tabulate(d) { j =>
         if (dense) 50f + coord(i, j, 1f) // one eps-sized blob
         else coord(i, j, 40f)
-      }.toSeq)
+      }
     }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 8),
+
+  private def pointsDf(pts: Seq[(Long, Array[Float])], parts: Int) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        pts.map { case (id, v) => Row(id, v.toSeq) }, parts),
       StructType(Seq(
         StructField("id", LongType, nullable = false),
         StructField("features", ArrayType(FloatType, containsNull = false),
-          nullable = false)))).persist()
+          nullable = false))))
+
+  private def pairMap(res: org.apache.spark.sql.DataFrame) =
+    res.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+      .toMap
+
+  test("overfull floor tile shards: pair set identical, memory bounded") {
+    // a tiny cap keeps the blob's 2ε-floor tile over it, so it shards;
+    // the sharded pair set (and d2 values) must equal the unsharded
+    // run's and the grid path's bit for bit
     val eps = 0.5
-    def toMap(res: org.apache.spark.sql.DataFrame) =
-      res.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-        .toMap
-    val unsalted = toMap(EpsilonJoin.selfJoinKd(df, "id", "features", eps,
-      partitionDims = Seq(0, 1), cellSize = eps))
-    // cap 200 over a ~3200-row cell -> 16 salt groups
-    val salted = toMap(EpsilonJoin.selfJoinKd(df, "id", "features", eps,
-      partitionDims = Seq(0, 1), cellSize = eps, maxCellRows = 200))
-    assert(salted == unsalted)
-    val grid = toMap(EpsilonJoin.selfJoin(df, "id", "features", eps,
+    val pts = denseBlob(4000, 6)
+    val df = pointsDf(pts, 8).persist()
+    val unsharded = pairMap(EpsilonJoin.selfJoinKdTiled(df, "id", "features",
+      eps, None, Some(2 * eps), Long.MaxValue))
+    // cap 200 over the ~3200-row blob tile of selfJoinKd's geometry ->
+    // >= 16 tree shards × as many query shards
+    val base = DbscanTiles.base(df, "features", eps, Nil, Some(2 * eps),
+      "spec").get
+    val (_, over) = DbscanTiles.fit(spark.sparkContext.parallelize(pts, 8),
+      base, 200L, 8, "spec")
+    assert(over.values.exists(n => math.ceil(n / 200.0) >= 4),
+      s"the cap must force >= 4 shards, got leftovers $over")
+    val sharded = pairMap(EpsilonJoin.selfJoinKdTiled(df, "id", "features",
+      eps, None, Some(2 * eps), 200L))
+    assert(sharded == unsharded)
+    val grid = pairMap(EpsilonJoin.selfJoin(df, "id", "features", eps,
       Seq(0, 1)))
-    assert(salted == grid)
-    assert(salted.nonEmpty && salted.keys.exists { case (a, b) =>
+    assert(sharded == grid)
+    assert(sharded.nonEmpty && sharded.keys.exists { case (a, b) =>
       a % 5 != 0 && b % 5 != 0 }) // dense-blob pairs actually flowed
+    df.unpersist()
+  }
+
+  test("floor tile shard routing bounds a group to a quarter of the blob") {
+    // Spark-free: route the 4000 points through 2ε-floor tiles over
+    // dims (0, 1) the way selfJoinKd does, with and without sharding
+    val eps = 0.5
+    val cap = 200L
+    val pts = denseBlob(4000, 6)
+    val tiles = new DbscanTiles(Array(0, 1), 2 * eps, eps)
+    def groupSizes(shards: Map[Vector[Long], Int]): Map[Vector[Long], Int] =
+      pts.flatMap { case (id, v) => tiles.pairRows(shards)(id, v) }
+        .groupBy(_._1).map { case (k, rs) => k -> rs.size }
+    val whole = groupSizes(Map.empty)
+    val blob = whole.values.max
+    assert(blob >= 3200, s"the blob tile holds only $blob rows")
+    val shards = whole.collect { case (leaf, n) if n > cap =>
+      leaf -> math.ceil(n.toDouble / cap).toInt }
+    assert(shards.values.max >= 4)
+    val sharded = groupSizes(shards)
+    assert(sharded.values.max <= blob / 4,
+      s"largest sharded group ${sharded.values.max} > a quarter of $blob")
+    // in a sharded tile, each owner (as a query) and each row (in an
+    // index) meet in exactly one of the s² groups
+    shards.foreach { case (leaf, s) =>
+      val inLeaf = pts.flatMap { case (id, v) => tiles.rows(id, v) }
+        .filter(_._1 == leaf).map(_._2)
+      val groups = pts.flatMap { case (id, v) => tiles.pairRows(shards)(id, v) }
+        .filter(_._1.startsWith(leaf))
+      assert(groups.map(_._1).distinct.size == s * s)
+      def groupsOf(role: Byte) = groups.filter(_._2._1 == role)
+        .groupMap(_._2._2)(_._1).view.mapValues(_.toSet).toMap
+      val asQuery = groupsOf(DbscanTiles.Query)
+      val asIndex = groupsOf(DbscanTiles.Ghost)
+      val owners = inLeaf.filter(_._1 != DbscanTiles.Ghost).map(_._2)
+      assert(asQuery.keySet == owners.toSet && asIndex.size == inLeaf.size)
+      owners.take(50).foreach { a =>
+        inLeaf.foreach { case (_, b, _) =>
+          assert((asQuery(a) intersect asIndex(b)).size == 1,
+            s"owner $a and row $b must meet in exactly one group")
+        }
+      }
+    }
+  }
+
+  test("selfJoinKd: pair set and d2 equal at 1, 3 and 7 shuffle partitions") {
+    val n = 1500
+    val d = 16
+    val df = pointsDf((0 until n).map { i =>
+      i.toLong -> Array.tabulate(d)(j => (i % 3) * 100f + coord(i, j, 5f))
+    }, 4).persist()
+    val eps = 2.5
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val byParts = try Seq(1, 3, 7).map { p =>
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      p -> pairMap(EpsilonJoin.selfJoinKd(df, "id", "features", eps))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val (_, first) = byParts.head
+    assert(first.nonEmpty)
+    byParts.tail.foreach { case (p, got) =>
+      assert(got == first, s"$p partitions differ from 1")
+    }
     df.unpersist()
   }
 }

@@ -64,8 +64,7 @@ class PropertySpec extends SparkSpec {
       // the kd path must produce the identical pair set from the same
       // input (different physical route, same contract)
       val kd = EpsilonJoin
-        .selfJoinKd(pointDf(pts, 3), "id", "features", eps,
-          partitionDims = Seq(0), cellSize = 2 * eps)
+        .selfJoinKd(pointDf(pts, 3), "id", "features", eps)
         .select("a_id", "b_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       got == ref && kd == ref
