@@ -65,12 +65,13 @@ object ConnectedComponents extends Serializable {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** One-pass union-find over (src, dst) long rows → (node, min-root)
-    * rows. Shared by the per-partition contraction and the small-graph
-    * driver finish — one implementation, one set of invariants (min-root
-    * union, path compression, keys materialized before the compressing
-    * find pass). */
-  private def unionFindRows(rows: Iterator[Row]): Iterator[Row] = {
+  /** One-pass union-find over (src, dst) edges → (node, min-root)
+    * pairs. Shared by the per-partition contraction, the small-graph
+    * driver finish and [[Dbscan]]'s driver merge of cross-tile links —
+    * one implementation, one set of invariants (min-root union, path
+    * compression, keys materialized before the compressing find pass). */
+  private[operators] def unionFindRows(
+      edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
     val parent = mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -80,15 +81,18 @@ object ConnectedComponents extends Serializable {
       while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    rows.foreach { row =>
-      val a = find(row.getLong(0)); val b = find(row.getLong(1))
+    edges.foreach { case (src, dst) =>
+      val a = find(src); val b = find(dst)
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
     }
     // materialize keys first: find() path-compresses (mutates values)
     val ks = parent.keys.toArray
-    ks.iterator.map(n => Row(n, find(n)))
+    ks.iterator.map(n => (n, find(n)))
   }
+
+  /** Default row cap of the driver finish (see [[run]]). */
+  val SmallGraphThreshold: Long = 2_000_000L
 
   private val starSchema = StructType(Seq(
     StructField("src", LongType, nullable = false),
@@ -100,27 +104,30 @@ object ConnectedComponents extends Serializable {
   private def contract(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val rdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.mapPartitions(it => unionFindRows(it))
+      .rdd.mapPartitions(it => unionFindRows(
+        it.map(r => (r.getLong(0), r.getLong(1)))).map(e => Row(e._1, e._2)))
     spark.createDataFrame(rdd, starSchema)
   }
 
   /** @param edges DataFrame with long columns (`src`, `dst`); treated as
     *              undirected. Isolated nodes can be passed as self-loops.
-    * @param smallGraphThreshold if the CONTRACTED star graph (≤ one row per
-    *   distinct node per partition — already collapsed, not the raw edge
-    *   list) fits under this many rows, finish the union-find on the driver
-    *   in one pass instead of running the iterative join loop. This is the
-    *   same shape as the reference's centralized root bookkeeping
-    *   (`dbscan.cpp:347-402` gathers per-rank root counts at every rank);
-    *   for graphs beyond the threshold the distributed loop below is the
-    *   scale path. 2M rows collect as ~2M GenericRow objects (two boxed
-    *   longs + headers each) ≈ 300-400 MB of driver heap — fine under the
-    *   8g default driver, lower the threshold for smaller drivers; a
-    *   100 TB input with billions of cores takes the loop.
+    * @param smallGraphThreshold if every partition of the CONTRACTED star
+    *   graph (≤ one row per distinct node per partition — already
+    *   collapsed, not the raw edge list) holds at most its share of this
+    *   many rows (threshold ÷ partitions, [[Dispatch.gather]]), finish the
+    *   union-find on the driver in one pass instead of running the
+    *   iterative join loop. This is the same shape as the reference's
+    *   centralized root bookkeeping (`dbscan.cpp:347-402` gathers per-rank
+    *   root counts at every rank); for graphs beyond the threshold the
+    *   distributed loop below is the scale path. 2M rows gather as 2M
+    *   (long, long) tuples plus the union-find's map, a few hundred MB of
+    *   driver heap at most — fine under the 8g default driver, lower the
+    *   threshold for smaller drivers; a 100 TB input with billions of
+    *   cores takes the loop.
     * @return (`id`, `comp`) — comp = min node id in the component.
     */
   def run(edges: DataFrame, maxIter: Int = 50,
-      smallGraphThreshold: Long = 2_000_000L): DataFrame =
+      smallGraphThreshold: Long = SmallGraphThreshold): DataFrame =
     runLevel(edges, maxIter, smallGraphThreshold, 0)
 
   private def runLevel(edges: DataFrame, maxDepth: Int,
@@ -132,16 +139,17 @@ object ConnectedComponents extends Serializable {
     // Phase 1: partition-local contraction to star edges.
     val stars = contract(edges).persist()
 
-    // Size probe and driver fetch in ONE action: limit(threshold+1) stops
-    // early on big graphs; on small ones the result IS the whole graph.
-    val probe = withJobDesc(stars, s"cc: level $depth contract + size probe") {
-      stars.limit(
-        math.min(smallGraphThreshold + 1, Int.MaxValue).toInt).collect()
-    }
-    if (probe.length <= smallGraphThreshold) {
+    // Size probe and driver fetch in ONE job: each partition stops at
+    // its share of the threshold; on small graphs the result IS the
+    // whole graph.
+    val probe = Dispatch.gather(stars.select(col("src"), col("dst"))
+        .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1))),
+      s"cc: level $depth contract + size probe", smallGraphThreshold)
+    if (probe.isDefined) {
       // Small contracted graph: single-pass driver union-find.
       val spark = edges.sparkSession
-      val out = unionFindRows(probe.iterator).toArray
+      val out = unionFindRows(probe.get.iterator).map(e => Row(e._1, e._2))
+        .toArray
       stars.unpersist()
       return spark.createDataFrame(
         spark.sparkContext.parallelize(out.toSeq,

@@ -14,9 +14,9 @@ import scala.collection.mutable
   *   tile grid + 2ε ghost halo (DbscanTiles) ≈ geometric partition + halo
   *   LocalDbscan per tile, one shuffle       ≈ local neighbor search, core test
   *                                             and union-find (dbscan.cpp:720-788)
-  *   connected components on cross-tile
-  *     links only                            ≈ merge of cross-partition edges
-  *                                             (dbscan.cpp:847-1012)
+  *   driver union-find over cross-tile
+  *     links, ConnectedComponents above
+  *     the cap                               ≈ dbscan.cpp:347-402
   *   border attach + dense labels            ≈ get_clusters_distributed (dbscan.cpp:125-506)
   *
   * Semantics preserved from the reference:
@@ -31,23 +31,24 @@ import scala.collection.mutable
   *    deterministic and partition-count invariant.
   *
   * No ε-pair is ever materialized: the shuffles move points to tiles
-  * and per-point facts to the merge; only overfull tile keys, and the
-  * contracted link graph when it fits CC's driver finish, reach the
-  * driver. Per-task memory is one tile, capped by halving overfull
-  * tiles down to the 4ε floor.
+  * and per-point facts to the merge; only overfull tile keys, the
+  * cross-tile links when they fit CC's driver cap, and the ids of the
+  * kept clusters reach the driver. Per-task memory is one tile, capped
+  * by halving overfull tiles down to the 4ε floor.
   */
 object Dbscan {
 
   /** Dense cluster ids 1..K ordered by comp, for components of at
-    * least `minClusterSize` members: (comp, cluster_id: int).
+    * least `minClusterSize` members: (comp, cluster_id: int) — the
+    * labels of [[IncrementalDbscan.labels]] ([[runTiled]] gives the same
+    * ids from its collected comps).
     *
     * The rank runs as a window over ONE coalesced partition — and that
-    * is the scale-honest shape, not a shortcut: every consumer
-    * broadcast-joins this table back to the points (here and in
-    * [[IncrementalDbscan.labels]]), so the comp count is bounded by
-    * the broadcast contract ANYWAY — a comp table too big to sort in
-    * one task would have killed the broadcast join first. `coalesce(1)`
-    * reports SinglePartition, so the window plans with NO added
+    * is the scale-honest shape, not a shortcut: the consumer
+    * broadcast-joins this table back to the points, so the comp count
+    * is bounded by the broadcast contract ANYWAY — a comp table too big
+    * to sort in one task would have killed the broadcast join first.
+    * `coalesce(1)` reports SinglePartition, so the window plans with NO added
     * exchange (the r9 rowNumbersLazy scheme spent ~4 exchanges + a
     * boundary-sampling range shuffle per labels() call — measured
     * ~2 s/query at sf0.1; this is the round-10 adjudication fix). */
@@ -106,13 +107,14 @@ object Dbscan {
   def run(points: DataFrame, idCol: String, vecCol: String,
       eps: Double, minPts: Int, bucketDims: Seq[Int],
       minClusterSize: Int = 2, localThreshold: Long = 100_000L): DataFrame = {
-    // the point table is scanned by the tile passes and the final label
-    // join — cache it once (no-op if the caller already persisted it)
+    // the point table is scanned by the tile passes and the labels'
+    // null-row scan — cache it once (no-op if the caller already
+    // persisted it)
     val pts = points.persist()
 
-    // Small-input fast path: even the tile pipeline costs ~10 Spark jobs,
-    // each ~0.1-0.3 s of orchestration in local mode. Below the
-    // threshold, run the whole clustering in ONE task with the
+    // Small-input fast path: even the tile pipeline costs 3 Spark jobs
+    // before the caller's own, each ~0.1-0.3 s of orchestration in local
+    // mode. Below the threshold, run the whole clustering in ONE task with the
     // grid-indexed LocalDbscan kernel — the same kernel every tile runs,
     // with the same canonical labels (same distance fold, same min-id
     // component labels, same dense-id ordering). The size probe
@@ -159,44 +161,71 @@ object Dbscan {
     * cap's. ([[EpsilonJoin.selfJoinKd]] shards such a tile; the DBSCAN
     * kernel needs a tile's whole 2ε neighbourhood at once.)
     *
+    * Three described jobs before the caller's action, when no tile
+    * needs counting: `dbscan: tile: ranges` sizes the grid,
+    * `dbscan: tile kernel` runs the kernels, caches their facts and
+    * gathers the cross-tile links to one min-id union-find on the
+    * driver, and `dbscan: cluster sizes` applies it, caches one
+    * `(id, comp)` row per point and collects the comps kept as
+    * clusters. The labels are a narrow map over that cache. More
+    * vectors than `maxTileRows` add one `dbscan: tile row counts` job
+    * per [[DbscanTiles.fit]] round; a task whose links exceed its share
+    * of `maxDriverLinks` sends the merge through [[ConnectedComponents]].
+    *
     * @param tileWidth the base tile side; None sizes it from the same
     *   ranges pass as [[EpsilonJoin.selfJoinKd]]'s tiles, at least 4ε
     * @param maxTileRows owners + ghosts a tile may hold before it is
-    *   halved (down to the 4ε floor) — the per-task memory bound */
+    *   halved (down to the 4ε floor) — the per-task memory bound
+    * @param maxDriverLinks the links the driver merges at most (see
+    *   [[Dispatch.gather]]); the default is CC's driver cap */
   private[graft] def runTiled(pts: DataFrame, idCol: String,
       vecCol: String, eps: Double, minPts: Int, bucketDims: Seq[Int],
       minClusterSize: Int, tileWidth: Option[Double] = None,
-      maxTileRows: Long = DbscanTiles.DefaultMaxTileRows): DataFrame = {
+      maxTileRows: Long = DbscanTiles.DefaultMaxTileRows,
+      maxDriverLinks: Long = ConnectedComponents.SmallGraphThreshold)
+      : DataFrame = {
     val spark = pts.sparkSession
+    val sc = spark.sparkContext
     val partitions = spark.sessionState.conf.numShufflePartitions
     val cast = pts.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<float>").as("v"))
     val grid = DbscanTiles.base(pts, vecCol, 2 * eps, bucketDims, tileWidth,
       "dbscan: tile")
-    val labeledRows = grid match {
-      case None => spark.sparkContext.emptyRDD[Row] // no vector to cluster
-      case Some(base) =>
+    val labelRows = grid match {
+      case None => sc.emptyRDD[Row] // no vector to cluster
+      case Some((base, vectors)) =>
         val rows = DbscanTiles.points(cast, "id", "v")
-        val (tiles, _) =
-          DbscanTiles.fit(rows, base, maxTileRows, partitions, "dbscan")
+        val (tiles, _) = DbscanTiles.fit(rows, base, maxTileRows, partitions,
+          "dbscan", vectors)
         val facts = tileFacts(rows, tiles, eps, minPts, partitions).persist()
-
-        val links = facts.filter(_._1 == Link).map(f => Row(f._2, f._3))
-        val global = ConnectedComponents.run(spark.createDataFrame(links,
-            StructType(Seq(StructField("src", LongType, nullable = false),
-              StructField("dst", LongType, nullable = false)))))
-          .rdd.map(r => (r.getLong(0), r.getLong(1)))
-        // per owned point: (clustered, comp, owned copies); a border
-        // takes the min global comp over its candidates
-        val clustered = facts
-          .filter(f => f._1 == Member || f._1 == Candidate)
+        // the job that runs the kernels and caches the facts also brings
+        // the links to the driver when each task's links fit its share of
+        // the cap; above it, connected components merge the cached links
+        val links = facts.filter(_._1 == Link).map(f => (f._2, f._3))
+        val owned = facts.filter(f => f._1 == Member || f._1 == Candidate)
           .map(f => (f._3, (f._2, if (f._1 == Member) 1 else 0)))
-          .leftOuterJoin(global, partitions)
-          .map { case (local, ((id, copies), g)) =>
-            (id, (true, g.getOrElse(local), copies)) }
-        val noise = facts.filter(_._1 == Noise)
-          .map(f => (f._2, (false, 0L, 1)))
-        clustered.union(noise)
+        // per owned comp fact: (id, (clustered, global comp, owned copies))
+        val clustered = Dispatch.gather(links, "dbscan: tile kernel",
+            maxDriverLinks) match {
+          case Some(ls) =>
+            val global = sc.broadcast(mutable.LongMap.from(
+              ConnectedComponents.unionFindRows(ls.iterator)))
+            owned.map { case (local, (id, copies)) =>
+              (id, (true, global.value.getOrElse(local, local), copies)) }
+          case None =>
+            val global = ConnectedComponents.run(spark.createDataFrame(
+                links.map(l => Row(l._1, l._2)),
+                StructType(Seq(StructField("src", LongType, nullable = false),
+                  StructField("dst", LongType, nullable = false)))))
+              .rdd.map(r => (r.getLong(0), r.getLong(1)))
+            owned.leftOuterJoin(global, partitions)
+              .map { case (local, ((id, copies), g)) =>
+                (id, (true, g.getOrElse(local), copies)) }
+        }
+        // one (id, comp) row per point, comp None for noise; a border
+        // takes the min global comp over its candidates
+        val perPoint = clustered
+          .union(facts.filter(_._1 == Noise).map(f => (f._2, (false, 0L, 1))))
           .reduceByKey((a, b) => (a._1 || b._1,
             if (!a._1) b._2 else if (!b._1) a._2 else math.min(a._2, b._2),
             a._3 + b._3), partitions)
@@ -205,32 +234,31 @@ object Dbscan {
             // catches copies that no single tile holds
             require(copies == 1,
               s"distributed DBSCAN requires unique point ids, got duplicate $id")
-            Row(id, if (isClustered) comp else null)
+            (id, if (isClustered) Some(comp) else None)
           }
+          // the labels' only copy once the facts go: spill, don't recompute
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // the comps of at least minClusterSize points, ascending: comp
+        // i's dense cluster id is i + 1; smaller ones fall back to noise
+        val kept = ConnectedComponents.withJobDesc(sc, "dbscan: cluster sizes") {
+          perPoint.flatMap(_._2).map((_, 1L)).reduceByKey(_ + _, partitions)
+            .filter(_._2 >= minClusterSize).keys.collect().sorted
+        }
+        facts.unpersist()
+        val ids = sc.broadcast(kept)
+        perPoint.map { case (id, comp) =>
+          val i = comp.fold(-1)(java.util.Arrays.binarySearch(ids.value, _))
+          Row(id, if (i >= 0) i + 1 else 0)
+        }
     }
 
-    // (id, comp) for every clustered point, comp null for noise — one row
-    // per point, so the labels need no join back to the point table.
-    // Consumed by BOTH the dense-id agg and the label join: persist.
-    val labeled = spark.createDataFrame(labeledRows, StructType(Seq(
+    // Lazy result: the caller's action maps the cached per-point table
+    // (Spark's ContextCleaner unpersists it once the labels are
+    // unreachable). Rows the tiles never saw (null id or vector) are
+    // noise too.
+    spark.createDataFrame(labelRows, StructType(Seq(
         StructField("id", LongType, nullable = false),
-        StructField("comp", LongType, nullable = true))))
-      .persist()
-
-    // dense cluster ids 1..K ordered by comp (distinct comps only, then
-    // broadcast back); components below minClusterSize are dropped ->
-    // their points fall back to noise
-    val compIds = denseCompIds(labeled.filter(col("comp").isNotNull),
-      minClusterSize)
-
-    // Lazy result: the caller's first action executes one unified DAG over
-    // the cached intermediates (facts/labeled/pts stay persisted — Spark's
-    // ContextCleaner unpersists them once the label plan is unreachable).
-    // Callers that iterate over the labels repeatedly should persist().
-    // Rows the tiles never saw (null id or vector) are noise too.
-    labeled.join(broadcast(compIds), Seq("comp"), "left")
-      .select(col("id"),
-        coalesce(col("cluster_id"), lit(0)).as("cluster_id")) // noise = 0
+        StructField("cluster_id", IntegerType, nullable = false))))
       .union(cast.filter(col("id").isNull || col("v").isNull)
         .select(col("id"), lit(0).as("cluster_id")))
   }

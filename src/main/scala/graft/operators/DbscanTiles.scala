@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, element_at, max, min}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable
 
@@ -168,52 +169,113 @@ private[graft] object DbscanTiles {
       .filter(col("id").isNotNull && col("v").isNotNull)
       .rdd.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
 
-  /** Shared kd partition heuristic: one aggregate pass over `df` picks
+  /** Min and max of a vector column over `k` scanned dims, and its count
+    * of non-null vectors: what [[kdHeuristic]] and
+    * [[EpsilonJoin.pickBucketDims]] read. Min and max follow SQL `min` /
+    * `max`: null elements are skipped and NaN sorts greatest. */
+  private[graft] final class Ranges(k: Int) extends Serializable {
+    val lo = new Array[Double](k)
+    val hi = new Array[Double](k)
+    val seen = new Array[Boolean](k)
+    var vectors = 0L
+    var shortest = Int.MaxValue // the length of the shortest vector
+
+    def add(j: Int, x: Double): Unit =
+      if (!seen(j)) { lo(j) = x; hi(j) = x; seen(j) = true }
+      else {
+        if (x < lo(j) || lo(j).isNaN) lo(j) = x
+        if (x > hi(j) || x.isNaN) hi(j) = x
+      }
+
+    def merge(o: Ranges): Ranges = {
+      (0 until k).foreach(j => if (o.seen(j)) { add(j, o.lo(j)); add(j, o.hi(j)) })
+      vectors += o.vectors
+      shortest = math.min(shortest, o.shortest)
+      this
+    }
+
+    /** max − min of the `j`-th scanned dim; 0 when it holds no value. */
+    def span(j: Int): Double = if (seen(j)) hi(j) - lo(j) else 0.0
+  }
+
+  /** [[Ranges]] of `df`'s vectors over `dims` in ONE Spark job described
+    * `desc`: each task folds its partition, the driver folds the tasks,
+    * and no exchange is planned. A vector shorter than a scanned dim
+    * fails the call. */
+  def ranges(df: DataFrame, vecCol: String, dims: Seq[Int],
+      desc: String): Ranges = {
+    val scanned = dims.toArray
+    val parts = ConnectedComponents.withJobDesc(df, desc) {
+      val rows = df.select(col(vecCol).cast("array<double>"))
+        .queryExecution.toRdd
+      df.sparkSession.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+        val r = new Ranges(scanned.length)
+        it.foreach { row =>
+          if (!row.isNullAt(0)) {
+            val v = row.getArray(0)
+            r.vectors += 1
+            r.shortest = math.min(r.shortest, v.numElements)
+            var j = 0
+            while (j < scanned.length) {
+              val d = scanned(j)
+              if (d < v.numElements && !v.isNullAt(d)) r.add(j, v.getDouble(d))
+              j += 1
+            }
+          }
+        }
+        r
+      })
+    }
+    val all = parts.foldLeft(new Ranges(scanned.length))(_.merge(_))
+    val missing = scanned.find(_ >= all.shortest)
+    require(missing.isEmpty, s"$desc: a vector of length ${all.shortest} " +
+      s"has no dim ${missing.getOrElse(0)} (dims are 0-based)")
+    all
+  }
+
+  /** Shared kd partition heuristic: one [[ranges]] pass over `df` picks
     * the grid dims (widest spread first, ≤ `maxDims`, zero-range dims
     * dropped) and the cell size for a grid of ≈ `cellsPerCore` ×
-    * shuffle-parallelism cells. `fixedDims`, when non-empty, are taken
-    * as the dims instead (the pass then only sizes the cells). Returns
-    * None for an empty/all-null input; a degenerate input (every point
-    * identical along every dim) gets `(Seq(0), 0.0)`. */
-  private[operators] def kdHeuristic(df: DataFrame, vecCol: String,
+    * shuffle-parallelism cells, and counts the non-null vectors.
+    * `fixedDims`, when non-empty, are taken as the dims instead (the
+    * pass then only sizes the cells). Returns None for an empty/all-null
+    * input; a degenerate input (every point identical along every dim)
+    * gets `(Seq(0), 0.0, n)`. */
+  private[graft] def kdHeuristic(df: DataFrame, vecCol: String,
       maxDims: Int, cellsPerCore: Int, desc: String,
-      fixedDims: Seq[Int] = Nil): Option[(Seq[Int], Double)] = {
+      fixedDims: Seq[Int] = Nil): Option[(Seq[Int], Double, Long)] = {
     val spark = df.sparkSession
     val scanned =
       if (fixedDims.nonEmpty) fixedDims
       else 0 until graft.functions.VectorOps.probeDim(df, vecCol).getOrElse(0)
     if (scanned.isEmpty) return None
-    val aggs = scanned.flatMap { d =>
-      val c = element_at(col(vecCol), d + 1).cast("double")
-      Seq(min(c).as(s"mn$d"), max(c).as(s"mx$d"))
-    }
-    val row = ConnectedComponents.withJobDesc(df, s"$desc: ranges") {
-      df.agg(aggs.head, aggs.tail: _*).first()
-    }
-    if (row.isNullAt(0)) return None // every vector null
-    val spans = scanned.indices
-      .map(i => scanned(i) -> (row.getDouble(2 * i + 1) - row.getDouble(2 * i)))
-    val ranges =
+    val r = ranges(df, vecCol, scanned, s"$desc: ranges")
+    if (r.vectors == 0) return None // every vector null
+    val spans = scanned.indices.map(i => scanned(i) -> r.span(i))
+    val picked =
       if (fixedDims.nonEmpty) spans
-      else spans.sortBy { case (d, r) => (-r, d) }.take(maxDims).filter(_._2 > 0)
-    if (ranges.isEmpty) return Some((Seq(0), 0.0))
-    val dims = ranges.map(_._1)
+      else spans.sortBy { case (d, s) => (-s, d) }.take(maxDims).filter(_._2 > 0)
+    if (picked.isEmpty) return Some((Seq(0), 0.0, r.vectors))
+    val dims = picked.map(_._1)
     val targetCells =
       math.max(1, cellsPerCore * spark.sessionState.conf.numShufflePartitions)
-    val volume = ranges.map(_._2).product
-    Some((dims, math.pow(volume / targetCells, 1.0 / dims.size)))
+    val volume = picked.map(_._2).product
+    Some((dims, math.pow(volume / targetCells, 1.0 / dims.size), r.vectors))
   }
 
   /** The base grid over `df`'s vectors at halo `reach`: [[kdHeuristic]]'s
     * dims (`bucketDims` when given) and cell size for `cellsPerCore`
     * cells per shuffle partition, with a tile side of at least
-    * 2 × reach. None when no vector is present. */
+    * 2 × reach, and `df`'s count of non-null vectors. A tile holds each
+    * point at most once, so when `df` holds every point a caller fits,
+    * that count bounds every tile's rows: pass it to [[fit]]. None when
+    * no vector is present. */
   def base(df: DataFrame, vecCol: String, reach: Double,
       bucketDims: Seq[Int], tileWidth: Option[Double],
-      desc: String, cellsPerCore: Int = 4): Option[DbscanTiles] =
+      desc: String, cellsPerCore: Int = 4): Option[(DbscanTiles, Long)] =
     kdHeuristic(df, vecCol, 3, cellsPerCore, desc, bucketDims)
-      .map { case (dims, cell) => new DbscanTiles(dims.toArray,
-        tileWidth.getOrElse(math.max(2 * reach, cell)), reach) }
+      .map { case (dims, cell, vectors) => (new DbscanTiles(dims.toArray,
+        tileWidth.getOrElse(math.max(2 * reach, cell)), reach), vectors) }
 
   /** Route every point to its tile rows (`route`, e.g. a geometry's
     * [[DbscanTiles.rows]]) and group each tile's rows with one sorted
@@ -245,11 +307,14 @@ private[graft] object DbscanTiles {
     * rows (owners + ghosts) or sits at the floor. One counting job per
     * round, labelled `<desc>: tile row counts`; only the overfull leaves
     * reach the driver, so the common case is a single job that returns
-    * nothing. Returns the geometry and the leaves still over `maxRows`
-    * at the floor, with their row counts. */
+    * nothing. No job runs when `rows`, an upper bound on the points
+    * routed (e.g. [[base]]'s vector count), is at most `maxRows`: a tile
+    * holds each point at most once. Returns the geometry and the leaves
+    * still over `maxRows` at the floor, with their row counts. */
   def fit(points: RDD[(Long, Array[Float])], tiles: DbscanTiles,
-      maxRows: Long, partitions: Int,
-      desc: String): (DbscanTiles, Map[Vector[Long], Long]) = {
+      maxRows: Long, partitions: Int, desc: String,
+      rows: Long = Long.MaxValue): (DbscanTiles, Map[Vector[Long], Long]) = {
+    if (rows <= maxRows) return (tiles, Map.empty)
     val over = ConnectedComponents.withJobDesc(points.sparkContext,
         s"$desc: tile row counts") {
       points.flatMap { case (_, v) =>

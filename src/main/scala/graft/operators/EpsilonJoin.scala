@@ -87,7 +87,8 @@ object EpsilonJoin {
   /** Pick bucket dims by spread: dims whose data range covers at least
     * `minCellsPerDim` ε-cells, widest first, at most `maxDims` (mirrors the
     * reference's widest-dimension split heuristic,
-    * `geometric_partitioning.cpp:430-437`). One aggregate pass. */
+    * `geometric_partitioning.cpp:430-437`). One exchange-free ranges job
+    * ([[DbscanTiles.ranges]]). */
   def pickBucketDims(points: DataFrame, vecCol: String, eps: Double,
       maxDims: Int = 3, minCellsPerDim: Int = 4,
       knownDim: Int = -1): Seq[Int] = {
@@ -97,19 +98,12 @@ object EpsilonJoin {
       if (knownDim > 0) knownDim
       else graft.functions.VectorOps.probeDim(points, vecCol).getOrElse(0)
     if (dim == 0) return Nil // empty input: no dims to pick, k=0 is fine
-    val aggs = (0 until dim).flatMap { d =>
-      val c = element_at(col(vecCol), d + 1).cast("double")
-      Seq(min(c).as(s"mn$d"), max(c).as(s"mx$d"))
-    }
-    val row = ConnectedComponents.withJobDesc(points, "pickBucketDims: ranges") {
-      points.agg(aggs.head, aggs.tail: _*).first()
-    }
-    if (row.isNullAt(0)) return Nil // knownDim set but zero rows
-    val ranges = (0 until dim).map(d =>
-      d -> (row.getDouble(2 * d + 1) - row.getDouble(2 * d)))
-    ranges
-      .filter { case (_, r) => r / eps >= minCellsPerDim }
-      .sortBy { case (d, r) => (-r, d) }
+    val r = DbscanTiles.ranges(points, vecCol, 0 until dim,
+      "pickBucketDims: ranges")
+    if (r.vectors == 0) return Nil // knownDim set but zero rows
+    (0 until dim).map(d => d -> r.span(d))
+      .filter { case (_, s) => s / eps >= minCellsPerDim }
+      .sortBy { case (d, s) => (-s, d) }
       .take(maxDims)
       .map(_._1)
   }
@@ -302,11 +296,12 @@ object EpsilonJoin {
     * Memory: a tile still over the row cap at the floor (a dense blob)
     * is split into ⌈rows/cap⌉ tree shards × as many query shards
     * ([[DbscanTiles.pairRows]]), so a task buffers about one cap of tree
-    * rows plus one cap of queries, however dense the data. The input is
-    * pinned across the row count and the routed shuffle: a
-    * nondeterministic upstream re-evaluated between the two could leave
-    * a dense tile unsharded (a broken memory bound, not wrong pairs).
-    * Spark's ContextCleaner unpersists it once the result is dropped.
+    * rows plus one cap of queries, however dense the data. When the row
+    * count runs (more vectors than the cap), the input is pinned across
+    * it and the routed shuffle: a nondeterministic upstream re-evaluated
+    * between the two could leave a dense tile unsharded (a broken memory
+    * bound, not wrong pairs). Spark's ContextCleaner unpersists it once
+    * the result is dropped.
     *
     * Honest limit: on data that is quasi-UNIFORM across many dims at the
     * query radius, no spatial index prunes (boxes only split along
@@ -341,11 +336,13 @@ object EpsilonJoin {
     val partitions = spark.sessionState.conf.numShufflePartitions
     DbscanTiles.base(points, vecCol, eps, Nil, tileWidth, "eps-pairs") match {
       case None => emptyPairs(spark)
-      case Some(base) =>
-        val rows = DbscanTiles.points(points, idCol, vecCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        val (tiles, over) =
-          DbscanTiles.fit(rows, base, maxTileRows, partitions, "eps-pairs")
+      case Some((base, vectors)) =>
+        val routed = DbscanTiles.points(points, idCol, vecCol)
+        val rows = if (vectors <= maxTileRows) routed
+          else routed.persist(
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        val (tiles, over) = DbscanTiles.fit(rows, base, maxTileRows,
+          partitions, "eps-pairs", vectors)
         val shards = over.map { case (leaf, n) =>
           leaf -> math.ceil(n.toDouble / maxTileRows).toInt }
         val r2 = eps * eps

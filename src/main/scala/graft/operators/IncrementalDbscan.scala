@@ -255,14 +255,15 @@ object IncrementalDbscan {
     val unchanged = State(points, st.counts,
       rm.fold(st.coreComp)(st.coreComp.join(_, Seq("id"), "left_anti")),
       st.borderPairs)
-    val base = DbscanTiles.base(all, "vec", 2 * eps, bucketDims, tileWidth,
-        "incr-dbscan: tile", FoldCellsPerCore) match {
+    // `all` holds every point of `points`: its vector count bounds a tile
+    val (base, vectors) = DbscanTiles.base(all, "vec", 2 * eps, bucketDims,
+        tileWidth, "incr-dbscan: tile", FoldCellsPerCore) match {
       case None => return unchanged // no vector to cluster
       case Some(b) => b
     }
     val corpus = DbscanTiles.points(points, "id", "vec")
-    val (tiles, _) =
-      DbscanTiles.fit(corpus, base, maxTileRows, partitions, "incr-dbscan")
+    val (tiles, _) = DbscanTiles.fit(corpus, base, maxTileRows, partitions,
+      "incr-dbscan", vectors)
     // 1. the tiles within 2ε of a changed point (an added point, or a
     //    removed point with an ε-neighbor) ...
     val changed = DbscanTiles.points((rm.map(r => st.points

@@ -59,4 +59,26 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(fast == exp)
     assert(loop == exp)
   }
+
+  test("the level-0 contraction and size probe run as one job, at 1, 3 " +
+      "and 7 shuffle partitions") {
+    import spark.implicits._
+    val rnd = new Random(11)
+    val edges = Seq.fill(3000)((rnd.nextInt(2000).toLong,
+      rnd.nextInt(2000).toLong))
+    val exp = seqCC(edges)
+    for (p <- Seq(1, 3, 7); threshold <- Seq(2000000L, 0L))
+      withShufflePartitions(p) {
+        // no exchange upstream: it would run as a job of its own
+        val df = spark.sparkContext.parallelize(edges, p).toDF("src", "dst")
+        var got = Map.empty[Long, Long]
+        val jobs = jobsByDesc {
+          got = ConnectedComponents.run(df, smallGraphThreshold = threshold)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        }
+        assert(jobs.get("cc: level 0 contract + size probe").contains(1),
+          s"$p partitions, threshold $threshold: $jobs")
+        assert(got == exp)
+      }
+  }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import graft.operators.{Dbscan, Dispatch, EpsilonJoin}
+import graft.operators.{Dbscan, DbscanTiles, Dispatch, EpsilonJoin}
 import graft.sources.BinaryPoints
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Label-level DBSCAN correctness against the sequential brute-force oracle,
@@ -298,5 +298,55 @@ class DbscanSpec extends SparkSpec {
     val nEx = walk(plan).size
     assert(nEx <= 2, s"dense-id rank planned $nEx exchanges:\n$plan")
     assert(plan.toString.contains("Window"), "rank should be a window")
+  }
+
+  private def labelMap(df: DataFrame): Map[Long, Int] =
+    df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  test("the tile path runs three described jobs before the caller's " +
+      "action, at 1, 3 and 7 shuffle partitions") {
+    val pts = Workloads.synthPoints(spark, 10000, k = 5, dims = 5).persist()
+    pts.count()
+    val dims = EpsilonJoin.pickBucketDims(pts, "features", 1.0)
+    val fused = labelMap(Dbscan.run(pts, "id", "features", 1.0, 5, dims,
+      localThreshold = Long.MaxValue))
+    assert(fused.values.exists(_ > 0), "degenerate fixture: no clusters")
+    for (p <- Seq(1, 3, 7)) withShufflePartitions(p) {
+      var out: DataFrame = null
+      val jobs = jobsByDesc {
+        out = Dbscan.run(pts, "id", "features", 1.0, 5, dims,
+          localThreshold = 0L)
+      }
+      assert(jobs == Map("dbscan: tile: ranges" -> 1,
+        "dbscan: tile kernel" -> 1, "dbscan: cluster sizes" -> 1),
+        s"at $p partitions")
+      assert(labelMap(out) == fused, s"at $p partitions")
+    }
+    // a row cap below n brings back one row-count job per fit round
+    val cap = 2000L
+    val (base, _) = DbscanTiles.base(pts, "features", 2.0, dims, None,
+      "spec").get
+    val rows = DbscanTiles.points(pts, "id", "features")
+    val rounds = jobsByDesc(DbscanTiles.fit(rows, base, cap,
+      spark.sessionState.conf.numShufflePartitions, "dbscan"))
+    assert(rounds("dbscan: tile row counts") >= 2, rounds)
+    var capped: DataFrame = null
+    val jobs = jobsByDesc {
+      capped = Dbscan.runTiled(pts, "id", "features", 1.0, 5, dims, 2,
+        maxTileRows = cap)
+    }
+    assert(jobs == rounds ++ Map("dbscan: tile: ranges" -> 1,
+      "dbscan: tile kernel" -> 1, "dbscan: cluster sizes" -> 1))
+    assert(labelMap(capped) == fused)
+    pts.unpersist()
+  }
+
+  test("the tile path leaves only its per-point table cached") {
+    val pts = Workloads.synthPoints(spark, 3000, k = 4, dims = 3).persist()
+    pts.count()
+    val left = persistedBy(Dbscan.run(pts, "id", "features", 1.0, 5,
+      Seq(0, 1, 2), localThreshold = 0L))
+    assert(left.size == 1, left)
+    pts.unpersist()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dbscan, DbscanTiles, EpsilonJoin}
+import graft.operators.{ConnectedComponents, Dbscan, DbscanTiles, EpsilonJoin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,14 +24,20 @@ class DbscanTilesSpec extends SparkSpec {
   /** Labels of every geometry, keyed by name; the fused path first. */
   private def byGeometry(pts: DataFrame, eps: Double, minPts: Int,
       dims: Seq[Int], minClusterSize: Int = 2): Seq[(String, Map[Long, Int])] = {
-    def tiled(width: Option[Double], maxRows: Long = 262144L) =
+    def tiled(width: Option[Double], maxRows: Long = 262144L,
+        maxDriverLinks: Long = ConnectedComponents.SmallGraphThreshold) =
       labels(Dbscan.runTiled(pts, "id", "features", eps, minPts, dims,
-        minClusterSize, width, maxRows))
+        minClusterSize, width, maxRows, maxDriverLinks))
+    var viaCc = Map.empty[Long, Int]
+    // a driver link cap of 0 sends every link through the CC merge
+    val ccJobs = jobsByDesc { viaCc = tiled(Some(4 * eps), maxDriverLinks = 0L) }
+    assert(ccJobs.contains("cc: level 0 contract + size probe"), ccJobs)
     Seq(
       "fused" -> labels(Dbscan.run(pts, "id", "features", eps, minPts, dims,
         minClusterSize, localThreshold = Long.MaxValue)),
       "one tile" -> tiled(Some(Double.PositiveInfinity)),
       "4ε-floor tiles" -> tiled(Some(4 * eps)),
+      "4ε-floor tiles, links merged by ConnectedComponents" -> viaCc,
       "default tiles" -> tiled(None),
       "32ε tiles split under a 64-row cap" -> tiled(Some(32 * eps), 64L))
   }
@@ -141,5 +147,102 @@ class DbscanTilesSpec extends SparkSpec {
     assert(fused.values.exists(_ > 0), "degenerate fixture: no clusters")
     assert(tiled == fused)
     pts.unpersist()
+  }
+
+  /** The ranges pass's reference: the SQL `min`/`max` aggregate it
+    * replaced, one (dim, max − min) per scanned dim; None when the first
+    * scanned dim holds no value. */
+  private def sqlSpans(df: DataFrame, scanned: Seq[Int]): Option[Seq[(Int, Double)]] = {
+    val aggs = scanned.flatMap { d =>
+      val c = element_at(col("features"), d + 1).cast("double")
+      Seq(min(c).as(s"mn$d"), max(c).as(s"mx$d"))
+    }
+    val row = df.agg(aggs.head, aggs.tail: _*).first()
+    if (row.isNullAt(0)) None
+    else Some(scanned.indices.map(i =>
+      scanned(i) -> (row.getDouble(2 * i + 1) - row.getDouble(2 * i))))
+  }
+
+  /** `kdHeuristic`'s (dims, cell) from the SQL aggregate. */
+  private def sqlKdHeuristic(df: DataFrame, maxDims: Int, cellsPerCore: Int,
+      fixedDims: Seq[Int]): Option[(Seq[Int], Double)] = {
+    val scanned = if (fixedDims.nonEmpty) fixedDims
+      else 0 until graft.functions.VectorOps.probeDim(df, "features").getOrElse(0)
+    if (scanned.isEmpty) return None
+    sqlSpans(df, scanned).map { spans =>
+      val ranges =
+        if (fixedDims.nonEmpty) spans
+        else spans.sortBy { case (d, r) => (-r, d) }.take(maxDims).filter(_._2 > 0)
+      if (ranges.isEmpty) (Seq(0), 0.0)
+      else {
+        val cells = math.max(1, cellsPerCore * spark.sessionState.conf.numShufflePartitions)
+        (ranges.map(_._1),
+          math.pow(ranges.map(_._2).product / cells, 1.0 / ranges.size))
+      }
+    }
+  }
+
+  /** `pickBucketDims` from the SQL aggregate. */
+  private def sqlPickBucketDims(df: DataFrame, eps: Double, maxDims: Int,
+      minCellsPerDim: Int, dim: Int): Seq[Int] =
+    sqlSpans(df, 0 until dim).fold(Seq.empty[Int])(_
+      .filter { case (_, r) => r / eps >= minCellsPerDim }
+      .sortBy { case (d, r) => (-r, d) }
+      .take(maxDims)
+      .map(_._1))
+
+  test("ranges pass == the SQL min/max aggregate: nulls, NaN, ±0.0, a " +
+      "constant dim, an all-null input; one job") {
+    def v(xs: java.lang.Float*): Option[Seq[java.lang.Float]] = Some(xs)
+    // dim 0 spread with both zeros, dim 1 constant, dim 2 spread with a
+    // NaN, dim 3 only ±0.0; null elements in every dim, null vectors
+    val rows = Seq(v(-0.0f, 5f, 1f, 0f), v(0.0f, 5f, 3f, -0.0f),
+      v(7.5f, null, Float.NaN, 0f), None, v(null, 5f, -4f, null),
+      v(-2.25f, 5f, null, -0.0f), None, v(3f, 5f, 2f, 0f))
+      .zipWithIndex.map { case (x, i) => (i.toLong, x) }
+    val floats = rows.toDF("id", "features")
+    val doubles = floats.select(col("id"),
+      col("features").cast("array<double>").as("features"))
+    val allNull = rows.map { case (i, _) =>
+      (i, Option.empty[Seq[java.lang.Float]]) }.toDF("id", "features")
+    def sameCell(a: Option[(Seq[Int], Double)], b: Option[(Seq[Int], Double)]) =
+      a.map(_._1) == b.map(_._1) && a.zip(b).forall { case ((_, x), (_, y)) =>
+        x == y || (x.isNaN && y.isNaN) }
+    for (df <- Seq(floats, doubles, allNull)) {
+      for (fixed <- Seq(Nil, Seq(0), Seq(1), Seq(2), Seq(3), Seq(0, 2),
+          Seq(3, 1, 0, 2)); maxDims <- 1 to 4) {
+        val got = DbscanTiles.kdHeuristic(df, "features", maxDims, 4, "spec",
+          fixed).map(h => (h._1, h._2))
+        val want = sqlKdHeuristic(df, maxDims, 4, fixed)
+        assert(sameCell(got, want), s"kdHeuristic($fixed, $maxDims): $got != $want")
+      }
+      for (eps <- Seq(0.1, 1.0, 2.0); minCells <- Seq(1, 4); maxDims <- 1 to 3)
+        assert(EpsilonJoin.pickBucketDims(df, "features", eps, maxDims,
+          minCells, knownDim = 4) ==
+          sqlPickBucketDims(df, eps, maxDims, minCells, 4),
+          s"pickBucketDims($eps, $minCells, $maxDims)")
+    }
+    assert(DbscanTiles.kdHeuristic(floats, "features", 3, 4, "spec",
+      Seq(0, 1, 2, 3)).map(_._3) == Some(6L), "non-null vectors")
+    assert(DbscanTiles.kdHeuristic(allNull, "features", 3, 4, "spec",
+      Seq(0)).isEmpty)
+    assert(jobsByDesc(DbscanTiles.kdHeuristic(floats, "features", 3, 4,
+      "spec", Seq(0, 2))) == Map("spec: ranges" -> 1))
+  }
+
+  test("a vector shorter than a scanned dim fails the ranges pass") {
+    val ragged = Seq(1L -> Seq(0f, 1f, 2f), 2L -> Seq(3f, 4f),
+      3L -> Seq(5f, 6f, 7f)).toDF("id", "features")
+    // the SQL aggregate fails too: element_at is out of bounds under ANSI
+    intercept[Exception](sqlSpans(ragged, Seq(2)))
+    val e = intercept[IllegalArgumentException](DbscanTiles.kdHeuristic(
+      ragged, "features", 3, 4, "spec", Seq(0, 2)))
+    assert(e.getMessage.contains("length 2") && e.getMessage.contains("dim 2"),
+      e.getMessage)
+    intercept[IllegalArgumentException](EpsilonJoin.pickBucketDims(ragged,
+      "features", 1.0, knownDim = 3))
+    // dims the short vector holds still range
+    assert(DbscanTiles.kdHeuristic(ragged, "features", 3, 4, "spec",
+      Seq(1)).map(_._1) == Some(Seq(1)))
   }
 }

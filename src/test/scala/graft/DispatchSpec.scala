@@ -44,6 +44,19 @@ class DispatchSpec extends SparkSpec {
     assert(!Dispatch.fits("spec", a -> 50L, b -> 499L))
   }
 
+  test("gather: every row when each partition fits its share of the " +
+      "cap, in one job; None when one does not") {
+    val rdd = spark.sparkContext.parallelize(1 to 40, 4) // 10 per partition
+    var got = Option.empty[Array[Int]]
+    val jobs = jobsByDesc { got = Dispatch.gather(rdd, "spec: gather", 40L) }
+    assert(got.map(_.sorted.toSeq).contains(1 to 40))
+    assert(jobs == Map("spec: gather" -> 1))
+    assert(Dispatch.gather(rdd, "spec: gather", 43L).isDefined)
+    assert(Dispatch.gather(rdd, "spec: gather", 39L).isEmpty)
+    assert(Dispatch.gather(rdd.filter(_ => false), "spec: gather", 0L)
+      .exists(_.isEmpty))
+  }
+
   test("one size-probe job per graph-loop dispatch, none when forced " +
       "distributed") {
     val cases: Seq[(String, Long => Any)] = Seq(

@@ -230,7 +230,7 @@ class KdTreeSpec extends SparkSpec {
       eps, None, Some(2 * eps), Long.MaxValue))
     // cap 200 over the ~3200-row blob tile of selfJoinKd's geometry ->
     // >= 16 tree shards × as many query shards
-    val base = DbscanTiles.base(df, "features", eps, Nil, Some(2 * eps),
+    val (base, _) = DbscanTiles.base(df, "features", eps, Nil, Some(2 * eps),
       "spec").get
     val (_, over) = DbscanTiles.fit(spark.sparkContext.parallelize(pts, 8),
       base, 200L, 8, "spec")
