@@ -115,12 +115,15 @@ object Dbscan {
     // Small-input fast path: even the tile pipeline costs 3 Spark jobs
     // before the caller's own, each ~0.1-0.3 s of orchestration in local
     // mode. Below the threshold, run the whole clustering in ONE task with the
-    // grid-indexed LocalDbscan kernel — the same kernel every tile runs,
-    // with the same canonical labels (same distance fold, same min-id
-    // component labels, same dense-id ordering). The size probe
-    // ([[Dispatch]]) stops scanning at threshold + 1 rows instead of
-    // counting 100 TB to decide. k=0 (no bucket dims) means a
-    // brute-force O(n²) scan — only allowed for tiny inputs.
+    // LocalDbscan kernel — the kernel every tile runs, with the same
+    // canonical labels (same distance fold, same min-id component labels,
+    // same dense-id ordering). Here it indexes its ε-grid over
+    // `bucketDims` (a tile indexes its tiling's dims: `bucketDims` when
+    // given, the ranges heuristic's otherwise); with no bucket dims the
+    // grid is one cell, a brute-force O(n²) scan, so only inputs up to
+    // `bruteForceCap` rows take this path. The size
+    // probe ([[Dispatch]]) stops scanning at threshold + 1 rows instead
+    // of counting 100 TB to decide.
     if (localThreshold > 0) {
       val n = Dispatch.counts("dbscan", pts -> localThreshold).head
       val bruteForceCap = 4096L

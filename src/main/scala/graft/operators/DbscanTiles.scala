@@ -172,13 +172,26 @@ private[graft] object DbscanTiles {
   /** Min and max of a vector column over `k` scanned dims, and its count
     * of non-null vectors: what [[kdHeuristic]] and
     * [[EpsilonJoin.pickBucketDims]] read. Min and max follow SQL `min` /
-    * `max`: null elements are skipped and NaN sorts greatest. */
-  private[graft] final class Ranges(k: Int) extends Serializable {
-    val lo = new Array[Double](k)
-    val hi = new Array[Double](k)
-    val seen = new Array[Boolean](k)
+    * `max`: null elements are skipped and NaN sorts greatest. `k` grows
+    * with [[widen]] when the pass scans every dim. */
+  private[graft] final class Ranges(private var k: Int) extends Serializable {
+    private var lo = new Array[Double](k)
+    private var hi = new Array[Double](k)
+    private var seen = new Array[Boolean](k)
     var vectors = 0L
     var shortest = Int.MaxValue // the length of the shortest vector
+    var longest = 0 // the length of the longest vector
+
+    /** The number of scanned dims. */
+    def dims: Int = k
+
+    /** Scan at least `m` dims. */
+    def widen(m: Int): Unit = if (m > k) {
+      lo = java.util.Arrays.copyOf(lo, m)
+      hi = java.util.Arrays.copyOf(hi, m)
+      seen = java.util.Arrays.copyOf(seen, m)
+      k = m
+    }
 
     def add(j: Int, x: Double): Unit =
       if (!seen(j)) { lo(j) = x; hi(j) = x; seen(j) = true }
@@ -188,9 +201,11 @@ private[graft] object DbscanTiles {
       }
 
     def merge(o: Ranges): Ranges = {
-      (0 until k).foreach(j => if (o.seen(j)) { add(j, o.lo(j)); add(j, o.hi(j)) })
+      widen(o.k)
+      (0 until o.k).foreach(j => if (o.seen(j)) { add(j, o.lo(j)); add(j, o.hi(j)) })
       vectors += o.vectors
       shortest = math.min(shortest, o.shortest)
+      longest = math.max(longest, o.longest)
       this
     }
 
@@ -200,25 +215,30 @@ private[graft] object DbscanTiles {
 
   /** [[Ranges]] of `df`'s vectors over `dims` in ONE Spark job described
     * `desc`: each task folds its partition, the driver folds the tasks,
-    * and no exchange is planned. A vector shorter than a scanned dim
-    * fails the call. */
-  def ranges(df: DataFrame, vecCol: String, dims: Seq[Int],
+    * and no exchange is planned. `dims` None scans every dim of the
+    * longest vector: the pass learns the vector length itself, with no
+    * probe job before it. A vector shorter than a scanned dim fails the
+    * call. */
+  def ranges(df: DataFrame, vecCol: String, dims: Option[Seq[Int]],
       desc: String): Ranges = {
-    val scanned = dims.toArray
+    val fixed = dims.map(_.toArray)
     val parts = ConnectedComponents.withJobDesc(df, desc) {
       val rows = df.select(col(vecCol).cast("array<double>"))
         .queryExecution.toRdd
       df.sparkSession.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
-        val r = new Ranges(scanned.length)
+        val r = new Ranges(fixed.fold(0)(_.length))
         it.foreach { row =>
           if (!row.isNullAt(0)) {
             val v = row.getArray(0)
+            val m = v.numElements
             r.vectors += 1
-            r.shortest = math.min(r.shortest, v.numElements)
+            r.shortest = math.min(r.shortest, m)
+            r.longest = math.max(r.longest, m)
+            if (fixed.isEmpty) r.widen(m)
             var j = 0
-            while (j < scanned.length) {
-              val d = scanned(j)
-              if (d < v.numElements && !v.isNullAt(d)) r.add(j, v.getDouble(d))
+            while (j < r.dims) {
+              val d = if (fixed.isEmpty) j else fixed.get(j)
+              if (d < m && !v.isNullAt(d)) r.add(j, v.getDouble(d))
               j += 1
             }
           }
@@ -226,8 +246,9 @@ private[graft] object DbscanTiles {
         r
       })
     }
-    val all = parts.foldLeft(new Ranges(scanned.length))(_.merge(_))
-    val missing = scanned.find(_ >= all.shortest)
+    val all = parts.foldLeft(new Ranges(fixed.fold(0)(_.length)))(_.merge(_))
+    val missing = fixed.getOrElse(Array.range(0, all.longest))
+      .find(_ >= all.shortest)
     require(missing.isEmpty, s"$desc: a vector of length ${all.shortest} " +
       s"has no dim ${missing.getOrElse(0)} (dims are 0-based)")
     all
@@ -237,20 +258,20 @@ private[graft] object DbscanTiles {
     * the grid dims (widest spread first, ≤ `maxDims`, zero-range dims
     * dropped) and the cell size for a grid of ≈ `cellsPerCore` ×
     * shuffle-parallelism cells, and counts the non-null vectors.
-    * `fixedDims`, when non-empty, are taken as the dims instead (the
-    * pass then only sizes the cells). Returns None for an empty/all-null
+    * Without `fixedDims` the pass scans every dim of the vectors and
+    * learns their length itself; `fixedDims`, when non-empty, are taken
+    * as the dims instead (the pass then only sizes the cells). Either
+    * way it is the only job. Returns None for an empty/all-null
     * input; a degenerate input (every point identical along every dim)
     * gets `(Seq(0), 0.0, n)`. */
   private[graft] def kdHeuristic(df: DataFrame, vecCol: String,
       maxDims: Int, cellsPerCore: Int, desc: String,
       fixedDims: Seq[Int] = Nil): Option[(Seq[Int], Double, Long)] = {
     val spark = df.sparkSession
-    val scanned =
-      if (fixedDims.nonEmpty) fixedDims
-      else 0 until graft.functions.VectorOps.probeDim(df, vecCol).getOrElse(0)
-    if (scanned.isEmpty) return None
-    val r = ranges(df, vecCol, scanned, s"$desc: ranges")
-    if (r.vectors == 0) return None // every vector null
+    val r = ranges(df, vecCol, Option.when(fixedDims.nonEmpty)(fixedDims),
+      s"$desc: ranges")
+    if (r.vectors == 0 || r.dims == 0) return None // every vector null or empty
+    val scanned = if (fixedDims.nonEmpty) fixedDims else 0 until r.dims
     val spans = scanned.indices.map(i => scanned(i) -> r.span(i))
     val picked =
       if (fixedDims.nonEmpty) spans

@@ -88,20 +88,16 @@ object EpsilonJoin {
     * `minCellsPerDim` ε-cells, widest first, at most `maxDims` (mirrors the
     * reference's widest-dimension split heuristic,
     * `geometric_partitioning.cpp:430-437`). One exchange-free ranges job
-    * ([[DbscanTiles.ranges]]). */
+    * ([[DbscanTiles.ranges]]) over the first `knownDim` dims, or over
+    * every dim when `knownDim` is not positive; an empty input picks no
+    * dims (k = 0). */
   def pickBucketDims(points: DataFrame, vecCol: String, eps: Double,
       maxDims: Int = 3, minCellsPerDim: Int = 4,
       knownDim: Int = -1): Seq[Int] = {
-    // knownDim skips the one-row probe job when the caller already knows
-    // the dimensionality (e.g. from the binary file header)
-    val dim =
-      if (knownDim > 0) knownDim
-      else graft.functions.VectorOps.probeDim(points, vecCol).getOrElse(0)
-    if (dim == 0) return Nil // empty input: no dims to pick, k=0 is fine
-    val r = DbscanTiles.ranges(points, vecCol, 0 until dim,
-      "pickBucketDims: ranges")
-    if (r.vectors == 0) return Nil // knownDim set but zero rows
-    (0 until dim).map(d => d -> r.span(d))
+    val r = DbscanTiles.ranges(points, vecCol,
+      Option.when(knownDim > 0)(0 until knownDim), "pickBucketDims: ranges")
+    if (r.vectors == 0) return Nil
+    (0 until r.dims).map(d => d -> r.span(d))
       .filter { case (_, s) => s / eps >= minCellsPerDim }
       .sortBy { case (d, s) => (-s, d) }
       .take(maxDims)

@@ -228,6 +228,11 @@ class DbscanTilesSpec extends SparkSpec {
       Seq(0)).isEmpty)
     assert(jobsByDesc(DbscanTiles.kdHeuristic(floats, "features", 3, 4,
       "spec", Seq(0, 2))) == Map("spec: ranges" -> 1))
+    // without fixed dims the pass learns the vector length: no probe job
+    assert(jobsByDesc(DbscanTiles.kdHeuristic(floats, "features", 3, 4,
+      "spec")) == Map("spec: ranges" -> 1))
+    assert(jobsByDesc(EpsilonJoin.pickBucketDims(floats, "features", 1.0))
+      == Map("pickBucketDims: ranges" -> 1))
   }
 
   test("a vector shorter than a scanned dim fails the ranges pass") {
@@ -241,6 +246,17 @@ class DbscanTilesSpec extends SparkSpec {
       e.getMessage)
     intercept[IllegalArgumentException](EpsilonJoin.pickBucketDims(ragged,
       "features", 1.0, knownDim = 3))
+    // scanning every dim, the pass fails on a ragged input whichever
+    // vector comes first, the short one too
+    Seq(ragged, ragged.orderBy(size(col("features")))).foreach { df =>
+      val all = intercept[IllegalArgumentException](DbscanTiles.kdHeuristic(
+        df, "features", 3, 4, "spec"))
+      assert(all.getMessage.contains("spec: ranges") &&
+        all.getMessage.contains("length 2") && all.getMessage.contains("dim 2"),
+        all.getMessage)
+      intercept[IllegalArgumentException](EpsilonJoin.pickBucketDims(df,
+        "features", 1.0))
+    }
     // dims the short vector holds still range
     assert(DbscanTiles.kdHeuristic(ragged, "features", 3, 4, "spec",
       Seq(1)).map(_._1) == Some(Seq(1)))

@@ -308,4 +308,17 @@ class KdTreeSpec extends SparkSpec {
     }
     df.unpersist()
   }
+
+  test("selfJoinKd runs one described ranges job before the caller's " +
+      "action on 4,000 64-d points") {
+    val df = pointsDf((0 until 4000).map { i =>
+      i.toLong -> Array.tabulate(64)(j => (i % 3) * 100f + coord(i, j, 5f))
+    }, 4).persist()
+    df.count()
+    // the ranges pass learns the vector length: no probe job before it,
+    // and 4,000 rows are under the tile cap, so no row count job either
+    assert(jobsByDesc(EpsilonJoin.selfJoinKd(df, "id", "features", 2.5)) ==
+      Map("eps-pairs: ranges" -> 1))
+    df.unpersist()
+  }
 }
