@@ -66,125 +66,4 @@ object GlobalIndex {
     df.sparkSession.createDataFrame(out,
       sorted.schema.add(StructField(outCol, LongType, nullable = false)))
   }
-
-  /** Lazy twin of [[rowNumbers]]: identical 1-based numbering, but as a
-    * deferred plan — nothing executes until the caller's first action
-    * (rowNumbers' zipWithIndex counting pass runs a job eagerly, which
-    * would force evaluation inside lazily-composed operators). Use it
-    * when a deferred rank over a LARGE table is needed; for a table
-    * that is broadcast downstream anyway (DBSCAN's dense cluster ids,
-    * [[Dbscan.denseCompIds]]) a one-coalesced-partition window is
-    * cheaper — this scheme spends ~4 exchanges plus a boundary-sampling
-    * range shuffle per call. NOTE: since round 10 (the DBSCAN sites
-    * moved to denseCompIds) this operator has no in-repo production
-    * caller — it is retained, spec-gated, as the public deferred-rank
-    * API for tables too large to broadcast. Same shape as rowNumbers,
-    * expressed in SQL nodes:
-    *
-    *  1. range-shuffle on the sort keys and stamp each row with its
-    *     physical partition id — range partitions are ordered, so
-    *     (pid, within-pid key order) IS the global order;
-    *  2. within-pid local row_number (a window PARTITIONED by pid —
-    *     every task sorts only its own range slice, no single-task
-    *     exchange);
-    *  3. per-pid row counts → running-sum offsets. This one window is
-    *     unpartitioned but runs over ONE ROW PER PARTITION (bounded by
-    *     the shuffle-partition setting, never by data volume);
-    *  4. broadcast the offsets back: row_num = offset(pid) + local.
-    *
-    * CORRECTNESS PRECONDITION — exchange reuse: the local ranking and
-    * the count are two SQL branches of the same `repartitionByRange`,
-    * merged into one physical shuffle by Spark's exchange-reuse rule
-    * (canonically-equal subplans; on by default, and the same flag
-    * gates AQE stage reuse). Were each branch to execute its own
-    * shuffle, range boundaries would be re-sampled under a different
-    * seed and boundary rows could be stamped different pids —
-    * duplicated/skipped numbers with no error. Structural sharing
-    * cannot be had lazily (under AQE both `Dataset.rdd` and even
-    * `localCheckpoint(eager = false)` finalize the stages EAGERLY —
-    * measured three construction-time jobs, defeating this method's
-    * purpose), so when `spark.sql.exchange.reuse` is disabled this
-    * method falls back to the eager [[rowNumbers]], trading the
-    * deferred execution for unconditional correctness.
-    *
-    * The conf flag is only a fast pre-check: the returned plan is also
-    * verified STRUCTURALLY (see [[rangeShuffleMerged]]) — if the two
-    * branches' exchanges are not going to merge (conf flipped between
-    * construction and the guard, or an optimizer change such as column
-    * pruning specializing one branch's exchange child so the exchanges
-    * stop being canonically equal), this method falls back to the eager
-    * path instead of silently returning a mis-numbered plan.
-    *
-    * `sortCols` must be a total order, as in [[rowNumbers]]. */
-  def rowNumbersLazy(df: DataFrame, sortCols: Seq[String],
-      outCol: String = "row_num", numPartitions: Option[Int] = None): DataFrame = {
-    require(sortCols.nonEmpty, "rowNumbersLazy needs at least one sort column")
-    require(!df.columns.exists(_.equalsIgnoreCase(outCol)),
-      s"input already has a column named $outCol — rename it first")
-    if (!df.sparkSession.conf.get("spark.sql.exchange.reuse", "true")
-        .toBoolean)
-      return rowNumbers(df, sortCols, outCol, numPartitions)
-    val keys = sortCols.map(col)
-    val ranged = numPartitions match {
-      case Some(np) => df.repartitionByRange(np, keys: _*)
-      case None     => df.repartitionByRange(keys: _*)
-    }
-    val stamped = ranged.withColumn("__gi_pid", spark_partition_id())
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__gi_pid")).orderBy(keys: _*)
-    val local = stamped.withColumn("__gi_lrn",
-      row_number().over(wLocal).cast(LongType))
-    val wOff = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__gi_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = stamped.groupBy(col("__gi_pid"))
-      .agg(count(lit(1)).as("__gi_cnt"))
-      .select(col("__gi_pid"),
-        coalesce(sum(col("__gi_cnt")).over(wOff), lit(0L)).as("__gi_off"))
-    val out = local.join(broadcast(offsets), "__gi_pid")
-      .withColumn(outCol, col("__gi_off") + col("__gi_lrn"))
-      .drop("__gi_pid", "__gi_lrn", "__gi_off")
-    // fail fast on the OUTCOME, not the flag: physical planning (no job)
-    // must show the two branches' range shuffles as one exchange — either
-    // already merged (non-AQE ReuseExchange replaced the twin with a
-    // ReusedExchange) or mergeable (AQE: both present but canonically
-    // equal, which is exactly the stage-cache key that dedups them at
-    // runtime). Anything else would stamp boundary rows two different
-    // pids with no error — take the eager path instead.
-    if (rangeShuffleMerged(out)) out
-    else rowNumbers(df, sortCols, outCol, numPartitions)
-  }
-
-  /** True iff `df`'s physical plan executes its RangePartitioning
-    * shuffle exactly once (see [[rowNumbersLazy]]'s precondition). */
-  private[graft] def rangeShuffleMerged(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => q +: walk(q.plan)
-      case other => other +: other.children.flatMap(walk)
-    }
-    val nodes = walk(df.queryExecution.executedPlan)
-    val rangeEx = nodes.collect {
-      case s: ShuffleExchangeLike
-          if s.outputPartitioning.isInstanceOf[RangePartitioning] => s
-    }
-    rangeEx.size match {
-      // non-AQE: ReuseExchange collapsed the twin — but only a reuse
-      // node whose child IS this range exchange proves it (an
-      // unrelated reused exchange elsewhere in a composed caller plan,
-      // plus an optimizer-specialized range branch, must not validate
-      // a plan that would stamp boundary rows two different pids)
-      case 1 => nodes.exists {
-        case r: ReusedExchangeExec =>
-          r.child.canonicalized == rangeEx.head.canonicalized
-        case _ => false
-      }
-      case 2 => rangeEx(0).canonicalized == rangeEx(1).canonicalized // AQE
-      case _ => false
-    }
-  }
 }

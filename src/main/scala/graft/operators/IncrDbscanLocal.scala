@@ -21,10 +21,12 @@ import org.apache.spark.sql.types._
   *  - `coreComp`: min-id connected components of the core-core ε-graph
   *    (self-loops ⇒ isolated cores are singletons);
   *  - `borderPairs`: every (non-core, core) ε-pair;
-  *  - `points`: the corpus itself.
+  *  - `points`: the corpus itself, rows with a null id or vector
+  *    included (no kernel sees them: they are noise).
   * The distributed fold maintains exactly these invariants (that is how
-  * [[IncrementalDbscan.labels]] stays spec-identical to a from-scratch
-  * [[Dbscan.run]]), and both builds take every value from the same
+  * [[IncrementalDbscan.labels]], which takes its cluster ids from
+  * [[Dbscan.run]]'s own dense-id step, stays spec-identical to a
+  * from-scratch run), and both builds take every value from the same
   * kernel: an id, a count or a min id from [[LocalDbscan]], whose only
   * float work is the same left-to-right double ε fold. So the one-task
   * rebuild is bit-identical to the distributed fold whatever the
@@ -102,7 +104,7 @@ private[graft] object IncrDbscanLocal {
 
   private val TaggedSchema = StructType(Seq(
     StructField("tag", IntegerType, nullable = false),
-    StructField("id", LongType, nullable = false),
+    StructField("id", LongType, nullable = true),
     StructField("aux", LongType, nullable = true),
     StructField("vec", ArrayType(FloatType), nullable = true)))
 
@@ -125,20 +127,21 @@ private[graft] object IncrDbscanLocal {
         nullVec.as("vec")))
     }
     val rdd = in.coalesce(1).rdd.mapPartitions { it =>
-      val idsB = new scala.collection.mutable.ArrayBuffer[Long]
-      val vecsB = new scala.collection.mutable.ArrayBuffer[Array[Float]]
+      val rows = new scala.collection.mutable.ArrayBuffer[Row]
       val rm = new java.util.HashSet[java.lang.Long]
       it.foreach { r =>
-        if (r.getInt(0) == 0) {
-          idsB += r.getLong(1); vecsB += r.getSeq[Float](3).toArray
-        } else rm.add(r.getLong(1))
+        if (r.getInt(0) == 0) rows += r
+        else if (!r.isNullAt(1)) rm.add(r.getLong(1))
       }
       // apply the removal set (ids not present are ignored — the
-      // removePoints contract)
-      val keep = idsB.indices.filter(i => !rm.contains(idsB(i)))
-      val ids = keep.map(idsB(_)).toArray
-      val vecs = keep.map(vecsB(_)).toArray
-      ids.indices.iterator.map(i => Row(0, ids(i), null, vecs(i).toSeq)) ++
+      // removePoints contract); a row with a null id or vector stays a
+      // point but enters no kernel, as in the distributed fold, whose
+      // tiles route neither: it is noise
+      val live = rows.filter(r => r.isNullAt(1) || !rm.contains(r.getLong(1)))
+      val solved = live.filter(r => !r.isNullAt(1) && !r.isNullAt(3))
+      val ids = solved.map(_.getLong(1)).toArray
+      val vecs = solved.map(_.getSeq[Float](3).toArray).toArray
+      live.iterator.map(r => Row(0, r.get(1), null, r.get(3))) ++
         stateFacts(ids, vecs, Array.fill(ids.length)(true), eps, minPts,
           dimsArr).map(f => Row(f._1.toInt, f._2, f._3, null))
     }

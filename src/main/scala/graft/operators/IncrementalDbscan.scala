@@ -363,22 +363,27 @@ object IncrementalDbscan {
 
   /** Labels under [[Dbscan.run]]'s exact contract: (`id`,
     * `cluster_id`), noise = 0, dense ids from 1 ordered by component
-    * minimum id, components under `minClusterSize` dropped to noise. */
+    * minimum id, components under `minClusterSize` dropped to noise.
+    * A core takes its comp, a border the least comp of its cores and
+    * any other point none; [[Dbscan.clusterIds]] runs the one job,
+    * `incr-dbscan: cluster sizes`. Rows with a null id are noise. */
   def labels(st: State, minClusterSize: Int = 2): DataFrame = {
-    val borderComp = st.borderPairs
-      .join(st.coreComp.withColumnRenamed("id", "core_id"), "core_id")
-      .groupBy(col("id"))
-      .agg(min("comp").as("comp"))
-    val labeled = st.coreComp.union(borderComp).persist()
-    // Same dense-id scheme as Dbscan.run (see [[Dbscan.denseCompIds]]:
-    // the comp table is broadcast-bounded by contract, so the
-    // one-partition window adds zero exchanges)
-    val compIds = Dbscan.denseCompIds(labeled, minClusterSize)
-    val withIds = labeled.join(broadcast(compIds), "comp")
-      .select(col("id"), col("cluster_id"))
-    st.points.select(col("id"))
-      .join(withIds, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("cluster_id"), lit(0)).as("cluster_id"))
+    val spark = st.points.sparkSession
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    def pairs(t: DataFrame, a: String, b: String) =
+      t.select(a, b).rdd.map(r => (r.getLong(0), r.getLong(1)))
+    // keyed by core id: its comp, for the core and each of its borders
+    val comps = pairs(st.coreComp, "id", "comp")
+      .cogroup(pairs(st.borderPairs, "core_id", "id"), partitions)
+      .flatMap { case (core, (comp, borders)) =>
+        comp.flatMap(c => (core +: borders.toSeq).map(p => (p, Option(c)))) }
+    val perPoint = st.points.select(col("id").cast("long"))
+      .filter(col("id").isNotNull).rdd
+      .map(r => (r.getLong(0), Option.empty[Long]))
+      .union(comps).reduceByKey((a, b) => (a ++ b).minOption, partitions)
+    spark.createDataFrame(Dbscan.clusterIds(perPoint, minClusterSize,
+        partitions, "incr-dbscan: cluster sizes"), Dbscan.LabelSchema)
+      .union(st.points.filter(col("id").isNull)
+        .select(col("id").cast("long"), lit(0).as("cluster_id")))
   }
 }

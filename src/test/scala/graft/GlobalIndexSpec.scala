@@ -56,74 +56,6 @@ class GlobalIndexSpec extends SparkSpec {
       "rowNumbers left a cached plan behind")
   }
 
-  test("rowNumbersLazy == rowNumbers, including under ties") {
-    // duplicate keys: k has only 16 distinct values over 1000 rows, so
-    // the id tie-breaker does real work in every range slice
-    val df = spark.range(0, 1000).toDF("id")
-      .repartition(9)
-      .select(col("id"), pmod(crc32(col("id").cast("string")), lit(16))
-        .as("k"))
-    val got = GlobalIndex.rowNumbersLazy(df, Seq("k", "id"), "rn")
-      .select("id", "rn").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = GlobalIndex.rowNumbers(df, Seq("k", "id"), "rn")
-      .select("id", "rn").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-  }
-
-  test("rowNumbersLazy is lazy and its offset window is partition-bounded") {
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = GlobalIndex.rowNumbersLazy(keyed(5), Seq("k", "id"))
-      Thread.sleep(300) // let any eager job's start event drain
-      assert(jobs == 0, s"rowNumbersLazy ran $jobs eager jobs")
-      // the only unpartitioned window runs over the per-partition count
-      // table (≤ shuffle partitions rows), never over row data: every
-      // Window node in the plan either partitions by the stamped pid or
-      // consumes the one-row-per-pid aggregate
-      val p = out.queryExecution.executedPlan.toString
-      assert(p.contains("__gi_pid"), s"pid-offset scheme missing:\n$p")
-      assert(out.count() == 1000L)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  test("rowNumbersLazy stays correct with exchange reuse disabled " +
-      "(falls back to the eager single-lineage path)") {
-    // the lazy plan's two branches are only merged into one shuffle by
-    // the exchange-reuse rule; with it off, rowNumbersLazy must route
-    // through rowNumbers rather than risk re-sampled boundaries
-    // stamping branch-inconsistent pids
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.exchange.reuse", "false")
-    val df = s2.range(0, 1000).toDF("id")
-      .repartition(9)
-      // heavy ties: only 4 distinct k values, so range boundaries MUST
-      // split tied runs — the exact case where re-sampled boundaries
-      // could disagree
-      .select(col("id"), pmod(crc32(col("id").cast("string")), lit(4))
-        .as("k"))
-    val got = GlobalIndex.rowNumbersLazy(df, Seq("k", "id"), "rn")
-      .select("id", "rn").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = GlobalIndex.rowNumbers(df, Seq("k", "id"), "rn")
-      .select("id", "rn").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-  }
-
-  test("rowNumbersLazy handles empty input") {
-    val empty = spark.range(0, 0).toDF("id")
-      .select(col("id"), md5(col("id").cast("string")).as("k"))
-    assert(GlobalIndex.rowNumbersLazy(empty, Seq("k", "id")).count() == 0)
-  }
-
   test("rowNumbers handles empty input and explicit partition counts") {
     val empty = spark.range(0, 0).toDF("id")
       .select(col("id"), md5(col("id").cast("string")).as("k"))
@@ -138,25 +70,5 @@ class GlobalIndexSpec extends SparkSpec {
       GlobalIndex.rowNumbers(keyed(3).withColumn("ROW_NUM", lit(0L)),
         Seq("k", "id"))
     }
-  }
-
-  test("rowNumbersLazy's structural guard: merged plan accepted, " +
-      "unrelated twin range shuffles rejected") {
-    // the guard must see the lazy plan's two branches as ONE shuffle
-    // (ReusedExchange, or two canonically-equal exchanges under AQE) —
-    // the precondition for branch-consistent pid stamps
-    val lzy = GlobalIndex.rowNumbersLazy(keyed(5), Seq("k", "id"))
-    assert(GlobalIndex.rangeShuffleMerged(lzy),
-      "lazy plan's range exchanges did not merge:\n" +
-        lzy.queryExecution.executedPlan)
-    // two range shuffles over DIFFERENT children must NOT count as
-    // merged — the exact miss the guard exists to catch
-    val a = keyed(3).repartitionByRange(col("k"))
-    val b = keyed(4).filter(col("id") % 2 === 0)
-      .repartitionByRange(col("k"))
-      .withColumnRenamed("id", "id2")
-    val unmerged = a.join(b, Seq("k"), "inner")
-    assert(!GlobalIndex.rangeShuffleMerged(unmerged),
-      "guard accepted two distinct range shuffles")
   }
 }

@@ -128,4 +128,38 @@ class IncrementalDbscanLocalSpec extends SparkSpec {
     assert(f.coreComp.count() == emb.count(),
       "minPts=1 must make every point core")
   }
+
+  test("a null-vector row and a null-id row: fused == distributed, both " +
+      "stay points and label noise") {
+    val synth = inputs(1)
+    val pts = synth.df.select(col("id"), col("features"))
+    // the null-id row sits on point 0, so a kernel that saw it would
+    // change point 0's count
+    val nulls = spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(900001L, null)),
+        org.apache.spark.sql.types.StructType(
+          pts.schema.fields.map(_.copy(nullable = true))))
+      .union(pts.filter(col("id") === 0).select(lit(null).cast("long"),
+        col("features")))
+    def init(df: DataFrame, threshold: Long) = IncrementalDbscan.pin(
+      IncrementalDbscan.init(df, "id", "features", synth.eps, synth.minPts,
+        synth.dims, localThreshold = threshold))
+    def add(threshold: Long) = IncrementalDbscan.addPoints(
+      init(pts.filter(col("id") % 10 =!= 0), threshold),
+      pts.filter(col("id") % 10 === 0).union(nulls), "id", "features",
+      synth.eps, synth.minPts, synth.dims, localThreshold = threshold)
+    for ((name, f, d) <- Seq(
+        ("init", init(pts.union(nulls), IncrDbscanLocal.defaultThreshold),
+          init(pts.union(nulls), 0L)),
+        ("addPoints", add(IncrDbscanLocal.defaultThreshold), add(0L))))
+      withClue(name) {
+        assertStateEqual(f, d)
+        assert(f.points.filter(col("id").isNull || col("id") === 900001L)
+          .count() == 2)
+        val labels = tbl(IncrementalDbscan.labels(f))
+        assert(labels == tbl(IncrementalDbscan.labels(d)))
+        assert(labels.contains(Seq("null", "0")) &&
+          labels.contains(Seq("900001", "0")))
+      }
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dbscan, IncrDbscanLocal, IncrementalDbscan}
+import graft.operators.{Dbscan, EpsilonJoin, IncrDbscanLocal, IncrementalDbscan}
 
 class IncrementalDbscanSpec extends SparkSpec {
 
@@ -617,5 +617,56 @@ class IncrementalDbscanSpec extends SparkSpec {
     checkTiled(left ++ right, Seq(Left(bridge)), 1.0, 3, Seq(0),
       tileWidth = 4.0, maxTileRows = Long.MaxValue)
     checkEqual(Seq(left ++ right, bridge), 1.0, 3, Seq(0))
+  }
+
+  test("labels == Dbscan.run at minClusterSize 1, 2 and 4, fused and " +
+      "distributed") {
+    // on a line at ε = 1: a 6-point chain (ids 50-55), a 2-point
+    // component (ids 20, 21), a 3-point one (ids 30-32) and a lone
+    // point (id 5), so ascending comps order the clusters by min id
+    // 5, 20, 30, 50 and minClusterSize 4 keeps the chain alone
+    val line = Seq(5L -> 40.0, 20L -> 20.0, 21L -> 20.5, 30L -> 30.0,
+      31L -> 30.5, 32L -> 31.0) ++ (0 until 6).map(i => (50L + i, i * 0.5))
+    val pts = line.map { case (id, x) => id -> Seq(x.toFloat) }
+    for (minPts <- Seq(1, 2); thr <- Thresholds) {
+      val st = IncrementalDbscan.pin(IncrementalDbscan.init(df(pts), "id",
+        "vec", 1.0, minPts, Seq(0), thr))
+      for (m <- Seq(1, 2, 4)) {
+        val clue = s"minPts=$minPts localThreshold=$thr minClusterSize=$m"
+        val got = labelsOf(IncrementalDbscan.labels(st, m))
+        assert(got == labelsOf(Dbscan.run(df(pts), "id", "vec", 1.0, minPts,
+          Seq(0), minClusterSize = m)), clue)
+        // ids 1..K in comp order; components under m are noise
+        val sizes = Map(5L -> 1, 20L -> 2, 30L -> 3, 50L -> 6)
+          .filter { case (c, n) => n >= m && (c != 5L || minPts == 1) }
+        val want = sizes.keys.toSeq.sorted.zipWithIndex.toMap
+        pts.foreach { case (id, _) =>
+          val comp = Seq(50L, 30L, 20L, 5L).find(_ <= id).get
+          assert(got(id) == want.get(comp).fold(0)(_ + 1), s"$clue id=$id")
+        }
+      }
+    }
+  }
+
+  test("labels on a pinned distributed state: one described job, fewer " +
+      "jobs with the caller's action than the 5 of the windowed labels, " +
+      "nothing left cached") {
+    val pts = Workloads.synthPoints(spark, 10000, k = 5, dims = 5)
+    val dims = EpsilonJoin.pickBucketDims(pts, "features", 1.0)
+    val st = IncrementalDbscan.pin(IncrementalDbscan.init(pts, "id",
+      "features", 1.0, 5, dims, localThreshold = 0L))
+    // the fold's own caches are not the labels' concern
+    spark.catalog.clearCache()
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(jobsByDesc { out = IncrementalDbscan.labels(st) } ==
+      Map("incr-dbscan: cluster sizes" -> 1))
+    val jobs = jobsOf(IncrementalDbscan.labels(st).count())
+    assert(jobs < 5, s"labels(st).count() ran $jobs jobs")
+    val left = persistedBy(IncrementalDbscan.labels(st).count())
+    assert(left.isEmpty, left)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "labels left a cached plan behind")
+    assert(labelsOf(out) == labelsOf(Dbscan.run(pts, "id", "features", 1.0,
+      5, dims)))
   }
 }
